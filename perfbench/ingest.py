@@ -28,7 +28,7 @@ from java_iceberg_table_spark.ingest.bookkeeper import Bookkeeper
 from java_iceberg_table_spark.ingest.reaper import Reaper
 from java_iceberg_table_spark.ingest.writer import Writer
 from java_iceberg_table_spark.table import create_table, truncate
-from measure import median, pct
+from measure import cpu_seconds, median, pct
 
 TICK_US = 1_000_000  # one simulated second per writer iteration
 WIDTH_TICKS = 5  # partition width
@@ -45,10 +45,14 @@ FILES_PER_ITERATION = 8
 ROWS_PER_FILE = 100
 REAPER_RETAIN_LAST = 20
 SETUP_REPEATS = 2
+WARM_READS = 3  # the live read's Spark scan took 4 s cold, 0.8 s by the third
 PREPOP_TICKS_PER_COMMIT = 10
 READ_PARTITIONS_BACK = 3  # read a complete partition this far behind the clock
-MAINTENANCE_PERIOD_S = 1.0
-SLICES = 5  # the window's throughput is the median over this many slices  # the maintenance thread starts one round per period
+# One maintenance round per this many writer iterations. A round (reaper,
+# then a read) took 1-1.4 s; at 16 ticks, about 1 s of writing, rounds ran
+# back to back, so rounds per file followed the machine's speed.
+MAINTENANCE_TICKS = 32
+SLICES = 5  # files/s and CPU per file are medians over this many slices
 
 
 def _schema():
@@ -124,6 +128,7 @@ class IngestRun:
         self.table = None
         self.clock = None
         self.writers = []
+        self.rounds: list[tuple[float, tuple[float, float]]] = []  # (start, CPU) per round
 
     # ---------- set-up ----------
 
@@ -155,8 +160,8 @@ class IngestRun:
 
     def setup(self) -> tuple[list[float], float]:
         """Build the steady-state table SETUP_REPEATS times, keeping the
-        last, then warm the read path on it once. Returns each build's
-        seconds and the warm-up's."""
+        last, then warm the read path on it WARM_READS times. Returns
+        each build's seconds and the warm-up's."""
         times = []
         for i in range(SETUP_REPEATS):
             root = os.path.join(self.work, f"table{i}")
@@ -166,7 +171,8 @@ class IngestRun:
             if i + 1 < SETUP_REPEATS:
                 shutil.rmtree(root)
         t0 = time.perf_counter()
-        self._read()
+        for _ in range(WARM_READS):
+            self._read()
         return times, time.perf_counter() - t0
 
     # ---------- operations ----------
@@ -265,18 +271,23 @@ class IngestRun:
                 time.sleep(0.005)
 
     def _maintenance_loop(self, stop: threading.Event) -> None:
-        """Paced, like the reference's periodic reaper: one round per
-        MAINTENANCE_PERIOD_S; a round that overruns delays the next one
-        and no time is made up."""
+        """Paced by the simulated clock, like the reference's periodic
+        reaper: one round per MAINTENANCE_TICKS writer iterations, so a
+        run does the same maintenance per file whatever the machine's
+        speed. A round that overruns delays the next one and no ticks
+        are made up."""
         reaper = Reaper(self.table, max_age_ms=0, retain_last=REAPER_RETAIN_LAST)
-        due = time.perf_counter()
+        due = self._last_tick + MAINTENANCE_TICKS
         while not stop.is_set():
+            if self._last_tick < due:
+                stop.wait(0.005)
+                continue
+            self.rounds.append((time.perf_counter(), cpu_seconds()))
             if self.mode == "direct":
                 self._guarded("retention", self._retention)
             self._guarded("reaper", reaper.run_once)
             self._guarded("read", self._read)
-            due = max(due + MAINTENANCE_PERIOD_S, time.perf_counter())
-            stop.wait(due - time.perf_counter())
+            due = max(due + MAINTENANCE_TICKS, self._last_tick)
 
     # ---------- the measured window ----------
 
@@ -294,12 +305,14 @@ class IngestRun:
                 threading.Thread(target=self._bookkeeper_loop, args=(bk, stop_rest, pending))
             )
         maint = threading.Thread(target=self._maintenance_loop, args=(stop_rest,))
+        cpu0 = cpu_seconds()
         t_start = time.perf_counter()
         for t in threads:
             t.start()
         maint.start()
         time.sleep(seconds)
         t_end = time.perf_counter()
+        cpu1 = cpu_seconds()
         stop_writers.set()
         for t in threads[:N_WRITERS]:
             t.join()
@@ -320,18 +333,32 @@ class IngestRun:
             for i in range(SLICES)
         ]
         per_slice = [sum(c[1] for c in sl) / width for sl in slices]
+        # CPU of the Python process and its JVM per file committed, over
+        # the whole maintenance intervals in the window (first round start
+        # to last), so the span holds a whole number of rounds with their
+        # share of writer and commit work
+        marks = [r for r in self.rounds if t_start <= r[0] <= t_end]
+        if len(marks) < 2:
+            marks = [(t_start, cpu0), (t_end, cpu1)]
+        (lo, cpu_lo), (hi, cpu_hi) = marks[0], marks[-1]
+        n = max(sum(c[1] for c in window if lo <= c[0] < hi), 1)
+        py_ms, jvm_ms = ((b - a) * 1000.0 / n for a, b in zip(cpu_lo, cpu_hi))
         return {
             "t_start": t_start,
             "t_end": t_end,
-            # median over equal slices of the window, so one stall (a
-            # merge, a GC pause) moves the figure less than its share
-            "throughput_per_s": median(per_slice),
+            # medians over equal slices of the window, so one stall (a
+            # merge, a GC pause) moves the figures less than its share
+            "files_per_s": median(per_slice),
             "slice_files_per_s": per_slice,
             "files_committed": len(lat),
-            "latency_p50_ms": pct(lat, 50),
-            "latency_p90_ms": pct(lat, 90),
-            "latency_p99_ms": pct(lat, 99),
-            "latency_mean_ms": sum(lat) / len(lat) if lat else 0.0,
+            "cpu_ms_per_file": py_ms + jvm_ms,
+            "cpu_rounds": len(marks) - 1,
+            "python_cpu_ms_per_file": py_ms,
+            "jvm_cpu_ms_per_file": jvm_ms,
+            "commit_p50_ms": pct(lat, 50),
+            "commit_p90_ms": pct(lat, 90),
+            "commit_p99_ms": pct(lat, 99),
+            "commit_mean_ms": sum(lat) / len(lat) if lat else 0.0,
             "commit_p50_first_to_second_half": (
                 median(first) / median(second) if first and second else 0.0
             ),
@@ -404,9 +431,7 @@ def run(args, run_dir: str) -> dict:
     led = r.ledger
     end_to_end = {
         "setup_s": session_s + warm_s + median(setup_times),
-        "throughput_per_s": m["throughput_per_s"],
-        "latency_p50_ms": m["latency_p50_ms"],
-        "latency_p90_ms": m["latency_p90_ms"],
+        "cpu_ms_per_op": m["cpu_ms_per_file"],
     }
     per_layer = {}
     if tracer is not None:
@@ -418,7 +443,11 @@ def run(args, run_dir: str) -> dict:
                 [ms for t, ms in led.scan_exec if m["t_start"] <= t <= m["t_end"]]
             ),
             "format.metadata_json_bytes": float(c["metadata_json_bytes"]),
-            "ingest.files_per_s": m["throughput_per_s"],
+            "process.python_cpu_ms_per_op": m["python_cpu_ms_per_file"],
+            "process.jvm_cpu_ms_per_op": m["jvm_cpu_ms_per_file"],
+            "ingest.files_per_s": m["files_per_s"],
+            "ingest.commit_p50_ms": m["commit_p50_ms"],
+            "ingest.commit_p90_ms": m["commit_p90_ms"],
             "ingest.read_p50_ms": m["read_p50_ms"],
             "ingest.read_p90_ms": m["read_p90_ms"],
             "ingest.stored_bytes_per_data_byte": c["stored_bytes_per_data_byte"],

@@ -1,6 +1,6 @@
-"""Shared measurement helpers: percentiles, process memory from /proc,
-the Spark session's start and stop, and the span tracer the traced run
-installs around each layer's public functions."""
+"""Shared measurement helpers: percentiles, process memory and CPU time
+from /proc, the Spark session's start and stop, and the span tracer the
+traced run installs around each layer's public functions."""
 
 from __future__ import annotations
 
@@ -39,6 +39,25 @@ def _hwm_kb(pid: int | str) -> int:
     except OSError:
         pass
     return 0
+
+
+def _proc_cpu_s(pid: int | str) -> float:
+    """User plus system CPU seconds of a process and all its threads;
+    0 if it is gone."""
+    try:
+        with open(f"/proc/{pid}/stat") as f:
+            fields = f.read().rsplit(")", 1)[1].split()
+    except OSError:
+        return 0.0
+    return (int(fields[11]) + int(fields[12])) / os.sysconf("SC_CLK_TCK")
+
+
+def cpu_seconds() -> tuple[float, float]:
+    """CPU seconds used so far by this Python process and by its Spark
+    JVM, each summed over all threads."""
+    t = os.times()
+    pid = jvm_pid()
+    return t.user + t.system, _proc_cpu_s(pid) if pid is not None else 0.0
 
 
 def start_spark(extra_conf: dict[str, str] | None = None):

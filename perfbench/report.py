@@ -3,11 +3,12 @@
 
     python3 perfbench/report.py
 
-For each workload: the median end-to-end metrics of its untraced runs,
-the median of the traced runs' per-layer figures that are not zero, and
-the tracing overhead (traced minus untraced end-to-end medians). Then
-the paper's comparison: decoupled against direct ingest, files
-committed per second and CAS conflicts per commit.
+For each workload: the median end-to-end metrics of its untraced runs
+and of their wall-clock figures (throughput and latency), the median of
+the traced runs' per-layer figures that are not zero, and the tracing
+overhead (traced minus untraced end-to-end medians). Then the paper's
+comparison: decoupled against direct ingest, files committed per second
+(untraced) and CAS conflicts per commit (traced).
 """
 
 from __future__ import annotations
@@ -31,8 +32,11 @@ def _load() -> dict[tuple[str, int], list[dict]]:
 
 
 def _medians(runs: list[dict], key: str) -> dict[str, float]:
-    names = sorted({k for r in runs for k in r[key]})
-    return {n: statistics.median(r[key][n] for r in runs if n in r[key]) for n in names}
+    """Median over runs of each number under ``r[key]``."""
+    names = sorted(
+        {k for r in runs for k, v in r.get(key, {}).items() if isinstance(v, (int, float))}
+    )
+    return {n: statistics.median(r[key][n] for r in runs if n in r.get(key, {})) for n in names}
 
 
 def main() -> None:
@@ -42,6 +46,7 @@ def main() -> None:
     for w in workloads:
         plain, traced = runs.get((w, 0), []), runs.get((w, 1), [])
         e2e = _medians(plain, "end_to_end")
+        wall = _medians(plain, "window" if w.startswith("ingest_") else "wall")
         traced_e2e = _medians(traced, "end_to_end")
         layers = {k: v for k, v in _medians(traced, "per_layer").items() if v}
         failed = sum(r["failed"] for r in plain + traced)
@@ -49,15 +54,18 @@ def main() -> None:
         for k, v in e2e.items():
             over = f"  (tracing overhead {traced_e2e[k] - v:+.4g})" if k in traced_e2e else ""
             print(f"  {k:32s} {v:12.4g}{over}")
+        print("  -- untraced runs' results files (wall-clock and CPU figures)")
+        for k, v in wall.items():
+            print(f"  {k:32s} {v:12.4g}")
         for k, v in layers.items():
             print(f"    {k:46s} {v:12.4g}")
-        summary[w] = (e2e, layers)
+        summary[w] = (wall, layers)
     if "ingest_decoupled" in summary and "ingest_direct" in summary:
         print("== decoupled vs direct ingest (untraced files/s; traced conflicts per commit)")
         for w in ("ingest_decoupled", "ingest_direct"):
-            e2e, layers = summary[w]
+            wall, layers = summary[w]
             print(
-                f"  {w:18s} files/s {e2e.get('throughput_per_s', 0):8.1f}"
+                f"  {w:18s} files/s {wall.get('files_per_s', 0):8.1f}"
                 f"   cas conflicts/commit {layers.get('format.cas_conflicts_per_commit', 0):6.3f}"
             )
 
