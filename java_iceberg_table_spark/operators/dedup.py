@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import conf_scope
+
 # Deterministic MinHash permutation parameters (seeded; public
 # textbook construction h_i(x) = (a_i*x + b_i) mod p). Coefficients and
 # the base hash are kept under 2^31 so a*x fits in int64 without
@@ -295,13 +297,9 @@ def minhash_rep_graph(
     # default CollectLimit escalation (1 partition, then 4, 20, ...)
     # serializes scheduler rounds — and on a spread corpus that is 4
     # sequential waves of tiny tasks per call. initialNumPartitions
-    # covers every partition in the first wave; clamp-and-restore, the
-    # repo's standing pattern for action-scoped conf.
+    # covers every partition in the first wave.
     spark = df.sparkSession
-    _limit_key = "spark.sql.limit.initialNumPartitions"
-    _prev_init = spark.conf.get(_limit_key, None)
-    spark.conf.set(_limit_key, "100000")
-    try:
+    with conf_scope(spark, {"spark.sql.limit.initialNumPartitions": "100000"}):
         stats_rows = (
             groups.select(F.explode("toks").alias("t"))
             .distinct()
@@ -314,11 +312,6 @@ def minhash_rep_graph(
             )
             .collect()
         )
-    finally:
-        if _prev_init is None:
-            spark.conf.unset(_limit_key)
-        else:
-            spark.conf.set(_limit_key, _prev_init)
     vocab_rows = [r for r in stats_rows if r["__k"] == 0]
     n_reps = int(next(r["t"] for r in stats_rows if r["__k"] == 1))
     if len(vocab_rows) <= VOCAB_CAP:

@@ -67,12 +67,11 @@ _MODULES = [
 # last lets never-graded queries claim the window first. The proven set
 # is derived from the committed CORRECTNESS_r*.json artifacts at import
 # time, so each round's grading automatically rotates the next round's
-# order; the hardcoded r01+r02 union below is the fallback if the
-# artifacts aren't readable.
-def _green_rounds(exclude: set[str] = frozenset()) -> dict[str, int]:
+# order.
+def _green_rounds() -> dict[str, int]:
     """name -> LAST round whose CORRECTNESS artifact graded it green.
     The ordering below uses this both as the proven set (keys) and as
-    the staleness signal: an entry last proven on r1-era code has a
+    the staleness signal: an entry last proven on older code has a
     weaker green than one proven on last round's code, so the oldest
     greens rotate back through the grading window first."""
     import glob as _glob
@@ -85,10 +84,7 @@ def _green_rounds(exclude: set[str] = frozenset()) -> dict[str, int]:
     )
     rounds: dict[str, int] = {}
     for path in sorted(_glob.glob(_os.path.join(repo_root, "CORRECTNESS_r*.json"))):
-        base = _os.path.basename(path)
-        if base in exclude:
-            continue
-        m = _re.search(r"r(\d+)", base)
+        m = _re.search(r"r(\d+)", _os.path.basename(path))
         rnd = int(m.group(1)) if m else 0
         try:
             with open(path) as f:
@@ -106,219 +102,40 @@ def _green_rounds(exclude: set[str] = frozenset()) -> dict[str, int]:
     return rounds
 
 
-def _load_driver_proven(exclude: set[str] = frozenset()) -> frozenset[str]:
-    return frozenset(_green_rounds(exclude)) or _DRIVER_PROVEN_FALLBACK
+def _interleave(entries: list[Query]) -> list[Query]:
+    """Round-robin across SURVEY groups, keeping order within a group."""
+    by_group: dict[str, list[Query]] = {}
+    for q in entries:
+        by_group.setdefault(q.group or "?", []).append(q)
+    out: list[Query] = []
+    depth = 0
+    while len(out) < len(entries):
+        for queue in by_group.values():
+            if depth < len(queue):
+                out.append(queue[depth])
+        depth += 1
+    return out
 
 
-_DRIVER_PROVEN_FALLBACK = frozenset({
-    "a1_parquet_scan_count", "a2_projection_pushdown", "a3_engine_table_scan",
-    "a3b_engine_partition_pruned_scan", "a3c_engine_metadata_delete",
-    "a3d_engine_schema_evolution", "a3e_engine_upsert_merge",
-    "a3f_engine_partitions_inspect", "a4_time_filtered_scan",
-    "a5_parquet_sink_roundtrip", "a6_csv_json_source", "a6b_json_source",
-    "a6c_orc_source", "b1_arithmetic_projection", "b2_boolean_predicates",
-    "b3_in_predicate", "b4_null_predicates", "b5_like_rlike", "b6_case_when",
-    "b7_distinct", "c1_inner_equi_join", "c2_broadcast_join", "c3_multiway_join",
-    "c4_left_outer_join", "c5_right_outer_join", "c6_full_outer_join",
-    "c7_left_semi_join", "c8_left_anti_join", "c9_cross_join", "c10_theta_join",
-    "c11_time_range_join", "c12_asof_join", "c12b_asof_join_operator",
-    "c13_self_join", "d1_tpch_q1", "d2_global_aggregate", "d3_count_distinct",
-    "d4_multi_distinct", "d5_having", "d6_rollup", "d7_cube", "d8_grouping_sets",
-    "d9_approx_distinct", "d10_percentiles", "d10b_grouped_percentiles",
-    "d11_stddev_var", "d12_collect_list", "d13_corr_covar", "d14_pivot",
-    "d15_unpivot", "e1_row_number_topk", "e2_rank_dense_rank", "e3_lag_gap_count",
-    "e4_running_sum", "e5_sliding_avg", "f1_multikey_sort_limit", "f2_topk",
-    "f4_union_all", "f5_union_distinct", "f6_intersect", "g1_string_basics",
-    "g2_split_regexp_extract", "g3_datetime", "g4_math", "h1_exact_dedup",
-    "h2_normalized_dedup", "h3_top_tokens", "h4_bigrams", "i1_file_stream_ingest",
-    "i2_stream_commit_to_engine_table", "i3_tumbling_window_stream",
-    "i4_sliding_window_stream", "j1_scalar_udf", "j2_pandas_udf",
-    "j3_apply_in_pandas", "j4_pandas_udaf", "q3_shipping_priority",
-    "q5_local_supplier_volume", "q10_returned_items", "q18_large_volume_customer",
-})
-
-
-# Queries whose old green CORRECTNESS rows predate the round-3 fixture
-# regeneration (events.ts TIMESTAMP(NANOS) -> timestamp[us]): their
-# proof is stale — the code was fixed afterwards, so they must re-earn
-# a green row against the CURRENT fixtures before anything else claims
-# grading-window slots. Remove once a post-r03 file shows them green
-# (the stale-proof check below does that automatically).
-_FIXTURE_REGRESSION_REGRADE = frozenset({
-    "c12_asof_join", "c12b_asof_join_operator", "e3_lag_gap_count",
-    "i3_tumbling_window_stream", "i4_sliding_window_stream",
-})
-_STALE_PROOF_FILES = {"CORRECTNESS_r01.json", "CORRECTNESS_r02.json"}
-
-# Entries whose underlying machinery changed THIS round: they head the
-# grading window so the driver re-proves them on the new code first.
-# Round 14 canaries — behind them sit the never-graded rows (a5h, the
-# expired r13 deferral, plus round 14's a5i/a5j; a5k defers), leaving
-# exactly 38 slots that drain the WHOLE remaining r8 stale cohort
-# (39 rows minus a3f, which re-greens as a canary — VERDICT r13
-# item 5: after r14 nothing is last-graded older than r9):
-_REVERIFY_HEAD = [
-    # the DML router grew the general-predicate WHERE grammar, the
-    # composite static overwrite, RETAIN DDL and the BY SOURCE UPDATE
-    # clause — a4l runs the whole router surface in one scenario
-    "a4l_engine_sql_dml",
-    # update_where/delete_rows now consume DnfFilter trees — a4j is
-    # the UPDATE row on the rewritten candidate-pruning path
-    "a4j_engine_update_where",
-    # merge_into grew update_not_matched_by_source (and its result
-    # dict a new key) — a4b re-proves MERGE on the new clause plumbing
-    # (its scenario also grew the flag-stale lap this round)
-    "a4b_engine_merge_into",
-    # the INSERT OVERWRITE PARTITION matcher chain gained the
-    # static-multi sibling regex ahead of the single-field handler —
-    # a5b re-proves the single-field static/dynamic forms
-    "a5b_engine_sql_partition_overwrite",
-    # the OPTIMIZE ... WHERE handler was restructured for composite
-    # scoping — a5d re-proves the single-identity path
-    "a5d_engine_sql_optimize_partition",
-    # VERDICT r13 item 2: INSERT routing grew the branch target in
-    # r13 AFTER a4t's r11 green — re-prove the INSERT/CTAS row
-    "a4t_engine_sql_insert_ctas",
-    # branch INSERT lost its pre-count job (single-evaluation fix)
-    # and refs gained retention metadata — a5f is the branch/tag row
-    "a5f_engine_sql_branch_tag",
-    # VERDICT r13 item 2: inspection surfaces churned in r13 (commit
-    # cb40bf0) — a3x (connector metadata tables) and a3f (partitions
-    # inspect, also the r8 cohort member) re-prove them
-    "a3x_engine_metadata_tables",
-    "a3f_engine_partitions_inspect",
-]
-# Rows REGISTERED after this round's grading window was final-simmed
-# (CORRECTNESS_LOCAL_r10.json, commit 704c04b): they sort at the very
-# END of the order — behind every stale-proven entry — so the window
-# the driver grades this round stays byte-identical to the committed
-# sim and no r4-era regrade loses its slot. SELF-EXPIRING: the defer
-# applies only until the driver writes _DEFER_UNTIL_ARTIFACT (this
-# round's grade record) — from the next round on, these rows claim
-# never-graded slots first like any new registration, with no manual
-# list edit needed.
-_DEFER_UNTIL_ARTIFACT = "CORRECTNESS_r14.json"
-# Rows REGISTERED after this round's grading window was final-simmed:
-# they sort at the very END of the order so the committed window
-# prediction stays byte-identical; self-expiring — once the driver
-# writes the artifact above these claim never-graded slots first.
-# Round 14: a5h (the expired r13 deferral) plus this round's
-# a5i (general-predicate DML) and a5j (composite partition verbs)
-# ride the window; a5k (ref retention) defers — the window budget is
-# exactly 50 with the full r8 drain, and a5k is the row whose local
-# oracle proof (CORRECTNESS_LOCAL_DEFERRED_r14.json) costs least to
-# hold for one round.
-_DEFER_PAST_WINDOW: list[str] = [
-    "a5k_engine_sql_ref_retention",
-]
-
-# ROUND-14 WINDOW (final): 9 canaries (a4l router — grew DNF WHERE,
-# static-multi overwrite, RETAIN, BY SOURCE UPDATE; a4j update_where
-# DNF path; a4b merge clause + scenario lap; a5b overwrite matcher
-# chain; a5d OPTIMIZE WHERE restructure; a4t INSERT branch-target
-# churn from r13; a5f branch INSERT single-eval + ref retention;
-# a3x/a3f inspection churn from r13 — a3f is also the r8 cohort
-# member) + 3 never-graded (a5h expired deferral + round 14's
-# a5i/a5j) + the remaining 38 r8 rows = exactly 50. After r14
-# grades, the stale floor is r9.
-#
-# ROUND-15 NOTES (for the next session):
-# - a5k claims a never-graded slot once CORRECTNESS_r14.json lands.
-# - Stale drain: after r14 the oldest cohort is r9 (44 rows) — one
-#   window covers it only with ~6 canary slots; if r15 ships big
-#   features, split the drain across r15/r16.
-# - Refusal-probe audit (standing): round 14 legalized OR/IN/prefix-
-#   LIKE DELETE/UPDATE trees and BY SOURCE UPDATE — probes in
-#   test_refusals and the BY SOURCE test were swapped for permanently
-#   illegal shapes (NOT/BETWEEN/suffix-LIKE/subquery-IN-in-tree/
-#   UPDATE SET */s.-refs/mixed BY SOURCE). Before extending the WHERE
-#   grammar further (NOT, BETWEEN) re-grep a5i's refusal probes —
-#   they assert exactly those shapes refuse.
-# - The permanently-illegal refusal-probe convention: ANALYZE TABLE
-#   t COMPUTE STATISTICS, or a shape error (empty PARTITIONED BY ()).
+def _grading_order(queries: list[Query], green: dict[str, int]) -> list[Query]:
+    """Never-graded entries first, then proven entries STALEST FIRST:
+    bucketed by the last round that graded them green (ascending), each
+    bucket interleaved across groups."""
+    buckets: dict[int, list[Query]] = {}
+    for q in queries:
+        # -1 sorts never-graded rows ahead of every green round
+        buckets.setdefault(green.get(q.name, -1), []).append(q)
+    return [q for rnd in sorted(buckets) for q in _interleave(buckets[rnd])]
 
 
 def load_all() -> dict[str, Query]:
-    """Import every query module (idempotent) and return the registry.
-
-    The returned (and in-place) order front-loads what the correctness
-    driver (which grades a fixed-size window from the FRONT) most needs
-    to grade this round:
-      1. canaries — entries whose MACHINERY changed this round (listed
-         in _REVERIFY_HEAD): their green must be re-proved on the new
-         code before anything else;
-      2. fixture-regression regrades (r01/r02-only greens that predate
-         the events fixture change), if any remain;
-      3. everything without a green driver row yet (new registrations),
-         round-robin interleaved across SURVEY groups;
-      4. already-proven entries, STALEST FIRST: bucketed by the last
-         round that graded them green (ascending), interleaved across
-         groups within each bucket — so r1/r2-era greens rotate back
-         through the driver window before fresher ones.
-    """
+    """Import every query module (idempotent) and return the registry,
+    reordered in place so the correctness driver (which grades a
+    fixed-size window from the FRONT) grades what most needs it: see
+    ``_grading_order``."""
     for mod in _MODULES:
         importlib.import_module(f"{__name__}.{mod}")
-
-    def interleave(entries: list[Query]) -> list[Query]:
-        by_group: dict[str, list[Query]] = {}
-        for q in entries:
-            by_group.setdefault(q.group or "?", []).append(q)
-        out: list[Query] = []
-        queues = list(by_group.values())
-        depth = 0
-        while len(out) < len(entries):
-            for queue in queues:
-                if depth < len(queue):
-                    out.append(queue[depth])
-            depth += 1
-        return out
-
-    green = _green_rounds()
-    driver_proven = frozenset(green) or _DRIVER_PROVEN_FALLBACK
-    regrade_set = _FIXTURE_REGRESSION_REGRADE - _load_driver_proven(
-        exclude=_STALE_PROOF_FILES
-    )
-    head_set = {n for n in _REVERIFY_HEAD if n in REGISTRY}
-    head = [REGISTRY[n] for n in _REVERIFY_HEAD if n in REGISTRY]
-    regrade = [
-        q
-        for q in REGISTRY.values()
-        if q.name in regrade_set and q.name not in head_set
-    ]
-    rest = [
-        q
-        for q in REGISTRY.values()
-        if q.name not in regrade_set and q.name not in head_set
-    ]
-    import os as _os
-
-    defer_active = not _os.path.exists(
-        _os.path.join(
-            _os.path.dirname(
-                _os.path.dirname(_os.path.dirname(_os.path.abspath(__file__)))
-            ),
-            _DEFER_UNTIL_ARTIFACT,
-        )
-    )
-    deferred = [
-        REGISTRY[n]
-        for n in (_DEFER_PAST_WINDOW if defer_active else [])
-        if n in REGISTRY and n not in driver_proven
-    ]
-    defer_set = {q.name for q in deferred}
-    ungraded = [
-        q
-        for q in rest
-        if q.name not in driver_proven and q.name not in defer_set
-    ]
-    proven = [q for q in rest if q.name in driver_proven]
-    by_round: dict[int, list[Query]] = {}
-    for q in proven:
-        by_round.setdefault(green.get(q.name, 0), []).append(q)
-    stale_first: list[Query] = []
-    for rnd in sorted(by_round):
-        stale_first.extend(interleave(by_round[rnd]))
-    ordered = head + regrade + interleave(ungraded) + stale_first + deferred
+    ordered = _grading_order(list(REGISTRY.values()), _green_rounds())
     REGISTRY.clear()
     REGISTRY.update({q.name: q for q in ordered})
     return REGISTRY

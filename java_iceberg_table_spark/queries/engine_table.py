@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..fixtures import load_table
+from ..session import conf_scope
 from ..table import create_table, truncate
 from . import register
 from .prepared import prepared_plan
@@ -2075,15 +2076,11 @@ def a4k_engine_token_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         # distinct-token groupBys shuffle corpus tokens, and a plain
         # 200-partition driver session pays 3 near-empty 200-task
         # stages for this fixture-scale table
-        prev_w = spark.conf.get("spark.sql.shuffle.partitions")
-        try:
-            spark.conf.set(
-                "spark.sql.shuffle.partitions",
-                str(spark.sparkContext.defaultParallelism),
-            )
+        with conf_scope(
+            spark,
+            {"spark.sql.shuffle.partitions": spark.sparkContext.defaultParallelism},
+        ):
             tbl.append(docs.repartition(8))
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_w)
         got, info = tbl.scan_token_search(spark, ["blk7"])
         row = got.agg(
             F.count(F.lit(1)).alias("cnt"), F.sum("doc_id").alias("sum_id")
@@ -2251,85 +2248,83 @@ def a4n_engine_catalog_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_nationkey", "n_regionkey"
     )
     croot = tempfile.mkdtemp(prefix="engine_catview_") + "/cat"
-    prev_w = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         # width clamp: view evaluation runs groupBys through a PLAIN
         # driver session (200 shuffle partitions) over a 25-row table
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        cat = Catalog.create(croot)
-        t = cat.create_table("t", nation.schema)
-        t.append(nation.coalesce(1))
-        cat._commit_pins({"t": t.metadata.current_snapshot_id})
-        cat.sql(
-            spark,
-            "CREATE VIEW v1 AS SELECT n_regionkey, COUNT(*) AS n "
-            "FROM t GROUP BY n_regionkey",
-        )
-        cat.create_view("v2", "SELECT SUM(n) AS total FROM v1")
-        v1_rows = cat.read_view(spark, "v1").count()
-        v2_total = int(
-            cat.read_view(spark, "v2").collect()[0]["total"]
-        )
-        pinned_state = cat.state()
-        # the table grows by a second fixture copy; the pinned state's
-        # view answer must NOT move
-        t2 = cat.table("t")
-        t2.append(
-            nation.select(
-                (F.col("n_nationkey") + 100).alias("n_nationkey"),
-                "n_regionkey",
-            ).coalesce(1)
-        )
-        cat._commit_pins({"t": t2.metadata.current_snapshot_id})
-        pinned_total = int(
-            cat.read_view(spark, "v2", state=pinned_state)
-            .collect()[0]["total"]
-        )
-        live_total = int(
-            cat.read_view(spark, "v2").collect()[0]["total"]
-        )
-        cat.sql(
-            spark,
-            "CREATE OR REPLACE VIEW v2 AS SELECT MAX(n) AS total FROM v1",
-        )
-        # after replace, the LIVE state evaluates the NEW definition
-        # over the grown table (2x per-region max) — while the pinned
-        # state still carries the OLD definition (SUM over old pins):
-        # definitions are versioned exactly like pins
-        replaced_max = int(
-            cat.read_view(spark, "v2").collect()[0]["total"]
-        )
-        old_def_pinned = int(
-            cat.read_view(spark, "v2", state=pinned_state)
-            .collect()[0]["total"]
-        )
-        cat.sql(spark, "DROP VIEW v2")
-        dropped = "v2" not in cat.list_views() and "v1" in cat.list_views()
-        refused = 0
-        import contextlib
+        with conf_scope(spark, {"spark.sql.shuffle.partitions": "4"}):
+            cat = Catalog.create(croot)
+            t = cat.create_table("t", nation.schema)
+            t.append(nation.coalesce(1))
+            cat._commit_pins({"t": t.metadata.current_snapshot_id})
+            cat.sql(
+                spark,
+                "CREATE VIEW v1 AS SELECT n_regionkey, COUNT(*) AS n "
+                "FROM t GROUP BY n_regionkey",
+            )
+            cat.create_view("v2", "SELECT SUM(n) AS total FROM v1")
+            v1_rows = cat.read_view(spark, "v1").count()
+            v2_total = int(
+                cat.read_view(spark, "v2").collect()[0]["total"]
+            )
+            pinned_state = cat.state()
+            # the table grows by a second fixture copy; the pinned state's
+            # view answer must NOT move
+            t2 = cat.table("t")
+            t2.append(
+                nation.select(
+                    (F.col("n_nationkey") + 100).alias("n_nationkey"),
+                    "n_regionkey",
+                ).coalesce(1)
+            )
+            cat._commit_pins({"t": t2.metadata.current_snapshot_id})
+            pinned_total = int(
+                cat.read_view(spark, "v2", state=pinned_state)
+                .collect()[0]["total"]
+            )
+            live_total = int(
+                cat.read_view(spark, "v2").collect()[0]["total"]
+            )
+            cat.sql(
+                spark,
+                "CREATE OR REPLACE VIEW v2 AS SELECT MAX(n) AS total FROM v1",
+            )
+            # after replace, the LIVE state evaluates the NEW definition
+            # over the grown table (2x per-region max) — while the pinned
+            # state still carries the OLD definition (SUM over old pins):
+            # definitions are versioned exactly like pins
+            replaced_max = int(
+                cat.read_view(spark, "v2").collect()[0]["total"]
+            )
+            old_def_pinned = int(
+                cat.read_view(spark, "v2", state=pinned_state)
+                .collect()[0]["total"]
+            )
+            cat.sql(spark, "DROP VIEW v2")
+            dropped = "v2" not in cat.list_views() and "v1" in cat.list_views()
+            refused = 0
+            import contextlib
 
-        for fn in (
-            lambda: cat.create_view("v3", "DELETE FROM t WHERE 1 = 1"),
-            lambda: cat.create_view("v1", "SELECT 1 AS one"),
-            lambda: cat.drop_view("nope"),
-        ):
-            with contextlib.suppress(ValueError, KeyError):
-                fn()
-                continue
-            refused += 1
-        return spark.createDataFrame(
-            [
-                (
-                    v1_rows, v2_total, pinned_total, live_total,
-                    replaced_max, old_def_pinned, dropped, refused,
-                )
-            ],
-            "v1_rows bigint, v2_total bigint, pinned_total bigint, "
-            "live_total bigint, replaced_max bigint, old_def_pinned "
-            "bigint, dropped boolean, refused bigint",
-        )
+            for fn in (
+                lambda: cat.create_view("v3", "DELETE FROM t WHERE 1 = 1"),
+                lambda: cat.create_view("v1", "SELECT 1 AS one"),
+                lambda: cat.drop_view("nope"),
+            ):
+                with contextlib.suppress(ValueError, KeyError):
+                    fn()
+                    continue
+                refused += 1
+            return spark.createDataFrame(
+                [
+                    (
+                        v1_rows, v2_total, pinned_total, live_total,
+                        replaced_max, old_def_pinned, dropped, refused,
+                    )
+                ],
+                "v1_rows bigint, v2_total bigint, pinned_total bigint, "
+                "live_total bigint, replaced_max bigint, old_def_pinned "
+                "bigint, dropped boolean, refused bigint",
+            )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_w)
         shutil.rmtree(os.path.dirname(croot), ignore_errors=True)
 
 
@@ -2382,65 +2377,63 @@ def a4p_engine_maintained_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_custkey", "o_orderkey", "o_orderdate"
     )
     croot = tempfile.mkdtemp(prefix="engine_mv_") + "/cat"
-    prev_w = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(spark.sparkContext.defaultParallelism),
-        )
-        cat = Catalog.create(croot)
-        src = cat.create_table("orders_t", orders.schema)
-        src.append(orders.filter(F.col("o_orderkey") % 3 == 0).coalesce(2))
-        cat._commit_pins({"orders_t": src.metadata.current_snapshot_id})
-        create_maintained_topk(
-            cat, spark, "top_orders", "orders_t", "o_custkey",
-            ["o_orderdate", "o_orderkey"], 3,
-        )
-        src = cat.table("orders_t")
-        src.append(orders.filter(F.col("o_orderkey") % 3 == 1).coalesce(2))
-        cat._commit_pins({"orders_t": src.metadata.current_snapshot_id})
-        r1 = refresh_maintained(cat, spark, "top_orders")
-        # MOR source deletes hitting held rows -> rebuild-path refresh
-        src = cat.table("orders_t")
-        src.delete_eq_mor(
+        with conf_scope(
             spark,
-            orders.filter(F.col("o_orderkey") % 10 == 1)
-            .select("o_orderkey").distinct(),
-            ["o_orderkey"],
-        )
-        cat._commit_pins({"orders_t": src.metadata.current_snapshot_id})
-        r2 = refresh_maintained(cat, spark, "top_orders")
-        src = cat.table("orders_t")
-        src.append(orders.filter(F.col("o_orderkey") % 3 == 2).coalesce(2))
-        cat._commit_pins({"orders_t": src.metadata.current_snapshot_id})
-        r3 = refresh_maintained(cat, spark, "top_orders")
-        r4 = refresh_maintained(cat, spark, "top_orders")  # caught up
-        assert r1["refreshed"] and r2["refreshed"] and r3["refreshed"]
-        mv = cat.read(spark, "top_orders").persist()
-        rec = topk_frame(
-            cat.table("orders_t").scan(spark),
-            "o_custkey", ["o_orderdate", "o_orderkey"], 3,
-        ).select(mv.columns).persist()
-        equal = mv.exceptAll(rec).isEmpty() and rec.exceptAll(mv).isEmpty()
-        row = mv.agg(
-            F.count(F.lit(1)).alias("view_rows"),
-            F.countDistinct("o_custkey").alias("n_keys"),
-            F.sum("o_orderkey").alias("sum_orderkey"),
-        ).collect()[0]
-        mv.unpersist()
-        rec.unpersist()
-        return spark.createDataFrame(
-            [
-                (
-                    row["view_rows"], row["n_keys"], row["sum_orderkey"],
-                    equal, r4["refreshed"] is False,
-                )
-            ],
-            "view_rows bigint, n_keys bigint, sum_orderkey bigint, "
-            "equals_recompute boolean, final_refresh_noop boolean",
-        )
+            {"spark.sql.shuffle.partitions": spark.sparkContext.defaultParallelism},
+        ):
+            cat = Catalog.create(croot)
+            src = cat.create_table("orders_t", orders.schema)
+            src.append(orders.filter(F.col("o_orderkey") % 3 == 0).coalesce(2))
+            cat._commit_pins({"orders_t": src.metadata.current_snapshot_id})
+            create_maintained_topk(
+                cat, spark, "top_orders", "orders_t", "o_custkey",
+                ["o_orderdate", "o_orderkey"], 3,
+            )
+            src = cat.table("orders_t")
+            src.append(orders.filter(F.col("o_orderkey") % 3 == 1).coalesce(2))
+            cat._commit_pins({"orders_t": src.metadata.current_snapshot_id})
+            r1 = refresh_maintained(cat, spark, "top_orders")
+            # MOR source deletes hitting held rows -> rebuild-path refresh
+            src = cat.table("orders_t")
+            src.delete_eq_mor(
+                spark,
+                orders.filter(F.col("o_orderkey") % 10 == 1)
+                .select("o_orderkey").distinct(),
+                ["o_orderkey"],
+            )
+            cat._commit_pins({"orders_t": src.metadata.current_snapshot_id})
+            r2 = refresh_maintained(cat, spark, "top_orders")
+            src = cat.table("orders_t")
+            src.append(orders.filter(F.col("o_orderkey") % 3 == 2).coalesce(2))
+            cat._commit_pins({"orders_t": src.metadata.current_snapshot_id})
+            r3 = refresh_maintained(cat, spark, "top_orders")
+            r4 = refresh_maintained(cat, spark, "top_orders")  # caught up
+            assert r1["refreshed"] and r2["refreshed"] and r3["refreshed"]
+            mv = cat.read(spark, "top_orders").persist()
+            rec = topk_frame(
+                cat.table("orders_t").scan(spark),
+                "o_custkey", ["o_orderdate", "o_orderkey"], 3,
+            ).select(mv.columns).persist()
+            equal = mv.exceptAll(rec).isEmpty() and rec.exceptAll(mv).isEmpty()
+            row = mv.agg(
+                F.count(F.lit(1)).alias("view_rows"),
+                F.countDistinct("o_custkey").alias("n_keys"),
+                F.sum("o_orderkey").alias("sum_orderkey"),
+            ).collect()[0]
+            mv.unpersist()
+            rec.unpersist()
+            return spark.createDataFrame(
+                [
+                    (
+                        row["view_rows"], row["n_keys"], row["sum_orderkey"],
+                        equal, r4["refreshed"] is False,
+                    )
+                ],
+                "view_rows bigint, n_keys bigint, sum_orderkey bigint, "
+                "equals_recompute boolean, final_refresh_noop boolean",
+            )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_w)
         shutil.rmtree(os.path.dirname(croot), ignore_errors=True)
 
 
@@ -2567,12 +2560,10 @@ def _topk_view_root(spark: SparkSession, sf_dir: str) -> str:
         order_cols = ["o_orderdate", "o_orderkey"]
         prefix = orders.filter(F.col("o_orderkey") % 7 != 0)
         delta = orders.filter(F.col("o_orderkey") % 7 == 0)
-        prev_w = spark.conf.get("spark.sql.shuffle.partitions")
-        try:
-            spark.conf.set(
-                "spark.sql.shuffle.partitions",
-                str(spark.sparkContext.defaultParallelism),
-            )
+        with conf_scope(
+            spark,
+            {"spark.sql.shuffle.partitions": spark.sparkContext.defaultParallelism},
+        ):
             init = topk_frame(prefix, "o_custkey", order_cols, 3)
             # key-sorted files (disjoint o_custkey ranges): folds'
             # runtime-filtered view reads then prune to the files
@@ -2585,8 +2576,6 @@ def _topk_view_root(spark: SparkSession, sf_dir: str) -> str:
             topk_refresh(spark, tbl, delta, "o_custkey", order_cols, 3)
             tbl.rewrite_deletes(spark)
             tbl.compact_data_files(spark, sort_by=["o_custkey", "rn"])
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_w)
 
     return _shared_root(spark, sf_dir, "topkview", build)
 
@@ -2670,9 +2659,7 @@ def _agg_view_root(spark: SparkSession, sf_dir: str) -> str:
                 .agg(F.count(F.lit(1)).alias("cnt"))
             )
 
-        prev_w = spark.conf.get("spark.sql.shuffle.partitions")
-        try:
-            spark.conf.set("spark.sql.shuffle.partitions", "4")
+        with conf_scope(spark, {"spark.sql.shuffle.partitions": "4"}):
             init = agg(cust.filter(F.col("c_custkey") % 5 != 0))
             tbl = create_table(root, init.schema)
             tbl.append(init.coalesce(1))
@@ -2685,8 +2672,6 @@ def _agg_view_root(spark: SparkSession, sf_dir: str) -> str:
             )
             tbl.rewrite_deletes(spark)
             tbl.compact_data_files(spark, sort_by=["r_name", "n_name"])
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_w)
 
     return _shared_root(spark, sf_dir, "aggview", build)
 
@@ -2768,57 +2753,55 @@ def a4q_engine_catalog_time_travel(spark: SparkSession, sf_dir: str) -> DataFram
     register_engine_datasource(spark)
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey")
     croot = tempfile.mkdtemp(prefix="engine_cattt_") + "/cat"
-    prev_w = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         # scenario-local width: the row's joins/aggs move a few
         # thousand rows; a plain driver session's 200 partitions would
         # cost 200 near-empty tasks per action
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        cat = Catalog.create(croot)
-        t = cat.create_table("t", orders.schema)
-        cat.create_table("never_published", orders.schema)
-        t.append(orders.filter(F.col("o_orderkey") % 3 == 0).repartition(4))
-        cat._commit_pins({"t": t.metadata.current_snapshot_id})
-        v_a = cat.state().version
-        t.append(orders.filter(F.col("o_orderkey") % 3 == 1).repartition(4))
-        cat._commit_pins({"t": t.metadata.current_snapshot_id})
-        v_b = cat.state().version
-        # head moves, nothing published: must stay invisible to reads
-        t.append(orders.filter(F.col("o_orderkey") % 3 == 2).repartition(4))
+        with conf_scope(spark, {"spark.sql.shuffle.partitions": "8"}):
+            cat = Catalog.create(croot)
+            t = cat.create_table("t", orders.schema)
+            cat.create_table("never_published", orders.schema)
+            t.append(orders.filter(F.col("o_orderkey") % 3 == 0).repartition(4))
+            cat._commit_pins({"t": t.metadata.current_snapshot_id})
+            v_a = cat.state().version
+            t.append(orders.filter(F.col("o_orderkey") % 3 == 1).repartition(4))
+            cat._commit_pins({"t": t.metadata.current_snapshot_id})
+            v_b = cat.state().version
+            # head moves, nothing published: must stay invisible to reads
+            t.append(orders.filter(F.col("o_orderkey") % 3 == 2).repartition(4))
 
-        def rd(name: str, version: int | None = None) -> DataFrame:
-            r = (
-                spark.read.format("engine_table")
-                .option("catalog", croot)
-                .option("name", name)
-            )
-            if version is not None:
-                r = r.option("catalog_version", str(version))
-            return r.load()
-
-        at_a = rd("t", v_a).agg(
-            F.count(F.lit(1)).alias("c"), F.sum("o_orderkey").alias("s")
-        ).collect()[0]
-        cnt_vb = rd("t", v_b).count()
-        cnt_current = rd("t").count()
-        via_api = cat.read(
-            spark, "t", state=cat.state_at(v_a)
-        ).agg(F.sum("o_orderkey")).collect()[0][0]
-        parity = int(via_api) == int(at_a["s"])
-        empty_ok = rd("never_published").count() == 0
-        return spark.createDataFrame(
-            [
-                (
-                    at_a["c"], at_a["s"], cnt_vb, cnt_current,
-                    parity, empty_ok,
+            def rd(name: str, version: int | None = None) -> DataFrame:
+                r = (
+                    spark.read.format("engine_table")
+                    .option("catalog", croot)
+                    .option("name", name)
                 )
-            ],
-            "cnt_va bigint, sum_va bigint, cnt_vb bigint, "
-            "cnt_current bigint, parity_state_at boolean, "
-            "empty_pin_scans_empty boolean",
-        )
+                if version is not None:
+                    r = r.option("catalog_version", str(version))
+                return r.load()
+
+            at_a = rd("t", v_a).agg(
+                F.count(F.lit(1)).alias("c"), F.sum("o_orderkey").alias("s")
+            ).collect()[0]
+            cnt_vb = rd("t", v_b).count()
+            cnt_current = rd("t").count()
+            via_api = cat.read(
+                spark, "t", state=cat.state_at(v_a)
+            ).agg(F.sum("o_orderkey")).collect()[0][0]
+            parity = int(via_api) == int(at_a["s"])
+            empty_ok = rd("never_published").count() == 0
+            return spark.createDataFrame(
+                [
+                    (
+                        at_a["c"], at_a["s"], cnt_vb, cnt_current,
+                        parity, empty_ok,
+                    )
+                ],
+                "cnt_va bigint, sum_va bigint, cnt_vb bigint, "
+                "cnt_current bigint, parity_state_at boolean, "
+                "empty_pin_scans_empty boolean",
+            )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_w)
         shutil.rmtree(os.path.dirname(croot), ignore_errors=True)
 
 
@@ -2885,89 +2868,87 @@ def a4r_engine_refresh_all_dag(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
     )
     croot = tempfile.mkdtemp(prefix="engine_mvdag_") + "/cat"
-    prev_w = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(spark.sparkContext.defaultParallelism),
-        )
-        cat = Catalog.create(croot)
-        src = cat.create_table("orders_t", orders.schema)
-        src.append(orders.filter(F.col("o_orderkey") % 3 == 0).coalesce(2))
-        cat._commit_pins({"orders_t": src.metadata.current_snapshot_id})
-        create_maintained_topk(
-            cat, spark, "top3", "orders_t", "o_custkey",
-            ["o_orderdate", "o_orderkey"], 3,
-        )
-        create_maintained_agg(cat, spark, "top3_spend", "top3", "o_custkey", "cents")
-        # base-table churn: append, MOR equality delete, append — then
-        # ONE DAG pass brings both views current
-        src = cat.table("orders_t")
-        src.append(orders.filter(F.col("o_orderkey") % 3 == 1).coalesce(2))
-        cat._commit_pins({"orders_t": src.metadata.current_snapshot_id})
-        src = cat.table("orders_t")
-        src.delete_eq_mor(
+        with conf_scope(
             spark,
-            orders.filter(F.col("o_orderkey") % 10 == 1)
-            .select("o_orderkey").distinct(),
-            ["o_orderkey"],
-        )
-        cat._commit_pins({"orders_t": src.metadata.current_snapshot_id})
-        src = cat.table("orders_t")
-        src.append(orders.filter(F.col("o_orderkey") % 3 == 2).coalesce(2))
-        cat._commit_pins({"orders_t": src.metadata.current_snapshot_id})
-        res = refresh_all_maintained(cat, spark)
-        names = list(res)
-        dag_ordered = (
-            names.index("top3") < names.index("top3_spend")
-            and res["top3"]["refreshed"]
-            and res["top3_spend"]["refreshed"]
-        )
-        mv = cat.read(spark, "top3").persist()
-        rec = topk_frame(
-            cat.table("orders_t").scan(spark),
-            "o_custkey", ["o_orderdate", "o_orderkey"], 3,
-        ).select(mv.columns).persist()
-        mv2 = cat.read(spark, "top3_spend").select("o_custkey", "cnt", "sv")
-        rec2 = mv.groupBy("o_custkey").agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.sum("cents").alias("sv"),  # long fold: view measure is long
-        )
-        equal = (
-            mv.exceptAll(rec).isEmpty()
-            and rec.exceptAll(mv).isEmpty()
-            and mv2.exceptAll(rec2.select(mv2.columns)).isEmpty()
-            and rec2.select(mv2.columns).exceptAll(mv2).isEmpty()
-        )
-        second = refresh_all_maintained(cat, spark)
-        second_noop = all(r["refreshed"] is False for r in second.values())
-        cycle_refused = 0
-        cat.table("top3").set_properties({"mv.source": "top3_spend"})
-        try:
-            refresh_all_maintained(cat, spark)
-        except ValueError:
-            cycle_refused = 1
-        cat.table("top3").set_properties({"mv.source": "orders_t"})
-        row = mv.agg(
-            F.count(F.lit(1)).alias("view_rows"),
-            F.countDistinct("o_custkey").alias("n_keys"),
-            F.sum("cents").alias("sum_cents"),
-        ).collect()[0]
-        mv.unpersist()
-        rec.unpersist()
-        return spark.createDataFrame(
-            [
-                (
-                    row["view_rows"], row["n_keys"], row["sum_cents"],
-                    dag_ordered, equal, second_noop, cycle_refused,
-                )
-            ],
-            "view_rows bigint, n_keys bigint, sum_cents bigint, "
-            "dag_ordered boolean, equals_recompute boolean, "
-            "second_noop boolean, cycle_refused bigint",
-        )
+            {"spark.sql.shuffle.partitions": spark.sparkContext.defaultParallelism},
+        ):
+            cat = Catalog.create(croot)
+            src = cat.create_table("orders_t", orders.schema)
+            src.append(orders.filter(F.col("o_orderkey") % 3 == 0).coalesce(2))
+            cat._commit_pins({"orders_t": src.metadata.current_snapshot_id})
+            create_maintained_topk(
+                cat, spark, "top3", "orders_t", "o_custkey",
+                ["o_orderdate", "o_orderkey"], 3,
+            )
+            create_maintained_agg(cat, spark, "top3_spend", "top3", "o_custkey", "cents")
+            # base-table churn: append, MOR equality delete, append — then
+            # ONE DAG pass brings both views current
+            src = cat.table("orders_t")
+            src.append(orders.filter(F.col("o_orderkey") % 3 == 1).coalesce(2))
+            cat._commit_pins({"orders_t": src.metadata.current_snapshot_id})
+            src = cat.table("orders_t")
+            src.delete_eq_mor(
+                spark,
+                orders.filter(F.col("o_orderkey") % 10 == 1)
+                .select("o_orderkey").distinct(),
+                ["o_orderkey"],
+            )
+            cat._commit_pins({"orders_t": src.metadata.current_snapshot_id})
+            src = cat.table("orders_t")
+            src.append(orders.filter(F.col("o_orderkey") % 3 == 2).coalesce(2))
+            cat._commit_pins({"orders_t": src.metadata.current_snapshot_id})
+            res = refresh_all_maintained(cat, spark)
+            names = list(res)
+            dag_ordered = (
+                names.index("top3") < names.index("top3_spend")
+                and res["top3"]["refreshed"]
+                and res["top3_spend"]["refreshed"]
+            )
+            mv = cat.read(spark, "top3").persist()
+            rec = topk_frame(
+                cat.table("orders_t").scan(spark),
+                "o_custkey", ["o_orderdate", "o_orderkey"], 3,
+            ).select(mv.columns).persist()
+            mv2 = cat.read(spark, "top3_spend").select("o_custkey", "cnt", "sv")
+            rec2 = mv.groupBy("o_custkey").agg(
+                F.count(F.lit(1)).alias("cnt"),
+                F.sum("cents").alias("sv"),  # long fold: view measure is long
+            )
+            equal = (
+                mv.exceptAll(rec).isEmpty()
+                and rec.exceptAll(mv).isEmpty()
+                and mv2.exceptAll(rec2.select(mv2.columns)).isEmpty()
+                and rec2.select(mv2.columns).exceptAll(mv2).isEmpty()
+            )
+            second = refresh_all_maintained(cat, spark)
+            second_noop = all(r["refreshed"] is False for r in second.values())
+            cycle_refused = 0
+            cat.table("top3").set_properties({"mv.source": "top3_spend"})
+            try:
+                refresh_all_maintained(cat, spark)
+            except ValueError:
+                cycle_refused = 1
+            cat.table("top3").set_properties({"mv.source": "orders_t"})
+            row = mv.agg(
+                F.count(F.lit(1)).alias("view_rows"),
+                F.countDistinct("o_custkey").alias("n_keys"),
+                F.sum("cents").alias("sum_cents"),
+            ).collect()[0]
+            mv.unpersist()
+            rec.unpersist()
+            return spark.createDataFrame(
+                [
+                    (
+                        row["view_rows"], row["n_keys"], row["sum_cents"],
+                        dag_ordered, equal, second_noop, cycle_refused,
+                    )
+                ],
+                "view_rows bigint, n_keys bigint, sum_cents bigint, "
+                "dag_ordered boolean, equals_recompute boolean, "
+                "second_noop boolean, cycle_refused bigint",
+            )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_w)
         shutil.rmtree(os.path.dirname(croot), ignore_errors=True)
 
 
@@ -3021,88 +3002,86 @@ def a4s_engine_sql_matview(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
     )
     croot = tempfile.mkdtemp(prefix="engine_sqlmv_") + "/cat"
-    prev_w = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(spark.sparkContext.defaultParallelism),
-        )
-        cat = Catalog.create(croot)
-        src = cat.create_table("orders_t", orders.schema)
-        src.append(orders.filter(F.col("o_orderkey") % 3 == 0).coalesce(2))
-        cat._commit_pins({"orders_t": src.metadata.current_snapshot_id})
-        res = cat.sql(
+        with conf_scope(
             spark,
-            "CREATE MATERIALIZED VIEW cust_spend AS "
-            "SELECT o_custkey, COUNT(*) AS cnt, SUM(cents) AS sv "
-            "FROM orders_t GROUP BY o_custkey",
-        )
-        assert res["statement"] == "create_materialized_view"
-        src = cat.table("orders_t")
-        src.append(orders.filter(F.col("o_orderkey") % 3 == 1).coalesce(2))
-        cat._commit_pins({"orders_t": src.metadata.current_snapshot_id})
-        src = cat.table("orders_t")
-        src.delete_eq_mor(
-            spark,
-            orders.filter(F.col("o_orderkey") % 10 == 1)
-            .select("o_orderkey").distinct(),
-            ["o_orderkey"],
-        )
-        cat._commit_pins({"orders_t": src.metadata.current_snapshot_id})
-        src = cat.table("orders_t")
-        src.append(orders.filter(F.col("o_orderkey") % 3 == 2).coalesce(2))
-        cat._commit_pins({"orders_t": src.metadata.current_snapshot_id})
-        r = cat.sql(spark, "REFRESH MATERIALIZED VIEW cust_spend")
-        assert r["refreshed"] is True
-        mv = cat.read(spark, "cust_spend").persist()
-        rec = (
-            cat.table("orders_t").scan(spark)
-            .groupBy("o_custkey")
-            .agg(
-                F.count(F.lit(1)).alias("cnt"),
-                F.sum("cents").alias("sv"),  # long fold: view measure is long
-            )
-            .select(mv.columns)
-            .persist()
-        )
-        equal = mv.exceptAll(rec).isEmpty() and rec.exceptAll(mv).isEmpty()
-        refused = 0
-        for bad in (
-            "CREATE MATERIALIZED VIEW m AS SELECT o_custkey, COUNT(*) AS n,"
-            " SUM(cents) AS sv FROM orders_t GROUP BY o_custkey",
-            "CREATE MATERIALIZED VIEW m AS SELECT o_custkey, COUNT(*) AS "
-            "cnt, SUM(cents) AS sv FROM orders_t GROUP BY o_orderkey",
-            "CREATE MATERIALIZED VIEW m AS SELECT o_custkey, MAX(cents) "
-            "AS mx FROM orders_t GROUP BY o_custkey",
-            "DELETE FROM orders_t WHERE o_orderkey >= 0; "
-            "REFRESH MATERIALIZED VIEW cust_spend",
+            {"spark.sql.shuffle.partitions": spark.sparkContext.defaultParallelism},
         ):
-            try:
-                if ";" in bad:
-                    cat.sql_script(spark, bad)
-                else:
-                    cat.sql(spark, bad)
-            except UnsupportedSQL:
-                refused += 1
-        row = mv.agg(
-            F.count(F.lit(1)).alias("n_keys"),
-            F.sum("cnt").alias("total_cnt"),
-            F.sum("sv").cast("long").alias("sum_cents"),
-        ).collect()[0]
-        mv.unpersist()
-        rec.unpersist()
-        return spark.createDataFrame(
-            [
-                (
-                    row["n_keys"], row["total_cnt"], row["sum_cents"],
-                    equal, refused,
+            cat = Catalog.create(croot)
+            src = cat.create_table("orders_t", orders.schema)
+            src.append(orders.filter(F.col("o_orderkey") % 3 == 0).coalesce(2))
+            cat._commit_pins({"orders_t": src.metadata.current_snapshot_id})
+            res = cat.sql(
+                spark,
+                "CREATE MATERIALIZED VIEW cust_spend AS "
+                "SELECT o_custkey, COUNT(*) AS cnt, SUM(cents) AS sv "
+                "FROM orders_t GROUP BY o_custkey",
+            )
+            assert res["statement"] == "create_materialized_view"
+            src = cat.table("orders_t")
+            src.append(orders.filter(F.col("o_orderkey") % 3 == 1).coalesce(2))
+            cat._commit_pins({"orders_t": src.metadata.current_snapshot_id})
+            src = cat.table("orders_t")
+            src.delete_eq_mor(
+                spark,
+                orders.filter(F.col("o_orderkey") % 10 == 1)
+                .select("o_orderkey").distinct(),
+                ["o_orderkey"],
+            )
+            cat._commit_pins({"orders_t": src.metadata.current_snapshot_id})
+            src = cat.table("orders_t")
+            src.append(orders.filter(F.col("o_orderkey") % 3 == 2).coalesce(2))
+            cat._commit_pins({"orders_t": src.metadata.current_snapshot_id})
+            r = cat.sql(spark, "REFRESH MATERIALIZED VIEW cust_spend")
+            assert r["refreshed"] is True
+            mv = cat.read(spark, "cust_spend").persist()
+            rec = (
+                cat.table("orders_t").scan(spark)
+                .groupBy("o_custkey")
+                .agg(
+                    F.count(F.lit(1)).alias("cnt"),
+                    F.sum("cents").alias("sv"),  # long fold: view measure is long
                 )
-            ],
-            "n_keys bigint, total_cnt bigint, sum_cents bigint, "
-            "equals_recompute boolean, refused bigint",
-        )
+                .select(mv.columns)
+                .persist()
+            )
+            equal = mv.exceptAll(rec).isEmpty() and rec.exceptAll(mv).isEmpty()
+            refused = 0
+            for bad in (
+                "CREATE MATERIALIZED VIEW m AS SELECT o_custkey, COUNT(*) AS n,"
+                " SUM(cents) AS sv FROM orders_t GROUP BY o_custkey",
+                "CREATE MATERIALIZED VIEW m AS SELECT o_custkey, COUNT(*) AS "
+                "cnt, SUM(cents) AS sv FROM orders_t GROUP BY o_orderkey",
+                "CREATE MATERIALIZED VIEW m AS SELECT o_custkey, MAX(cents) "
+                "AS mx FROM orders_t GROUP BY o_custkey",
+                "DELETE FROM orders_t WHERE o_orderkey >= 0; "
+                "REFRESH MATERIALIZED VIEW cust_spend",
+            ):
+                try:
+                    if ";" in bad:
+                        cat.sql_script(spark, bad)
+                    else:
+                        cat.sql(spark, bad)
+                except UnsupportedSQL:
+                    refused += 1
+            row = mv.agg(
+                F.count(F.lit(1)).alias("n_keys"),
+                F.sum("cnt").alias("total_cnt"),
+                F.sum("sv").cast("long").alias("sum_cents"),
+            ).collect()[0]
+            mv.unpersist()
+            rec.unpersist()
+            return spark.createDataFrame(
+                [
+                    (
+                        row["n_keys"], row["total_cnt"], row["sum_cents"],
+                        equal, refused,
+                    )
+                ],
+                "n_keys bigint, total_cnt bigint, sum_cents bigint, "
+                "equals_recompute boolean, refused bigint",
+            )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_w)
         shutil.rmtree(os.path.dirname(croot), ignore_errors=True)
 
 
@@ -3149,64 +3128,62 @@ def a4t_engine_sql_insert_ctas(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     orders.createOrReplaceTempView("a4t_orders_src")
     croot = tempfile.mkdtemp(prefix="engine_sqlins_") + "/cat"
-    prev_w = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(spark.sparkContext.defaultParallelism),
-        )
-        cat = Catalog.create(croot)
-        res = cat.sql(
+        with conf_scope(
             spark,
-            "CREATE TABLE orders_t AS SELECT o_orderkey, o_custkey "
-            "FROM a4t_orders_src WHERE o_orderkey % 3 = 0",
-        )
-        assert res["statement"] == "create_table_as"
-        cat.sql(
-            spark,
-            "INSERT INTO orders_t SELECT o_orderkey, o_custkey "
-            "FROM a4t_orders_src WHERE o_orderkey % 3 = 1",
-        )
-        cat.sql(
-            spark,
-            "INSERT INTO orders_t VALUES (9000000001, 1), (9000000002, 2)",
-        )
-        # column-list INSERT: o_custkey absent and nullable -> NULL
-        res = cat.sql(
-            spark, "INSERT INTO orders_t (o_orderkey) VALUES (9000000003)"
-        )
-        assert res["inserted_rows"] == 1
-        refused = 0
-        for bad in (
-            "INSERT INTO orders_t (o_orderkey, o_orderkey) VALUES (1, 1)",
-            "INSERT INTO orders_t VALUES (1)",
-            "INSERT INTO orders_t SELECT o_orderkey FROM a4t_orders_src",
-            "DELETE FROM orders_t WHERE o_orderkey < 0; "
-            "CREATE TABLE x AS SELECT 1 AS one",
+            {"spark.sql.shuffle.partitions": spark.sparkContext.defaultParallelism},
         ):
-            try:
-                if ";" in bad:
-                    cat.sql_script(spark, bad)
-                else:
-                    cat.sql(spark, bad)
-            except UnsupportedSQL:
-                refused += 1
-        row = (
-            cat.read(spark, "orders_t")
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum("o_orderkey").alias("sum_orderkey"),
-                F.countDistinct("o_custkey").alias("n_cust"),
+            cat = Catalog.create(croot)
+            res = cat.sql(
+                spark,
+                "CREATE TABLE orders_t AS SELECT o_orderkey, o_custkey "
+                "FROM a4t_orders_src WHERE o_orderkey % 3 = 0",
             )
-            .collect()[0]
-        )
-        return spark.createDataFrame(
-            [(row["n_rows"], row["sum_orderkey"], row["n_cust"], refused)],
-            "n_rows bigint, sum_orderkey bigint, n_cust bigint, "
-            "refused bigint",
-        )
+            assert res["statement"] == "create_table_as"
+            cat.sql(
+                spark,
+                "INSERT INTO orders_t SELECT o_orderkey, o_custkey "
+                "FROM a4t_orders_src WHERE o_orderkey % 3 = 1",
+            )
+            cat.sql(
+                spark,
+                "INSERT INTO orders_t VALUES (9000000001, 1), (9000000002, 2)",
+            )
+            # column-list INSERT: o_custkey absent and nullable -> NULL
+            res = cat.sql(
+                spark, "INSERT INTO orders_t (o_orderkey) VALUES (9000000003)"
+            )
+            assert res["inserted_rows"] == 1
+            refused = 0
+            for bad in (
+                "INSERT INTO orders_t (o_orderkey, o_orderkey) VALUES (1, 1)",
+                "INSERT INTO orders_t VALUES (1)",
+                "INSERT INTO orders_t SELECT o_orderkey FROM a4t_orders_src",
+                "DELETE FROM orders_t WHERE o_orderkey < 0; "
+                "CREATE TABLE x AS SELECT 1 AS one",
+            ):
+                try:
+                    if ";" in bad:
+                        cat.sql_script(spark, bad)
+                    else:
+                        cat.sql(spark, bad)
+                except UnsupportedSQL:
+                    refused += 1
+            row = (
+                cat.read(spark, "orders_t")
+                .agg(
+                    F.count(F.lit(1)).alias("n_rows"),
+                    F.sum("o_orderkey").alias("sum_orderkey"),
+                    F.countDistinct("o_custkey").alias("n_cust"),
+                )
+                .collect()[0]
+            )
+            return spark.createDataFrame(
+                [(row["n_rows"], row["sum_orderkey"], row["n_cust"], refused)],
+                "n_rows bigint, sum_orderkey bigint, n_cust bigint, "
+                "refused bigint",
+            )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_w)
         spark.catalog.dropTempView("a4t_orders_src")
         shutil.rmtree(os.path.dirname(croot), ignore_errors=True)
 
@@ -3261,75 +3238,73 @@ def a4u_engine_realtime_agg_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
     )
     croot = tempfile.mkdtemp(prefix="engine_rtagg_") + "/cat"
-    prev_w = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(spark.sparkContext.defaultParallelism),
-        )
-        cat = Catalog.create(croot)
-        src = cat.create_table("orders_t", orders.schema)
-        src.append(orders.filter(F.col("o_orderkey") % 3 == 0).coalesce(2))
-        cat._commit_pins({"orders_t": src.metadata.current_snapshot_id})
-        create_maintained_agg(
-            cat, spark, "cust_spend", "orders_t", "o_custkey", "cents"
-        )
-        # source churn, NO refresh
-        src = cat.table("orders_t")
-        src.append(orders.filter(F.col("o_orderkey") % 3 == 1).coalesce(2))
-        cat._commit_pins({"orders_t": src.metadata.current_snapshot_id})
-        src = cat.table("orders_t")
-        src.delete_eq_mor(
+        with conf_scope(
             spark,
-            orders.filter(F.col("o_orderkey") % 10 == 1)
-            .select("o_orderkey").distinct(),
-            ["o_orderkey"],
-        )
-        cat._commit_pins({"orders_t": src.metadata.current_snapshot_id})
-        rec = (
-            cat.table("orders_t").scan(spark)
-            .groupBy("o_custkey")
-            .agg(
-                F.count(F.lit(1)).alias("cnt"),
-                F.sum("cents").alias("sv"),  # long fold: view measure is long
+            {"spark.sql.shuffle.partitions": spark.sparkContext.defaultParallelism},
+        ):
+            cat = Catalog.create(croot)
+            src = cat.create_table("orders_t", orders.schema)
+            src.append(orders.filter(F.col("o_orderkey") % 3 == 0).coalesce(2))
+            cat._commit_pins({"orders_t": src.metadata.current_snapshot_id})
+            create_maintained_agg(
+                cat, spark, "cust_spend", "orders_t", "o_custkey", "cents"
             )
-            .persist()
-        )
-        stale_view = cat.table("cust_spend").scan(spark)
-        stale = not stale_view.exceptAll(
-            rec.select(stale_view.columns)
-        ).isEmpty()
-        rt = read_realtime(cat, spark, "cust_spend").persist()
-        rt_exact = (
-            rt.exceptAll(rec.select(rt.columns)).isEmpty()
-            and rec.select(rt.columns).exceptAll(rt).isEmpty()
-        )
-        row = rt.agg(
-            F.count(F.lit(1)).alias("n_keys"),
-            F.sum("cnt").alias("total_cnt"),
-            F.sum("sv").cast("long").alias("sum_cents"),
-        ).collect()[0]
-        refresh_maintained(cat, spark, "cust_spend")
-        rt2 = read_realtime(cat, spark, "cust_spend")
-        caught_up = (
-            rt2.exceptAll(rec.select(rt2.columns)).isEmpty()
-            and rec.select(rt2.columns).exceptAll(rt2).isEmpty()
-        )
-        rt.unpersist()
-        rec.unpersist()
-        return spark.createDataFrame(
-            [
-                (
-                    row["n_keys"], row["total_cnt"], row["sum_cents"],
-                    stale, rt_exact, caught_up,
+            # source churn, NO refresh
+            src = cat.table("orders_t")
+            src.append(orders.filter(F.col("o_orderkey") % 3 == 1).coalesce(2))
+            cat._commit_pins({"orders_t": src.metadata.current_snapshot_id})
+            src = cat.table("orders_t")
+            src.delete_eq_mor(
+                spark,
+                orders.filter(F.col("o_orderkey") % 10 == 1)
+                .select("o_orderkey").distinct(),
+                ["o_orderkey"],
+            )
+            cat._commit_pins({"orders_t": src.metadata.current_snapshot_id})
+            rec = (
+                cat.table("orders_t").scan(spark)
+                .groupBy("o_custkey")
+                .agg(
+                    F.count(F.lit(1)).alias("cnt"),
+                    F.sum("cents").alias("sv"),  # long fold: view measure is long
                 )
-            ],
-            "n_keys bigint, total_cnt bigint, sum_cents bigint, "
-            "stale_without_refresh boolean, realtime_exact boolean, "
-            "caught_up_after_refresh boolean",
-        )
+                .persist()
+            )
+            stale_view = cat.table("cust_spend").scan(spark)
+            stale = not stale_view.exceptAll(
+                rec.select(stale_view.columns)
+            ).isEmpty()
+            rt = read_realtime(cat, spark, "cust_spend").persist()
+            rt_exact = (
+                rt.exceptAll(rec.select(rt.columns)).isEmpty()
+                and rec.select(rt.columns).exceptAll(rt).isEmpty()
+            )
+            row = rt.agg(
+                F.count(F.lit(1)).alias("n_keys"),
+                F.sum("cnt").alias("total_cnt"),
+                F.sum("sv").cast("long").alias("sum_cents"),
+            ).collect()[0]
+            refresh_maintained(cat, spark, "cust_spend")
+            rt2 = read_realtime(cat, spark, "cust_spend")
+            caught_up = (
+                rt2.exceptAll(rec.select(rt2.columns)).isEmpty()
+                and rec.select(rt2.columns).exceptAll(rt2).isEmpty()
+            )
+            rt.unpersist()
+            rec.unpersist()
+            return spark.createDataFrame(
+                [
+                    (
+                        row["n_keys"], row["total_cnt"], row["sum_cents"],
+                        stale, rt_exact, caught_up,
+                    )
+                ],
+                "n_keys bigint, total_cnt bigint, sum_cents bigint, "
+                "stale_without_refresh boolean, realtime_exact boolean, "
+                "caught_up_after_refresh boolean",
+            )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_w)
         shutil.rmtree(os.path.dirname(croot), ignore_errors=True)
 
 
@@ -3384,115 +3359,113 @@ def a4v_engine_realtime_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
     )
     croot = tempfile.mkdtemp(prefix="engine_rtsql_") + "/cat"
-    prev_w = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(spark.sparkContext.defaultParallelism),
-        )
-        cat = Catalog.create(croot)
-        src = cat.create_table("orders_t", orders.schema)
-        src.append(orders.filter(F.col("o_orderkey") % 3 == 0).coalesce(2))
-        cat._commit_pins({"orders_t": src.metadata.current_snapshot_id})
-        cat.sql(
+        with conf_scope(
             spark,
-            "CREATE MATERIALIZED VIEW cust_spend AS "
-            "SELECT o_custkey, COUNT(*) AS cnt, SUM(cents) AS sv "
-            "FROM orders_t GROUP BY o_custkey",
-        )
-        cat.sql(
-            spark,
-            "CREATE MATERIALIZED VIEW top_spend AS SELECT * FROM ("
-            "SELECT *, ROW_NUMBER() OVER (PARTITION BY o_custkey "
-            "ORDER BY o_orderkey) AS rn FROM orders_t) WHERE rn <= 2",
-        )
-        # source churn, NO refresh
-        src = cat.table("orders_t")
-        src.append(orders.filter(F.col("o_orderkey") % 3 == 1).coalesce(2))
-        cat._commit_pins({"orders_t": src.metadata.current_snapshot_id})
-        src = cat.table("orders_t")
-        src.delete_eq_mor(
-            spark,
-            orders.filter(F.col("o_orderkey") % 10 == 1)
-            .select("o_orderkey").distinct(),
-            ["o_orderkey"],
-        )
-        cat._commit_pins({"orders_t": src.metadata.current_snapshot_id})
-        rec = (
-            cat.table("orders_t").scan(spark)
-            .groupBy("o_custkey")
-            .agg(
-                F.count(F.lit(1)).alias("cnt"),
-                F.sum("cents").alias("sv"),  # long fold: measure is long
-            )
-            .persist()
-        )
-        stale_df = cat.sql(
-            spark, "SELECT o_custkey, cnt, sv FROM cust_spend"
-        )
-        stale = not stale_df.exceptAll(rec.select(stale_df.columns)).isEmpty()
-        rt = cat.sql(
-            spark,
-            "SELECT /*+ REALTIME */ o_custkey, cnt, sv FROM cust_spend",
-        ).persist()
-        hint_exact = (
-            rt.exceptAll(rec.select(rt.columns)).isEmpty()
-            and rec.select(rt.columns).exceptAll(rt).isEmpty()
-        )
-        row = rt.agg(
-            F.count(F.lit(1)).alias("n_keys"),
-            F.sum("cnt").alias("total_cnt"),
-            F.sum("sv").cast("long").alias("sum_cents"),
-        ).collect()[0]
-        # top-k under tail deletes: the hinted read takes the BOUNDED
-        # merge (touched keys from source) and must equal the
-        # from-scratch top-k of the surviving rows
-        from ..operators.topk_view import topk_frame
-
-        rt_top = cat.sql(
-            spark, "SELECT /*+ REALTIME */ * FROM top_spend"
-        ).persist()
-        rec_top = topk_frame(
-            cat.table("orders_t").scan(spark),
-            "o_custkey", ["o_orderkey"], 2,
-        ).select(rt_top.columns)
-        topk_delete_exact = (
-            rt_top.exceptAll(rec_top).isEmpty()
-            and rec_top.exceptAll(rt_top).isEmpty()
-        )
-        rt_top.unpersist()
-        # strict refusal survives for true O(source) fallbacks: a
-        # half-applied crashed fold on the top-k view
-        vt = cat.table("top_spend")
-        vt.delete_eq_mor(
-            spark,
-            spark.createDataFrame([(1,)], "o_custkey long"),
-            ["o_custkey"],
-            extra_summary={"mv-refresh-del": 999},
-        )
-        strict_refused = 0
-        try:
+            {"spark.sql.shuffle.partitions": spark.sparkContext.defaultParallelism},
+        ):
+            cat = Catalog.create(croot)
+            src = cat.create_table("orders_t", orders.schema)
+            src.append(orders.filter(F.col("o_orderkey") % 3 == 0).coalesce(2))
+            cat._commit_pins({"orders_t": src.metadata.current_snapshot_id})
             cat.sql(
                 spark,
-                "SELECT /*+ REALTIME */ COUNT(*) AS n FROM top_spend",
-            ).collect()
-        except ValueError:
-            strict_refused = 1
-        rt.unpersist()
-        rec.unpersist()
-        return spark.createDataFrame(
-            [
-                (
-                    row["n_keys"], row["total_cnt"], row["sum_cents"],
-                    stale, hint_exact, topk_delete_exact, strict_refused,
+                "CREATE MATERIALIZED VIEW cust_spend AS "
+                "SELECT o_custkey, COUNT(*) AS cnt, SUM(cents) AS sv "
+                "FROM orders_t GROUP BY o_custkey",
+            )
+            cat.sql(
+                spark,
+                "CREATE MATERIALIZED VIEW top_spend AS SELECT * FROM ("
+                "SELECT *, ROW_NUMBER() OVER (PARTITION BY o_custkey "
+                "ORDER BY o_orderkey) AS rn FROM orders_t) WHERE rn <= 2",
+            )
+            # source churn, NO refresh
+            src = cat.table("orders_t")
+            src.append(orders.filter(F.col("o_orderkey") % 3 == 1).coalesce(2))
+            cat._commit_pins({"orders_t": src.metadata.current_snapshot_id})
+            src = cat.table("orders_t")
+            src.delete_eq_mor(
+                spark,
+                orders.filter(F.col("o_orderkey") % 10 == 1)
+                .select("o_orderkey").distinct(),
+                ["o_orderkey"],
+            )
+            cat._commit_pins({"orders_t": src.metadata.current_snapshot_id})
+            rec = (
+                cat.table("orders_t").scan(spark)
+                .groupBy("o_custkey")
+                .agg(
+                    F.count(F.lit(1)).alias("cnt"),
+                    F.sum("cents").alias("sv"),  # long fold: measure is long
                 )
-            ],
-            "n_keys bigint, total_cnt bigint, sum_cents bigint, "
-            "stale_without_hint boolean, hint_exact boolean, "
-            "topk_delete_exact boolean, strict_refused bigint",
-        )
+                .persist()
+            )
+            stale_df = cat.sql(
+                spark, "SELECT o_custkey, cnt, sv FROM cust_spend"
+            )
+            stale = not stale_df.exceptAll(rec.select(stale_df.columns)).isEmpty()
+            rt = cat.sql(
+                spark,
+                "SELECT /*+ REALTIME */ o_custkey, cnt, sv FROM cust_spend",
+            ).persist()
+            hint_exact = (
+                rt.exceptAll(rec.select(rt.columns)).isEmpty()
+                and rec.select(rt.columns).exceptAll(rt).isEmpty()
+            )
+            row = rt.agg(
+                F.count(F.lit(1)).alias("n_keys"),
+                F.sum("cnt").alias("total_cnt"),
+                F.sum("sv").cast("long").alias("sum_cents"),
+            ).collect()[0]
+            # top-k under tail deletes: the hinted read takes the BOUNDED
+            # merge (touched keys from source) and must equal the
+            # from-scratch top-k of the surviving rows
+            from ..operators.topk_view import topk_frame
+
+            rt_top = cat.sql(
+                spark, "SELECT /*+ REALTIME */ * FROM top_spend"
+            ).persist()
+            rec_top = topk_frame(
+                cat.table("orders_t").scan(spark),
+                "o_custkey", ["o_orderkey"], 2,
+            ).select(rt_top.columns)
+            topk_delete_exact = (
+                rt_top.exceptAll(rec_top).isEmpty()
+                and rec_top.exceptAll(rt_top).isEmpty()
+            )
+            rt_top.unpersist()
+            # strict refusal survives for true O(source) fallbacks: a
+            # half-applied crashed fold on the top-k view
+            vt = cat.table("top_spend")
+            vt.delete_eq_mor(
+                spark,
+                spark.createDataFrame([(1,)], "o_custkey long"),
+                ["o_custkey"],
+                extra_summary={"mv-refresh-del": 999},
+            )
+            strict_refused = 0
+            try:
+                cat.sql(
+                    spark,
+                    "SELECT /*+ REALTIME */ COUNT(*) AS n FROM top_spend",
+                ).collect()
+            except ValueError:
+                strict_refused = 1
+            rt.unpersist()
+            rec.unpersist()
+            return spark.createDataFrame(
+                [
+                    (
+                        row["n_keys"], row["total_cnt"], row["sum_cents"],
+                        stale, hint_exact, topk_delete_exact, strict_refused,
+                    )
+                ],
+                "n_keys bigint, total_cnt bigint, sum_cents bigint, "
+                "stale_without_hint boolean, hint_exact boolean, "
+                "topk_delete_exact boolean, strict_refused bigint",
+            )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_w)
         shutil.rmtree(os.path.dirname(croot), ignore_errors=True)
 
 
@@ -3534,101 +3507,99 @@ def a4w_engine_sql_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey")
     croot = tempfile.mkdtemp(prefix="engine_sqltt_") + "/cat"
-    prev_w = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(spark.sparkContext.defaultParallelism),
-        )
-        cat = Catalog.create(croot)
-        src = cat.create_table("orders_t", orders.schema)
-        tot_schema = spark.createDataFrame(
-            [], "n_rows long, sum_orderkey long"
-        ).schema
-        tot = cat.create_table("totals", tot_schema)
-
-        def publish(flt):
-            s = cat.table("orders_t")
-            s.append(orders.filter(flt).coalesce(2))
-            t = cat.table("totals")
-            agg = (
-                s.scan(spark)
-                .agg(
-                    F.count(F.lit(1)).alias("n_rows"),
-                    F.sum("o_orderkey").alias("sum_orderkey"),
-                )
-            )
-            t.overwrite_entries(t._write_data_files(agg.coalesce(1)))
-            # ONE catalog version pins BOTH tables: the unit the
-            # time-traveled read must see atomically
-            cat._commit_pins(
-                {
-                    "orders_t": s.metadata.current_snapshot_id,
-                    "totals": t.metadata.current_snapshot_id,
-                }
-            )
-            return cat.state().version
-
-        va = publish(F.col("o_orderkey") % 3 == 0)
-        vb = publish(F.col("o_orderkey") % 3 == 1)
-        # head moves past the publish: invisible at every version
-        cat.table("orders_t").append(
-            orders.filter(F.col("o_orderkey") % 3 == 2).coalesce(2)
-        )
-        rows_at = {}
-        for tag, v in (("va", va), ("vb", vb)):
-            rows_at[tag] = cat.sql(
-                spark,
-                f"SELECT /*+ CATALOG_VERSION({v}) */ COUNT(*) AS n, "
-                "SUM(o_orderkey) AS s FROM orders_t",
-            ).collect()[0]
-        cur = cat.sql(
-            spark, "SELECT COUNT(*) AS n FROM orders_t"
-        ).collect()[0]["n"]
-        # cross-table consistency at A: totals (written in A's publish)
-        # equals the recompute over orders_t AT THE SAME STATE
-        joined = cat.sql(
+        with conf_scope(
             spark,
-            f"SELECT /*+ CATALOG_VERSION({va}) */ "
-            "t.n_rows AS stored_n, t.sum_orderkey AS stored_s, "
-            "o.n AS live_n, o.s AS live_s "
-            "FROM totals t CROSS JOIN (SELECT COUNT(*) AS n, "
-            "SUM(o_orderkey) AS s FROM orders_t) o",
-        ).collect()[0]
-        consistent = (
-            joined["stored_n"] == joined["live_n"]
-            and joined["stored_s"] == joined["live_s"]
-        )
-        refused = 0
-        try:
-            cat.sql(
-                spark,
-                f"SELECT /*+ CATALOG_VERSION({va}) */ /*+ REALTIME */ "
-                "COUNT(*) FROM orders_t",
-            )
-        except UnsupportedSQL:
-            refused += 1
-        try:
-            cat.sql(
-                spark,
-                "SELECT /*+ CATALOG_VERSION(999999) */ COUNT(*) "
-                "FROM orders_t",
-            )
-        except FileNotFoundError:
-            refused += 1
-        return spark.createDataFrame(
-            [
-                (
-                    rows_at["va"]["n"], rows_at["va"]["s"],
-                    rows_at["vb"]["n"], cur, consistent, refused,
+            {"spark.sql.shuffle.partitions": spark.sparkContext.defaultParallelism},
+        ):
+            cat = Catalog.create(croot)
+            src = cat.create_table("orders_t", orders.schema)
+            tot_schema = spark.createDataFrame(
+                [], "n_rows long, sum_orderkey long"
+            ).schema
+            tot = cat.create_table("totals", tot_schema)
+
+            def publish(flt):
+                s = cat.table("orders_t")
+                s.append(orders.filter(flt).coalesce(2))
+                t = cat.table("totals")
+                agg = (
+                    s.scan(spark)
+                    .agg(
+                        F.count(F.lit(1)).alias("n_rows"),
+                        F.sum("o_orderkey").alias("sum_orderkey"),
+                    )
                 )
-            ],
-            "cnt_va bigint, sum_va bigint, cnt_vb bigint, "
-            "cnt_current bigint, cross_table_consistent boolean, "
-            "refused bigint",
-        )
+                t.overwrite_entries(t._write_data_files(agg.coalesce(1)))
+                # ONE catalog version pins BOTH tables: the unit the
+                # time-traveled read must see atomically
+                cat._commit_pins(
+                    {
+                        "orders_t": s.metadata.current_snapshot_id,
+                        "totals": t.metadata.current_snapshot_id,
+                    }
+                )
+                return cat.state().version
+
+            va = publish(F.col("o_orderkey") % 3 == 0)
+            vb = publish(F.col("o_orderkey") % 3 == 1)
+            # head moves past the publish: invisible at every version
+            cat.table("orders_t").append(
+                orders.filter(F.col("o_orderkey") % 3 == 2).coalesce(2)
+            )
+            rows_at = {}
+            for tag, v in (("va", va), ("vb", vb)):
+                rows_at[tag] = cat.sql(
+                    spark,
+                    f"SELECT /*+ CATALOG_VERSION({v}) */ COUNT(*) AS n, "
+                    "SUM(o_orderkey) AS s FROM orders_t",
+                ).collect()[0]
+            cur = cat.sql(
+                spark, "SELECT COUNT(*) AS n FROM orders_t"
+            ).collect()[0]["n"]
+            # cross-table consistency at A: totals (written in A's publish)
+            # equals the recompute over orders_t AT THE SAME STATE
+            joined = cat.sql(
+                spark,
+                f"SELECT /*+ CATALOG_VERSION({va}) */ "
+                "t.n_rows AS stored_n, t.sum_orderkey AS stored_s, "
+                "o.n AS live_n, o.s AS live_s "
+                "FROM totals t CROSS JOIN (SELECT COUNT(*) AS n, "
+                "SUM(o_orderkey) AS s FROM orders_t) o",
+            ).collect()[0]
+            consistent = (
+                joined["stored_n"] == joined["live_n"]
+                and joined["stored_s"] == joined["live_s"]
+            )
+            refused = 0
+            try:
+                cat.sql(
+                    spark,
+                    f"SELECT /*+ CATALOG_VERSION({va}) */ /*+ REALTIME */ "
+                    "COUNT(*) FROM orders_t",
+                )
+            except UnsupportedSQL:
+                refused += 1
+            try:
+                cat.sql(
+                    spark,
+                    "SELECT /*+ CATALOG_VERSION(999999) */ COUNT(*) "
+                    "FROM orders_t",
+                )
+            except FileNotFoundError:
+                refused += 1
+            return spark.createDataFrame(
+                [
+                    (
+                        rows_at["va"]["n"], rows_at["va"]["s"],
+                        rows_at["vb"]["n"], cur, consistent, refused,
+                    )
+                ],
+                "cnt_va bigint, sum_va bigint, cnt_vb bigint, "
+                "cnt_current bigint, cross_table_consistent boolean, "
+                "refused bigint",
+            )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_w)
         shutil.rmtree(os.path.dirname(croot), ignore_errors=True)
 
 
@@ -3674,60 +3645,58 @@ def a4x_engine_sql_insert_overwrite(spark: SparkSession, sf_dir: str) -> DataFra
     )
     orders.createOrReplaceTempView("a4x_orders_src")
     croot = tempfile.mkdtemp(prefix="engine_sqlovw_") + "/cat"
-    prev_w = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(spark.sparkContext.defaultParallelism),
-        )
-        cat = Catalog.create(croot)
-        cat.sql(
+        with conf_scope(
             spark,
-            "CREATE TABLE orders_t AS SELECT o_orderkey, o_custkey "
-            "FROM a4x_orders_src WHERE o_orderkey % 3 = 0",
-        )
-        pre_snap = cat.table("orders_t").metadata.current_snapshot_id
-        pre_cnt = cat.read(spark, "orders_t").count()
-        res = cat.sql(
-            spark,
-            "INSERT OVERWRITE orders_t SELECT o_orderkey, o_custkey "
-            "FROM orders_t WHERE o_custkey % 2 = 0",
-        )
-        assert res["statement"] == "insert_overwrite"
-        tbl = cat.table("orders_t")
-        atomic = tbl.metadata.current_snapshot().operation == "overwrite"
-        travels = (
-            tbl.scan(spark, snapshot_id=pre_snap).count() == pre_cnt
-        )
-        refused = 0
-        for bad in (
-            "INSERT OVERWRITE orders_t SELECT o_orderkey FROM orders_t",
-            "INSERT OVERWRITE orders_t VALUES (1)",
+            {"spark.sql.shuffle.partitions": spark.sparkContext.defaultParallelism},
         ):
-            try:
-                cat.sql(spark, bad)
-            except UnsupportedSQL:
-                refused += 1
-        row = (
-            cat.read(spark, "orders_t")
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum("o_orderkey").alias("sum_orderkey"),
+            cat = Catalog.create(croot)
+            cat.sql(
+                spark,
+                "CREATE TABLE orders_t AS SELECT o_orderkey, o_custkey "
+                "FROM a4x_orders_src WHERE o_orderkey % 3 = 0",
             )
-            .collect()[0]
-        )
-        return spark.createDataFrame(
-            [
-                (
-                    row["n_rows"], row["sum_orderkey"],
-                    atomic, travels, refused,
+            pre_snap = cat.table("orders_t").metadata.current_snapshot_id
+            pre_cnt = cat.read(spark, "orders_t").count()
+            res = cat.sql(
+                spark,
+                "INSERT OVERWRITE orders_t SELECT o_orderkey, o_custkey "
+                "FROM orders_t WHERE o_custkey % 2 = 0",
+            )
+            assert res["statement"] == "insert_overwrite"
+            tbl = cat.table("orders_t")
+            atomic = tbl.metadata.current_snapshot().operation == "overwrite"
+            travels = (
+                tbl.scan(spark, snapshot_id=pre_snap).count() == pre_cnt
+            )
+            refused = 0
+            for bad in (
+                "INSERT OVERWRITE orders_t SELECT o_orderkey FROM orders_t",
+                "INSERT OVERWRITE orders_t VALUES (1)",
+            ):
+                try:
+                    cat.sql(spark, bad)
+                except UnsupportedSQL:
+                    refused += 1
+            row = (
+                cat.read(spark, "orders_t")
+                .agg(
+                    F.count(F.lit(1)).alias("n_rows"),
+                    F.sum("o_orderkey").alias("sum_orderkey"),
                 )
-            ],
-            "n_rows bigint, sum_orderkey bigint, atomic_overwrite "
-            "boolean, pre_image_travels boolean, refused bigint",
-        )
+                .collect()[0]
+            )
+            return spark.createDataFrame(
+                [
+                    (
+                        row["n_rows"], row["sum_orderkey"],
+                        atomic, travels, refused,
+                    )
+                ],
+                "n_rows bigint, sum_orderkey bigint, atomic_overwrite "
+                "boolean, pre_image_travels boolean, refused bigint",
+            )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_w)
         spark.catalog.dropTempView("a4x_orders_src")
         shutil.rmtree(os.path.dirname(croot), ignore_errors=True)
 
@@ -3768,67 +3737,65 @@ def a4y_engine_sql_create_ddl(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     orders.createOrReplaceTempView("a4y_orders_src")
     croot = tempfile.mkdtemp(prefix="engine_sqlddl_") + "/cat"
-    prev_w = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(spark.sparkContext.defaultParallelism),
-        )
-        cat = Catalog.create(croot)
-        res = cat.sql(
+        with conf_scope(
             spark,
-            "CREATE TABLE orders_t (o_orderkey BIGINT NOT NULL, "
-            "o_custkey BIGINT, note STRING) "
-            "PARTITIONED BY (bucket(8, o_orderkey)) "
-            "TBLPROPERTIES ('write.sort.order' = 'o_orderkey')",
-        )
-        assert res["statement"] == "create_table"
-        n_cols = len(res["columns"])
-        # column-list INSERT SELECT: note fills NULL
-        cat.sql(
-            spark,
-            "INSERT INTO orders_t (o_orderkey, o_custkey) "
-            "SELECT o_orderkey, o_custkey FROM a4y_orders_src "
-            "WHERE o_orderkey % 3 = 0",
-        )
-        tbl = cat.table("orders_t")
-        files_total = len(list(tbl.current_files()))
-        # bucket layout prunes: a point lookup plans only the files of
-        # one bucket (the write path partitioned by the DDL transform)
-        some_key = (
-            cat.read(spark, "orders_t").select("o_orderkey").first()[0]
-        )
-        planned = len(tbl.plan_files([("o_orderkey", "=", some_key)]))
-        pruned = planned < files_total
-        refused = 0
-        for bad in (
-            "CREATE TABLE orders_t (x BIGINT)",
-            "CREATE TABLE b1 (x NOTATYPE)",
-            # an EMPTY field list is permanently outside the grammar
-            # (the old multi-column probe became legal when round 13
-            # added composite specs — refusal probes must stay illegal
-            # forever, the a4l TRUNCATE-incident discipline)
-            "CREATE TABLE b2 (x BIGINT, y BIGINT) PARTITIONED BY ()",
+            {"spark.sql.shuffle.partitions": spark.sparkContext.defaultParallelism},
         ):
-            try:
-                cat.sql(spark, bad)
-            except UnsupportedSQL:
-                refused += 1
-        row = (
-            cat.read(spark, "orders_t")
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum("o_orderkey").alias("sum_orderkey"),
+            cat = Catalog.create(croot)
+            res = cat.sql(
+                spark,
+                "CREATE TABLE orders_t (o_orderkey BIGINT NOT NULL, "
+                "o_custkey BIGINT, note STRING) "
+                "PARTITIONED BY (bucket(8, o_orderkey)) "
+                "TBLPROPERTIES ('write.sort.order' = 'o_orderkey')",
             )
-            .collect()[0]
-        )
-        return spark.createDataFrame(
-            [(row["n_rows"], row["sum_orderkey"], n_cols, pruned, refused)],
-            "n_rows bigint, sum_orderkey bigint, n_cols bigint, "
-            "pruned_scan boolean, refused bigint",
-        )
+            assert res["statement"] == "create_table"
+            n_cols = len(res["columns"])
+            # column-list INSERT SELECT: note fills NULL
+            cat.sql(
+                spark,
+                "INSERT INTO orders_t (o_orderkey, o_custkey) "
+                "SELECT o_orderkey, o_custkey FROM a4y_orders_src "
+                "WHERE o_orderkey % 3 = 0",
+            )
+            tbl = cat.table("orders_t")
+            files_total = len(list(tbl.current_files()))
+            # bucket layout prunes: a point lookup plans only the files of
+            # one bucket (the write path partitioned by the DDL transform)
+            some_key = (
+                cat.read(spark, "orders_t").select("o_orderkey").first()[0]
+            )
+            planned = len(tbl.plan_files([("o_orderkey", "=", some_key)]))
+            pruned = planned < files_total
+            refused = 0
+            for bad in (
+                "CREATE TABLE orders_t (x BIGINT)",
+                "CREATE TABLE b1 (x NOTATYPE)",
+                # an EMPTY field list is permanently outside the grammar
+                # (the old multi-column probe became legal when round 13
+                # added composite specs — refusal probes must stay illegal
+                # forever, the a4l TRUNCATE-incident discipline)
+                "CREATE TABLE b2 (x BIGINT, y BIGINT) PARTITIONED BY ()",
+            ):
+                try:
+                    cat.sql(spark, bad)
+                except UnsupportedSQL:
+                    refused += 1
+            row = (
+                cat.read(spark, "orders_t")
+                .agg(
+                    F.count(F.lit(1)).alias("n_rows"),
+                    F.sum("o_orderkey").alias("sum_orderkey"),
+                )
+                .collect()[0]
+            )
+            return spark.createDataFrame(
+                [(row["n_rows"], row["sum_orderkey"], n_cols, pruned, refused)],
+                "n_rows bigint, sum_orderkey bigint, n_cols bigint, "
+                "pruned_scan boolean, refused bigint",
+            )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_w)
         spark.catalog.dropTempView("a4y_orders_src")
         shutil.rmtree(os.path.dirname(croot), ignore_errors=True)
 
@@ -3880,77 +3847,75 @@ def a4z_engine_extrema_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
     )
     croot = tempfile.mkdtemp(prefix="engine_ext_") + "/cat"
-    prev_w = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(spark.sparkContext.defaultParallelism),
-        )
-        cat = Catalog.create(croot)
-        src = cat.create_table("orders_t", orders.schema)
-        src.append(orders.filter(F.col("o_orderkey") % 3 == 0).coalesce(2))
-        cat._commit_pins({"orders_t": src.metadata.current_snapshot_id})
-        cat.sql(
+        with conf_scope(
             spark,
-            "CREATE MATERIALIZED VIEW cust_ext AS SELECT o_custkey, "
-            "MIN(cents) AS mn, MAX(cents) AS mx FROM orders_t "
-            "GROUP BY o_custkey",
-        )
-        # churn WITHOUT refresh: appends + a delete wave that removes
-        # rows across the value range (incl. current extremes)
-        src = cat.table("orders_t")
-        src.append(orders.filter(F.col("o_orderkey") % 3 == 1).coalesce(2))
-        cat._commit_pins({"orders_t": src.metadata.current_snapshot_id})
-        src = cat.table("orders_t")
-        src.delete_eq_mor(
-            spark,
-            orders.filter(F.col("o_orderkey") % 10 == 1)
-            .select("o_orderkey").distinct(),
-            ["o_orderkey"],
-        )
-        cat._commit_pins({"orders_t": src.metadata.current_snapshot_id})
-        rec = (
-            cat.table("orders_t").scan(spark)
-            .groupBy("o_custkey")
-            .agg(F.min("cents").alias("mn"), F.max("cents").alias("mx"))
-            .persist()
-        )
-        rt = read_realtime(cat, spark, "cust_ext").persist()
-        realtime_exact = (
-            rt.exceptAll(rec.select(rt.columns)).isEmpty()
-            and rec.select(rt.columns).exceptAll(rt).isEmpty()
-        )
-        r = cat.sql(spark, "REFRESH MATERIALIZED VIEW cust_ext")
-        assert r["refreshed"] is True
-        mv = cat.read(spark, "cust_ext").persist()
-        equals_recompute = (
-            mv.exceptAll(rec.select(mv.columns)).isEmpty()
-            and rec.select(mv.columns).exceptAll(mv).isEmpty()
-        )
-        noop = (
-            refresh_maintained(cat, spark, "cust_ext")["refreshed"] is False
-        )
-        row = mv.agg(
-            F.count(F.lit(1)).alias("n_keys"),
-            F.sum("mn").alias("sum_mn"),
-            F.sum("mx").alias("sum_mx"),
-        ).collect()[0]
-        rt.unpersist()
-        rec.unpersist()
-        mv.unpersist()
-        return spark.createDataFrame(
-            [
-                (
-                    row["n_keys"], row["sum_mn"], row["sum_mx"],
-                    realtime_exact, equals_recompute, noop,
-                )
-            ],
-            "n_keys bigint, sum_mn bigint, sum_mx bigint, "
-            "realtime_exact boolean, equals_recompute boolean, "
-            "final_refresh_noop boolean",
-        )
+            {"spark.sql.shuffle.partitions": spark.sparkContext.defaultParallelism},
+        ):
+            cat = Catalog.create(croot)
+            src = cat.create_table("orders_t", orders.schema)
+            src.append(orders.filter(F.col("o_orderkey") % 3 == 0).coalesce(2))
+            cat._commit_pins({"orders_t": src.metadata.current_snapshot_id})
+            cat.sql(
+                spark,
+                "CREATE MATERIALIZED VIEW cust_ext AS SELECT o_custkey, "
+                "MIN(cents) AS mn, MAX(cents) AS mx FROM orders_t "
+                "GROUP BY o_custkey",
+            )
+            # churn WITHOUT refresh: appends + a delete wave that removes
+            # rows across the value range (incl. current extremes)
+            src = cat.table("orders_t")
+            src.append(orders.filter(F.col("o_orderkey") % 3 == 1).coalesce(2))
+            cat._commit_pins({"orders_t": src.metadata.current_snapshot_id})
+            src = cat.table("orders_t")
+            src.delete_eq_mor(
+                spark,
+                orders.filter(F.col("o_orderkey") % 10 == 1)
+                .select("o_orderkey").distinct(),
+                ["o_orderkey"],
+            )
+            cat._commit_pins({"orders_t": src.metadata.current_snapshot_id})
+            rec = (
+                cat.table("orders_t").scan(spark)
+                .groupBy("o_custkey")
+                .agg(F.min("cents").alias("mn"), F.max("cents").alias("mx"))
+                .persist()
+            )
+            rt = read_realtime(cat, spark, "cust_ext").persist()
+            realtime_exact = (
+                rt.exceptAll(rec.select(rt.columns)).isEmpty()
+                and rec.select(rt.columns).exceptAll(rt).isEmpty()
+            )
+            r = cat.sql(spark, "REFRESH MATERIALIZED VIEW cust_ext")
+            assert r["refreshed"] is True
+            mv = cat.read(spark, "cust_ext").persist()
+            equals_recompute = (
+                mv.exceptAll(rec.select(mv.columns)).isEmpty()
+                and rec.select(mv.columns).exceptAll(mv).isEmpty()
+            )
+            noop = (
+                refresh_maintained(cat, spark, "cust_ext")["refreshed"] is False
+            )
+            row = mv.agg(
+                F.count(F.lit(1)).alias("n_keys"),
+                F.sum("mn").alias("sum_mn"),
+                F.sum("mx").alias("sum_mx"),
+            ).collect()[0]
+            rt.unpersist()
+            rec.unpersist()
+            mv.unpersist()
+            return spark.createDataFrame(
+                [
+                    (
+                        row["n_keys"], row["sum_mn"], row["sum_mx"],
+                        realtime_exact, equals_recompute, noop,
+                    )
+                ],
+                "n_keys bigint, sum_mn bigint, sum_mx bigint, "
+                "realtime_exact boolean, equals_recompute boolean, "
+                "final_refresh_noop boolean",
+            )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_w)
         shutil.rmtree(os.path.dirname(croot), ignore_errors=True)
 
 
@@ -3991,73 +3956,71 @@ def a5a_engine_sql_version_as_of(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey")
     croot = tempfile.mkdtemp(prefix="engine_vat_") + "/cat"
-    prev_w = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(spark.sparkContext.defaultParallelism),
-        )
-        cat = Catalog.create(croot)
-        src = cat.create_table("orders_t", orders.schema)
-        src.append(orders.filter(F.col("o_orderkey") % 3 == 0).coalesce(2))
-        s1 = src.metadata.current_snapshot_id
-        # the timestamp travel below cuts AT s1's commit instant: make
-        # sure the next commit lands on a LATER millisecond, or no
-        # cutoff could separate the two snapshots
-        import time as _time
-
-        while int(_time.time() * 1000) <= src.snapshot_by_id(s1).timestamp_ms:
-            _time.sleep(0.002)
-        src.append(orders.filter(F.col("o_orderkey") % 3 == 1).coalesce(2))
-        cat._commit_pins({"orders_t": src.metadata.current_snapshot_id})
-        at_v1 = cat.sql(
+        with conf_scope(
             spark,
-            f"SELECT COUNT(*) AS n, SUM(o_orderkey) AS s "
-            f"FROM orders_t FOR VERSION AS OF {s1}",
-        ).collect()[0]
-        cur = cat.sql(
-            spark, "SELECT COUNT(*) AS n FROM orders_t"
-        ).collect()[0]["n"]
-        # bare spelling, WHERE composed around the travel clause
-        filtered = cat.sql(
-            spark,
-            f"SELECT COUNT(*) AS n FROM orders_t VERSION AS OF {s1} "
-            "WHERE o_orderkey % 2 = 0",
-        ).collect()[0]["n"]
-        ts1 = src.snapshot_by_id(s1).timestamp_ms
-        cnt_ts = cat.sql(
-            spark,
-            f"SELECT COUNT(*) AS n FROM orders_t FOR TIMESTAMP AS OF {ts1}",
-        ).collect()[0]["n"]
-        cat.create_table("other_t", orders.schema)
-        cat.sql(spark, "CREATE VIEW ov AS SELECT o_orderkey FROM orders_t")
-        refused = 0
-        for bad in (
-            f"SELECT COUNT(*) FROM orders_t FOR VERSION AS OF {s1} "
-            "JOIN other_t ON orders_t.o_orderkey = other_t.o_orderkey",
-            f"SELECT /*+ CATALOG_VERSION(1) */ COUNT(*) FROM orders_t "
-            f"FOR VERSION AS OF {s1}",
-            f"SELECT COUNT(*) FROM ov FOR VERSION AS OF {s1}",
-            "SELECT COUNT(*) FROM orders_t TIMESTAMP AS OF 'nonsense'",
+            {"spark.sql.shuffle.partitions": spark.sparkContext.defaultParallelism},
         ):
-            try:
-                cat.sql(spark, bad)
-            except UnsupportedSQL:
-                refused += 1
-        try:
-            cat.sql(
+            cat = Catalog.create(croot)
+            src = cat.create_table("orders_t", orders.schema)
+            src.append(orders.filter(F.col("o_orderkey") % 3 == 0).coalesce(2))
+            s1 = src.metadata.current_snapshot_id
+            # the timestamp travel below cuts AT s1's commit instant: make
+            # sure the next commit lands on a LATER millisecond, or no
+            # cutoff could separate the two snapshots
+            import time as _time
+
+            while int(_time.time() * 1000) <= src.snapshot_by_id(s1).timestamp_ms:
+                _time.sleep(0.002)
+            src.append(orders.filter(F.col("o_orderkey") % 3 == 1).coalesce(2))
+            cat._commit_pins({"orders_t": src.metadata.current_snapshot_id})
+            at_v1 = cat.sql(
                 spark,
-                "SELECT COUNT(*) FROM orders_t FOR VERSION AS OF 424242",
+                f"SELECT COUNT(*) AS n, SUM(o_orderkey) AS s "
+                f"FROM orders_t FOR VERSION AS OF {s1}",
+            ).collect()[0]
+            cur = cat.sql(
+                spark, "SELECT COUNT(*) AS n FROM orders_t"
+            ).collect()[0]["n"]
+            # bare spelling, WHERE composed around the travel clause
+            filtered = cat.sql(
+                spark,
+                f"SELECT COUNT(*) AS n FROM orders_t VERSION AS OF {s1} "
+                "WHERE o_orderkey % 2 = 0",
+            ).collect()[0]["n"]
+            ts1 = src.snapshot_by_id(s1).timestamp_ms
+            cnt_ts = cat.sql(
+                spark,
+                f"SELECT COUNT(*) AS n FROM orders_t FOR TIMESTAMP AS OF {ts1}",
+            ).collect()[0]["n"]
+            cat.create_table("other_t", orders.schema)
+            cat.sql(spark, "CREATE VIEW ov AS SELECT o_orderkey FROM orders_t")
+            refused = 0
+            for bad in (
+                f"SELECT COUNT(*) FROM orders_t FOR VERSION AS OF {s1} "
+                "JOIN other_t ON orders_t.o_orderkey = other_t.o_orderkey",
+                f"SELECT /*+ CATALOG_VERSION(1) */ COUNT(*) FROM orders_t "
+                f"FOR VERSION AS OF {s1}",
+                f"SELECT COUNT(*) FROM ov FOR VERSION AS OF {s1}",
+                "SELECT COUNT(*) FROM orders_t TIMESTAMP AS OF 'nonsense'",
+            ):
+                try:
+                    cat.sql(spark, bad)
+                except UnsupportedSQL:
+                    refused += 1
+            try:
+                cat.sql(
+                    spark,
+                    "SELECT COUNT(*) FROM orders_t FOR VERSION AS OF 424242",
+                )
+            except KeyError:
+                refused += 1
+            return spark.createDataFrame(
+                [(at_v1["n"], at_v1["s"], cur, filtered, cnt_ts, refused)],
+                "cnt_v1 bigint, sum_v1 bigint, cnt_current bigint, "
+                "cnt_v1_filtered bigint, cnt_ts bigint, refused bigint",
             )
-        except KeyError:
-            refused += 1
-        return spark.createDataFrame(
-            [(at_v1["n"], at_v1["s"], cur, filtered, cnt_ts, refused)],
-            "cnt_v1 bigint, sum_v1 bigint, cnt_current bigint, "
-            "cnt_v1_filtered bigint, cnt_ts bigint, refused bigint",
-        )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_w)
         shutil.rmtree(os.path.dirname(croot), ignore_errors=True)
 
 
@@ -4104,85 +4067,83 @@ def a5b_engine_sql_partition_overwrite(
 
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey")
     croot = tempfile.mkdtemp(prefix="engine_povw_") + "/cat"
-    prev_w = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(spark.sparkContext.defaultParallelism),
-        )
-        cat = Catalog.create(croot)
-        base = orders.withColumn("bucket", F.col("o_orderkey") % 4)
-        pt = cat.create_table(
-            "pt", base.schema, partition=identity("bucket")
-        )
-        pt.append(base.coalesce(4))
-        pre_snap = pt.metadata.current_snapshot_id
-        pre_cnt = orders.count()
-        cat._commit_pins({"pt": pre_snap})
-        res = cat.sql(
+        with conf_scope(
             spark,
-            "INSERT OVERWRITE pt PARTITION (bucket = 1) "
-            "VALUES (900000001), (900000002)",
-        )
-        assert res["mode"] == "static_partition"
-        assert res["replaced_partitions"] == [1]
-        res = cat.sql(
-            spark,
-            "INSERT OVERWRITE pt PARTITION (bucket = 3) "
-            "SELECT o_orderkey FROM pt WHERE o_orderkey < 0",
-        )
-        assert res["inserted_rows"] == 0  # empty static CLEARS b3
-        res = cat.sql(
-            spark,
-            "INSERT OVERWRITE pt PARTITION (bucket) "
-            "VALUES (900000003, 0), (900000004, 0)",
-        )
-        assert res["mode"] == "dynamic_partition"
-        assert res["replaced_partitions"] == [0]
-        tbl = cat.table("pt")
-        snap = tbl.metadata.current_snapshot()
-        atomic = (
-            snap.operation == "overwrite"
-            and snap.summary.get("overwrite-mode") == "dynamic"
-        )
-        travels = (
-            tbl.scan(spark, snapshot_id=pre_snap).count() == pre_cnt
-        )
-        refused = 0
-        cat.create_table("flat_t", orders.schema)
-        for bad in (
-            "INSERT OVERWRITE flat_t PARTITION (o_orderkey = 1) VALUES (1)",
-            "INSERT OVERWRITE pt PARTITION (o_orderkey = 1) VALUES (2)",
-            "INSERT OVERWRITE pt PARTITION (bucket = 1) "
-            "SELECT o_orderkey, bucket FROM pt",
+            {"spark.sql.shuffle.partitions": spark.sparkContext.defaultParallelism},
         ):
-            try:
-                cat.sql(spark, bad)
-            except UnsupportedSQL:
-                refused += 1
-        row = (
-            cat.read(spark, "pt")
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum("o_orderkey").alias("sum_okey"),
-                F.sum((F.col("bucket") == 2).cast("long")).alias("kept_b2"),
-                F.sum((F.col("bucket") == 3).cast("long")).alias("b3_rows"),
+            cat = Catalog.create(croot)
+            base = orders.withColumn("bucket", F.col("o_orderkey") % 4)
+            pt = cat.create_table(
+                "pt", base.schema, partition=identity("bucket")
             )
-            .collect()[0]
-        )
-        return spark.createDataFrame(
-            [
-                (
-                    row["n_rows"], row["sum_okey"], row["kept_b2"],
-                    row["b3_rows"], atomic, travels, refused,
+            pt.append(base.coalesce(4))
+            pre_snap = pt.metadata.current_snapshot_id
+            pre_cnt = orders.count()
+            cat._commit_pins({"pt": pre_snap})
+            res = cat.sql(
+                spark,
+                "INSERT OVERWRITE pt PARTITION (bucket = 1) "
+                "VALUES (900000001), (900000002)",
+            )
+            assert res["mode"] == "static_partition"
+            assert res["replaced_partitions"] == [1]
+            res = cat.sql(
+                spark,
+                "INSERT OVERWRITE pt PARTITION (bucket = 3) "
+                "SELECT o_orderkey FROM pt WHERE o_orderkey < 0",
+            )
+            assert res["inserted_rows"] == 0  # empty static CLEARS b3
+            res = cat.sql(
+                spark,
+                "INSERT OVERWRITE pt PARTITION (bucket) "
+                "VALUES (900000003, 0), (900000004, 0)",
+            )
+            assert res["mode"] == "dynamic_partition"
+            assert res["replaced_partitions"] == [0]
+            tbl = cat.table("pt")
+            snap = tbl.metadata.current_snapshot()
+            atomic = (
+                snap.operation == "overwrite"
+                and snap.summary.get("overwrite-mode") == "dynamic"
+            )
+            travels = (
+                tbl.scan(spark, snapshot_id=pre_snap).count() == pre_cnt
+            )
+            refused = 0
+            cat.create_table("flat_t", orders.schema)
+            for bad in (
+                "INSERT OVERWRITE flat_t PARTITION (o_orderkey = 1) VALUES (1)",
+                "INSERT OVERWRITE pt PARTITION (o_orderkey = 1) VALUES (2)",
+                "INSERT OVERWRITE pt PARTITION (bucket = 1) "
+                "SELECT o_orderkey, bucket FROM pt",
+            ):
+                try:
+                    cat.sql(spark, bad)
+                except UnsupportedSQL:
+                    refused += 1
+            row = (
+                cat.read(spark, "pt")
+                .agg(
+                    F.count(F.lit(1)).alias("n_rows"),
+                    F.sum("o_orderkey").alias("sum_okey"),
+                    F.sum((F.col("bucket") == 2).cast("long")).alias("kept_b2"),
+                    F.sum((F.col("bucket") == 3).cast("long")).alias("b3_rows"),
                 )
-            ],
-            "n_rows bigint, sum_okey bigint, kept_b2 bigint, "
-            "b3_rows bigint, atomic_overwrite boolean, "
-            "pre_image_travels boolean, refused bigint",
-        )
+                .collect()[0]
+            )
+            return spark.createDataFrame(
+                [
+                    (
+                        row["n_rows"], row["sum_okey"], row["kept_b2"],
+                        row["b3_rows"], atomic, travels, refused,
+                    )
+                ],
+                "n_rows bigint, sum_okey bigint, kept_b2 bigint, "
+                "b3_rows bigint, atomic_overwrite boolean, "
+                "pre_image_travels boolean, refused bigint",
+            )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_w)
         shutil.rmtree(os.path.dirname(croot), ignore_errors=True)
 
 
@@ -4225,79 +4186,77 @@ def a5d_engine_sql_optimize_partition(
 
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey")
     croot = tempfile.mkdtemp(prefix="engine_optw_") + "/cat"
-    prev_w = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(spark.sparkContext.defaultParallelism),
-        )
-        cat = Catalog.create(croot)
-        base = orders.withColumn("bucket", F.col("o_orderkey") % 4)
-        pt = cat.create_table(
-            "pt", base.schema, partition=identity("bucket")
-        )
-        # everything except partition 1 in one append; partition 1
-        # fragmented across five 1-file appends — the small-files
-        # shape a high-frequency writer leaves behind
-        pt.append(base.filter(F.col("bucket") != 1).coalesce(4))
-        p1 = base.filter(F.col("bucket") == 1)
-        for i in range(5):
-            pt.append(p1.filter(F.col("o_orderkey") % 5 == i).coalesce(1))
-        cat._commit_pins({"pt": pt.metadata.current_snapshot_id})
-
-        def files_by_part():
-            out: dict = {}
-            for e in cat.table("pt").current_files():
-                out.setdefault(e.get("partition"), set()).add(e["path"])
-            return out
-
-        pre = files_by_part()
-        res = cat.sql(spark, "OPTIMIZE pt WHERE bucket = 1")
-        assert res["statement"] == "optimize"
-        post = files_by_part()
-        p1_compacted = (
-            res["compact"]["rewritten"] == len(pre[1]) == 5
-            and len(post[1]) < len(pre[1])
-        )
-        others_untouched = all(
-            post[p] == pre[p] for p in pre if p != 1
-        )
-        cur = cat.read(spark, "pt")
-        content_identical = (
-            cur.exceptAll(base).isEmpty() and base.exceptAll(cur).isEmpty()
-        )
-        refused = 0
-        bt = cat.create_table(
-            "bt", orders.schema, partition=_bucket_tf("o_orderkey", 4)
-        )
-        bt.append(orders.limit(8).coalesce(1))
-        cat._commit_pins({"bt": bt.metadata.current_snapshot_id})
-        for bad in (
-            "OPTIMIZE pt WHERE bucket > 0",
-            "OPTIMIZE pt WHERE o_orderkey = 1",
-            "OPTIMIZE bt WHERE o_orderkey = 1",
+        with conf_scope(
+            spark,
+            {"spark.sql.shuffle.partitions": spark.sparkContext.defaultParallelism},
         ):
-            try:
-                cat.sql(spark, bad)
-            except UnsupportedSQL:
-                refused += 1
-        row = cur.agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum("o_orderkey").alias("sum_okey"),
-        ).collect()[0]
-        return spark.createDataFrame(
-            [
-                (
-                    row["n_rows"], row["sum_okey"], p1_compacted,
-                    others_untouched, content_identical, refused,
-                )
-            ],
-            "n_rows bigint, sum_okey bigint, p1_compacted boolean, "
-            "others_untouched boolean, content_identical boolean, "
-            "refused bigint",
-        )
+            cat = Catalog.create(croot)
+            base = orders.withColumn("bucket", F.col("o_orderkey") % 4)
+            pt = cat.create_table(
+                "pt", base.schema, partition=identity("bucket")
+            )
+            # everything except partition 1 in one append; partition 1
+            # fragmented across five 1-file appends — the small-files
+            # shape a high-frequency writer leaves behind
+            pt.append(base.filter(F.col("bucket") != 1).coalesce(4))
+            p1 = base.filter(F.col("bucket") == 1)
+            for i in range(5):
+                pt.append(p1.filter(F.col("o_orderkey") % 5 == i).coalesce(1))
+            cat._commit_pins({"pt": pt.metadata.current_snapshot_id})
+
+            def files_by_part():
+                out: dict = {}
+                for e in cat.table("pt").current_files():
+                    out.setdefault(e.get("partition"), set()).add(e["path"])
+                return out
+
+            pre = files_by_part()
+            res = cat.sql(spark, "OPTIMIZE pt WHERE bucket = 1")
+            assert res["statement"] == "optimize"
+            post = files_by_part()
+            p1_compacted = (
+                res["compact"]["rewritten"] == len(pre[1]) == 5
+                and len(post[1]) < len(pre[1])
+            )
+            others_untouched = all(
+                post[p] == pre[p] for p in pre if p != 1
+            )
+            cur = cat.read(spark, "pt")
+            content_identical = (
+                cur.exceptAll(base).isEmpty() and base.exceptAll(cur).isEmpty()
+            )
+            refused = 0
+            bt = cat.create_table(
+                "bt", orders.schema, partition=_bucket_tf("o_orderkey", 4)
+            )
+            bt.append(orders.limit(8).coalesce(1))
+            cat._commit_pins({"bt": bt.metadata.current_snapshot_id})
+            for bad in (
+                "OPTIMIZE pt WHERE bucket > 0",
+                "OPTIMIZE pt WHERE o_orderkey = 1",
+                "OPTIMIZE bt WHERE o_orderkey = 1",
+            ):
+                try:
+                    cat.sql(spark, bad)
+                except UnsupportedSQL:
+                    refused += 1
+            row = cur.agg(
+                F.count(F.lit(1)).alias("n_rows"),
+                F.sum("o_orderkey").alias("sum_okey"),
+            ).collect()[0]
+            return spark.createDataFrame(
+                [
+                    (
+                        row["n_rows"], row["sum_okey"], p1_compacted,
+                        others_untouched, content_identical, refused,
+                    )
+                ],
+                "n_rows bigint, sum_okey bigint, p1_compacted boolean, "
+                "others_untouched boolean, content_identical boolean, "
+                "refused bigint",
+            )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_w)
         shutil.rmtree(os.path.dirname(croot), ignore_errors=True)
 
 
@@ -4537,80 +4496,78 @@ def a5g_engine_sql_replace_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..table.sql_dml import UnsupportedSQL
 
     base = tempfile.mkdtemp(prefix="engine_rtas_")
-    prev_w = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        cat = Catalog.create(base + "/cat")
-        load_table(spark, sf_dir, "orders").createOrReplaceTempView(
-            "orders_src"
-        )
-        cat.sql(
-            spark,
-            "CREATE TABLE ot AS SELECT o_orderkey, o_orderpriority "
-            "FROM orders_src",
-        )
-        pre_rows = cat.sql(
-            spark, "SELECT COUNT(*) AS n FROM ot"
-        ).collect()[0]["n"]
-        v_pre = cat.state().version
-        res = cat.sql(
-            spark,
-            "CREATE OR REPLACE TABLE ot AS "
-            "SELECT o_orderpriority AS prio, COUNT(*) AS cnt "
-            "FROM ot GROUP BY o_orderpriority",
-        )
-        assert res["replaced"] is True
-        # single reader-visible publish: exactly one catalog version
-        # beyond v_pre, and that pre-version still serves the raw copy
-        single_publish = cat.state().version == v_pre + 1
-        pre_image_rows = cat.sql(
-            spark,
-            f"SELECT /*+ CATALOG_VERSION({v_pre}) */ COUNT(*) AS n FROM ot",
-        ).collect()[0]["n"]
-        single_publish = single_publish and pre_image_rows == pre_rows
-        summary = cat.sql(spark, "SELECT prio, cnt FROM ot").collect()
-        n_summary = len(summary)
-        total_orders = sum(r["cnt"] for r in summary)
-        cat.sql(
-            spark,
-            "CREATE OR REPLACE TABLE ot (k BIGINT, g STRING) "
-            "PARTITIONED BY (bucket(4, k))",
-        )
-        truncated_rows = cat.sql(
-            spark, "SELECT COUNT(*) AS n FROM ot"
-        ).collect()[0]["n"]
-        refused = 0
-        cat.sql(spark, "CREATE VIEW rv AS SELECT k FROM ot")
-        for bad in (
-            "CREATE OR REPLACE TABLE rv AS SELECT 1 AS a",
-            "CREATE OR REPLACE TABLE rv (x BIGINT)",
-            # CREATE-head statements never join a script's single
-            # publish
-            None,
-        ):
-            try:
-                if bad is None:
-                    cat.sql_script(
-                        spark,
-                        "DELETE FROM ot WHERE k = -1; "
-                        "CREATE OR REPLACE TABLE ot AS SELECT 1 AS a",
+        with conf_scope(spark, {"spark.sql.shuffle.partitions": "8"}):
+            cat = Catalog.create(base + "/cat")
+            load_table(spark, sf_dir, "orders").createOrReplaceTempView(
+                "orders_src"
+            )
+            cat.sql(
+                spark,
+                "CREATE TABLE ot AS SELECT o_orderkey, o_orderpriority "
+                "FROM orders_src",
+            )
+            pre_rows = cat.sql(
+                spark, "SELECT COUNT(*) AS n FROM ot"
+            ).collect()[0]["n"]
+            v_pre = cat.state().version
+            res = cat.sql(
+                spark,
+                "CREATE OR REPLACE TABLE ot AS "
+                "SELECT o_orderpriority AS prio, COUNT(*) AS cnt "
+                "FROM ot GROUP BY o_orderpriority",
+            )
+            assert res["replaced"] is True
+            # single reader-visible publish: exactly one catalog version
+            # beyond v_pre, and that pre-version still serves the raw copy
+            single_publish = cat.state().version == v_pre + 1
+            pre_image_rows = cat.sql(
+                spark,
+                f"SELECT /*+ CATALOG_VERSION({v_pre}) */ COUNT(*) AS n FROM ot",
+            ).collect()[0]["n"]
+            single_publish = single_publish and pre_image_rows == pre_rows
+            summary = cat.sql(spark, "SELECT prio, cnt FROM ot").collect()
+            n_summary = len(summary)
+            total_orders = sum(r["cnt"] for r in summary)
+            cat.sql(
+                spark,
+                "CREATE OR REPLACE TABLE ot (k BIGINT, g STRING) "
+                "PARTITIONED BY (bucket(4, k))",
+            )
+            truncated_rows = cat.sql(
+                spark, "SELECT COUNT(*) AS n FROM ot"
+            ).collect()[0]["n"]
+            refused = 0
+            cat.sql(spark, "CREATE VIEW rv AS SELECT k FROM ot")
+            for bad in (
+                "CREATE OR REPLACE TABLE rv AS SELECT 1 AS a",
+                "CREATE OR REPLACE TABLE rv (x BIGINT)",
+                # CREATE-head statements never join a script's single
+                # publish
+                None,
+            ):
+                try:
+                    if bad is None:
+                        cat.sql_script(
+                            spark,
+                            "DELETE FROM ot WHERE k = -1; "
+                            "CREATE OR REPLACE TABLE ot AS SELECT 1 AS a",
+                        )
+                    else:
+                        cat.sql(spark, bad)
+                except UnsupportedSQL:
+                    refused += 1
+            return spark.createDataFrame(
+                [
+                    (
+                        n_summary, total_orders, pre_image_rows,
+                        single_publish, truncated_rows, refused,
                     )
-                else:
-                    cat.sql(spark, bad)
-            except UnsupportedSQL:
-                refused += 1
-        return spark.createDataFrame(
-            [
-                (
-                    n_summary, total_orders, pre_image_rows,
-                    single_publish, truncated_rows, refused,
-                )
-            ],
-            "n_summary bigint, total_orders bigint, pre_image_rows bigint, "
-            "single_publish boolean, truncated_rows bigint, refused bigint",
-        )
+                ],
+                "n_summary bigint, total_orders bigint, pre_image_rows bigint, "
+                "single_publish boolean, truncated_rows bigint, refused bigint",
+            )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_w)
         shutil.rmtree(base, ignore_errors=True)
 
 
@@ -4657,88 +4614,86 @@ def a5h_engine_sql_partition_evolution(
     half_a = events.filter(F.col("event_id") % 2 == 0)
     half_b = events.filter(F.col("event_id") % 2 == 1)
     base = tempfile.mkdtemp(prefix="engine_pevo_")
-    prev_w = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        cat = Catalog.create(base + "/cat")
-        cat.sql(
-            spark,
-            "CREATE TABLE pe (event_id BIGINT, ts TIMESTAMP, "
-            "user_id BIGINT) PARTITIONED BY (days(ts))",
-        )
-        tbl = cat.table("pe")
-        tbl.append(half_a.coalesce(1))
-        res = cat.sql(
-            spark, "ALTER TABLE pe ADD PARTITION FIELD bucket(8, user_id)"
-        )
-        spec_after_add = res["spec_id"]
-        tbl = cat.table("pe")
-        tbl.append(half_b.coalesce(1))
-        cat._commit_pins({"pe": tbl.metadata.current_snapshot_id})
-        # cross-arity point query: exact answer, and the plan prunes
-        # the NEW vintage to one hash bucket while admitting the old
-        # vintage conservatively (its spec carries no user_id field)
-        planned = tbl.plan_files([("user_id", "=", 7)])
-        new_total = [
-            e for e in tbl.current_files()
-            if int(e.get("spec_id", 0) or 0) == spec_after_add
-        ]
-        new_hit = [
-            e for e in planned
-            if int(e.get("spec_id", 0) or 0) == spec_after_add
-        ]
-        buckets_hit = {e["partition_fields"][1] for e in new_hit}
-        cross_arity_pruned = (
-            0 < len(new_hit) < len(new_total) and len(buckets_hit) == 1
-        )
-        row = (
-            tbl.scan(spark, [("user_id", "=", 7)])
-            .agg(
-                F.count(F.lit(1)).alias("cnt"),
-                F.sum("event_id").alias("s"),
+        with conf_scope(spark, {"spark.sql.shuffle.partitions": "8"}):
+            cat = Catalog.create(base + "/cat")
+            cat.sql(
+                spark,
+                "CREATE TABLE pe (event_id BIGINT, ts TIMESTAMP, "
+                "user_id BIGINT) PARTITIONED BY (days(ts))",
             )
-            .collect()[0]
-        )
-        res = cat.sql(
-            spark,
-            "ALTER TABLE pe REPLACE PARTITION FIELD bucket(8, user_id) "
-            "WITH bucket(16, user_id)",
-        )
-        spec_after_replace = res["spec_id"]
-        cat.sql(
-            spark, "ALTER TABLE pe DROP PARTITION FIELD bucket(16, user_id)"
-        )
-        res = cat.sql(spark, "ALTER TABLE pe DROP PARTITION FIELD days(ts)")
-        fields_after_drops = res["n_fields"]
-        refused = 0
-        for bad, exc in (
-            ("ALTER TABLE pe DROP PARTITION FIELD days(ts)",
-             UnsupportedSQL),
-            ("ALTER TABLE pe REPLACE PARTITION FIELD days(ts) WITH "
-             "event_id", UnsupportedSQL),
-            ("ALTER TABLE pe ADD PARTITION FIELD md5(event_id)",
-             UnsupportedSQL),
-            ("ALTER TABLE pe ADD PARTITION FIELD bucket(4, ghost)",
-             ValueError),
-        ):
-            try:
-                cat.sql(spark, bad)
-            except exc:
-                refused += 1
-        return spark.createDataFrame(
-            [
-                (
-                    row["cnt"], row["s"], spec_after_add,
-                    spec_after_replace, fields_after_drops,
-                    cross_arity_pruned, refused,
+            tbl = cat.table("pe")
+            tbl.append(half_a.coalesce(1))
+            res = cat.sql(
+                spark, "ALTER TABLE pe ADD PARTITION FIELD bucket(8, user_id)"
+            )
+            spec_after_add = res["spec_id"]
+            tbl = cat.table("pe")
+            tbl.append(half_b.coalesce(1))
+            cat._commit_pins({"pe": tbl.metadata.current_snapshot_id})
+            # cross-arity point query: exact answer, and the plan prunes
+            # the NEW vintage to one hash bucket while admitting the old
+            # vintage conservatively (its spec carries no user_id field)
+            planned = tbl.plan_files([("user_id", "=", 7)])
+            new_total = [
+                e for e in tbl.current_files()
+                if int(e.get("spec_id", 0) or 0) == spec_after_add
+            ]
+            new_hit = [
+                e for e in planned
+                if int(e.get("spec_id", 0) or 0) == spec_after_add
+            ]
+            buckets_hit = {e["partition_fields"][1] for e in new_hit}
+            cross_arity_pruned = (
+                0 < len(new_hit) < len(new_total) and len(buckets_hit) == 1
+            )
+            row = (
+                tbl.scan(spark, [("user_id", "=", 7)])
+                .agg(
+                    F.count(F.lit(1)).alias("cnt"),
+                    F.sum("event_id").alias("s"),
                 )
-            ],
-            "cnt_u7 bigint, sum_u7 bigint, spec_after_add bigint, "
-            "spec_after_replace bigint, fields_after_drops bigint, "
-            "cross_arity_pruned boolean, refused bigint",
-        )
+                .collect()[0]
+            )
+            res = cat.sql(
+                spark,
+                "ALTER TABLE pe REPLACE PARTITION FIELD bucket(8, user_id) "
+                "WITH bucket(16, user_id)",
+            )
+            spec_after_replace = res["spec_id"]
+            cat.sql(
+                spark, "ALTER TABLE pe DROP PARTITION FIELD bucket(16, user_id)"
+            )
+            res = cat.sql(spark, "ALTER TABLE pe DROP PARTITION FIELD days(ts)")
+            fields_after_drops = res["n_fields"]
+            refused = 0
+            for bad, exc in (
+                ("ALTER TABLE pe DROP PARTITION FIELD days(ts)",
+                 UnsupportedSQL),
+                ("ALTER TABLE pe REPLACE PARTITION FIELD days(ts) WITH "
+                 "event_id", UnsupportedSQL),
+                ("ALTER TABLE pe ADD PARTITION FIELD md5(event_id)",
+                 UnsupportedSQL),
+                ("ALTER TABLE pe ADD PARTITION FIELD bucket(4, ghost)",
+                 ValueError),
+            ):
+                try:
+                    cat.sql(spark, bad)
+                except exc:
+                    refused += 1
+            return spark.createDataFrame(
+                [
+                    (
+                        row["cnt"], row["s"], spec_after_add,
+                        spec_after_replace, fields_after_drops,
+                        cross_arity_pruned, refused,
+                    )
+                ],
+                "cnt_u7 bigint, sum_u7 bigint, spec_after_add bigint, "
+                "spec_after_replace bigint, fields_after_drops bigint, "
+                "cross_arity_pruned boolean, refused bigint",
+            )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_w)
         shutil.rmtree(base, ignore_errors=True)
 
 
@@ -4797,76 +4752,74 @@ def a5i_engine_sql_general_predicate_dml(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority"
     )
     base_dir = tempfile.mkdtemp(prefix="engine_gpred_")
-    prev_w = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(spark.sparkContext.defaultParallelism),
-        )
-        cat = Catalog.create(base_dir + "/cat")
-        df = orders.withColumn("pb", F.col("o_orderkey") % 4)
-        ot = cat.create_table("ot", df.schema, partition=identity("pb"))
-        ot.append(df.coalesce(4))
-        cat._commit_pins({"ot": ot.metadata.current_snapshot_id})
-        total_files = len(ot.plan_files())
-        res = cat.sql(
+        with conf_scope(
             spark,
-            "DELETE FROM ot WHERE pb = 1 OR (pb = 2 AND o_orderkey < 1000)",
-        )
-        assert res["statement"] == "delete"
-        # union-of-branches pruning: only buckets 1 and 2 are
-        # candidates — a selective OR must not rewrite the table
-        delete_pruned = 0 < res["rewritten_files"] < total_files
-        ot = cat.table("ot")
-        files_after_delete = len(ot.plan_files())
-        res = cat.sql(
-            spark,
-            "UPDATE ot SET o_orderstatus = 'Z' "
-            "WHERE pb = 3 AND (o_orderpriority LIKE '1%' "
-            "OR o_custkey IN (3, 7, 11))",
-        )
-        assert res["statement"] == "update"
-        # AND distributes over the OR into both branches, so every
-        # branch carries pb = 3 — candidates are exactly bucket 3's
-        # files, a strict subset of the table
-        update_pruned = 0 < res["rewritten_files"] < files_after_delete
-        refused = 0
-        for bad in (
-            "DELETE FROM ot WHERE NOT pb = 1",
-            "DELETE FROM ot WHERE o_orderkey BETWEEN 1 AND 5",
-            "DELETE FROM ot WHERE o_orderstatus LIKE '%F'",
-            "DELETE FROM ot WHERE pb = 1 OR o_custkey IN "
-            "(SELECT o_custkey FROM ot)",
-            "UPDATE ot SET pb = 0 WHERE substr(o_orderstatus, 1, 1) = 'F'",
+            {"spark.sql.shuffle.partitions": spark.sparkContext.defaultParallelism},
         ):
-            try:
-                cat.sql(spark, bad)
-            except UnsupportedSQL:
-                refused += 1
-        row = (
-            cat.read(spark, "ot")
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum("o_orderkey").alias("sum_okey"),
-                F.sum(
-                    (F.col("o_orderstatus") == "Z").cast("long")
-                ).alias("n_z"),
+            cat = Catalog.create(base_dir + "/cat")
+            df = orders.withColumn("pb", F.col("o_orderkey") % 4)
+            ot = cat.create_table("ot", df.schema, partition=identity("pb"))
+            ot.append(df.coalesce(4))
+            cat._commit_pins({"ot": ot.metadata.current_snapshot_id})
+            total_files = len(ot.plan_files())
+            res = cat.sql(
+                spark,
+                "DELETE FROM ot WHERE pb = 1 OR (pb = 2 AND o_orderkey < 1000)",
             )
-            .collect()[0]
-        )
-        return spark.createDataFrame(
-            [
-                (
-                    row["n_rows"], row["sum_okey"], row["n_z"],
-                    delete_pruned, update_pruned, refused,
+            assert res["statement"] == "delete"
+            # union-of-branches pruning: only buckets 1 and 2 are
+            # candidates — a selective OR must not rewrite the table
+            delete_pruned = 0 < res["rewritten_files"] < total_files
+            ot = cat.table("ot")
+            files_after_delete = len(ot.plan_files())
+            res = cat.sql(
+                spark,
+                "UPDATE ot SET o_orderstatus = 'Z' "
+                "WHERE pb = 3 AND (o_orderpriority LIKE '1%' "
+                "OR o_custkey IN (3, 7, 11))",
+            )
+            assert res["statement"] == "update"
+            # AND distributes over the OR into both branches, so every
+            # branch carries pb = 3 — candidates are exactly bucket 3's
+            # files, a strict subset of the table
+            update_pruned = 0 < res["rewritten_files"] < files_after_delete
+            refused = 0
+            for bad in (
+                "DELETE FROM ot WHERE NOT pb = 1",
+                "DELETE FROM ot WHERE o_orderkey BETWEEN 1 AND 5",
+                "DELETE FROM ot WHERE o_orderstatus LIKE '%F'",
+                "DELETE FROM ot WHERE pb = 1 OR o_custkey IN "
+                "(SELECT o_custkey FROM ot)",
+                "UPDATE ot SET pb = 0 WHERE substr(o_orderstatus, 1, 1) = 'F'",
+            ):
+                try:
+                    cat.sql(spark, bad)
+                except UnsupportedSQL:
+                    refused += 1
+            row = (
+                cat.read(spark, "ot")
+                .agg(
+                    F.count(F.lit(1)).alias("n_rows"),
+                    F.sum("o_orderkey").alias("sum_okey"),
+                    F.sum(
+                        (F.col("o_orderstatus") == "Z").cast("long")
+                    ).alias("n_z"),
                 )
-            ],
-            "n_rows bigint, sum_okey bigint, n_z bigint, "
-            "delete_pruned boolean, update_pruned boolean, "
-            "refused bigint",
-        )
+                .collect()[0]
+            )
+            return spark.createDataFrame(
+                [
+                    (
+                        row["n_rows"], row["sum_okey"], row["n_z"],
+                        delete_pruned, update_pruned, refused,
+                    )
+                ],
+                "n_rows bigint, sum_okey bigint, n_z bigint, "
+                "delete_pruned boolean, update_pruned boolean, "
+                "refused bigint",
+            )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_w)
         shutil.rmtree(base_dir, ignore_errors=True)
 
 
@@ -4926,105 +4879,103 @@ def a5j_engine_sql_composite_partition_ops(
 
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey")
     base_dir = tempfile.mkdtemp(prefix="engine_cpops_")
-    prev_w = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(spark.sparkContext.defaultParallelism),
-        )
-        cat = Catalog.create(base_dir + "/cat")
-        df = (
-            orders.withColumn("d", F.col("o_orderkey") % 3)
-            .withColumn("b", F.col("o_orderkey") % 2)
-        )
-        ct = cat.create_table(
-            "ct", df.schema, partition=composite(identity("d"), identity("b"))
-        )
-        ct.append(df.coalesce(2))
-        cat._commit_pins({"ct": ct.metadata.current_snapshot_id})
-        res = cat.sql(
+        with conf_scope(
             spark,
-            "INSERT OVERWRITE ct PARTITION (d = 1, b = 0) "
-            "VALUES (900000001), (900000002)",
-        )
-        tuple_swap = (
-            res["mode"] == "static_partition"
-            and res["replaced_partitions"] == [[1, 0]]
-            and res["inserted_rows"] == 2
-        )
-        res = cat.sql(
-            spark,
-            "INSERT OVERWRITE ct PARTITION (d = 2, b = 1) "
-            "SELECT o_orderkey FROM ct WHERE o_orderkey < 0",
-        )
-        assert res["inserted_rows"] == 0  # empty static CLEARS the tuple
-        ct = cat.table("ct")
-        cleared_rows = (
-            cat.read(spark, "ct")
-            .filter((F.col("d") == 2) & (F.col("b") == 1))
-            .count()
-        )
-        # fragment d=0 with four 1-file appends, then compact ONLY d=0
-        for i, (k, bb) in enumerate(
-            ((900000003, 0), (900000004, 1), (900000005, 0), (900000006, 1))
+            {"spark.sql.shuffle.partitions": spark.sparkContext.defaultParallelism},
         ):
-            ct.append(
-                spark.createDataFrame([(k, 0, bb)], ct.schema()).coalesce(1)
+            cat = Catalog.create(base_dir + "/cat")
+            df = (
+                orders.withColumn("d", F.col("o_orderkey") % 3)
+                .withColumn("b", F.col("o_orderkey") % 2)
             )
-        cat._commit_pins({"ct": ct.metadata.current_snapshot_id})
-        before = {e["path"]: e for e in ct.current_files()}
-        d0_before = [
-            p for p, e in before.items()
-            if (e.get("partition_fields") or [None])[0] == 0
-        ]
-        other_before = set(before) - set(d0_before)
-        res = cat.sql(spark, "OPTIMIZE ct WHERE d = 0")
-        assert all(mt[0] == 0 for mt in res["matched_tuples"])
-        ct = cat.table("ct")
-        after = {e["path"]: e for e in ct.current_files()}
-        d0_after = [
-            p for p, e in after.items()
-            if (e.get("partition_fields") or [None])[0] == 0
-        ]
-        d0_compacted = len(d0_after) < len(d0_before)
-        others_untouched = other_before <= set(after)
-        refused = 0
-        for bad in (
-            "INSERT OVERWRITE ct PARTITION (b = 0, d = 1) VALUES (1)",
-            "INSERT OVERWRITE ct PARTITION (d = 1) VALUES (1)",
-            "OPTIMIZE tv WHERE id = 1",
-        ):
-            try:
-                if bad.startswith("OPTIMIZE"):
-                    cat.sql(
-                        spark,
-                        "CREATE TABLE tv (id BIGINT, ts TIMESTAMP) "
-                        "PARTITIONED BY (days(ts), bucket(4, id))",
-                    )
-                cat.sql(spark, bad)
-            except UnsupportedSQL:
-                refused += 1
-        row = (
-            cat.read(spark, "ct")
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum("o_orderkey").alias("sum_okey"),
+            ct = cat.create_table(
+                "ct", df.schema, partition=composite(identity("d"), identity("b"))
             )
-            .collect()[0]
-        )
-        return spark.createDataFrame(
-            [
-                (
-                    row["n_rows"], row["sum_okey"], cleared_rows,
-                    tuple_swap, d0_compacted, others_untouched, refused,
+            ct.append(df.coalesce(2))
+            cat._commit_pins({"ct": ct.metadata.current_snapshot_id})
+            res = cat.sql(
+                spark,
+                "INSERT OVERWRITE ct PARTITION (d = 1, b = 0) "
+                "VALUES (900000001), (900000002)",
+            )
+            tuple_swap = (
+                res["mode"] == "static_partition"
+                and res["replaced_partitions"] == [[1, 0]]
+                and res["inserted_rows"] == 2
+            )
+            res = cat.sql(
+                spark,
+                "INSERT OVERWRITE ct PARTITION (d = 2, b = 1) "
+                "SELECT o_orderkey FROM ct WHERE o_orderkey < 0",
+            )
+            assert res["inserted_rows"] == 0  # empty static CLEARS the tuple
+            ct = cat.table("ct")
+            cleared_rows = (
+                cat.read(spark, "ct")
+                .filter((F.col("d") == 2) & (F.col("b") == 1))
+                .count()
+            )
+            # fragment d=0 with four 1-file appends, then compact ONLY d=0
+            for i, (k, bb) in enumerate(
+                ((900000003, 0), (900000004, 1), (900000005, 0), (900000006, 1))
+            ):
+                ct.append(
+                    spark.createDataFrame([(k, 0, bb)], ct.schema()).coalesce(1)
                 )
-            ],
-            "n_rows bigint, sum_okey bigint, cleared_rows bigint, "
-            "tuple_swap boolean, d0_compacted boolean, "
-            "others_untouched boolean, refused bigint",
-        )
+            cat._commit_pins({"ct": ct.metadata.current_snapshot_id})
+            before = {e["path"]: e for e in ct.current_files()}
+            d0_before = [
+                p for p, e in before.items()
+                if (e.get("partition_fields") or [None])[0] == 0
+            ]
+            other_before = set(before) - set(d0_before)
+            res = cat.sql(spark, "OPTIMIZE ct WHERE d = 0")
+            assert all(mt[0] == 0 for mt in res["matched_tuples"])
+            ct = cat.table("ct")
+            after = {e["path"]: e for e in ct.current_files()}
+            d0_after = [
+                p for p, e in after.items()
+                if (e.get("partition_fields") or [None])[0] == 0
+            ]
+            d0_compacted = len(d0_after) < len(d0_before)
+            others_untouched = other_before <= set(after)
+            refused = 0
+            for bad in (
+                "INSERT OVERWRITE ct PARTITION (b = 0, d = 1) VALUES (1)",
+                "INSERT OVERWRITE ct PARTITION (d = 1) VALUES (1)",
+                "OPTIMIZE tv WHERE id = 1",
+            ):
+                try:
+                    if bad.startswith("OPTIMIZE"):
+                        cat.sql(
+                            spark,
+                            "CREATE TABLE tv (id BIGINT, ts TIMESTAMP) "
+                            "PARTITIONED BY (days(ts), bucket(4, id))",
+                        )
+                    cat.sql(spark, bad)
+                except UnsupportedSQL:
+                    refused += 1
+            row = (
+                cat.read(spark, "ct")
+                .agg(
+                    F.count(F.lit(1)).alias("n_rows"),
+                    F.sum("o_orderkey").alias("sum_okey"),
+                )
+                .collect()[0]
+            )
+            return spark.createDataFrame(
+                [
+                    (
+                        row["n_rows"], row["sum_okey"], cleared_rows,
+                        tuple_swap, d0_compacted, others_untouched, refused,
+                    )
+                ],
+                "n_rows bigint, sum_okey bigint, cleared_rows bigint, "
+                "tuple_swap boolean, d0_compacted boolean, "
+                "others_untouched boolean, refused bigint",
+            )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_w)
         shutil.rmtree(base_dir, ignore_errors=True)
 
 

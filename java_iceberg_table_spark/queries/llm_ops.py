@@ -35,6 +35,7 @@ from ..operators.similarity import (
     lsh_topk,
 )
 from ..operators.text import STOPWORDS, fingerprint, quality_score
+from ..session import conf_scope
 from . import register
 
 _STOP_SQL = "[" + ", ".join(f"'{s}'" for s in STOPWORDS) + "]"
@@ -316,17 +317,13 @@ def _ann_index(spark: SparkSession, sf_dir: str, kind: str):
             # is the measured recall floor with margin: mean recall@5
             # 1.0 at sf0.01, 0.96 at sf0.1. Width-clamp the fit: its
             # shuffles carry n*m code rows, model-scale at any SF here.
-            prev_w = spark.conf.get("spark.sql.shuffle.partitions")
-            try:
-                spark.conf.set(
-                    "spark.sql.shuffle.partitions",
-                    str(spark.sparkContext.defaultParallelism),
-                )
+            with conf_scope(
+                spark,
+                {"spark.sql.shuffle.partitions": spark.sparkContext.defaultParallelism},
+            ):
                 codes_df, books = pq_build(emb, m=16, n_codes=32, iters=1)
                 codes_df = codes_df.persist()
                 codes_df.count()  # one corpus pass builds codes + codebooks
-            finally:
-                spark.conf.set("spark.sql.shuffle.partitions", prev_w)
             idx = (codes_df, books)
         elif kind == "ivfpq":
             from ..operators.similarity import _assign_literal, _ivf_fit
@@ -336,12 +333,10 @@ def _ann_index(spark: SparkSession, sf_dir: str, kind: str):
             # IVF-PQ reuses one codes table across coarse re-clusterings.
             # Width clamp as in the other builders.
             codes_df, books = _ann_index(spark, sf_dir, "pq")
-            prev_w = spark.conf.get("spark.sql.shuffle.partitions")
-            try:
-                spark.conf.set(
-                    "spark.sql.shuffle.partitions",
-                    str(spark.sparkContext.defaultParallelism),
-                )
+            with conf_scope(
+                spark,
+                {"spark.sql.shuffle.partitions": spark.sparkContext.defaultParallelism},
+            ):
                 v, cents = _ivf_fit(
                     emb, "vec_id", "embedding", n_centroids=8, iters=3, seed=42
                 )
@@ -351,8 +346,6 @@ def _ann_index(spark: SparkSession, sf_dir: str, kind: str):
                 )
                 index_df = index_df.persist()
                 index_df.count()
-            finally:
-                spark.conf.set("spark.sql.shuffle.partitions", prev_w)
             idx = (index_df, cents, books)
         elif kind == "ivfpq_table":
             # the PERSISTED form: same composed index written as an
@@ -972,15 +965,12 @@ def _dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         # session every iteration materializes 200 near-empty tasks.
         # Width = max(cores, input split count) grows with the data
         # (100 TB of documents => thousands of input splits) and
-        # collapses to core count on small SFs. Restored in finally,
-        # same clamp-and-restore pattern as the streaming state ops.
+        # collapses to core count on small SFs.
         width = max(
             spark.sparkContext.defaultParallelism,
             docs.rdd.getNumPartitions(),
         )
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        try:
-            spark.conf.set("spark.sql.shuffle.partitions", str(width))
+        with conf_scope(spark, {"spark.sql.shuffle.partitions": width}):
             rep_pairs, membership = minhash_rep_graph(
                 docs, "doc_id", "text", threshold=0.95, num_hashes=64, bands=16
             )
@@ -988,8 +978,6 @@ def _dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
             # label propagation never carries the corpus-sized frame.
             cc = resolve_components(rep_pairs, membership).persist()
             cc.count()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
         _CC_CACHE[key] = cc
     return _CC_CACHE[key]
 
@@ -1723,12 +1711,9 @@ def h54_ann_ivfpq_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tbl, cents, books = _ann_index(spark, sf_dir, "ivfpq_table")
     queries = _ann_index(spark, sf_dir, "queries")
-    prev_w = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(spark.sparkContext.defaultParallelism),
-        )
+    with conf_scope(
+        spark, {"spark.sql.shuffle.partitions": spark.sparkContext.defaultParallelism}
+    ):
         approx, _batch_info = ivfpq_table_topk(
             spark, tbl, cents, books, queries, k=5, nprobe=6, rerank=20
         )
@@ -1744,8 +1729,6 @@ def h54_ann_ivfpq_table(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, tbl, cents, books, one, k=5, nprobe=6, rerank=20
         )
         _top1.collect()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_w)
     pruned = 0 < info["files_scanned"] < info["files_total"]
     return spark.createDataFrame(
         [(rows[0]["n_queries"], rows[0]["k"], rows[0]["recall_ok"], pruned)],
@@ -2479,20 +2462,15 @@ def h51_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # width clamp (round 8, same rationale as h51b): the probe joins
     # shuffle batch-scale frames; a 200-partition driver session pays
     # ~10 near-empty stages otherwise
-    prev_w = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(spark.sparkContext.defaultParallelism),
-        )
+    with conf_scope(
+        spark, {"spark.sql.shuffle.partitions": spark.sparkContext.defaultParallelism}
+    ):
         pairs = incremental_near_duplicates(
             corpus, batch, "doc_id", "text", threshold=0.95
         )
         rows = pairs.select(
             "new_id", "corpus_id", F.round("jaccard", 4).alias("jaccard")
         ).orderBy("new_id", "corpus_id").collect()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_w)
     return spark.createDataFrame(
         rows, "new_id bigint, corpus_id bigint, jaccard double"
     )
@@ -2539,12 +2517,9 @@ def h51b_incremental_dedup_verdicts(spark: SparkSession, sf_dir: str) -> DataFra
     # band joins shuffle batch-sized frames — model-scale here — and a
     # plain 200-partition driver session pays ~10 near-empty stages
     # (measured at sf0.1: 59 s at 200 partitions vs ~7 s clamped)
-    prev_w = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(spark.sparkContext.defaultParallelism),
-        )
+    with conf_scope(
+        spark, {"spark.sql.shuffle.partitions": spark.sparkContext.defaultParallelism}
+    ):
         pairs = incremental_near_duplicates(
             corpus, batch, "doc_id", "text", threshold=0.95
         )
@@ -2564,8 +2539,6 @@ def h51b_incremental_dedup_verdicts(spark: SparkSession, sf_dir: str) -> DataFra
             .orderBy("new_id")
             .collect()
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_w)
     return spark.createDataFrame(
         rows, "new_id bigint, verdict string, canonical_id bigint"
     )
@@ -2619,20 +2592,15 @@ def h53_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # materialize the 1-row verdict inside a width clamp (the probe's
     # shuffles carry candidate rows, model-scale here; a plain
     # 200-partition driver session would pay ~6 x 200 near-empty tasks)
-    prev_w = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(spark.sparkContext.defaultParallelism),
-        )
+    with conf_scope(
+        spark, {"spark.sql.shuffle.partitions": spark.sparkContext.defaultParallelism}
+    ):
         approx = ivfpq_topk(
             index_df, cents, books, queries, k=5, nprobe=6, rerank=20
         )
         rows = _ann_selfcheck_lit(
             approx, _ann_index(spark, sf_dir, "exact_kth"), k=5
         ).collect()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_w)
     return spark.createDataFrame(
         rows, "n_queries bigint, k bigint, recall_ok boolean"
     )
@@ -2715,12 +2683,9 @@ def h53r_ann_ivfpq_residual_clustered(
         ivfpq_topk,
     )
 
-    prev_w = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(spark.sparkContext.defaultParallelism),
-        )
+    with conf_scope(
+        spark, {"spark.sql.shuffle.partitions": spark.sparkContext.defaultParallelism}
+    ):
         app = spark.sparkContext.applicationId
         cached = _CLUSTERED_IVFPQ_CACHE.get(app)
         if cached is None:
@@ -2763,8 +2728,6 @@ def h53r_ann_ivfpq_residual_clustered(
             "n_queries bigint, k bigint, recall_ok boolean, "
             "sims_exact boolean",
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_w)
 
 
 @register(
@@ -2811,57 +2774,55 @@ def h56_ann_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     root = tempfile.mkdtemp(prefix="ann_maint_") + "/t"
-    prev_w = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(spark.sparkContext.defaultParallelism),
-        )
-        emb, tbl, cents, books = _write_base_index(spark, root)
-        delta = emb.filter(F.col("vec_id") % 4 == 0)
-        n_base = tbl.scan(spark).count()
-        stats = ivfpq_table_append(tbl, delta, cents, books)
-        after = tbl.scan(spark).persist()
-        rows_after = after.count()
-        enc = ivfpq_encode(delta, cents, books).select(
-            "id", "cluster", "code"
-        )
-        appended = after.join(
-            delta.select(F.col("vec_id").alias("id")), "id"
-        ).select("id", "cluster", "code")
-        matches = (
-            appended.exceptAll(enc).isEmpty()
-            and enc.exceptAll(appended).isEmpty()
-        )
-        q = emb.filter(F.col("vec_id") < 20)
-        n_queries = q.count()  # while the corpus is persisted
-        exact = brute_force_topk(emb, q, k=5)
-        approx, _ = ivfpq_table_topk(
-            spark, tbl, cents, books, q, k=5, nprobe=6, rerank=20
-        )
-        recall_ok = bool(
-            annotate_recall(approx, exact, k=5, min_recall=0.8)
-            .agg(F.coalesce(F.bool_and("recall_ok"), F.lit(False)))
-            .collect()[0][0]
-        )
-        one = delta.orderBy("vec_id").limit(1)
-        probed, info = ivfpq_table_topk(
-            spark, tbl, cents, books, one, k=5, nprobe=2, rerank=20
-        )
-        probed.collect()
-        after.unpersist()  # emb stays persisted: session-cached model
-        return spark.createDataFrame(
-            [
-                (
-                    n_base, stats["rows_appended"], rows_after, matches,
-                    n_queries, 5, recall_ok,
-                    0 < info["files_scanned"] < info["files_total"],
-                )
-            ],
-            "n_base bigint, n_delta bigint, rows_after bigint, "
-            "append_matches_encode boolean, n_queries bigint, k bigint, "
-            "recall_ok boolean, pruned boolean",
-        )
+        with conf_scope(
+            spark,
+            {"spark.sql.shuffle.partitions": spark.sparkContext.defaultParallelism},
+        ):
+            emb, tbl, cents, books = _write_base_index(spark, root)
+            delta = emb.filter(F.col("vec_id") % 4 == 0)
+            n_base = tbl.scan(spark).count()
+            stats = ivfpq_table_append(tbl, delta, cents, books)
+            after = tbl.scan(spark).persist()
+            rows_after = after.count()
+            enc = ivfpq_encode(delta, cents, books).select(
+                "id", "cluster", "code"
+            )
+            appended = after.join(
+                delta.select(F.col("vec_id").alias("id")), "id"
+            ).select("id", "cluster", "code")
+            matches = (
+                appended.exceptAll(enc).isEmpty()
+                and enc.exceptAll(appended).isEmpty()
+            )
+            q = emb.filter(F.col("vec_id") < 20)
+            n_queries = q.count()  # while the corpus is persisted
+            exact = brute_force_topk(emb, q, k=5)
+            approx, _ = ivfpq_table_topk(
+                spark, tbl, cents, books, q, k=5, nprobe=6, rerank=20
+            )
+            recall_ok = bool(
+                annotate_recall(approx, exact, k=5, min_recall=0.8)
+                .agg(F.coalesce(F.bool_and("recall_ok"), F.lit(False)))
+                .collect()[0][0]
+            )
+            one = delta.orderBy("vec_id").limit(1)
+            probed, info = ivfpq_table_topk(
+                spark, tbl, cents, books, one, k=5, nprobe=2, rerank=20
+            )
+            probed.collect()
+            after.unpersist()  # emb stays persisted: session-cached model
+            return spark.createDataFrame(
+                [
+                    (
+                        n_base, stats["rows_appended"], rows_after, matches,
+                        n_queries, 5, recall_ok,
+                        0 < info["files_scanned"] < info["files_total"],
+                    )
+                ],
+                "n_base bigint, n_delta bigint, rows_after bigint, "
+                "append_matches_encode boolean, n_queries bigint, k bigint, "
+                "recall_ok boolean, pruned boolean",
+            )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_w)
         shutil.rmtree(os.path.dirname(root), ignore_errors=True)

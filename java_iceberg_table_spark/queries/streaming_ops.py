@@ -17,6 +17,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import conf_scope
 from ..streaming.jobs import (
     file_stream,
     run_to_memory,
@@ -198,35 +199,32 @@ def i6_watermark_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         q.awaitTermination()
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    state_parts = min(int(spark.conf.get("spark.sql.shuffle.partitions")), 8)
     try:
         # 5-row input: state partitioning must track the data, not the
         # session default (a plain driver session's 200 state
         # partitions cost a task each per micro-batch — measured 15 s
         # for this two-phase run vs ~4 s at 8)
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(min(int(prev_parts), 8))
-        )
-        m = dt.timedelta
-        write_batch([(1, t0), (2, t0 + m(minutes=1)), (3, t0 + m(minutes=120))], "b1")
-        run_once()
-        # row 4 lands 110 min behind the watermark — must be dropped
-        write_batch([(4, t0 + m(minutes=2)), (5, t0 + m(minutes=121))], "b2")
-        run_once()
-        w0_us = int(t0.replace(tzinfo=dt.timezone.utc).timestamp() * 1_000_000)
-        # materialize before the temp dir vanishes — the returned frame
-        # must not lazily re-read deleted files
-        rows = sorted(
-            (r["window_start_us"], r["cnt"])
-            for r in spark.read.parquet(out).collect()
-        )
-        late_dropped = (w0_us, 2) in rows
-        return spark.createDataFrame(
-            [(ws, cnt, late_dropped) for ws, cnt in rows],
-            "window_start_us bigint, cnt bigint, late_dropped boolean",
-        )
+        with conf_scope(spark, {"spark.sql.shuffle.partitions": state_parts}):
+            m = dt.timedelta
+            write_batch([(1, t0), (2, t0 + m(minutes=1)), (3, t0 + m(minutes=120))], "b1")
+            run_once()
+            # row 4 lands 110 min behind the watermark — must be dropped
+            write_batch([(4, t0 + m(minutes=2)), (5, t0 + m(minutes=121))], "b2")
+            run_once()
+            w0_us = int(t0.replace(tzinfo=dt.timezone.utc).timestamp() * 1_000_000)
+            # materialize before the temp dir vanishes — the returned frame
+            # must not lazily re-read deleted files
+            rows = sorted(
+                (r["window_start_us"], r["cnt"])
+                for r in spark.read.parquet(out).collect()
+            )
+            late_dropped = (w0_us, 2) in rows
+            return spark.createDataFrame(
+                [(ws, cnt, late_dropped) for ws, cnt in rows],
+                "window_start_us bigint, cnt bigint, late_dropped boolean",
+            )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         shutil.rmtree(base, ignore_errors=True)
 
 
@@ -1163,41 +1161,39 @@ def i21_streaming_materialized_view(spark: SparkSession, sf_dir: str) -> DataFra
 
     # fixture-scale shuffle clamp for the scenario's own queries (the
     # fold clamps itself per batch); same rationale as i24's
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        src.append(ev.filter(F.col("event_id") % 3 == 0))
-        drain()  # view now holds the base state
-        src.append(ev.filter(F.col("event_id") % 3 == 1))
-        src.delete_eq_mor(
-            spark,
-            ev.filter(F.col("event_id") % 4 == 0).select("event_id"),
-            ["event_id"],
-        )
-        src.append(ev.filter(F.col("event_id") % 3 == 2))
-        drain()  # deltas fold in; no recompute
-        vt = _open(view_root)
-        mv = vt.scan(spark).persist()
-        recompute = (
-            src.scan(spark)
-            .groupBy("user_id")
-            .agg(F.count(F.lit(1)).alias("cnt"), F.sum("value").alias("sv"))
-        )
-        a = mv.select("user_id", "cnt", F.round("sv", 6).alias("sv"))
-        b = recompute.select("user_id", "cnt", F.round("sv", 6).alias("sv")).persist()
-        equal = a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
-        row = mv.agg(
-            F.count(F.lit(1)).alias("n_users"),
-            F.sum("cnt").alias("total_rows"),
-            F.round(F.sum("sv"), 4).alias("total_value"),
-        ).collect()[0]
-        return spark.createDataFrame(
-            [(row["n_users"], row["total_rows"], float(row["total_value"]), equal)],
-            "n_users bigint, total_rows bigint, total_value double, "
-            "mv_equals_recompute boolean",
-        )
+        with conf_scope(spark, {"spark.sql.shuffle.partitions": "8"}):
+            src.append(ev.filter(F.col("event_id") % 3 == 0))
+            drain()  # view now holds the base state
+            src.append(ev.filter(F.col("event_id") % 3 == 1))
+            src.delete_eq_mor(
+                spark,
+                ev.filter(F.col("event_id") % 4 == 0).select("event_id"),
+                ["event_id"],
+            )
+            src.append(ev.filter(F.col("event_id") % 3 == 2))
+            drain()  # deltas fold in; no recompute
+            vt = _open(view_root)
+            mv = vt.scan(spark).persist()
+            recompute = (
+                src.scan(spark)
+                .groupBy("user_id")
+                .agg(F.count(F.lit(1)).alias("cnt"), F.sum("value").alias("sv"))
+            )
+            a = mv.select("user_id", "cnt", F.round("sv", 6).alias("sv"))
+            b = recompute.select("user_id", "cnt", F.round("sv", 6).alias("sv")).persist()
+            equal = a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
+            row = mv.agg(
+                F.count(F.lit(1)).alias("n_users"),
+                F.sum("cnt").alias("total_rows"),
+                F.round(F.sum("sv"), 4).alias("total_value"),
+            ).collect()[0]
+            return spark.createDataFrame(
+                [(row["n_users"], row["total_rows"], float(row["total_value"]), equal)],
+                "n_users bigint, total_rows bigint, total_value double, "
+                "mv_equals_recompute boolean",
+            )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         shutil.rmtree(base, ignore_errors=True)
 
 
@@ -1385,60 +1381,58 @@ def i24_scd2_history_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shuffle partitioning; at dimension-churn scale that is sized to
     # the cluster, here it is clamped to the fixture (same rationale
     # as run_to_memory's state_partitions)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        src.append(cust)
-        drain()  # batch 0: every key opens
-        upd = cust.filter(F.col("user_id") % 3 == 0)
-        src.delete_eq_mor(spark, upd.select("user_id"), ["user_id"])
-        src.append(upd.withColumn("value", F.col("value") + 1000))
-        drain()  # batch: one third close v1, open v2
-        src.delete_eq_mor(
-            spark,
-            cust.filter(F.col("user_id") % 5 == 0).select("user_id"),
-            ["user_id"],
-        )
-        drain()  # batch: one fifth close with no successor
-        # the assertions below run 6+ actions over the history and the
-        # source; persist both scans so each is read once
-        hs = _open(hist_root).scan(spark).persist()
-        open_rows = hs.filter(F.col("valid_to") == SCD2_OPEN)
-        closed_rows = hs.filter(F.col("valid_to") != SCD2_OPEN)
-        source_now = src.scan(spark).persist()
-        a = open_rows.select("user_id", F.round("value", 4).alias("value"))
-        b = source_now.select("user_id", F.round("value", 4).alias("value"))
-        open_eq = a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
-        # closed versions carry their ORIGINAL (pre-update) values
-        orig = cust.withColumnRenamed("value", "v0")
-        mismatches = (
-            closed_rows.filter(F.col("valid_from") == 0)
-            .join(orig, "user_id")
-            .filter(F.round(F.col("value"), 4) != F.round(F.col("v0"), 4))
-            .count()
-        )
-        row = open_rows.agg(
-            F.count(F.lit(1)).alias("n_open"),
-            F.sum(F.col("value").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("sum_open"),
-        ).collect()[0]
-        n_closed = closed_rows.count()
-        return spark.createDataFrame(
-            [
-                (
-                    row["n_open"],
-                    row["sum_open"],
-                    n_closed,
-                    open_eq,
-                    mismatches == 0 and n_closed > 0,
-                )
-            ],
-            "n_open bigint, sum_open double, n_closed bigint, "
-            "open_equals_source boolean, versions_correct boolean",
-        )
+        with conf_scope(spark, {"spark.sql.shuffle.partitions": "8"}):
+            src.append(cust)
+            drain()  # batch 0: every key opens
+            upd = cust.filter(F.col("user_id") % 3 == 0)
+            src.delete_eq_mor(spark, upd.select("user_id"), ["user_id"])
+            src.append(upd.withColumn("value", F.col("value") + 1000))
+            drain()  # batch: one third close v1, open v2
+            src.delete_eq_mor(
+                spark,
+                cust.filter(F.col("user_id") % 5 == 0).select("user_id"),
+                ["user_id"],
+            )
+            drain()  # batch: one fifth close with no successor
+            # the assertions below run 6+ actions over the history and the
+            # source; persist both scans so each is read once
+            hs = _open(hist_root).scan(spark).persist()
+            open_rows = hs.filter(F.col("valid_to") == SCD2_OPEN)
+            closed_rows = hs.filter(F.col("valid_to") != SCD2_OPEN)
+            source_now = src.scan(spark).persist()
+            a = open_rows.select("user_id", F.round("value", 4).alias("value"))
+            b = source_now.select("user_id", F.round("value", 4).alias("value"))
+            open_eq = a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
+            # closed versions carry their ORIGINAL (pre-update) values
+            orig = cust.withColumnRenamed("value", "v0")
+            mismatches = (
+                closed_rows.filter(F.col("valid_from") == 0)
+                .join(orig, "user_id")
+                .filter(F.round(F.col("value"), 4) != F.round(F.col("v0"), 4))
+                .count()
+            )
+            row = open_rows.agg(
+                F.count(F.lit(1)).alias("n_open"),
+                F.sum(F.col("value").cast("decimal(18,2)"))
+                .cast("double")
+                .alias("sum_open"),
+            ).collect()[0]
+            n_closed = closed_rows.count()
+            return spark.createDataFrame(
+                [
+                    (
+                        row["n_open"],
+                        row["sum_open"],
+                        n_closed,
+                        open_eq,
+                        mismatches == 0 and n_closed > 0,
+                    )
+                ],
+                "n_open bigint, sum_open double, n_closed bigint, "
+                "open_equals_source boolean, versions_correct boolean",
+            )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         shutil.rmtree(base, ignore_errors=True)
 
 
@@ -1482,7 +1476,6 @@ def i25_gdpr_erasure_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _ct(src_root, ev.schema)
     _ct(view_root, spark.createDataFrame([], "user_id long, cnt long, sv double").schema)
     merge_batch = maintained_view_merge(view_root)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
 
     def drain():
         q = (
@@ -1497,59 +1490,57 @@ def i25_gdpr_erasure_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         q.awaitTermination()
 
+    state_parts = min(int(spark.conf.get("spark.sql.shuffle.partitions")), 8)
     try:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(min(int(prev_parts), 8))
-        )
-        src.append(ev)
-        drain()  # view = per-user profile of the full history
-        # the erasure request: all rows of users user_id % 7 == 3, as
-        # ONE equality-delete commit keyed on user_id
-        erased_keys = (
-            ev.filter(F.col("user_id") % 7 == 3).select("user_id").distinct()
-        )
-        src.delete_eq_mor(spark, erased_keys, ["user_id"])
-        drain()  # CDC delete rows propagate; erased view keys vanish
-        vt = _open(view_root)
-        gone_up = (
-            src.scan(spark).filter(F.col("user_id") % 7 == 3).count() == 0
-        )
-        gone_down = (
-            vt.scan(spark).filter(F.col("user_id") % 7 == 3).count() == 0
-        )
-        # physical purge: fold the delete files + compact; the CDC
-        # stream steps through the content-preserving rewrites with
-        # zero emitted changes, so one more drain must not move the view
-        src.maintain(spark, small_file_threshold=2, delete_file_threshold=1)
-        before = vt.metadata.current_snapshot().snapshot_id
-        drain()
-        vt = _open(view_root)
-        survives = (
-            vt.metadata.current_snapshot().snapshot_id == before
-            and src.scan(spark).filter(F.col("user_id") % 7 == 3).count() == 0
-        )
-        row = vt.scan(spark).agg(
-            F.count(F.lit(1)).alias("n_users"),
-            F.sum("cnt").alias("total_rows"),
-            F.round(F.sum("sv"), 4).alias("total_value"),
-        ).collect()[0]
-        return spark.createDataFrame(
-            [
-                (
-                    row["n_users"],
-                    row["total_rows"],
-                    float(row["total_value"]),
-                    gone_up,
-                    gone_down,
-                    survives,
-                )
-            ],
-            "n_users bigint, total_rows bigint, total_value double, "
-            "erased_gone_upstream boolean, erased_gone_downstream boolean, "
-            "survives_maintenance boolean",
-        )
+        with conf_scope(spark, {"spark.sql.shuffle.partitions": state_parts}):
+            src.append(ev)
+            drain()  # view = per-user profile of the full history
+            # the erasure request: all rows of users user_id % 7 == 3, as
+            # ONE equality-delete commit keyed on user_id
+            erased_keys = (
+                ev.filter(F.col("user_id") % 7 == 3).select("user_id").distinct()
+            )
+            src.delete_eq_mor(spark, erased_keys, ["user_id"])
+            drain()  # CDC delete rows propagate; erased view keys vanish
+            vt = _open(view_root)
+            gone_up = (
+                src.scan(spark).filter(F.col("user_id") % 7 == 3).count() == 0
+            )
+            gone_down = (
+                vt.scan(spark).filter(F.col("user_id") % 7 == 3).count() == 0
+            )
+            # physical purge: fold the delete files + compact; the CDC
+            # stream steps through the content-preserving rewrites with
+            # zero emitted changes, so one more drain must not move the view
+            src.maintain(spark, small_file_threshold=2, delete_file_threshold=1)
+            before = vt.metadata.current_snapshot().snapshot_id
+            drain()
+            vt = _open(view_root)
+            survives = (
+                vt.metadata.current_snapshot().snapshot_id == before
+                and src.scan(spark).filter(F.col("user_id") % 7 == 3).count() == 0
+            )
+            row = vt.scan(spark).agg(
+                F.count(F.lit(1)).alias("n_users"),
+                F.sum("cnt").alias("total_rows"),
+                F.round(F.sum("sv"), 4).alias("total_value"),
+            ).collect()[0]
+            return spark.createDataFrame(
+                [
+                    (
+                        row["n_users"],
+                        row["total_rows"],
+                        float(row["total_value"]),
+                        gone_up,
+                        gone_down,
+                        survives,
+                    )
+                ],
+                "n_users bigint, total_rows bigint, total_value double, "
+                "erased_gone_upstream boolean, erased_gone_downstream boolean, "
+                "survives_maintenance boolean",
+            )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         shutil.rmtree(base, ignore_errors=True)
 
 
@@ -1582,78 +1573,75 @@ def i26_catalog_fanout_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = load_table(spark, sf_dir, "events").select("event_id", "user_id", "value")
     base = tempfile.mkdtemp(prefix="stream_fan_")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
+    state_parts = min(int(spark.conf.get("spark.sql.shuffle.partitions")), 8)
     try:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(min(int(prev_parts), 8))
-        )
-        cat = Catalog.create(base + "/cat")
-        cat.create_table("ok", ev.schema)
-        cat.create_table("flagged", ev.schema)
-        src = base + "/src"
-        ev.repartition(4).write.parquet(src)
-        routes = [
-            ("ok", lambda d: d.filter(F.col("event_id") % 5 != 0)),
-            ("flagged", lambda d: d.filter(F.col("event_id") % 5 == 0)),
-        ]
-        states: list = []
-        inner = catalog_fanout_sink(cat.root, routes, stream_id="i26")
+        with conf_scope(spark, {"spark.sql.shuffle.partitions": state_parts}):
+            cat = Catalog.create(base + "/cat")
+            cat.create_table("ok", ev.schema)
+            cat.create_table("flagged", ev.schema)
+            src = base + "/src"
+            ev.repartition(4).write.parquet(src)
+            routes = [
+                ("ok", lambda d: d.filter(F.col("event_id") % 5 != 0)),
+                ("flagged", lambda d: d.filter(F.col("event_id") % 5 == 0)),
+            ]
+            states: list = []
+            inner = catalog_fanout_sink(cat.root, routes, stream_id="i26")
 
-        def sink(batch_df, batch_id):
-            inner(batch_df, batch_id)
-            states.append(cat.state())
+            def sink(batch_df, batch_id):
+                inner(batch_df, batch_id)
+                states.append(cat.state())
 
-        q = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", base + "/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        total = ev.count()
-        consistent = True
-        for st in states:
-            ok_c = cat.read(spark, "ok", state=st).count()
-            fl_c = cat.read(spark, "flagged", state=st).count()
-            # per-state invariant: the two sides always sum to a
-            # whole number of published batches' rows, never a split
-            got_ids = (
-                cat.read(spark, "ok", state=st)
-                .select("event_id")
-                .union(cat.read(spark, "flagged", state=st).select("event_id"))
+            q = (
+                spark.readStream.schema(ev.schema)
+                .option("maxFilesPerTrigger", 1)
+                .parquet(src)
+                .writeStream.foreachBatch(sink)
+                .option("checkpointLocation", base + "/ckpt")
+                .trigger(availableNow=True)
+                .start()
             )
-            batch_whole = (
-                got_ids.count() == ok_c + fl_c
-                and got_ids.distinct().count() == ok_c + fl_c
-            )
-            consistent = consistent and batch_whole
-        st_final = cat.state()
-        ok_rows = cat.read(spark, "ok", state=st_final).count()
-        flagged_rows = cat.read(spark, "flagged", state=st_final).count()
-        # replay: re-drive the first batch; nothing may move
-        inner(ev.limit(50), 0)
-        replay_safe = (
-            cat.read(spark, "ok").count() == ok_rows
-            and cat.read(spark, "flagged").count() == flagged_rows
-        )
-        return spark.createDataFrame(
-            [
-                (
-                    ok_rows,
-                    flagged_rows,
-                    ok_rows + flagged_rows,
-                    consistent and ok_rows + flagged_rows == total,
-                    replay_safe,
+            q.awaitTermination()
+            total = ev.count()
+            consistent = True
+            for st in states:
+                ok_c = cat.read(spark, "ok", state=st).count()
+                fl_c = cat.read(spark, "flagged", state=st).count()
+                # per-state invariant: the two sides always sum to a
+                # whole number of published batches' rows, never a split
+                got_ids = (
+                    cat.read(spark, "ok", state=st)
+                    .select("event_id")
+                    .union(cat.read(spark, "flagged", state=st).select("event_id"))
                 )
-            ],
-            "ok_rows bigint, flagged_rows bigint, total_conserved bigint, "
-            "every_state_consistent boolean, replay_safe boolean",
-        )
+                batch_whole = (
+                    got_ids.count() == ok_c + fl_c
+                    and got_ids.distinct().count() == ok_c + fl_c
+                )
+                consistent = consistent and batch_whole
+            st_final = cat.state()
+            ok_rows = cat.read(spark, "ok", state=st_final).count()
+            flagged_rows = cat.read(spark, "flagged", state=st_final).count()
+            # replay: re-drive the first batch; nothing may move
+            inner(ev.limit(50), 0)
+            replay_safe = (
+                cat.read(spark, "ok").count() == ok_rows
+                and cat.read(spark, "flagged").count() == flagged_rows
+            )
+            return spark.createDataFrame(
+                [
+                    (
+                        ok_rows,
+                        flagged_rows,
+                        ok_rows + flagged_rows,
+                        consistent and ok_rows + flagged_rows == total,
+                        replay_safe,
+                    )
+                ],
+                "ok_rows bigint, flagged_rows bigint, total_conserved bigint, "
+                "every_state_consistent boolean, replay_safe boolean",
+            )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         shutil.rmtree(base, ignore_errors=True)
 
 
@@ -1719,49 +1707,47 @@ def i27_streaming_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         q.awaitTermination()
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        mid = docs.agg(F.max("doc_id")).collect()[0][0] // 2
-        src.append(docs.filter(F.col("doc_id") <= mid))
-        drain()  # slice 1: within-batch dups resolve
-        src.append(docs.filter(F.col("doc_id") > mid))
-        drain()  # slice 2: cross-batch dups hit the standing curated set
-        fpc = F.md5(
-            F.concat_ws(
-                "\x1f", F.array_sort(F.array_distinct(F.split("text", " ")))
+        with conf_scope(spark, {"spark.sql.shuffle.partitions": "8"}):
+            mid = docs.agg(F.max("doc_id")).collect()[0][0] // 2
+            src.append(docs.filter(F.col("doc_id") <= mid))
+            drain()  # slice 1: within-batch dups resolve
+            src.append(docs.filter(F.col("doc_id") > mid))
+            drain()  # slice 2: cross-batch dups hit the standing curated set
+            fpc = F.md5(
+                F.concat_ws(
+                    "\x1f", F.array_sort(F.array_distinct(F.split("text", " ")))
+                )
             )
-        )
-        curated = _open_tbl(cur_root).scan(spark).persist()
-        recompute = (
-            docs.withColumn("fp", fpc)
-            .withColumn(
-                "_m", F.min("doc_id").over(Window.partitionBy("fp"))
+            curated = _open_tbl(cur_root).scan(spark).persist()
+            recompute = (
+                docs.withColumn("fp", fpc)
+                .withColumn(
+                    "_m", F.min("doc_id").over(Window.partitionBy("fp"))
+                )
+                .filter(F.col("doc_id") == F.col("_m"))
+                .select(*docs.columns)
+                .persist()
             )
-            .filter(F.col("doc_id") == F.col("_m"))
-            .select(*docs.columns)
-            .persist()
-        )
-        got = curated.select(*docs.columns)
-        curated_ok = (
-            got.exceptAll(recompute).isEmpty()
-            and recompute.exceptAll(got).isEmpty()
-        )
-        # materialize before the finally removes the temp tables (the
-        # caller collects AFTER this function returns)
-        log_rows = (
-            _open_tbl(log_root)
-            .scan(spark)
-            .select("doc_id", "kept_doc")
-            .orderBy("doc_id")
-            .collect()
-        )
-        return spark.createDataFrame(
-            [(r["doc_id"], r["kept_doc"], bool(curated_ok)) for r in log_rows],
-            "doc_id long, kept_doc long, curated_ok boolean",
-        )
+            got = curated.select(*docs.columns)
+            curated_ok = (
+                got.exceptAll(recompute).isEmpty()
+                and recompute.exceptAll(got).isEmpty()
+            )
+            # materialize before the finally removes the temp tables (the
+            # caller collects AFTER this function returns)
+            log_rows = (
+                _open_tbl(log_root)
+                .scan(spark)
+                .select("doc_id", "kept_doc")
+                .orderBy("doc_id")
+                .collect()
+            )
+            return spark.createDataFrame(
+                [(r["doc_id"], r["kept_doc"], bool(curated_ok)) for r in log_rows],
+                "doc_id long, kept_doc long, curated_ok boolean",
+            )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         shutil.rmtree(base, ignore_errors=True)
 
 
@@ -1828,39 +1814,37 @@ def i28_streaming_topk_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         q.awaitTermination()
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        src.append(ev.filter(F.col("event_id") % 3 == 0))
-        drain()  # view holds the base top-k
-        src.append(ev.filter(F.col("event_id") % 3 == 1))
-        src.append(ev.filter(F.col("event_id") % 3 == 2))
-        drain()  # two delta commits fold in; no recompute
-        vt = _open(view_root)
-        mv = vt.scan(spark).persist()
-        rec = topk_frame(
-            src.scan(spark), "user_id", ["ts", "event_id"], 3
-        ).select(mv.columns).persist()
-        equal = mv.exceptAll(rec).isEmpty() and rec.exceptAll(mv).isEmpty()
-        row = mv.agg(
-            F.count(F.lit(1)).alias("view_rows"),
-            F.countDistinct("user_id").alias("n_users"),
-            F.sum("event_id").alias("sum_event_id"),
-        ).collect()[0]
-        mv.unpersist()
-        rec.unpersist()
-        return spark.createDataFrame(
-            [
-                (
-                    row["view_rows"], row["n_users"],
-                    row["sum_event_id"], equal,
-                )
-            ],
-            "view_rows bigint, n_users bigint, sum_event_id bigint, "
-            "equals_recompute boolean",
-        )
+        with conf_scope(spark, {"spark.sql.shuffle.partitions": "8"}):
+            src.append(ev.filter(F.col("event_id") % 3 == 0))
+            drain()  # view holds the base top-k
+            src.append(ev.filter(F.col("event_id") % 3 == 1))
+            src.append(ev.filter(F.col("event_id") % 3 == 2))
+            drain()  # two delta commits fold in; no recompute
+            vt = _open(view_root)
+            mv = vt.scan(spark).persist()
+            rec = topk_frame(
+                src.scan(spark), "user_id", ["ts", "event_id"], 3
+            ).select(mv.columns).persist()
+            equal = mv.exceptAll(rec).isEmpty() and rec.exceptAll(mv).isEmpty()
+            row = mv.agg(
+                F.count(F.lit(1)).alias("view_rows"),
+                F.countDistinct("user_id").alias("n_users"),
+                F.sum("event_id").alias("sum_event_id"),
+            ).collect()[0]
+            mv.unpersist()
+            rec.unpersist()
+            return spark.createDataFrame(
+                [
+                    (
+                        row["view_rows"], row["n_users"],
+                        row["sum_event_id"], equal,
+                    )
+                ],
+                "view_rows bigint, n_users bigint, sum_event_id bigint, "
+                "equals_recompute boolean",
+            )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         shutil.rmtree(base, ignore_errors=True)
 
 
@@ -1927,53 +1911,51 @@ def i29_streaming_agg_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         q.awaitTermination()
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        src.append(ev.filter(F.col("event_id") % 3 == 0))
-        drain()  # view holds the base aggregate
-        src.append(ev.filter(F.col("event_id") % 3 == 1))
-        src.delete_eq_mor(
-            spark,
-            ev.filter(F.col("event_id") % 10 == 1)
-            .select("event_id").distinct(),
-            ["event_id"],
-        )
-        drain()  # insert + DELETE feed folds with signs
-        src.append(ev.filter(F.col("event_id") % 3 == 2))
-        drain()
-        vt = _open(view_root)
-        mv = vt.scan(spark).persist()
-        rec = (
-            src.scan(spark)
-            .groupBy("user_id")
-            .agg(
-                F.count(F.lit(1)).alias("cnt"),
-                F.sum(F.col("event_id").cast("double")).alias("sv"),
+        with conf_scope(spark, {"spark.sql.shuffle.partitions": "8"}):
+            src.append(ev.filter(F.col("event_id") % 3 == 0))
+            drain()  # view holds the base aggregate
+            src.append(ev.filter(F.col("event_id") % 3 == 1))
+            src.delete_eq_mor(
+                spark,
+                ev.filter(F.col("event_id") % 10 == 1)
+                .select("event_id").distinct(),
+                ["event_id"],
             )
-            .select(mv.columns)
-            .persist()
-        )
-        equal = mv.exceptAll(rec).isEmpty() and rec.exceptAll(mv).isEmpty()
-        row = mv.agg(
-            F.count(F.lit(1)).alias("n_users"),
-            F.sum("cnt").alias("total_cnt"),
-            F.sum("sv").cast("long").alias("sum_event_id"),
-        ).collect()[0]
-        mv.unpersist()
-        rec.unpersist()
-        return spark.createDataFrame(
-            [
-                (
-                    row["n_users"], row["total_cnt"],
-                    row["sum_event_id"], equal,
+            drain()  # insert + DELETE feed folds with signs
+            src.append(ev.filter(F.col("event_id") % 3 == 2))
+            drain()
+            vt = _open(view_root)
+            mv = vt.scan(spark).persist()
+            rec = (
+                src.scan(spark)
+                .groupBy("user_id")
+                .agg(
+                    F.count(F.lit(1)).alias("cnt"),
+                    F.sum(F.col("event_id").cast("double")).alias("sv"),
                 )
-            ],
-            "n_users bigint, total_cnt bigint, sum_event_id bigint, "
-            "equals_recompute boolean",
-        )
+                .select(mv.columns)
+                .persist()
+            )
+            equal = mv.exceptAll(rec).isEmpty() and rec.exceptAll(mv).isEmpty()
+            row = mv.agg(
+                F.count(F.lit(1)).alias("n_users"),
+                F.sum("cnt").alias("total_cnt"),
+                F.sum("sv").cast("long").alias("sum_event_id"),
+            ).collect()[0]
+            mv.unpersist()
+            rec.unpersist()
+            return spark.createDataFrame(
+                [
+                    (
+                        row["n_users"], row["total_cnt"],
+                        row["sum_event_id"], equal,
+                    )
+                ],
+                "n_users bigint, total_cnt bigint, sum_event_id bigint, "
+                "equals_recompute boolean",
+            )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         shutil.rmtree(base, ignore_errors=True)
 
 
@@ -2023,87 +2005,85 @@ def i30_streaming_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     base_dir = tempfile.mkdtemp(prefix="stream_ann_")
     idx_root = base_dir + "/idx"
     src_root, ckpt = base_dir + "/src", base_dir + "/ckpt"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(spark.sparkContext.defaultParallelism),
-        )
-        emb, tbl, cents, books = _write_base_index(spark, idx_root)
-        delta = emb.filter(F.col("vec_id") % 4 == 0)
-        n_base = tbl.scan(spark).count()
-        src = _ct(src_root, delta.schema)
-        fold = ann_index_sink(idx_root, cents, books, stream_id="i30")
-
-        def drain():
-            q = (
-                spark.readStream.format("engine_table")
-                .option("root", src_root)
-                .option("cdc", "true")
-                .load()
-                .writeStream.foreachBatch(fold)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-
-        src.append(delta.filter(F.col("vec_id") % 8 == 0).coalesce(2))
-        drain()
-        src.append(delta.filter(F.col("vec_id") % 8 == 4).coalesce(2))
-        src.delete_eq_mor(
+        with conf_scope(
             spark,
-            delta.filter(F.col("vec_id") % 16 == 0)
-            .select("vec_id").distinct(),
-            ["vec_id"],
-        )
-        drain()  # insert + DELETE feed folds in one pass
-        survivors = emb.filter(
-            (F.col("vec_id") % 4 != 0)
-            | ((F.col("vec_id") % 4 == 0) & (F.col("vec_id") % 16 != 0))
-        ).persist()
-        idx = _open(idx_root).scan(spark).persist()
-        index_rows = idx.count()
-        enc = ivfpq_encode(survivors, cents, books).select(
-            "id", "cluster", "code"
-        )
-        got = idx.select("id", "cluster", "code")
-        equals_encode = (
-            got.exceptAll(enc).isEmpty() and enc.exceptAll(got).isEmpty()
-        )
-        q = survivors.filter(F.col("vec_id") < 24)
-        n_queries = q.count()
-        exact = brute_force_topk(survivors, q, k=5)
-        it = _open(idx_root)
-        approx, _ = ivfpq_table_topk(
-            spark, it, cents, books, q, k=5, nprobe=6, rerank=20
-        )
-        recall_ok = bool(
-            annotate_recall(approx, exact, k=5, min_recall=0.8)
-            .agg(F.coalesce(F.bool_and("recall_ok"), F.lit(False)))
-            .collect()[0][0]
-        )
-        one = q.orderBy("vec_id").limit(1)
-        probed, info = ivfpq_table_topk(
-            spark, it, cents, books, one, k=5, nprobe=2, rerank=20
-        )
-        probed.collect()
-        idx.unpersist()
-        survivors.unpersist()  # emb stays persisted: session-cached model
-        return spark.createDataFrame(
-            [
-                (
-                    n_base, 1000, 250, index_rows, equals_encode,
-                    n_queries, recall_ok,
-                    0 < info["files_scanned"] < info["files_total"],
+            {"spark.sql.shuffle.partitions": spark.sparkContext.defaultParallelism},
+        ):
+            emb, tbl, cents, books = _write_base_index(spark, idx_root)
+            delta = emb.filter(F.col("vec_id") % 4 == 0)
+            n_base = tbl.scan(spark).count()
+            src = _ct(src_root, delta.schema)
+            fold = ann_index_sink(idx_root, cents, books, stream_id="i30")
+
+            def drain():
+                q = (
+                    spark.readStream.format("engine_table")
+                    .option("root", src_root)
+                    .option("cdc", "true")
+                    .load()
+                    .writeStream.foreachBatch(fold)
+                    .option("checkpointLocation", ckpt)
+                    .trigger(availableNow=True)
+                    .start()
                 )
-            ],
-            "n_base bigint, n_streamed bigint, n_deleted bigint, "
-            "index_rows bigint, equals_encode boolean, n_queries bigint, "
-            "recall_ok boolean, pruned boolean",
-        )
+                q.awaitTermination()
+
+            src.append(delta.filter(F.col("vec_id") % 8 == 0).coalesce(2))
+            drain()
+            src.append(delta.filter(F.col("vec_id") % 8 == 4).coalesce(2))
+            src.delete_eq_mor(
+                spark,
+                delta.filter(F.col("vec_id") % 16 == 0)
+                .select("vec_id").distinct(),
+                ["vec_id"],
+            )
+            drain()  # insert + DELETE feed folds in one pass
+            survivors = emb.filter(
+                (F.col("vec_id") % 4 != 0)
+                | ((F.col("vec_id") % 4 == 0) & (F.col("vec_id") % 16 != 0))
+            ).persist()
+            idx = _open(idx_root).scan(spark).persist()
+            index_rows = idx.count()
+            enc = ivfpq_encode(survivors, cents, books).select(
+                "id", "cluster", "code"
+            )
+            got = idx.select("id", "cluster", "code")
+            equals_encode = (
+                got.exceptAll(enc).isEmpty() and enc.exceptAll(got).isEmpty()
+            )
+            q = survivors.filter(F.col("vec_id") < 24)
+            n_queries = q.count()
+            exact = brute_force_topk(survivors, q, k=5)
+            it = _open(idx_root)
+            approx, _ = ivfpq_table_topk(
+                spark, it, cents, books, q, k=5, nprobe=6, rerank=20
+            )
+            recall_ok = bool(
+                annotate_recall(approx, exact, k=5, min_recall=0.8)
+                .agg(F.coalesce(F.bool_and("recall_ok"), F.lit(False)))
+                .collect()[0][0]
+            )
+            one = q.orderBy("vec_id").limit(1)
+            probed, info = ivfpq_table_topk(
+                spark, it, cents, books, one, k=5, nprobe=2, rerank=20
+            )
+            probed.collect()
+            idx.unpersist()
+            survivors.unpersist()  # emb stays persisted: session-cached model
+            return spark.createDataFrame(
+                [
+                    (
+                        n_base, 1000, 250, index_rows, equals_encode,
+                        n_queries, recall_ok,
+                        0 < info["files_scanned"] < info["files_total"],
+                    )
+                ],
+                "n_base bigint, n_streamed bigint, n_deleted bigint, "
+                "index_rows bigint, equals_encode boolean, n_queries bigint, "
+                "recall_ok boolean, pruned boolean",
+            )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         shutil.rmtree(base_dir, ignore_errors=True)
 
 
@@ -2168,61 +2148,59 @@ def i31_streaming_extrema_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         q.awaitTermination()
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        for i in range(2):
-            src.append(ev.filter(F.col("event_id") % 2 == i))
-            drain(base + "/ckpt")
-        vt = _open(view_root)
-        mv = vt.scan(spark).persist()
-        rec = (
-            src.scan(spark)
-            .groupBy("user_id")
-            .agg(F.min("event_id").alias("mn"), F.max("event_id").alias("mx"))
-            .select(mv.columns)
-            .persist()
-        )
-        equal = mv.exceptAll(rec).isEmpty() and rec.exceptAll(mv).isEmpty()
-        row = mv.agg(
-            F.count(F.lit(1)).alias("n_users"),
-            F.sum("mn").alias("sum_mn"),
-            F.sum("mx").alias("sum_mx"),
-        ).collect()[0]
-        # a delete-bearing batch must REFUSE (insert-only contract:
-        # extrema are not self-inverse). Probed by invoking the fold
-        # directly with a CDC frame carrying a delete row — the same
-        # call foreachBatch would make, without paying two more
-        # availableNow triggers; in a live stream the ValueError
-        # fails the query loudly.
-        fold2 = extrema_view_sink(
-            view_root, "user_id", "event_id", stream_id="i31b"
-        )
-        probe = ev.limit(2).withColumn(
-            "_change_type",
-            F.when(F.col("event_id") % 2 == 0, F.lit("delete")).otherwise(
-                F.lit("insert")
-            ),
-        )
-        refused = 0
-        try:
-            fold2(probe, 0)
-        except ValueError:
-            refused = 1
-        mv.unpersist()
-        rec.unpersist()
-        return spark.createDataFrame(
-            [
-                (
-                    row["n_users"], row["sum_mn"], row["sum_mx"],
-                    equal, refused,
-                )
-            ],
-            "n_users bigint, sum_mn bigint, sum_mx bigint, "
-            "equals_recompute boolean, delete_refused bigint",
-        )
+        with conf_scope(spark, {"spark.sql.shuffle.partitions": "8"}):
+            for i in range(2):
+                src.append(ev.filter(F.col("event_id") % 2 == i))
+                drain(base + "/ckpt")
+            vt = _open(view_root)
+            mv = vt.scan(spark).persist()
+            rec = (
+                src.scan(spark)
+                .groupBy("user_id")
+                .agg(F.min("event_id").alias("mn"), F.max("event_id").alias("mx"))
+                .select(mv.columns)
+                .persist()
+            )
+            equal = mv.exceptAll(rec).isEmpty() and rec.exceptAll(mv).isEmpty()
+            row = mv.agg(
+                F.count(F.lit(1)).alias("n_users"),
+                F.sum("mn").alias("sum_mn"),
+                F.sum("mx").alias("sum_mx"),
+            ).collect()[0]
+            # a delete-bearing batch must REFUSE (insert-only contract:
+            # extrema are not self-inverse). Probed by invoking the fold
+            # directly with a CDC frame carrying a delete row — the same
+            # call foreachBatch would make, without paying two more
+            # availableNow triggers; in a live stream the ValueError
+            # fails the query loudly.
+            fold2 = extrema_view_sink(
+                view_root, "user_id", "event_id", stream_id="i31b"
+            )
+            probe = ev.limit(2).withColumn(
+                "_change_type",
+                F.when(F.col("event_id") % 2 == 0, F.lit("delete")).otherwise(
+                    F.lit("insert")
+                ),
+            )
+            refused = 0
+            try:
+                fold2(probe, 0)
+            except ValueError:
+                refused = 1
+            mv.unpersist()
+            rec.unpersist()
+            return spark.createDataFrame(
+                [
+                    (
+                        row["n_users"], row["sum_mn"], row["sum_mx"],
+                        equal, refused,
+                    )
+                ],
+                "n_users bigint, sum_mn bigint, sum_mx bigint, "
+                "equals_recompute boolean, delete_refused bigint",
+            )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         shutil.rmtree(base, ignore_errors=True)
 
 
@@ -2297,60 +2275,58 @@ def i32_streaming_extrema_deletes(spark: SparkSession, sf_dir: str) -> DataFrame
         )
         q.awaitTermination()
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        src.append(ev)
-        drain(base + "/ckpt")
-        mu = ev.agg(F.min("user_id")).collect()[0][0]
-        doomed = ev.filter(
-            (F.col("event_id") % 5 == 0) | (F.col("user_id") == mu)
-        ).select("event_id")
-        src = _open(src_root)
-        src.delete_eq_mor(spark, doomed, ["event_id"])
-        drain(base + "/ckpt")
-        vt = _open(view_root)
-        mv = vt.scan(spark).persist()
-        rec = (
-            src.scan(spark)
-            .groupBy("user_id")
-            .agg(F.min("event_id").alias("mn"), F.max("event_id").alias("mx"))
-            .select(mv.columns)
-            .persist()
-        )
-        equal = mv.exceptAll(rec).isEmpty() and rec.exceptAll(mv).isEmpty()
-        gone = mv.filter(F.col("user_id") == mu).isEmpty()
-        row = mv.agg(
-            F.count(F.lit(1)).alias("n_users"),
-            F.sum("mn").alias("sum_mn"),
-            F.sum("mx").alias("sum_mx"),
-        ).collect()[0]
-        # without source_root the INSERT-ONLY refusal stands
-        fold2 = extrema_view_sink(
-            view_root, "user_id", "event_id", stream_id="i32b"
-        )
-        refused = 0
-        try:
-            fold2(
-                ev.limit(2).withColumn("_change_type", F.lit("delete")), 0
+        with conf_scope(spark, {"spark.sql.shuffle.partitions": "8"}):
+            src.append(ev)
+            drain(base + "/ckpt")
+            mu = ev.agg(F.min("user_id")).collect()[0][0]
+            doomed = ev.filter(
+                (F.col("event_id") % 5 == 0) | (F.col("user_id") == mu)
+            ).select("event_id")
+            src = _open(src_root)
+            src.delete_eq_mor(spark, doomed, ["event_id"])
+            drain(base + "/ckpt")
+            vt = _open(view_root)
+            mv = vt.scan(spark).persist()
+            rec = (
+                src.scan(spark)
+                .groupBy("user_id")
+                .agg(F.min("event_id").alias("mn"), F.max("event_id").alias("mx"))
+                .select(mv.columns)
+                .persist()
             )
-        except ValueError:
-            refused = 1
-        mv.unpersist()
-        rec.unpersist()
-        return spark.createDataFrame(
-            [
-                (
-                    row["n_users"], row["sum_mn"], row["sum_mx"],
-                    equal, gone, refused,
+            equal = mv.exceptAll(rec).isEmpty() and rec.exceptAll(mv).isEmpty()
+            gone = mv.filter(F.col("user_id") == mu).isEmpty()
+            row = mv.agg(
+                F.count(F.lit(1)).alias("n_users"),
+                F.sum("mn").alias("sum_mn"),
+                F.sum("mx").alias("sum_mx"),
+            ).collect()[0]
+            # without source_root the INSERT-ONLY refusal stands
+            fold2 = extrema_view_sink(
+                view_root, "user_id", "event_id", stream_id="i32b"
+            )
+            refused = 0
+            try:
+                fold2(
+                    ev.limit(2).withColumn("_change_type", F.lit("delete")), 0
                 )
-            ],
-            "n_users bigint, sum_mn bigint, sum_mx bigint, "
-            "equals_recompute boolean, min_user_gone boolean, "
-            "refused_without_source bigint",
-        )
+            except ValueError:
+                refused = 1
+            mv.unpersist()
+            rec.unpersist()
+            return spark.createDataFrame(
+                [
+                    (
+                        row["n_users"], row["sum_mn"], row["sum_mx"],
+                        equal, gone, refused,
+                    )
+                ],
+                "n_users bigint, sum_mn bigint, sum_mx bigint, "
+                "equals_recompute boolean, min_user_gone boolean, "
+                "refused_without_source bigint",
+            )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         shutil.rmtree(base, ignore_errors=True)
 
 
@@ -2428,55 +2404,53 @@ def i33_streaming_topk_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         q.awaitTermination()
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        src.append(ev)
-        drain(base + "/ckpt")
-        mu = ev.agg(F.min("user_id")).collect()[0][0]
-        doomed = ev.filter(
-            (F.col("event_id") % 5 == 0) | (F.col("user_id") == mu)
-        ).select("event_id")
-        src = _open(src_root)
-        src.delete_eq_mor(spark, doomed, ["event_id"])
-        drain(base + "/ckpt")
-        vt = _open(view_root)
-        mv = vt.scan(spark).persist()
-        rec = (
-            topk_frame(src.scan(spark), "user_id", ["ts", "event_id"], 3)
-            .select(mv.columns)
-            .persist()
-        )
-        equal = mv.exceptAll(rec).isEmpty() and rec.exceptAll(mv).isEmpty()
-        gone = mv.filter(F.col("user_id") == mu).isEmpty()
-        row = mv.agg(
-            F.count(F.lit(1)).alias("view_rows"),
-            F.countDistinct("user_id").alias("n_users"),
-            F.sum("event_id").alias("sum_event_id"),
-        ).collect()[0]
-        fold2 = topk_view_sink(
-            view_root, "user_id", ["ts", "event_id"], 3, stream_id="i33b"
-        )
-        refused = 0
-        try:
-            fold2(
-                ev.limit(2).withColumn("_change_type", F.lit("delete")), 0
+        with conf_scope(spark, {"spark.sql.shuffle.partitions": "8"}):
+            src.append(ev)
+            drain(base + "/ckpt")
+            mu = ev.agg(F.min("user_id")).collect()[0][0]
+            doomed = ev.filter(
+                (F.col("event_id") % 5 == 0) | (F.col("user_id") == mu)
+            ).select("event_id")
+            src = _open(src_root)
+            src.delete_eq_mor(spark, doomed, ["event_id"])
+            drain(base + "/ckpt")
+            vt = _open(view_root)
+            mv = vt.scan(spark).persist()
+            rec = (
+                topk_frame(src.scan(spark), "user_id", ["ts", "event_id"], 3)
+                .select(mv.columns)
+                .persist()
             )
-        except ValueError:
-            refused = 1
-        mv.unpersist()
-        rec.unpersist()
-        return spark.createDataFrame(
-            [
-                (
-                    row["view_rows"], row["n_users"], row["sum_event_id"],
-                    equal, gone, refused,
+            equal = mv.exceptAll(rec).isEmpty() and rec.exceptAll(mv).isEmpty()
+            gone = mv.filter(F.col("user_id") == mu).isEmpty()
+            row = mv.agg(
+                F.count(F.lit(1)).alias("view_rows"),
+                F.countDistinct("user_id").alias("n_users"),
+                F.sum("event_id").alias("sum_event_id"),
+            ).collect()[0]
+            fold2 = topk_view_sink(
+                view_root, "user_id", ["ts", "event_id"], 3, stream_id="i33b"
+            )
+            refused = 0
+            try:
+                fold2(
+                    ev.limit(2).withColumn("_change_type", F.lit("delete")), 0
                 )
-            ],
-            "view_rows bigint, n_users bigint, sum_event_id bigint, "
-            "equals_recompute boolean, min_user_gone boolean, "
-            "refused_without_source bigint",
-        )
+            except ValueError:
+                refused = 1
+            mv.unpersist()
+            rec.unpersist()
+            return spark.createDataFrame(
+                [
+                    (
+                        row["view_rows"], row["n_users"], row["sum_event_id"],
+                        equal, gone, refused,
+                    )
+                ],
+                "view_rows bigint, n_users bigint, sum_event_id bigint, "
+                "equals_recompute boolean, min_user_gone boolean, "
+                "refused_without_source bigint",
+            )
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         shutil.rmtree(base, ignore_errors=True)

@@ -13,11 +13,18 @@ scale-readiness:
 - Shuffle partitions default to the local core count; on a real
   cluster this is overridden by the deploy config (AQE coalesces
   anyway).
+
+``conf_scope`` is the one way product code changes a session conf
+around an action: it sets the overrides on entry and restores the
+prior values (unsetting keys that had none) on exit, exceptions
+included, so a query never leaks a conf change into the session.
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
+from collections.abc import Iterator
 
 from pyspark.sql import SparkSession
 
@@ -52,3 +59,27 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+@contextlib.contextmanager
+def conf_scope(
+    spark: SparkSession, overrides: dict[str, str | int | None]
+) -> Iterator[None]:
+    """Set each session conf in ``overrides`` for the duration of the
+    block, then restore the prior values in reverse order, also on an
+    exception. A key with no prior value is unset again; a ``None``
+    override leaves its key untouched."""
+    saved: list[tuple[str, str | None]] = []
+    try:
+        for key, value in overrides.items():
+            if value is None:
+                continue
+            saved.append((key, spark.conf.get(key, None)))
+            spark.conf.set(key, str(value))
+        yield
+    finally:
+        for key, prior in reversed(saved):
+            if prior is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, prior)

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..fixtures import load_table
+from ..session import conf_scope
 from ..table.table import Table
 
 
@@ -199,26 +200,24 @@ def run_to_memory(
     # The memory sink can't recover from a checkpoint anyway, so the
     # checkpoint is pure scratch — always reclaimed, even on failure.
     ckpt = scratch_ckpt()
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    width = None
+    if state_partitions is not None:
+        prev = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        width = min(prev, state_partitions)
     try:
-        if state_partitions is not None:
-            spark.conf.set(
-                "spark.sql.shuffle.partitions",
-                str(min(int(prev), state_partitions)),
+        with conf_scope(spark, {"spark.sql.shuffle.partitions": width}):
+            q = (
+                stream_df.writeStream.format("memory")
+                .queryName(name)
+                .outputMode(output_mode)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
             )
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+            q.awaitTermination()
     finally:
         import shutil
 
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
         shutil.rmtree(ckpt, ignore_errors=True)
     return spark.table(name)
 
@@ -694,57 +693,55 @@ def maintained_view_merge(view_root: str, key_col: str = "user_id",
             spark.sparkContext.defaultParallelism,
             batch_df.rdd.getNumPartitions(),
         )
-        prev_width = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(width))
         try:
-            if batch_df.isEmpty():
-                # zero-change window (e.g. the source compacted — content-
-                # preserving rewrites emit no CDC rows): folding would
-                # commit a no-op delete+append pair per idle trigger. Skip
-                # without stamping; a replay of this batch is empty again,
-                # and any later non-empty batch advances the watermark.
-                return
-            if partial_del is not None:
-                # crash window of a previous attempt: its delete committed
-                # but its append did not — undo the half-applied delete so
-                # this attempt folds against intact state
-                vt.rollback_to(partial_del.parent_id)
-                vt = _open(view_root)
-            # fold in the VIEW's sv dtype (long measures stay exact
-            # past 2^53; double views keep folding as double)
-            sv_t = {f.name: f.dataType for f in vt.schema().fields}["sv"]
-            sign = F.when(F.col("_change_type") == "insert", 1).otherwise(-1)
-            delta = batch_df.groupBy(key_col).agg(
-                F.sum(sign).alias("d_cnt"),
-                F.sum(sign * F.col(value_col).cast(sv_t)).cast(sv_t).alias("d_sv"),
-            ).persist()
-            refuse_null_keys(delta, [key_col], "maintained_view_merge")
-            # runtime-filtered view read (same rationale as
-            # topk_view_sink): only files whose stats admit a touched
-            # key are read — the right join restricts to delta keys
-            # anyway, so pruning the scan changes cost, not content
-            cur, _info = vt.scan_runtime_filtered(spark, delta, key_col)
-            merged = cur.join(delta, key_col, "right").select(
-                key_col,
-                (F.coalesce("cnt", F.lit(0)) + F.col("d_cnt")).alias("cnt"),
-                (F.coalesce("sv", F.lit(0).cast(sv_t)) + F.col("d_sv"))
-                .cast(sv_t)
-                .alias("sv"),
-            ).persist()
-            touched = merged.select(key_col)
-            survivors = merged.filter(F.col("cnt") > 0)
-            # replace touched keys: eq-delete then append (the later
-            # sequence wins at read — exact replacement, two tiny commits)
-            vt.delete_eq_mor(
-                spark, touched, [key_col],
-                extra_summary={"mv-batch-del": int(batch_id), "mv-stream-id": stream_id},
-            )
-            vt.append(
-                survivors,
-                extra_summary={"mv-batch-id": int(batch_id), "mv-stream-id": stream_id},
-            )
+            with conf_scope(spark, {"spark.sql.shuffle.partitions": width}):
+                if batch_df.isEmpty():
+                    # zero-change window (e.g. the source compacted — content-
+                    # preserving rewrites emit no CDC rows): folding would
+                    # commit a no-op delete+append pair per idle trigger. Skip
+                    # without stamping; a replay of this batch is empty again,
+                    # and any later non-empty batch advances the watermark.
+                    return
+                if partial_del is not None:
+                    # crash window of a previous attempt: its delete committed
+                    # but its append did not — undo the half-applied delete so
+                    # this attempt folds against intact state
+                    vt.rollback_to(partial_del.parent_id)
+                    vt = _open(view_root)
+                # fold in the VIEW's sv dtype (long measures stay exact
+                # past 2^53; double views keep folding as double)
+                sv_t = {f.name: f.dataType for f in vt.schema().fields}["sv"]
+                sign = F.when(F.col("_change_type") == "insert", 1).otherwise(-1)
+                delta = batch_df.groupBy(key_col).agg(
+                    F.sum(sign).alias("d_cnt"),
+                    F.sum(sign * F.col(value_col).cast(sv_t)).cast(sv_t).alias("d_sv"),
+                ).persist()
+                refuse_null_keys(delta, [key_col], "maintained_view_merge")
+                # runtime-filtered view read (same rationale as
+                # topk_view_sink): only files whose stats admit a touched
+                # key are read — the right join restricts to delta keys
+                # anyway, so pruning the scan changes cost, not content
+                cur, _info = vt.scan_runtime_filtered(spark, delta, key_col)
+                merged = cur.join(delta, key_col, "right").select(
+                    key_col,
+                    (F.coalesce("cnt", F.lit(0)) + F.col("d_cnt")).alias("cnt"),
+                    (F.coalesce("sv", F.lit(0).cast(sv_t)) + F.col("d_sv"))
+                    .cast(sv_t)
+                    .alias("sv"),
+                ).persist()
+                touched = merged.select(key_col)
+                survivors = merged.filter(F.col("cnt") > 0)
+                # replace touched keys: eq-delete then append (the later
+                # sequence wins at read — exact replacement, two tiny commits)
+                vt.delete_eq_mor(
+                    spark, touched, [key_col],
+                    extra_summary={"mv-batch-del": int(batch_id), "mv-stream-id": stream_id},
+                )
+                vt.append(
+                    survivors,
+                    extra_summary={"mv-batch-id": int(batch_id), "mv-stream-id": stream_id},
+                )
         finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_width)
             batch_df.unpersist()
             if merged is not None:
                 merged.unpersist()
@@ -823,115 +820,113 @@ def topk_view_sink(
             spark.sparkContext.defaultParallelism,
             batch_df.rdd.getNumPartitions(),
         )
-        prev_width = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(width))
         try:
-            if batch_df.isEmpty():
-                return  # idle trigger: skip without stamping
-            if "_change_type" in batch_df.columns:
-                kinds = {
-                    r["_change_type"]
-                    for r in batch_df.select("_change_type")
-                    .distinct()
-                    .collect()
-                }
-                if kinds - {"insert", "delete"}:
-                    raise ValueError(
-                        f"topk_view_sink: unknown _change_type values "
-                        f"{sorted(kinds - {'insert', 'delete'})}"
-                    )
-                if "delete" in kinds:
-                    if source_root is None:
-                        raise ValueError(
-                            "topk_view_sink is insert-only unless "
-                            "source_root is set: a delete can promote "
-                            "rows the view no longer holds, which needs "
-                            "a touched-key rebuild against source — "
-                            "pass source_root=<source table> or route "
-                            "affected keys through "
-                            "topk_view.rebuild_keys"
-                        )
-                    del_keys = (
-                        batch_df.filter(F.col("_change_type") == "delete")
-                        .select(part_key)
+            with conf_scope(spark, {"spark.sql.shuffle.partitions": width}):
+                if batch_df.isEmpty():
+                    return  # idle trigger: skip without stamping
+                if "_change_type" in batch_df.columns:
+                    kinds = {
+                        r["_change_type"]
+                        for r in batch_df.select("_change_type")
                         .distinct()
-                        .persist()
+                        .collect()
+                    }
+                    if kinds - {"insert", "delete"}:
+                        raise ValueError(
+                            f"topk_view_sink: unknown _change_type values "
+                            f"{sorted(kinds - {'insert', 'delete'})}"
+                        )
+                    if "delete" in kinds:
+                        if source_root is None:
+                            raise ValueError(
+                                "topk_view_sink is insert-only unless "
+                                "source_root is set: a delete can promote "
+                                "rows the view no longer holds, which needs "
+                                "a touched-key rebuild against source — "
+                                "pass source_root=<source table> or route "
+                                "affected keys through "
+                                "topk_view.rebuild_keys"
+                            )
+                        del_keys = (
+                            batch_df.filter(F.col("_change_type") == "delete")
+                            .select(part_key)
+                            .distinct()
+                            .persist()
+                        )
+                        refuse_null_keys(del_keys, [part_key], "topk_view_sink")
+                    # filter into a NEW name: rebinding batch_df would make
+                    # the finally-unpersist target the derived plan and leak
+                    # the cached micro-batch (one per epoch, session-lived)
+                    data = batch_df.filter(
+                        F.col("_change_type") == "insert"
+                    ).drop("_change_type")
+                else:
+                    data = batch_df
+                if partial_del is not None:
+                    vt.rollback_to(partial_del.parent_id)
+                    vt = _open(view_root)
+                # NULL check on the PERSISTED batch (not the unpersisted
+                # distinct, which would rescan the source — round-10 review)
+                refuse_null_keys(data, [part_key], "topk_view_sink")
+                touched = data.select(part_key).distinct()
+                if del_keys is not None:
+                    # delete-touched keys rebuild from source below — their
+                    # batch inserts are already IN the source head
+                    touched = touched.join(
+                        F.broadcast(del_keys), part_key, "left_anti"
                     )
-                    refuse_null_keys(del_keys, [part_key], "topk_view_sink")
-                # filter into a NEW name: rebinding batch_df would make
-                # the finally-unpersist target the derived plan and leak
-                # the cached micro-batch (one per epoch, session-lived)
-                data = batch_df.filter(
-                    F.col("_change_type") == "insert"
-                ).drop("_change_type")
-            else:
-                data = batch_df
-            if partial_del is not None:
-                vt.rollback_to(partial_del.parent_id)
-                vt = _open(view_root)
-            # NULL check on the PERSISTED batch (not the unpersisted
-            # distinct, which would rescan the source — round-10 review)
-            refuse_null_keys(data, [part_key], "topk_view_sink")
-            touched = data.select(part_key).distinct()
-            if del_keys is not None:
-                # delete-touched keys rebuild from source below — their
-                # batch inserts are already IN the source head
-                touched = touched.join(
-                    F.broadcast(del_keys), part_key, "left_anti"
+                # runtime-filtered view read (operators/topk_view.py has
+                # the rationale): file stats prune the view to the files
+                # that can hold a touched key; the broadcast semi join
+                # keeps the view side shuffle-free per micro-batch
+                scanned, _info = vt.scan_runtime_filtered(
+                    spark, touched, part_key
                 )
-            # runtime-filtered view read (operators/topk_view.py has
-            # the rationale): file stats prune the view to the files
-            # that can hold a touched key; the broadcast semi join
-            # keeps the view side shuffle-free per micro-batch
-            scanned, _info = vt.scan_runtime_filtered(
-                spark, touched, part_key
-            )
-            old = (
-                scanned
-                .join(F.broadcast(touched), part_key, "left_semi")
-                .drop("rn")
-            )
-            ins = data.select(old.columns)
-            if del_keys is not None:
-                ins = ins.join(F.broadcast(del_keys), part_key, "left_anti")
-            cand = old.unionByName(ins)
-            new_top = topk_frame(cand, part_key, order_cols, k).select(
-                *old.columns, "rn"
-            )
-            if del_keys is not None:
-                src_t = _open(source_root)
-                s_scan, _sinfo = src_t.scan_runtime_filtered(
-                    spark, del_keys, part_key
+                old = (
+                    scanned
+                    .join(F.broadcast(touched), part_key, "left_semi")
+                    .drop("rn")
                 )
-                rebuilt = topk_frame(
-                    s_scan.join(F.broadcast(del_keys), part_key, "left_semi")
-                    .select(old.columns),
-                    part_key, order_cols, k,
-                ).select(*old.columns, "rn")
-                new_top = new_top.unionByName(rebuilt)
-            new_top = new_top.persist()
-            new_top.count()
-            del_touched = touched
-            if del_keys is not None:
-                # a fully-deleted key has no rebuilt row but must
-                # still leave the view
-                del_touched = touched.unionByName(del_keys).distinct()
-            vt.delete_eq_mor(
-                spark, del_touched, [part_key],
-                extra_summary={
-                    "mv-batch-del": int(batch_id),
-                    "mv-stream-id": stream_id,
-                },
-            )
-            vt.append(
-                new_top,
-                extra_summary={
-                    "mv-batch-id": int(batch_id),
-                    "mv-stream-id": stream_id,
-                },
-            )
+                ins = data.select(old.columns)
+                if del_keys is not None:
+                    ins = ins.join(F.broadcast(del_keys), part_key, "left_anti")
+                cand = old.unionByName(ins)
+                new_top = topk_frame(cand, part_key, order_cols, k).select(
+                    *old.columns, "rn"
+                )
+                if del_keys is not None:
+                    src_t = _open(source_root)
+                    s_scan, _sinfo = src_t.scan_runtime_filtered(
+                        spark, del_keys, part_key
+                    )
+                    rebuilt = topk_frame(
+                        s_scan.join(F.broadcast(del_keys), part_key, "left_semi")
+                        .select(old.columns),
+                        part_key, order_cols, k,
+                    ).select(*old.columns, "rn")
+                    new_top = new_top.unionByName(rebuilt)
+                new_top = new_top.persist()
+                new_top.count()
+                del_touched = touched
+                if del_keys is not None:
+                    # a fully-deleted key has no rebuilt row but must
+                    # still leave the view
+                    del_touched = touched.unionByName(del_keys).distinct()
+                vt.delete_eq_mor(
+                    spark, del_touched, [part_key],
+                    extra_summary={
+                        "mv-batch-del": int(batch_id),
+                        "mv-stream-id": stream_id,
+                    },
+                )
+                vt.append(
+                    new_top,
+                    extra_summary={
+                        "mv-batch-id": int(batch_id),
+                        "mv-stream-id": stream_id,
+                    },
+                )
         finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_width)
             batch_df.unpersist()
             for df in (new_top, del_keys):
                 if df is not None:
@@ -1004,59 +999,57 @@ def ann_index_sink(
             spark.sparkContext.defaultParallelism,
             batch_df.rdd.getNumPartitions(),
         )
-        prev_width = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(width))
         new_rows = None
         net = None
         try:
-            if batch_df.isEmpty():
-                return  # idle trigger: skip without stamping
-            if partial_del is not None:
-                it.rollback_to(partial_del.parent_id)
-                it = _open(index_root)
-            # within-batch netting on (id, VECTOR), not id alone: a
-            # batch can carry delete(X, old) + insert(X, new) — the
-            # REPLACE pattern — which must keep the new vector, while
-            # insert(X, v) + delete(X, v) with the SAME vector nets to
-            # a no-op whichever order it happened in (delete-then-
-            # reinsert of a standing row keeps it; insert-then-delete
-            # of a new one never lands). Signed per-(id, vec) counts
-            # resolve all three (an id-only anti-join cancelled
-            # replaces and silently lost the id): net > 0 vectors
-            # append; ids with any net < 0 vector get their standing
-            # row masked FIRST (the replace's new vector appends
-            # after, in commit order). Ids are unique in the source by
-            # contract.
-            sign = F.when(F.col("_change_type") == "delete", -1).otherwise(1)
-            net = (
-                batch_df.groupBy(
-                    F.col(id_col).alias("id"), F.col(vec_col).alias("vec")
+            with conf_scope(spark, {"spark.sql.shuffle.partitions": width}):
+                if batch_df.isEmpty():
+                    return  # idle trigger: skip without stamping
+                if partial_del is not None:
+                    it.rollback_to(partial_del.parent_id)
+                    it = _open(index_root)
+                # within-batch netting on (id, VECTOR), not id alone: a
+                # batch can carry delete(X, old) + insert(X, new) — the
+                # REPLACE pattern — which must keep the new vector, while
+                # insert(X, v) + delete(X, v) with the SAME vector nets to
+                # a no-op whichever order it happened in (delete-then-
+                # reinsert of a standing row keeps it; insert-then-delete
+                # of a new one never lands). Signed per-(id, vec) counts
+                # resolve all three (an id-only anti-join cancelled
+                # replaces and silently lost the id): net > 0 vectors
+                # append; ids with any net < 0 vector get their standing
+                # row masked FIRST (the replace's new vector appends
+                # after, in commit order). Ids are unique in the source by
+                # contract.
+                sign = F.when(F.col("_change_type") == "delete", -1).otherwise(1)
+                net = (
+                    batch_df.groupBy(
+                        F.col(id_col).alias("id"), F.col(vec_col).alias("vec")
+                    )
+                    .agg(F.sum(sign).alias("net"))
+                    .persist()
                 )
-                .agg(F.sum(sign).alias("net"))
-                .persist()
-            )
-            dels = net.filter(F.col("net") < 0).select("id").distinct()
-            stamp = {"mv-batch-id": int(batch_id), "mv-stream-id": stream_id}
-            del_stamp = {
-                "mv-batch-del": int(batch_id), "mv-stream-id": stream_id,
-            }
-            surviving = net.filter(F.col("net") > 0).select(
-                F.col("id").alias(id_col), F.col("vec").alias(vec_col)
-            )
-            new_rows = ivfpq_encode(
-                surviving, cents, books, id_col, vec_col
-            ).persist()
-            has_dels = not dels.isEmpty()
-            if has_dels:
-                it.delete_eq_mor(
-                    spark, dels, ["id"], extra_summary=del_stamp
+                dels = net.filter(F.col("net") < 0).select("id").distinct()
+                stamp = {"mv-batch-id": int(batch_id), "mv-stream-id": stream_id}
+                del_stamp = {
+                    "mv-batch-del": int(batch_id), "mv-stream-id": stream_id,
+                }
+                surviving = net.filter(F.col("net") > 0).select(
+                    F.col("id").alias(id_col), F.col("vec").alias(vec_col)
                 )
-            it.append(
-                new_rows.repartition(len(cents), "cluster"),
-                extra_summary=stamp,
-            )
+                new_rows = ivfpq_encode(
+                    surviving, cents, books, id_col, vec_col
+                ).persist()
+                has_dels = not dels.isEmpty()
+                if has_dels:
+                    it.delete_eq_mor(
+                        spark, dels, ["id"], extra_summary=del_stamp
+                    )
+                it.append(
+                    new_rows.repartition(len(cents), "cluster"),
+                    extra_summary=stamp,
+                )
         finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_width)
             batch_df.unpersist()
             if net is not None:
                 net.unpersist()
@@ -1133,49 +1126,47 @@ def agg_view_sink(
             spark.sparkContext.defaultParallelism,
             batch_df.rdd.getNumPartitions(),
         )
-        prev_width = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(width))
         try:
-            if batch_df.isEmpty():
-                return  # idle trigger: skip without stamping
-            if partial_del is not None:
-                vt.rollback_to(partial_del.parent_id)
-                vt = _open(view_root)
-            values = (
-                [value_col] if isinstance(value_col, str) else list(value_col)
-            )
-            measures = (
-                ["sv"]
-                if isinstance(value_col, str)
-                else [f"sv_{c}" for c in values]
-            )
-            # fold type follows the VIEW table's measure dtype (long
-            # for integral measures — exact past 2^53; double views
-            # keep folding as double): table/maintained.py _sum_cast
-            from ..table.maintained import _view_measure_casts
+            with conf_scope(spark, {"spark.sql.shuffle.partitions": width}):
+                if batch_df.isEmpty():
+                    return  # idle trigger: skip without stamping
+                if partial_del is not None:
+                    vt.rollback_to(partial_del.parent_id)
+                    vt = _open(view_root)
+                values = (
+                    [value_col] if isinstance(value_col, str) else list(value_col)
+                )
+                measures = (
+                    ["sv"]
+                    if isinstance(value_col, str)
+                    else [f"sv_{c}" for c in values]
+                )
+                # fold type follows the VIEW table's measure dtype (long
+                # for integral measures — exact past 2^53; double views
+                # keep folding as double): table/maintained.py _sum_cast
+                from ..table.maintained import _view_measure_casts
 
-            casts = _view_measure_casts(vt.schema(), measures)
-            delta = batch_df.groupBy(*keys).agg(
-                F.sum(sign).alias("cnt"),
-                *[
-                    F.sum(sign * F.col(v).cast(c)).cast(c).alias(m)
-                    for v, m, c in zip(values, measures, casts)
-                ],
-            )
-            additive_refresh(
-                spark, vt, delta, keys,
-                extra_summary={
-                    "mv-batch-id": int(batch_id),
-                    "mv-stream-id": stream_id,
-                },
-                extra_summary_delete={
-                    "mv-batch-del": int(batch_id),
-                    "mv-stream-id": stream_id,
-                },
-                drop_when_zero="cnt",
-            )
+                casts = _view_measure_casts(vt.schema(), measures)
+                delta = batch_df.groupBy(*keys).agg(
+                    F.sum(sign).alias("cnt"),
+                    *[
+                        F.sum(sign * F.col(v).cast(c)).cast(c).alias(m)
+                        for v, m, c in zip(values, measures, casts)
+                    ],
+                )
+                additive_refresh(
+                    spark, vt, delta, keys,
+                    extra_summary={
+                        "mv-batch-id": int(batch_id),
+                        "mv-stream-id": stream_id,
+                    },
+                    extra_summary_delete={
+                        "mv-batch-del": int(batch_id),
+                        "mv-stream-id": stream_id,
+                    },
+                    drop_when_zero="cnt",
+                )
         finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_width)
             batch_df.unpersist()
 
     return fold
@@ -1243,107 +1234,105 @@ def extrema_view_sink(
             spark.sparkContext.defaultParallelism,
             batch_df.rdd.getNumPartitions(),
         )
-        prev_width = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(width))
         del_keys = None
         delta = merged = None
         try:
-            if batch_df.isEmpty():
-                return  # idle trigger: skip without stamping
-            data = batch_df
-            if "_change_type" in batch_df.columns:
-                kinds = {
-                    r["_change_type"]
-                    for r in batch_df.select("_change_type")
-                    .distinct()
-                    .collect()
-                }
-                if kinds - {"insert", "delete"}:
-                    raise ValueError(
-                        f"extrema_view_sink: unknown _change_type "
-                        f"values {sorted(kinds - {'insert', 'delete'})}"
-                    )
-                if "delete" in kinds:
-                    if source_root is None:
-                        raise ValueError(
-                            "extrema_view_sink folds INSERT-ONLY feeds "
-                            "unless source_root is set: a delete can "
-                            "remove the current min/max, which needs a "
-                            "touched-key rebuild against source — pass "
-                            "source_root=<source table> or run "
-                            "refresh_maintained for delete-bearing feeds"
-                        )
-                    del_keys = (
-                        batch_df.filter(F.col("_change_type") == "delete")
-                        .select(key_col)
+            with conf_scope(spark, {"spark.sql.shuffle.partitions": width}):
+                if batch_df.isEmpty():
+                    return  # idle trigger: skip without stamping
+                data = batch_df
+                if "_change_type" in batch_df.columns:
+                    kinds = {
+                        r["_change_type"]
+                        for r in batch_df.select("_change_type")
                         .distinct()
-                        .persist()
-                    )
-                    refuse_null_keys(del_keys, [key_col], "extrema_view_sink")
-                data = batch_df.filter(F.col("_change_type") == "insert")
-            if partial_del is not None:
-                vt.rollback_to(partial_del.parent_id)
-                vt = _open(view_root)
-            delta = data.groupBy(key_col).agg(
-                F.min(value_col).alias("mn"),
-                F.max(value_col).alias("mx"),
-            )
-            if del_keys is not None:
-                # delete-touched keys rebuild from source below —
-                # their batch inserts are already IN the source head
-                delta = delta.join(F.broadcast(del_keys), key_col, "left_anti")
-            delta = delta.persist()
-            refuse_null_keys(delta, [key_col], "extrema_view_sink")
-            cur, _info = vt.scan_runtime_filtered(spark, delta, key_col)
-            old = cur.join(
-                F.broadcast(delta.select(key_col)), key_col, "left_semi"
-            )
-            merged = (
-                old.unionByName(delta.select(old.columns))
-                .groupBy(key_col)
-                .agg(F.min("mn").alias("mn"), F.max("mx").alias("mx"))
-                .select(old.columns)
-            )
-            if del_keys is not None:
-                src_t = _open(source_root)
-                s_scan, _sinfo = src_t.scan_runtime_filtered(
-                    spark, del_keys, key_col
+                        .collect()
+                    }
+                    if kinds - {"insert", "delete"}:
+                        raise ValueError(
+                            f"extrema_view_sink: unknown _change_type "
+                            f"values {sorted(kinds - {'insert', 'delete'})}"
+                        )
+                    if "delete" in kinds:
+                        if source_root is None:
+                            raise ValueError(
+                                "extrema_view_sink folds INSERT-ONLY feeds "
+                                "unless source_root is set: a delete can "
+                                "remove the current min/max, which needs a "
+                                "touched-key rebuild against source — pass "
+                                "source_root=<source table> or run "
+                                "refresh_maintained for delete-bearing feeds"
+                            )
+                        del_keys = (
+                            batch_df.filter(F.col("_change_type") == "delete")
+                            .select(key_col)
+                            .distinct()
+                            .persist()
+                        )
+                        refuse_null_keys(del_keys, [key_col], "extrema_view_sink")
+                    data = batch_df.filter(F.col("_change_type") == "insert")
+                if partial_del is not None:
+                    vt.rollback_to(partial_del.parent_id)
+                    vt = _open(view_root)
+                delta = data.groupBy(key_col).agg(
+                    F.min(value_col).alias("mn"),
+                    F.max(value_col).alias("mx"),
                 )
-                rebuilt = (
-                    s_scan.join(F.broadcast(del_keys), key_col, "left_semi")
+                if del_keys is not None:
+                    # delete-touched keys rebuild from source below —
+                    # their batch inserts are already IN the source head
+                    delta = delta.join(F.broadcast(del_keys), key_col, "left_anti")
+                delta = delta.persist()
+                refuse_null_keys(delta, [key_col], "extrema_view_sink")
+                cur, _info = vt.scan_runtime_filtered(spark, delta, key_col)
+                old = cur.join(
+                    F.broadcast(delta.select(key_col)), key_col, "left_semi"
+                )
+                merged = (
+                    old.unionByName(delta.select(old.columns))
                     .groupBy(key_col)
-                    .agg(
-                        F.min(value_col).alias("mn"),
-                        F.max(value_col).alias("mx"),
-                    )
+                    .agg(F.min("mn").alias("mn"), F.max("mx").alias("mx"))
                     .select(old.columns)
                 )
-                merged = merged.unionByName(rebuilt)
-            merged = merged.persist()
-            touched = merged.select(key_col)
-            if del_keys is not None:
-                # a fully-deleted key has no rebuilt row but must
-                # still leave the view
-                touched = touched.unionByName(del_keys).distinct()
-            vt.delete_eq_mor(
-                spark, touched, [key_col],
-                extra_summary={
-                    "mv-batch-del": int(batch_id),
-                    "mv-stream-id": stream_id,
-                },
-            )
-            vt.append(
-                merged,
-                extra_summary={
-                    "mv-batch-id": int(batch_id),
-                    "mv-stream-id": stream_id,
-                },
-            )
+                if del_keys is not None:
+                    src_t = _open(source_root)
+                    s_scan, _sinfo = src_t.scan_runtime_filtered(
+                        spark, del_keys, key_col
+                    )
+                    rebuilt = (
+                        s_scan.join(F.broadcast(del_keys), key_col, "left_semi")
+                        .groupBy(key_col)
+                        .agg(
+                            F.min(value_col).alias("mn"),
+                            F.max(value_col).alias("mx"),
+                        )
+                        .select(old.columns)
+                    )
+                    merged = merged.unionByName(rebuilt)
+                merged = merged.persist()
+                touched = merged.select(key_col)
+                if del_keys is not None:
+                    # a fully-deleted key has no rebuilt row but must
+                    # still leave the view
+                    touched = touched.unionByName(del_keys).distinct()
+                vt.delete_eq_mor(
+                    spark, touched, [key_col],
+                    extra_summary={
+                        "mv-batch-del": int(batch_id),
+                        "mv-stream-id": stream_id,
+                    },
+                )
+                vt.append(
+                    merged,
+                    extra_summary={
+                        "mv-batch-id": int(batch_id),
+                        "mv-stream-id": stream_id,
+                    },
+                )
         finally:
             for df in (merged, delta, del_keys):
                 if df is not None:
                     df.unpersist()
-            spark.conf.set("spark.sql.shuffle.partitions", prev_width)
             batch_df.unpersist()
 
     return fold
@@ -1410,65 +1399,63 @@ def scd2_merge(
             spark.sparkContext.defaultParallelism,
             batch_df.rdd.getNumPartitions(),
         )
-        prev_width = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(width))
         try:
-            if batch_df.isEmpty():
-                return  # zero-change window: no no-op close/append commits
-            if partial_del is not None:
-                # crash window: the close-delete committed, the append did
-                # not — roll back to intact state and refold
-                ht.rollback_to(partial_del.parent_id)
-                ht = _open(hist_root)
-            sign = F.when(F.col("_change_type") == "insert", 1).otherwise(-1)
-            delta = batch_df.groupBy(key_col, value_col).agg(
-                F.sum(sign).alias("net")
-            )
-            new_cur = delta.filter(F.col("net") > 0).select(key_col, value_col)
-            touched = batch_df.select(key_col).distinct()
-            to_close = (
-                ht.scan(spark)
-                .filter(F.col("valid_to") == SCD2_OPEN)
-                .join(touched, key_col, "inner")
-                .persist()
-            )
-            closed = to_close.select(
-                key_col,
-                value_col,
-                "valid_from",
-                F.lit(int(batch_id)).alias("valid_to"),
-            )
-            new_open = new_cur.select(
-                key_col,
-                value_col,
-                F.lit(int(batch_id)).alias("valid_from"),
-                F.lit(SCD2_OPEN).alias("valid_to"),
-            )
-            rows = closed.unionByName(new_open)
-            if rows.isEmpty():
-                return  # nothing changed in this window: no commits
-            del_keys = to_close.select(
-                key_col, F.lit(SCD2_OPEN).alias("valid_to")
-            )
-            if not del_keys.isEmpty():
-                ht.delete_eq_mor(
-                    spark,
-                    del_keys,
-                    [key_col, "valid_to"],
+            with conf_scope(spark, {"spark.sql.shuffle.partitions": width}):
+                if batch_df.isEmpty():
+                    return  # zero-change window: no no-op close/append commits
+                if partial_del is not None:
+                    # crash window: the close-delete committed, the append did
+                    # not — roll back to intact state and refold
+                    ht.rollback_to(partial_del.parent_id)
+                    ht = _open(hist_root)
+                sign = F.when(F.col("_change_type") == "insert", 1).otherwise(-1)
+                delta = batch_df.groupBy(key_col, value_col).agg(
+                    F.sum(sign).alias("net")
+                )
+                new_cur = delta.filter(F.col("net") > 0).select(key_col, value_col)
+                touched = batch_df.select(key_col).distinct()
+                to_close = (
+                    ht.scan(spark)
+                    .filter(F.col("valid_to") == SCD2_OPEN)
+                    .join(touched, key_col, "inner")
+                    .persist()
+                )
+                closed = to_close.select(
+                    key_col,
+                    value_col,
+                    "valid_from",
+                    F.lit(int(batch_id)).alias("valid_to"),
+                )
+                new_open = new_cur.select(
+                    key_col,
+                    value_col,
+                    F.lit(int(batch_id)).alias("valid_from"),
+                    F.lit(SCD2_OPEN).alias("valid_to"),
+                )
+                rows = closed.unionByName(new_open)
+                if rows.isEmpty():
+                    return  # nothing changed in this window: no commits
+                del_keys = to_close.select(
+                    key_col, F.lit(SCD2_OPEN).alias("valid_to")
+                )
+                if not del_keys.isEmpty():
+                    ht.delete_eq_mor(
+                        spark,
+                        del_keys,
+                        [key_col, "valid_to"],
+                        extra_summary={
+                            "scd-batch-del": int(batch_id),
+                            "scd-stream-id": stream_id,
+                        },
+                    )
+                ht.append(
+                    rows,
                     extra_summary={
-                        "scd-batch-del": int(batch_id),
+                        "scd-batch-id": int(batch_id),
                         "scd-stream-id": stream_id,
                     },
                 )
-            ht.append(
-                rows,
-                extra_summary={
-                    "scd-batch-id": int(batch_id),
-                    "scd-stream-id": stream_id,
-                },
-            )
         finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_width)
             batch_df.unpersist()
             if to_close is not None:
                 to_close.unpersist()
@@ -1543,76 +1530,74 @@ def ingest_dedup_sink(
             spark.sparkContext.defaultParallelism,
             batch_df.rdd.getNumPartitions(),
         )
-        prev_width = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(width))
         try:
-            if batch_df.isEmpty():
-                return
-            if partial_cur is not None:
-                # a prior attempt may have crashed AFTER its own
-                # rollback committed but before re-applying: the head
-                # then already sits at parent_id, and rolling back
-                # again would raise ('already at the requested
-                # snapshot'), permanently wedging every retry
-                if ct.metadata.current_snapshot_id != partial_cur.parent_id:
-                    ct.rollback_to(partial_cur.parent_id)
-                ct = _open(curated_root)
-            fp = F.md5(
-                F.concat_ws(
-                    "\x1f",
-                    F.array_sort(
-                        F.array_distinct(F.split(F.col(text_col), " "))
-                    ),
+            with conf_scope(spark, {"spark.sql.shuffle.partitions": width}):
+                if batch_df.isEmpty():
+                    return
+                if partial_cur is not None:
+                    # a prior attempt may have crashed AFTER its own
+                    # rollback committed but before re-applying: the head
+                    # then already sits at parent_id, and rolling back
+                    # again would raise ('already at the requested
+                    # snapshot'), permanently wedging every retry
+                    if ct.metadata.current_snapshot_id != partial_cur.parent_id:
+                        ct.rollback_to(partial_cur.parent_id)
+                    ct = _open(curated_root)
+                fp = F.md5(
+                    F.concat_ws(
+                        "\x1f",
+                        F.array_sort(
+                            F.array_distinct(F.split(F.col(text_col), " "))
+                        ),
+                    )
                 )
-            )
-            wfp = batch_df.withColumn("fp", fp)
-            cur = ct.scan(spark).select(
-                "fp", F.col(id_col).alias("_kept")
-            )
-            joined = (
-                wfp.join(cur, "fp", "left")
-                .withColumn(
-                    "_wmin", F.min(id_col).over(Window.partitionBy("fp"))
+                wfp = batch_df.withColumn("fp", fp)
+                cur = ct.scan(spark).select(
+                    "fp", F.col(id_col).alias("_kept")
                 )
-                .persist()
-            )
-            new_rows = joined.filter(
-                F.col("_kept").isNull() & (F.col(id_col) == F.col("_wmin"))
-            ).select(*batch_df.columns, "fp")
-            dup_rows = joined.filter(
-                F.col("_kept").isNotNull() | (F.col(id_col) != F.col("_wmin"))
-            ).select(
-                F.col(id_col).alias(id_col),
-                F.coalesce("_kept", "_wmin").alias("kept_doc"),
-            )
-            if not new_rows.isEmpty():
-                ct.append(
-                    new_rows,
-                    extra_summary={
-                        "idd-batch-cur": int(batch_id),
-                        "idd-stream-id": stream_id,
-                    },
+                joined = (
+                    wfp.join(cur, "fp", "left")
+                    .withColumn(
+                        "_wmin", F.min(id_col).over(Window.partitionBy("fp"))
+                    )
+                    .persist()
                 )
-            if dup_rows.isEmpty():
-                # watermark must advance even with no duplicates: a
-                # data-less stamped commit, never a second crash window
-                lt.append_entries(
-                    [],
-                    extra_summary={
-                        "idd-batch-id": int(batch_id),
-                        "idd-stream-id": stream_id,
-                    },
+                new_rows = joined.filter(
+                    F.col("_kept").isNull() & (F.col(id_col) == F.col("_wmin"))
+                ).select(*batch_df.columns, "fp")
+                dup_rows = joined.filter(
+                    F.col("_kept").isNotNull() | (F.col(id_col) != F.col("_wmin"))
+                ).select(
+                    F.col(id_col).alias(id_col),
+                    F.coalesce("_kept", "_wmin").alias("kept_doc"),
                 )
-            else:
-                lt.append(
-                    dup_rows,
-                    extra_summary={
-                        "idd-batch-id": int(batch_id),
-                        "idd-stream-id": stream_id,
-                    },
-                )
+                if not new_rows.isEmpty():
+                    ct.append(
+                        new_rows,
+                        extra_summary={
+                            "idd-batch-cur": int(batch_id),
+                            "idd-stream-id": stream_id,
+                        },
+                    )
+                if dup_rows.isEmpty():
+                    # watermark must advance even with no duplicates: a
+                    # data-less stamped commit, never a second crash window
+                    lt.append_entries(
+                        [],
+                        extra_summary={
+                            "idd-batch-id": int(batch_id),
+                            "idd-stream-id": stream_id,
+                        },
+                    )
+                else:
+                    lt.append(
+                        dup_rows,
+                        extra_summary={
+                            "idd-batch-id": int(batch_id),
+                            "idd-stream-id": stream_id,
+                        },
+                    )
         finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_width)
             batch_df.unpersist()
             if joined is not None:
                 joined.unpersist()

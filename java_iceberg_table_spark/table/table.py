@@ -17,7 +17,6 @@ Scale design:
 
 from __future__ import annotations
 
-import contextlib
 import glob
 import os
 import shutil
@@ -29,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from ..session import conf_scope
 from . import format as fmt
 from .format import Snapshot, TableMetadata
 from .stats import file_stats
@@ -343,23 +343,15 @@ def _arrow_import_compatible(at, st) -> bool:
     return False
 
 
-@contextlib.contextmanager
-def _micros_timestamps(spark: SparkSession):
-    """Engine data/delete files store timestamps as INT64 micros for
-    the duration of a write. Spark's default INT96 encoding carries NO
-    footer statistics, so a table with a timestamp column would lose
-    file skipping on its primary pruning dimension (and eq-delete
-    payload slicing on temporal keys); Iceberg's spec likewise mandates
-    int64 micros and forbids INT96. Session-conf scoped because the
-    parquet writer ignores a per-write option for this key (verified
-    empirically on Spark 4.1)."""
-    key = "spark.sql.parquet.outputTimestampType"
-    old = spark.conf.get(key)
-    spark.conf.set(key, "TIMESTAMP_MICROS")
-    try:
-        yield
-    finally:
-        spark.conf.set(key, old)
+# Engine data/delete files store timestamps as INT64 micros for the
+# duration of a write. Spark's default INT96 encoding carries NO footer
+# statistics, so a table with a timestamp column would lose file
+# skipping on its primary pruning dimension (and eq-delete payload
+# slicing on temporal keys); Iceberg's spec likewise mandates int64
+# micros and forbids INT96. Session-conf scoped because the parquet
+# writer ignores a per-write option for this key (verified empirically
+# on Spark 4.1).
+_MICROS_TS = {"spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS"}
 
 
 def _entry_partition_key(e: dict):
@@ -811,7 +803,7 @@ class Table:
             w = bucketed.write
             if max_records is not None:
                 w = w.option("maxRecordsPerFile", max_records)
-            with _micros_timestamps(df.sparkSession):
+            with conf_scope(df.sparkSession, _MICROS_TS):
                 w.partitionBy(*pb_cols).parquet(out_dir)
         else:
             if sort_order:
@@ -829,7 +821,7 @@ class Table:
             w = df.write
             if max_records is not None:
                 w = w.option("maxRecordsPerFile", max_records)
-            with _micros_timestamps(df.sparkSession):
+            with conf_scope(df.sparkSession, _MICROS_TS):
                 w.parquet(out_dir)
         entries = []
         for path in glob.glob(os.path.join(out_dir, "**", "*.parquet"), recursive=True):
@@ -2314,7 +2306,7 @@ class Table:
         delete_rows, the copy-on-write path)."""
         batch = uuid.uuid4().hex
         out_dir = os.path.join(self.root, "data", f"del-{batch}")
-        with _micros_timestamps(df.sparkSession):
+        with conf_scope(df.sparkSession, _MICROS_TS):
             df.coalesce(1).write.parquet(out_dir)
         parts = glob.glob(os.path.join(out_dir, "*.parquet"))
         total = sum(file_stats(p)["rows"] for p in parts)
@@ -3088,7 +3080,7 @@ class Table:
             )
             sub = _partition_subdir(spec_id, part, "clustered")
             out_dir = os.path.join(self.root, "data", f"z-{batch}", sub)
-            with _micros_timestamps(spark):
+            with conf_scope(spark, _MICROS_TS):
                 zorder_frame(df, cluster_by, n_files).write.parquet(out_dir)
             for path in glob.glob(os.path.join(out_dir, "*.parquet")):
                 rel = os.path.relpath(path, self.root)
@@ -3225,14 +3217,14 @@ class Table:
                 # DISJOINT key range, so its min/max stats are tight
                 # and plan_files skipping becomes surgical — the
                 # cluster-by/z-order analogue for 1-d keys.
-                with _micros_timestamps(spark):
+                with conf_scope(spark, _MICROS_TS):
                     (
                         df.repartitionByRange(int(n_out), *sort_by)
                         .sortWithinPartitions(*sort_by)
                         .write.parquet(out_dir)
                     )
             else:
-                with _micros_timestamps(spark):
+                with conf_scope(spark, _MICROS_TS):
                     df.coalesce(int(n_out)).write.parquet(out_dir)
             for path in glob.glob(os.path.join(out_dir, "*.parquet")):
                 rel = os.path.relpath(path, self.root)

@@ -300,8 +300,12 @@ def test_in_list_pushdown_prunes_partitions(ds, base_dir):
     )
     from pyspark.sql.datasource import In
 
-    # sparse scattered values: most sorted files hold none of them
-    vals = [i * 1777 for i in range(6)]
+    # values inside ONE sorted file's ts range: the other files' ranges
+    # are disjoint from it, so they must be pruned at any core count
+    # (the file count follows the writer's parallelism)
+    ts = tbl.current_files()[0]["columns"]["ts"]
+    lo, hi = int(ts["min"]), int(ts["max"])
+    vals = sorted({lo + (hi - lo) * i // 5 for i in range(6)})
     reader = EngineBatchReader(root, tbl.schema(), {"root": root})
     list(reader.pushFilters([In(("ts",), tuple(vals))]))
     assert len(reader.partitions()) < n_files
