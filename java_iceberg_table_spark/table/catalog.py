@@ -7,7 +7,8 @@ aggregate, quarantine + main) needs a reader to see either both
 sides of the move or neither. Iceberg alone cannot say that; the
 lakehouse answer (Nessie, modern REST catalogs) is a CATALOG-level
 commit: a versioned mapping ``table name -> pinned snapshot id``
-published with the same link-CAS used for table metadata.
+published through format.py's link-CAS and retry loop, the same code
+that commits table metadata.
 
 Contract:
 - ``Catalog.read(spark, name)`` scans the snapshot pinned by the
@@ -39,8 +40,6 @@ from __future__ import annotations
 
 import json
 import os
-import time
-import uuid
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -84,50 +83,8 @@ def _cat_version_path(root: str, version: int) -> str:
     return os.path.join(_cat_dir(root), f"v{version}.json")
 
 
-def _cat_current_version(root: str) -> int:
-    cdir = _cat_dir(root)
-    hint = os.path.join(cdir, "version-hint.text")
-    v = 0
-    try:
-        with open(hint) as f:
-            v = int(f.read().strip())
-    except (OSError, ValueError):
-        versions = [
-            int(p[1:-5])
-            for p in os.listdir(cdir)
-            if p.startswith("v") and p.endswith(".json")
-        ]
-        if not versions:
-            raise FileNotFoundError(f"no catalog under {cdir}")
-        return max(versions)
-    while os.path.exists(_cat_version_path(root, v + 1)):
-        v += 1
-    return v
-
-
 def _cat_try_commit(root: str, state: CatalogState) -> None:
-    """Same link-CAS publish as table metadata (format.py
-    try_commit_version): the version file appears atomically with its
-    full content or not at all; losing the race raises."""
-    path = _cat_version_path(root, state.version)
-    tmp = f"{path}.{uuid.uuid4().hex}.tmp"
-    with open(tmp, "w") as f:
-        json.dump(state.to_json(), f)
-        f.flush()
-        os.fsync(f.fileno())
-    try:
-        os.link(tmp, path)
-    except FileExistsError as e:
-        raise fmt.CommitConflict(
-            f"catalog version {state.version} already committed"
-        ) from e
-    finally:
-        os.unlink(tmp)
-    hint = os.path.join(_cat_dir(root), "version-hint.text")
-    htmp = f"{hint}.{uuid.uuid4().hex}.tmp"
-    with open(htmp, "w") as f:
-        f.write(str(state.version))
-    os.rename(htmp, hint)
+    fmt.publish_version(_cat_dir(root), state.version, state.to_json())
 
 
 def _from_join_identifiers(statement: str) -> set[str]:
@@ -388,23 +345,14 @@ class Catalog:
         table directory is deleted too; without it the data stays on
         disk for re-registration or external cleanup (Iceberg's
         DROP TABLE vs DROP TABLE PURGE split)."""
-        for attempt in range(1000):
-            cur = self.state()
+
+        def build(cur: CatalogState) -> CatalogState:
             if name not in cur.pins:
                 raise KeyError(f"no such table {name!r}")
             pins = {k: v for k, v in cur.pins.items() if k != name}
-            try:
-                _cat_try_commit(
-                    self.root,
-                    CatalogState(
-                        version=cur.version + 1, pins=pins, views=cur.views
-                    ),
-                )
-                break
-            except fmt.CommitConflict:
-                if attempt == 999:
-                    raise
-                time.sleep(min(0.001 * (2 ** min(attempt, 6)), 0.1))
+            return CatalogState(cur.version + 1, pins=pins, views=cur.views)
+
+        self._commit(build)
         if purge:
             import shutil
 
@@ -413,8 +361,15 @@ class Catalog:
     def list_tables(self) -> list[str]:
         return sorted(self.state().pins)
 
+    def _commit(self, build) -> CatalogState:
+        """One catalog commit through format.py's retry loop and CAS:
+        ``build(current)`` returns the next state (version + 1)."""
+        return fmt.retry_commit(
+            self.state, build, lambda new: _cat_try_commit(self.root, new)
+        )
+
     def state(self) -> CatalogState:
-        v = _cat_current_version(self.root)
+        v = fmt.resolve_version(_cat_dir(self.root))
         with open(_cat_version_path(self.root, v)) as f:
             return CatalogState.from_json(json.load(f))
 
@@ -467,7 +422,7 @@ class Catalog:
         they pinned remain governed by each table's own expiry (plus
         the __catalog_pin tag for the current state). Returns the
         number of versions removed."""
-        cur = _cat_current_version(self.root)
+        cur = fmt.resolve_version(_cat_dir(self.root))
         cutoff = cur - max(1, int(keep_last)) + 1
         removed = 0
         cdir = _cat_dir(self.root)
@@ -570,8 +525,8 @@ class Catalog:
         head = sql.strip().split(None, 1)[0].upper() if sql.strip() else ""
         if head not in ("SELECT", "WITH"):
             raise ValueError("view SQL must be a SELECT/WITH statement")
-        for attempt in range(1000):
-            cur = self.state()
+
+        def build(cur: CatalogState) -> CatalogState:
             if name in cur.pins:
                 raise ValueError(f"{name!r} is a table")
             if name in cur.views and not replace:
@@ -580,36 +535,18 @@ class Catalog:
                 )
             views = dict(cur.views)
             views[name] = {"sql": sql, "created_version": cur.version + 1}
-            new = CatalogState(
-                version=cur.version + 1, pins=cur.pins, views=views
-            )
-            try:
-                _cat_try_commit(self.root, new)
-                return new
-            except fmt.CommitConflict:
-                if attempt == 999:
-                    raise
-                time.sleep(min(0.001 * (2 ** min(attempt, 6)), 0.1))
-        raise fmt.CommitConflict("catalog retries exhausted")
+            return CatalogState(cur.version + 1, pins=cur.pins, views=views)
+
+        return self._commit(build)
 
     def drop_view(self, name: str) -> None:
-        for attempt in range(1000):
-            cur = self.state()
+        def build(cur: CatalogState) -> CatalogState:
             if name not in cur.views:
                 raise KeyError(f"no such view {name!r}")
             views = {k: v for k, v in cur.views.items() if k != name}
-            try:
-                _cat_try_commit(
-                    self.root,
-                    CatalogState(
-                        version=cur.version + 1, pins=cur.pins, views=views
-                    ),
-                )
-                return
-            except fmt.CommitConflict:
-                if attempt == 999:
-                    raise
-                time.sleep(min(0.001 * (2 ** min(attempt, 6)), 0.1))
+            return CatalogState(cur.version + 1, pins=cur.pins, views=views)
+
+        self._commit(build)
 
     def list_views(self) -> list[str]:
         return sorted(self.state().views)
@@ -1251,8 +1188,7 @@ class Catalog:
         return CatalogTransaction(self)
 
     def _commit_pins(self, updates: dict[str, int | None]) -> CatalogState:
-        for attempt in range(1000):
-            cur = self.state()
+        def build(cur: CatalogState) -> CatalogState:
             pins = dict(cur.pins)
             for name, sid in updates.items():
                 if name in pins:
@@ -1261,17 +1197,9 @@ class Catalog:
                     )
                 else:
                     pins[name] = sid
-            new = CatalogState(
-                version=cur.version + 1, pins=pins, views=cur.views
-            )
-            try:
-                _cat_try_commit(self.root, new)
-                return new
-            except fmt.CommitConflict:
-                if attempt == 999:
-                    raise
-                time.sleep(min(0.001 * (2 ** min(attempt, 6)), 0.1))
-        raise fmt.CommitConflict("catalog retries exhausted")
+            return CatalogState(cur.version + 1, pins=pins, views=cur.views)
+
+        return self._commit(build)
 
 
 class CatalogTransaction:

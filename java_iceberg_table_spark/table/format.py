@@ -15,6 +15,13 @@ re-reads and rebases (the reference leans on HadoopTables' equivalent
 rename-based CAS, Constants.java:23, with
 ``commit.retry.num-retries=20000``, Writer.java:116).
 
+The publish (``publish_version``), the version resolver
+(``resolve_version``) and the retry loop (``retry_commit``) are
+directory-generic and written once, here. Table metadata is their
+first user (``commit`` / ``try_commit_version``); the multi-table
+catalog (catalog.py) is the second, publishing ``catalog/v<N>.json``
+through the same CAS and backoff.
+
 A data file's existence on disk means nothing until a manifest in a
 committed metadata version references it — so writers can stream files
 into ``data/`` with zero coordination and crash safely at any point
@@ -199,11 +206,11 @@ def read_json(path: str) -> dict:
         return json.load(f)
 
 
-def current_version(root: str) -> int:
-    """Resolve the latest committed version: start at the hint, probe
-    upward (the hint is best-effort, never authoritative)."""
-    mdir = _metadata_dir(root)
-    hint_path = os.path.join(mdir, "version-hint.text")
+def resolve_version(vdir: str) -> int:
+    """Resolve the latest committed ``v<N>.json`` under ``vdir``: start
+    at the hint, probe upward (the hint is best-effort, never
+    authoritative)."""
+    hint_path = os.path.join(vdir, "version-hint.text")
     v = 0
     if os.path.exists(hint_path):
         try:
@@ -211,79 +218,95 @@ def current_version(root: str) -> int:
                 v = int(f.read().strip())
         except (ValueError, OSError):
             v = 0
-    if v < 1 or not os.path.exists(_version_path(root, v)):
+    if v < 1 or not os.path.exists(os.path.join(vdir, f"v{v}.json")):
         versions = [
             int(name[1:-5])
-            for name in os.listdir(mdir)
+            for name in os.listdir(vdir)
             if name.startswith("v") and name.endswith(".json")
         ]
         if not versions:
-            raise FileNotFoundError(f"no table metadata under {mdir}")
+            raise FileNotFoundError(f"no committed versions under {vdir}")
         return max(versions)
-    while os.path.exists(_version_path(root, v + 1)):
+    while os.path.exists(os.path.join(vdir, f"v{v + 1}.json")):
         v += 1
     return v
 
 
 def load_metadata(root: str) -> TableMetadata:
-    v = current_version(root)
+    v = resolve_version(_metadata_dir(root))
     return TableMetadata.from_json(read_json(_version_path(root, v)))
 
 
-def _update_hint(root: str, version: int) -> None:
-    hint = os.path.join(_metadata_dir(root), "version-hint.text")
-    tmp = f"{hint}.{uuid.uuid4().hex}.tmp"
-    with open(tmp, "w") as f:
-        f.write(str(version))
-    os.rename(tmp, hint)
-
-
-def try_commit_version(root: str, meta: TableMetadata) -> None:
-    """CAS: atomically publish v<version>.json; raise CommitConflict if
-    another committer won the race.
+def publish_version(vdir: str, version: int, payload: dict) -> None:
+    """CAS: atomically publish ``<vdir>/v<version>.json``; raise
+    CommitConflict if another committer won the race.
 
     The content is written to a temp file first and PUBLISHED via
     ``os.link`` — link() fails with EEXIST if the version exists (the
     compare-and-swap) and, unlike open(O_EXCL)+write, the target name
     only ever appears with its full content, so concurrent readers can
-    never observe a partially-written metadata file."""
-    path = _version_path(root, meta.version)
+    never observe a partially-written version file. The hint moves
+    after the publish, best-effort."""
+    path = os.path.join(vdir, f"v{version}.json")
     tmp = f"{path}.{uuid.uuid4().hex}.tmp"
     with open(tmp, "w") as f:
-        json.dump(meta.to_json(), f)
+        json.dump(payload, f)
         f.flush()
         os.fsync(f.fileno())
     try:
         os.link(tmp, path)
     except FileExistsError as e:
-        raise CommitConflict(f"version {meta.version} already committed") from e
+        raise CommitConflict(f"{path} already committed") from e
     finally:
         os.unlink(tmp)
-    _update_hint(root, meta.version)
+    hint = os.path.join(vdir, "version-hint.text")
+    htmp = f"{hint}.{uuid.uuid4().hex}.tmp"
+    with open(htmp, "w") as f:
+        f.write(str(version))
+    os.rename(htmp, hint)
 
 
-def commit(root: str, build: "callable", max_retries: int = 1000) -> TableMetadata:
-    """Optimistic-retry commit loop.
+def try_commit_version(root: str, meta: TableMetadata) -> None:
+    publish_version(_metadata_dir(root), meta.version, meta.to_json())
 
-    ``build(current: TableMetadata) -> TableMetadata | None`` must
-    return the next metadata (version = current.version + 1), rebased
-    on the freshly-read current state each attempt; returning None
-    aborts (no-op commit). Mirrors the reference's retry budget
-    semantics (Writer.java:116) with a bounded default."""
+
+def retry_commit(load, build, publish, max_retries: int = 1000):
+    """Optimistic-retry loop over any versioned state with a
+    ``version`` field: ``load()`` reads the current state,
+    ``build(current)`` returns the next one (version + 1) or None to
+    abort (the current state is returned), ``publish(new)`` is the CAS
+    and raises CommitConflict on a lost race. Losers back off
+    exponentially (1 ms doubling, capped at 100 ms) and rebase.
+    Mirrors the reference's retry budget semantics (Writer.java:116)
+    with a bounded default."""
     for attempt in range(max_retries):
-        current = load_metadata(root)
+        current = load()
         new = build(current)
         if new is None:
             return current
         assert new.version == current.version + 1, "build() must bump version by 1"
         try:
-            try_commit_version(root, new)
+            publish(new)
             return new
         except CommitConflict:
             if attempt == max_retries - 1:
                 raise
             time.sleep(min(0.001 * (2 ** min(attempt, 6)), 0.1))
     raise CommitConflict("retries exhausted")
+
+
+def commit(root: str, build: "callable", max_retries: int = 1000) -> TableMetadata:
+    """Table commit: ``retry_commit`` over this root's metadata.
+    ``build(current: TableMetadata) -> TableMetadata | None`` is
+    rebased on the freshly-read current state each attempt. The steps
+    resolve ``load_metadata`` / ``try_commit_version`` at call time,
+    so wrappers and patches on this module's attributes see them."""
+    return retry_commit(
+        lambda: load_metadata(root),
+        build,
+        lambda new: try_commit_version(root, new),
+        max_retries,
+    )
 
 
 def write_manifest(root: str, entries: list[dict]) -> str:

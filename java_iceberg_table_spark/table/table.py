@@ -43,6 +43,12 @@ DEFAULT_PROPERTIES = {
 }
 
 
+# Table._commit_snapshot's expected_parent modes besides an exact
+# snapshot id (None = the empty table)
+_ANY_PARENT = object()  # commit on whatever the head is, empty included
+_SOME_PARENT = object()  # commit on the head; refuse an empty table
+
+
 class RetentionGapError(KeyError):
     """A consumer asked for incremental state that snapshot expiry has
     already garbage-collected (checkpoint older than retention)."""
@@ -1061,30 +1067,7 @@ class Table:
         whose moniker deletion crashed re-appends nothing. Returns
         None when every entry was a duplicate (no commit made)."""
 
-        result: list[Snapshot] = []
-        stale_manifests: list[str] = []
-
-        def build(current: TableMetadata) -> TableMetadata | None:
-            # Manifests written by a LOST CAS attempt are referenced by
-            # nothing — unlink them before retrying so commit contention
-            # doesn't accumulate orphans (clean() is the backstop).
-            for rel in stale_manifests:
-                try:
-                    os.remove(os.path.join(self.root, rel))
-                except OSError:
-                    pass
-            stale_manifests.clear()
-            if branch is not None:
-                ref = current.refs.get(branch)
-                if ref is None:
-                    raise KeyError(f"unknown branch {branch!r}")
-                if ref["type"] != "branch":
-                    raise ValueError(f"ref {branch!r} is a tag, not a branch")
-                parent = next(
-                    s for s in current.snapshots if s.snapshot_id == ref["snapshot_id"]
-                )
-            else:
-                parent = current.current_snapshot()
+        def make(current, parent, seq, write_manifest):
             use = entries
             if dedupe_paths and parent is not None:
                 existing = {
@@ -1094,14 +1077,12 @@ class Table:
                 }
                 use = [e for e in entries if e["path"] not in existing]
                 if not use:
-                    result.clear()
                     return None
-            # written inside build(): under dedupe the entry list
-            # depends on the freshly-read parent, so each retry gets a
-            # manifest matching what it actually commits. Entries are
-            # stamped with this commit's sequence number (MOR delete
+            # written per attempt: under dedupe the entry list depends
+            # on the freshly-read parent, so each retry gets a manifest
+            # matching what it actually commits. Entries are stamped
+            # with this commit's sequence number (MOR delete
             # applicability — see Snapshot.sequence).
-            seq = (parent.sequence if parent else 0) + 1
             # row lineage (Iceberg v3): this commit claims the id range
             # [next_row_id, next_row_id + added rows); each entry's
             # first_row_id makes _row_id = first_row_id + row position
@@ -1114,9 +1095,7 @@ class Table:
             for e in use:
                 stamped.append({**e, "seq": seq, "first_row_id": rid})
                 rid += int(e["rows"])
-            use = stamped
-            manifest_rel = fmt.write_manifest(self.root, use)
-            stale_manifests.append(manifest_rel)
+            manifest_rel = write_manifest(stamped)
             manifests = (list(parent.manifests) if parent else []) + [manifest_rel]
             merge_min = int(
                 current.properties.get("commit.manifest.min-count-to-merge", "8")
@@ -1135,56 +1114,128 @@ class Table:
                     merged.extend(fmt.read_manifest(self.root, m))
                 merged.sort(key=lambda e: (e.get("partition") is None, e.get("partition"), e["path"]))
                 manifests = [
-                    fmt.write_manifest(self.root, merged[i : i + max_entries])
+                    write_manifest(merged[i : i + max_entries])
                     for i in range(0, len(merged), max_entries)
                 ]
-                stale_manifests.extend(manifests)
+            summary = {
+                "added-files": len(stamped),
+                "added-rows": sum(e["rows"] for e in stamped),
+                # the exact manifest this commit added: added_files()
+                # reads it directly (no parent diff, survives parent
+                # expiry), and expire_snapshots treats it as live
+                # while this snapshot is retained
+                "added-manifest": manifest_rel,
+                **(extra_summary or {}),
+            }
+            deletes = list(parent.delete_manifests) if parent else []
+            return manifests, deletes, summary, {"next_row_id": rid}
+
+        retries = int(self.metadata.properties.get("commit.retry.num-retries", "1000"))
+        return self._commit_snapshot(
+            "append", make, _ANY_PARENT, branch=branch, max_retries=retries
+        )
+
+    def _commit_snapshot(
+        self,
+        operation: str,
+        make,
+        expected_parent=_SOME_PARENT,
+        branch: str | None = None,
+        max_retries: int = 1000,
+    ) -> Snapshot | None:
+        """The one commit that adds a snapshot. Every attempt, rebased
+        on freshly-read metadata:
+
+        - unlinks the manifests the previous, LOST attempt wrote
+          through ``write_manifest`` — nothing references them, so
+          contention must not accumulate orphans (clean() is the
+          backstop);
+        - resolves the parent (``branch``'s head, else the table head)
+          and refuses (returns None) unless it matches
+          ``expected_parent``: by default a parent must exist;
+          ``_ANY_PARENT`` also commits on an empty table; a snapshot id
+          (or None for the empty table) demands exactly that head,
+          because the caller planned its rewrite against it;
+        - stamps ``seq = parent.sequence + 1`` (0 + 1 with no parent),
+          the sequence every entry this commit adds must carry;
+        - calls ``make(current, parent, seq, write_manifest)``, which
+          returns ``(manifests, delete_manifests, summary)`` plus an
+          optional dict of extra metadata fields, or None to abort;
+        - builds the snapshot and moves the table head to it, or with
+          ``branch`` only that branch's ref.
+
+        Returns the committed snapshot, or None when refused/aborted."""
+        written: list[str] = []
+        result: list[Snapshot] = []
+
+        def write_manifest(entries: list[dict]) -> str:
+            rel = fmt.write_manifest(self.root, entries)
+            written.append(rel)
+            return rel
+
+        def build(current: TableMetadata) -> TableMetadata | None:
+            for rel in written:
+                try:
+                    os.remove(os.path.join(self.root, rel))
+                except OSError:
+                    pass
+            written.clear()
+            result.clear()
+            if branch is None:
+                parent = current.current_snapshot()
+            else:
+                ref = current.refs.get(branch)
+                if ref is None:
+                    raise KeyError(f"unknown branch {branch!r}")
+                if ref["type"] != "branch":
+                    raise ValueError(f"ref {branch!r} is a tag, not a branch")
+                parent = next(
+                    s for s in current.snapshots if s.snapshot_id == ref["snapshot_id"]
+                )
+            parent_id = parent.snapshot_id if parent else None
+            if expected_parent is _SOME_PARENT:
+                if parent is None:
+                    return None
+            elif expected_parent is not _ANY_PARENT and parent_id != expected_parent:
+                return None
+            seq = (parent.sequence if parent else 0) + 1
+            made = make(current, parent, seq, write_manifest)
+            if made is None:
+                return None
+            manifests, delete_manifests, summary, *extra = made
             snap = Snapshot(
                 snapshot_id=fmt.new_snapshot_id(),
-                parent_id=parent.snapshot_id if parent else None,
+                parent_id=parent_id,
                 timestamp_ms=fmt.now_ms(),
                 schema_id=current.current_schema_id,
-                operation="append",
+                operation=operation,
                 manifests=manifests,
                 sequence=seq,
-                delete_manifests=list(parent.delete_manifests) if parent else [],
-                summary={
-                    "added-files": len(use),
-                    "added-rows": sum(e["rows"] for e in use),
-                    # the exact manifest this commit added: added_files()
-                    # reads it directly (no parent diff, survives parent
-                    # expiry), and expire_snapshots treats it as live
-                    # while this snapshot is retained
-                    "added-manifest": manifest_rel,
-                    **(extra_summary or {}),
-                },
+                delete_manifests=delete_manifests,
+                summary=summary,
             )
-            result.clear()
             result.append(snap)
-            if branch is not None:
-                new_refs = dict(current.refs)
-                # advance ONLY the head pointer: created_ms /
-                # max_ref_age_ms (round-14 retention) ride along — a
-                # staged write must not reset the branch's age clock
-                new_refs[branch] = {
-                    **current.refs[branch],
-                    "snapshot_id": snap.snapshot_id,
-                }
-                head = current.current_snapshot_id  # table head unmoved
+            if branch is None:
+                head, refs = snap.snapshot_id, current.refs
             else:
-                new_refs = current.refs
-                head = snap.snapshot_id
+                # advance ONLY the branch's head pointer: created_ms /
+                # max_ref_age_ms ride along — a staged write must not
+                # reset the branch's age clock; the table head is unmoved
+                head = current.current_snapshot_id
+                refs = {
+                    **current.refs,
+                    branch: {**current.refs[branch], "snapshot_id": snap.snapshot_id},
+                }
             return replace(
                 current,
                 version=current.version + 1,
                 snapshots=current.snapshots + [snap],
                 current_snapshot_id=head,
-                refs=new_refs,
-                next_row_id=rid,
+                refs=refs,
+                **(extra[0] if extra else {}),
             )
 
-        retries = int(self.metadata.properties.get("commit.retry.num-retries", "1000"))
-        fmt.commit(self.root, build, max_retries=retries)
+        fmt.commit(self.root, build, max_retries)
         return result[0] if result else None
 
     def rollback_to(self, snapshot_id: int) -> None:
@@ -1406,12 +1457,7 @@ class Table:
                     f"bookkeeper floors its cutoff)"
                 )
 
-        result: list[Snapshot | None] = [None]
-
-        def build(current: TableMetadata) -> TableMetadata | None:
-            parent = current.current_snapshot()
-            if parent is None:
-                return None
+        def make(current, parent, seq, write_manifest):
             kept_manifests: list[str] = []
             dropped = 0
             dropped_rows = 0
@@ -1438,31 +1484,13 @@ class Table:
                         e["rows"] for e in kept
                     )
                     if kept:
-                        kept_manifests.append(fmt.write_manifest(self.root, kept))
+                        kept_manifests.append(write_manifest(kept))
             if dropped == 0:
-                result[0] = None
                 return None
-            snap = Snapshot(
-                snapshot_id=fmt.new_snapshot_id(),
-                parent_id=parent.snapshot_id,
-                timestamp_ms=fmt.now_ms(),
-                schema_id=current.current_schema_id,
-                operation="delete",
-                manifests=kept_manifests,
-                sequence=parent.sequence + 1,
-                delete_manifests=list(parent.delete_manifests),
-                summary={"deleted-files": dropped, "deleted-rows": dropped_rows},
-            )
-            result[0] = snap
-            return replace(
-                current,
-                version=current.version + 1,
-                snapshots=current.snapshots + [snap],
-                current_snapshot_id=snap.snapshot_id,
-            )
+            summary = {"deleted-files": dropped, "deleted-rows": dropped_rows}
+            return kept_manifests, list(parent.delete_manifests), summary
 
-        fmt.commit(self.root, build)
-        return result[0]
+        return self._commit_snapshot("delete", make)
 
     _OPS = {
         "<": "__lt__", "<=": "__le__", ">": "__gt__", ">=": "__ge__",
@@ -2047,56 +2075,19 @@ class Table:
         MERGE needs (Iceberg RowDelta). Refuses (returns None, caller
         retries) when the head moved past the snapshot the delta was
         computed against — the matched set may be stale."""
-        result: list[Snapshot] = []
-        stale: list[str] = []
 
-        def build(current: TableMetadata) -> TableMetadata | None:
-            for rel in stale:  # lost-CAS leftovers
-                try:
-                    os.remove(os.path.join(self.root, rel))
-                except OSError:
-                    pass
-            stale.clear()
-            parent = current.current_snapshot()
-            parent_id = parent.snapshot_id if parent else None
-            if parent_id != expected_parent:
-                result.clear()
-                return None  # computed against a stale head: recompute
-            seq = (parent.sequence if parent else 0) + 1
+        def make(current, parent, seq, write_manifest):
             manifests = list(parent.manifests) if parent else []
             delete_manifests = list(parent.delete_manifests) if parent else []
             if data_entries:
-                m = fmt.write_manifest(
-                    self.root, [{**e, "seq": seq} for e in data_entries]
+                manifests.append(
+                    write_manifest([{**e, "seq": seq} for e in data_entries])
                 )
-                stale.append(m)
-                manifests = manifests + [m]
             if del_entry is not None:
-                dm = fmt.write_manifest(self.root, [{**del_entry, "seq": seq}])
-                stale.append(dm)
-                delete_manifests = delete_manifests + [dm]
-            snap = Snapshot(
-                snapshot_id=fmt.new_snapshot_id(),
-                parent_id=parent_id,
-                timestamp_ms=fmt.now_ms(),
-                schema_id=current.current_schema_id,
-                operation="merge",
-                manifests=manifests,
-                sequence=seq,
-                delete_manifests=delete_manifests,
-                summary=summary,
-            )
-            result.clear()
-            result.append(snap)
-            return replace(
-                current,
-                version=current.version + 1,
-                snapshots=current.snapshots + [snap],
-                current_snapshot_id=snap.snapshot_id,
-            )
+                delete_manifests.append(write_manifest([{**del_entry, "seq": seq}]))
+            return manifests, delete_manifests, summary
 
-        fmt.commit(self.root, build)
-        return result[0] if result else None
+        return self._commit_snapshot("merge", make, expected_parent)
 
     # ---------- merge-on-read row-level deletes (Iceberg v2) ----------
 
@@ -2318,46 +2309,14 @@ class Table:
     def _commit_deletes(self, del_entry: dict, summary: dict) -> Snapshot | None:
         """Commit a 'delete' snapshot that ADDS a MOR delete file: data
         manifests unchanged, one new delete manifest appended. The
-        entry's applicability sequence is stamped inside build() (it
+        entry's applicability sequence is stamped inside make() (it
         depends on the parent actually committed against)."""
-        result: list[Snapshot] = []
-        stale_manifests: list[str] = []
 
-        def build(current: TableMetadata) -> TableMetadata | None:
-            for rel in stale_manifests:  # lost-CAS leftovers
-                try:
-                    os.remove(os.path.join(self.root, rel))
-                except OSError:
-                    pass
-            stale_manifests.clear()
-            parent = current.current_snapshot()
-            if parent is None:
-                return None
-            seq = parent.sequence + 1
-            m = fmt.write_manifest(self.root, [{**del_entry, "seq": seq}])
-            stale_manifests.append(m)
-            snap = Snapshot(
-                snapshot_id=fmt.new_snapshot_id(),
-                parent_id=parent.snapshot_id,
-                timestamp_ms=fmt.now_ms(),
-                schema_id=current.current_schema_id,
-                operation="delete",
-                manifests=list(parent.manifests),
-                sequence=seq,
-                delete_manifests=list(parent.delete_manifests) + [m],
-                summary=summary,
-            )
-            result.clear()
-            result.append(snap)
-            return replace(
-                current,
-                version=current.version + 1,
-                snapshots=current.snapshots + [snap],
-                current_snapshot_id=snap.snapshot_id,
-            )
+        def make(current, parent, seq, write_manifest):
+            m = write_manifest([{**del_entry, "seq": seq}])
+            return list(parent.manifests), list(parent.delete_manifests) + [m], summary
 
-        fmt.commit(self.root, build)
-        return result[0] if result else None
+        return self._commit_snapshot("delete", make)
 
     def delete_where_mor(
         self, spark: SparkSession, filters: Iterable[tuple[str, str, object]]
@@ -2693,48 +2652,15 @@ class Table:
         ``drop_deletes`` (the rewrite_deletes materialization, which
         has rewritten every file a delete could touch)."""
 
-        stale_manifests: list[str] = []
-
-        def build(current: TableMetadata) -> TableMetadata | None:
-            for rel in stale_manifests:  # lost-CAS leftovers (see append_entries)
-                try:
-                    os.remove(os.path.join(self.root, rel))
-                except OSError:
-                    pass
-            stale_manifests.clear()
-            parent = current.current_snapshot()
-            parent_id = parent.snapshot_id if parent else None
-            if parent_id != expected_parent:
-                return None
-            seq = (parent.sequence if parent else 0) + 1
+        def make(current, parent, seq, write_manifest):
             stamped = list(carried) + [{**e, "seq": seq} for e in rewritten]
-            manifest = fmt.write_manifest(self.root, stamped)
-            stale_manifests.append(manifest)
-            new_snap = Snapshot(
-                snapshot_id=fmt.new_snapshot_id(),
-                parent_id=parent_id,
-                timestamp_ms=fmt.now_ms(),
-                schema_id=current.current_schema_id,
-                operation="overwrite",
-                manifests=[manifest],
-                sequence=seq,
-                delete_manifests=(
-                    [] if drop_deletes or parent is None
-                    else list(parent.delete_manifests)
-                ),
-                summary=summary,
+            deletes = (
+                [] if drop_deletes or parent is None
+                else list(parent.delete_manifests)
             )
-            build.result = new_snap
-            return replace(
-                current,
-                version=current.version + 1,
-                snapshots=current.snapshots + [new_snap],
-                current_snapshot_id=new_snap.snapshot_id,
-            )
+            return [write_manifest(stamped)], deletes, summary
 
-        build.result = None
-        fmt.commit(self.root, build)
-        return build.result is not None
+        return self._commit_snapshot("overwrite", make, expected_parent) is not None
 
 
     def expire_snapshots(
@@ -3100,46 +3026,20 @@ class Table:
                 )
 
         self._attach_blooms(spark, new_entries)
-        stale_manifests: list[str] = []
 
-        def build(current: TableMetadata) -> TableMetadata | None:
-            for rel in stale_manifests:  # lost-CAS leftovers
-                try:
-                    os.remove(os.path.join(self.root, rel))
-                except OSError:
-                    pass
-            stale_manifests.clear()
-            parent = current.current_snapshot()
-            if parent is None or parent.snapshot_id != snap.snapshot_id:
-                return None  # table moved underneath; caller retries
-            seq = parent.sequence + 1
-            manifest = fmt.write_manifest(
-                self.root, [{**e, "seq": seq} for e in new_entries]
-            )
-            stale_manifests.append(manifest)
-            new_snap = Snapshot(
-                snapshot_id=fmt.new_snapshot_id(),
-                parent_id=parent.snapshot_id,
-                timestamp_ms=fmt.now_ms(),
-                schema_id=current.current_schema_id,
-                operation="replace",
-                manifests=[manifest],
-                sequence=seq,
-                delete_manifests=[],  # applied during the rewrite
-                summary={
-                    "rewritten-files": len(entries),
-                    "new-files": len(new_entries),
-                    "cluster-by": ",".join(cluster_by),
-                },
-            )
-            return replace(
-                current,
-                version=current.version + 1,
-                snapshots=current.snapshots + [new_snap],
-                current_snapshot_id=new_snap.snapshot_id,
-            )
+        def make(current, parent, seq, write_manifest):
+            manifest = write_manifest([{**e, "seq": seq} for e in new_entries])
+            summary = {
+                "rewritten-files": len(entries),
+                "new-files": len(new_entries),
+                "cluster-by": ",".join(cluster_by),
+            }
+            return [manifest], [], summary  # deletes applied during the rewrite
 
-        fmt.commit(self.root, build)
+        if self._commit_snapshot("replace", make, snap.snapshot_id) is None:
+            # the head moved during the rewrite: nothing committed
+            shutil.rmtree(os.path.join(self.root, "data", f"z-{batch}"), ignore_errors=True)
+            return {"rewritten": 0, "new_files": 0}
         return {"rewritten": len(entries), "new_files": len(new_entries)}
 
     def compact_data_files(
@@ -3244,45 +3144,16 @@ class Table:
                 )
 
         self._attach_blooms(spark, new_entries)
-        stale_manifests: list[str] = []
 
-        def build(current: TableMetadata) -> TableMetadata | None:
-            for rel in stale_manifests:  # lost-CAS leftovers (see append_entries)
-                try:
-                    os.remove(os.path.join(self.root, rel))
-                except OSError:
-                    pass
-            stale_manifests.clear()
-            parent = current.current_snapshot()
-            if parent is None or parent.snapshot_id != snap.snapshot_id:
-                return None  # table moved underneath; caller retries compaction
-            seq = parent.sequence + 1
-            manifest = fmt.write_manifest(
-                self.root, keep + [{**e, "seq": seq} for e in new_entries]
-            )
-            stale_manifests.append(manifest)
-            new_snap = Snapshot(
-                snapshot_id=fmt.new_snapshot_id(),
-                parent_id=parent.snapshot_id,
-                timestamp_ms=fmt.now_ms(),
-                schema_id=current.current_schema_id,
-                operation="replace",
-                manifests=[manifest],
-                sequence=seq,
-                delete_manifests=list(parent.delete_manifests),
-                summary={
-                    "compacted-files": len(small),
-                    "new-files": len(new_entries),
-                },
-            )
-            return replace(
-                current,
-                version=current.version + 1,
-                snapshots=current.snapshots + [new_snap],
-                current_snapshot_id=new_snap.snapshot_id,
-            )
+        def make(current, parent, seq, write_manifest):
+            manifest = write_manifest(keep + [{**e, "seq": seq} for e in new_entries])
+            summary = {"compacted-files": len(small), "new-files": len(new_entries)}
+            return [manifest], list(parent.delete_manifests), summary
 
-        fmt.commit(self.root, build)
+        if self._commit_snapshot("replace", make, snap.snapshot_id) is None:
+            # the head moved during the compaction: nothing committed
+            shutil.rmtree(os.path.join(self.root, "data", f"c-{batch}"), ignore_errors=True)
+            return {"rewritten": 0, "new_files": 0}
         return {"rewritten": len(small), "new_files": len(new_entries)}
 
     # ---------- read plane ----------

@@ -213,12 +213,32 @@ def test_clean_collects_orphans_keeps_live(spark, troot):
     assert os.path.exists(orphan_data)
 
 
-def test_lost_cas_attempt_manifest_reclaimed(spark, troot, monkeypatch):
+_LOST_CAS_OPS = {
+    "append_entries": lambda spark, tbl: tbl.append_entries(
+        tbl.current_files()[:1], dedupe_paths=False
+    ),
+    "delete_where": lambda spark, tbl: tbl.delete_where("ts", "<", 50),
+    "delete_where_mor": lambda spark, tbl: tbl.delete_where_mor(
+        spark, [("k", "<", 5)]
+    ),
+    "overwrite_entries": lambda spark, tbl: tbl.overwrite_entries(
+        tbl.current_files()
+    ),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_LOST_CAS_OPS))
+def test_lost_cas_attempt_manifest_reclaimed(spark, troot, monkeypatch, op):
     """A commit attempt that loses the CAS race must unlink the
-    manifest it wrote before retrying (plus clean() as backstop)."""
-    tbl = create_table(troot, SIMPLE_SCHEMA)
-    tbl.append(_df(spark, 0, 10))
-    entries = tbl.current_files()
+    manifests it wrote before retrying (plus clean() as backstop) —
+    for every snapshot-producing commit, including delete_where's
+    partially-kept manifests."""
+    import dataclasses
+    import glob
+
+    tbl = create_table(troot, SIMPLE_SCHEMA, partition=truncate("ts", 10))
+    tbl.append(_df(spark, 0, 100))
+    v0 = tbl.metadata.version
     # force one CAS loss: first publish attempt collides with a
     # concurrent commit injected via the build hook
     real_commit = fmt.commit
@@ -232,11 +252,7 @@ def test_lost_cas_attempt_manifest_reclaimed(spark, troot, monkeypatch):
                 # concurrent writer lands between read and publish
                 real_commit(
                     root,
-                    lambda cur: cur
-                    if cur.version != current.version
-                    else __import__("dataclasses").replace(
-                        cur, version=cur.version + 1
-                    ),
+                    lambda cur: dataclasses.replace(cur, version=cur.version + 1),
                 )
             return out
         return real_commit(root, build_with_race, max_retries)
@@ -244,19 +260,77 @@ def test_lost_cas_attempt_manifest_reclaimed(spark, troot, monkeypatch):
     monkeypatch.setattr(
         "java_iceberg_table_spark.table.table.fmt.commit", racing_commit
     )
-    tbl.append_entries(
-        [dict(entries[0], path=entries[0]["path"])], dedupe_paths=False
-    )
+    _LOST_CAS_OPS[op](spark, tbl)
     monkeypatch.undo()
-    # every manifest on disk must be reachable (no lost-CAS leftovers)
     md = tbl.metadata
-    live = {m for s in md.snapshots for s_m in [s.manifests] for m in s_m}
+    assert state["raced"] and md.version == v0 + 2  # rival + the retried op
+    # every manifest on disk must be reachable (no lost-CAS leftovers)
+    live = set()
     for s in md.snapshots:
+        live.update(s.manifests, s.delete_manifests)
         am = s.summary.get("added-manifest")
         if am:
             live.add(am)
     on_disk = {
         os.path.relpath(p, troot)
-        for p in __import__("glob").glob(os.path.join(troot, "manifests", "*.json"))
+        for p in glob.glob(os.path.join(troot, "manifests", "*.json"))
     }
     assert on_disk <= live, on_disk - live
+
+
+@pytest.mark.parametrize(
+    "rewrite,prefix",
+    [
+        (lambda spark, tbl: tbl.compact_data_files(spark), "c-"),
+        (lambda spark, tbl: tbl.rewrite_clustered(spark, ["k", "ts"], 2), "z-"),
+    ],
+    ids=["compact_data_files", "rewrite_clustered"],
+)
+def test_rewrite_refused_reports_nothing(spark, troot, monkeypatch, rewrite, prefix):
+    """A rewrite whose base snapshot is no longer the head when it
+    commits is refused: it must report zero work, leave the table
+    content to the concurrent commit, and remove the files it wrote."""
+    tbl = create_table(troot, SIMPLE_SCHEMA)
+    tbl.append(_df(spark, 0, 50))
+    tbl.append(_df(spark, 50, 100))
+    real_commit = fmt.commit
+    state = {"raced": False}
+
+    def racing_commit(root, build, max_retries=1000):
+        if not state["raced"]:
+            state["raced"] = True
+            # a concurrent append lands after the rewrite read its
+            # base snapshot and wrote its files
+            tbl.append(_df(spark, 100, 120))
+        return real_commit(root, build, max_retries)
+
+    monkeypatch.setattr(fmt, "commit", racing_commit)
+    report = rewrite(spark, tbl)
+    monkeypatch.undo()
+    assert state["raced"]
+    assert report == {"rewritten": 0, "new_files": 0}
+    assert tbl.metadata.current_snapshot().operation == "append"
+    rows = sorted(r["k"] for r in tbl.scan(spark).select("k").collect())
+    assert rows == list(range(120))
+    assert not [d for d in os.listdir(os.path.join(troot, "data")) if d.startswith(prefix)]
+
+
+def test_one_commit_path():
+    """The commit protocol is written once: the fsync'd link-CAS
+    publish and the retry backoff live only in format.py, and table.py
+    constructs snapshots in one place (Table._commit_snapshot)."""
+    import re
+
+    tdir = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "java_iceberg_table_spark",
+        "table",
+    )
+    for fname in sorted(os.listdir(tdir)):
+        if fname.endswith(".py") and fname != "format.py":
+            with open(os.path.join(tdir, fname)) as f:
+                src = f.read()
+            assert "os.fsync(" not in src, f"{fname} fsyncs: publish through format.py"
+            assert "time.sleep(" not in src, f"{fname} backs off: use format.retry_commit"
+    with open(os.path.join(tdir, "table.py")) as f:
+        assert len(re.findall(r"\bSnapshot\(", f.read())) == 1
