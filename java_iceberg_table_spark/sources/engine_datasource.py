@@ -157,12 +157,7 @@ def _ref_head(tbl, ref: str | None):
     means offsets walk the branch lineage (which shares the main
     ancestry below the fork), so audit pipelines can stream staged
     commits before publish."""
-    if ref:
-        r = tbl.metadata.refs.get(ref)
-        if r is None:
-            raise ValueError(f"no such ref {ref!r}")
-        return r["snapshot_id"]
-    snap = tbl.metadata.current_snapshot()
+    _, snap, _ = tbl.read_state(ref=ref or None)
     return None if snap is None else snap.snapshot_id
 
 
@@ -519,27 +514,13 @@ class EngineBatchReader(DataSourceReader):
             yield f
 
     def partitions(self):
-        from ..table import format as fmt
         from ..table import load_table
         from ..table.table import _renames_of, prune_entries_by_keys
 
         if self.empty_scan:
             return []
         tbl = load_table(self.root)
-        picked = [
-            x
-            for x in (self.snapshot_id, self.ref, self.as_of_ms)
-            if x is not None
-        ]
-        if len(picked) > 1:
-            raise ValueError(
-                "pass at most one of snapshot_id / ref / as_of_timestamp_ms"
-            )
-        sid = self.snapshot_id
-        if self.ref is not None:
-            sid = _ref_head(tbl, self.ref)
-        if self.as_of_ms is not None:
-            sid = tbl.snapshot_as_of(self.as_of_ms).snapshot_id
+        _, snap, _ = tbl.read_state(self.snapshot_id, self.ref or None, self.as_of_ms)
         # CONSUME the pushed filters: Spark reuses one reader instance
         # across every query planned from the same loaded DataFrame,
         # and pushFilters is NOT invoked for filterless plans — a
@@ -551,26 +532,17 @@ class EngineBatchReader(DataSourceReader):
         # re-applies every filter above the scan.
         engine_filters, self.engine_filters = self.engine_filters, []
         in_filters, self.in_filters = self.in_filters, []
-        entries = tbl.plan_files(engine_filters, snapshot_id=sid)
+        entries = (
+            tbl.plan_files(engine_filters, snapshot_id=snap.snapshot_id)
+            if snap is not None
+            else []
+        )
         for col, vals in in_filters:
             entries = prune_entries_by_keys(entries, col, vals)
         # merge-on-read delete state of the SCANNED snapshot rides in
         # the partitions so the connector returns exactly what
         # Table.scan returns (deleted rows must not resurrect)
-        snap = (
-            tbl.snapshot_by_id(sid)
-            if sid is not None
-            else tbl.metadata.current_snapshot()
-        )
-        dels = (
-            [
-                e
-                for m in snap.delete_manifests
-                for e in fmt.read_manifest(self.root, m)
-            ]
-            if snap is not None
-            else []
-        )
+        dels = tbl.delete_files_of(snap)
         # row-level pushdown into the parquet read itself: every
         # stats-expressible filter plus exact IN-lists. Spark
         # re-applies all filters after the scan (pushFilters reports
@@ -1064,16 +1036,17 @@ class EngineCDCStreamReader(DataSourceStreamReader):
         if b is None or a == b:
             return []
         tbl = self._table()
+        md = tbl.metadata
         renames = _renames_of(self.data_schema)
         if a is None:
             # Initial batch: emit the CURRENT state as inserts — the
             # from-side is empty, so file identity is irrelevant and
             # neither historical maintenance commits nor expired early
             # history may block stream startup (no lineage walk here).
-            return self._diff_segment(tbl, None, tbl.snapshot_by_id(b), renames)
+            return self._diff_segment(tbl, None, md.snapshot(b), renames)
         # main-lineage walk (oldest first); raises when the offset was
         # expired or rolled past — same contract as the append tail
-        chain = _lineage_window(tbl.metadata, a, b)
+        chain = _lineage_window(md, a, b)
 
         def preserves(s) -> bool:
             # 'replace' (compaction / z-order / manifest rewrite) never
@@ -1104,7 +1077,7 @@ class EngineCDCStreamReader(DataSourceStreamReader):
         # consumer (the i21 materialized view) survives the
         # bookkeeper's continuous compaction.
         parts: list[CDCPartition] = []
-        seg_from = tbl.snapshot_by_id(a)
+        seg_from = md.snapshot(a)
         prev = seg_from
         for s in chain:
             if preserves(s):
@@ -1131,24 +1104,15 @@ class EngineCDCStreamReader(DataSourceStreamReader):
             {e["path"]: e for e in tbl.files_of(from_snap)} if from_snap else {}
         )
         to_entries = {e["path"]: e for e in tbl.files_of(to_snap)}
-        read_dels = lambda snap: (
-            [
-                e
-                for m in snap.delete_manifests
-                for e in fmt.read_manifest(self.root, m)
-            ]
-            if snap is not None
-            else []
-        )
         from_del_manifests = set(from_snap.delete_manifests) if from_snap else set()
-        to_dels = read_dels(to_snap)
+        to_dels = tbl.delete_files_of(to_snap)
         new_dels = [
             e
             for m in to_snap.delete_manifests
             if m not in from_del_manifests
             for e in fmt.read_manifest(self.root, m)
         ]
-        from_dels = read_dels(from_snap)
+        from_dels = tbl.delete_files_of(from_snap)
         to_pi, to_pp, to_eq = self._payloads(tbl, to_dels, renames)
         fr_pi, fr_pp, fr_eq = self._payloads(tbl, from_dels, renames)
         nw_pi, nw_pp, nw_eq = self._payloads(tbl, new_dels, renames)
@@ -1300,7 +1264,10 @@ def _meta_rows(root: str, kind: str, options) -> list[tuple]:
     from ..table import load_table
 
     tbl = load_table(root)
-    md = tbl.metadata
+    sid = options.get("snapshot_id")
+    md, snap, _ = tbl.read_state(
+        snapshot_id=None if sid is None else int(sid), ref=options.get("ref") or None
+    )
     if kind == "snapshots":
         cur = md.current_snapshot_id
         return [
@@ -1320,12 +1287,6 @@ def _meta_rows(root: str, kind: str, options) -> list[tuple]:
         return [
             (k, v["type"], v["snapshot_id"]) for k, v in sorted(md.refs.items())
         ]
-    sid = (
-        int(options["snapshot_id"]) if "snapshot_id" in options else None
-    )
-    if options.get("ref"):
-        sid = md.refs[options["ref"]]["snapshot_id"]
-    snap = tbl.snapshot_by_id(sid) if sid is not None else md.current_snapshot()
     entries = tbl.files_of(snap) if snap is not None else []
     if kind == "files":
         return [

@@ -849,12 +849,7 @@ class Catalog:
                     f"table {name!r} is unpartitioned — SHOW PARTITIONS "
                     "lists a partition transform's layout"
                 )
-            pin = self.state().pins.get(name)
-            snap = (
-                tbl.metadata.current_snapshot()
-                if pin is None
-                else tbl.snapshot_by_id(pin)
-            )
+            _, snap, _ = tbl.read_state(snapshot_id=self.state().pins.get(name))
             rows = _show_partitions_rows(spark, tbl, snap)
             return spark.createDataFrame(
                 rows or [],
@@ -953,10 +948,7 @@ class Catalog:
 
             name = m.group(1)
             tbl = self.table(name)
-            pin = self.state().pins.get(name)
-            schema = (
-                tbl.schema() if pin is None else tbl.schema_of_snapshot(pin)
-            )
+            _, _, schema = tbl.read_state(snapshot_id=self.state().pins.get(name))
             # simpleString() verbatim — NOT .upper(): uppercasing a
             # nested type's simpleString renames its FIELDS
             # (struct<a:bigint> -> STRUCT<A:BIGINT>), silently breaking
@@ -1029,19 +1021,11 @@ class Catalog:
             # PINNED snapshot (metadata-only, no data file opened).
             name = m.group(1)
             tbl = self.table(name)
-            pin = self.state().pins.get(name)
-            schema = (
-                tbl.schema() if pin is None else tbl.schema_of_snapshot(pin)
-            )
+            md, snap, schema = tbl.read_state(snapshot_id=self.state().pins.get(name))
             rows = [
                 (f.name, f.dataType.simpleString(), str(f.nullable).lower())
                 for f in schema.fields
             ]
-            snap = (
-                tbl.metadata.current_snapshot()
-                if pin is None
-                else tbl.snapshot_by_id(pin)
-            )
             n_files, n_rows, n_bytes = _introspect_totals(spark, tbl, snap)
             t = tbl.transform
             rows += [
@@ -1051,7 +1035,7 @@ class Catalog:
                     _render_partition_ddl(t) if t is not None else "none",
                     "",
                 ),
-                ("snapshots", str(len(tbl.metadata.snapshots)), ""),
+                ("snapshots", str(len(md.snapshots)), ""),
                 (
                     "current_snapshot_id",
                     str(snap.snapshot_id if snap is not None else None),
@@ -1077,10 +1061,7 @@ class Catalog:
             # head schema, matching what Catalog.read returns there.
             name = m.group(1)
             tbl = self.table(name)  # loud KeyError for unknown names
-            pin = self.state().pins.get(name)
-            schema = (
-                tbl.schema() if pin is None else tbl.schema_of_snapshot(pin)
-            )
+            _, _, schema = tbl.read_state(snapshot_id=self.state().pins.get(name))
             return spark.createDataFrame(
                 [
                     (f.name, f.dataType.simpleString(), f.nullable)

@@ -136,6 +136,31 @@ class TableMetadata:
                 return s
         return None
 
+    def snapshot(self, snapshot_id: int) -> Snapshot:
+        for s in self.snapshots:
+            if s.snapshot_id == snapshot_id:
+                return s
+        raise KeyError(f"unknown snapshot {snapshot_id}")
+
+    def snapshot_at(self, timestamp_ms: int) -> Snapshot:
+        """The snapshot current AS OF a wall-clock instant (Iceberg's
+        ``TIMESTAMP AS OF``): the LAST main-lineage snapshot committed
+        at or before the cutoff. Walks the parent chain from the
+        current head, not the log — a rolled-back-then-rewritten
+        history answers with what a reader AT that instant on today's
+        lineage would see, and branch-staged commits (which were never
+        main-visible) don't answer for main."""
+        by_id = {s.snapshot_id: s for s in self.snapshots}
+        cur = self.current_snapshot()
+        while cur is not None:
+            if cur.timestamp_ms <= timestamp_ms:
+                return cur
+            cur = by_id.get(cur.parent_id)
+        raise KeyError(
+            f"no snapshot at or before {timestamp_ms} (table created later, "
+            "or that history was expired)"
+        )
+
     def schema_for(self, schema_id: int | None) -> dict:
         """Schema json for a schema id; None (pre-evolution snapshot)
         resolves to the current schema."""

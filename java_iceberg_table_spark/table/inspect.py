@@ -115,19 +115,6 @@ FILES_SCHEMA = T.StructType(
 )
 
 
-def _resolve_snapshot(table: "Table", snapshot_id: int | None, ref: str | None):
-    if ref is not None:
-        if snapshot_id is not None:
-            raise ValueError("pass snapshot_id or ref, not both")
-        refs = table.metadata.refs
-        if ref not in refs:
-            raise KeyError(f"no such ref {ref!r}")
-        snapshot_id = refs[ref]["snapshot_id"]
-    if snapshot_id is not None:
-        return table.snapshot_by_id(snapshot_id)
-    return table.metadata.current_snapshot()
-
-
 def files_df(
     table: "Table",
     spark: SparkSession,
@@ -136,7 +123,7 @@ def files_df(
 ) -> DataFrame:
     """One row per live data file of the (current / time-travel /
     ref'd) snapshot: path, partition, rows, bytes, per-column bounds."""
-    snap = _resolve_snapshot(table, snapshot_id, ref)
+    _, snap, _ = table.read_state(snapshot_id=snapshot_id, ref=ref)
     if snap is None or not snap.manifests:
         return spark.createDataFrame([], FILES_SCHEMA)
     paths = [os.path.join(table.root, m) for m in snap.manifests]
@@ -213,7 +200,7 @@ def snapshots_df(table: "Table", spark: SparkSession) -> DataFrame:
             T.StructField("is_current", T.BooleanType()),
         ]
     )
-    cur = table.metadata.current_snapshot_id
+    md = table.metadata  # one load: is_current and the log agree
     rows = [
         (
             s.snapshot_id,
@@ -222,9 +209,9 @@ def snapshots_df(table: "Table", spark: SparkSession) -> DataFrame:
             s.operation,
             len(s.manifests),
             s.schema_id,
-            s.snapshot_id == cur,
+            s.snapshot_id == md.current_snapshot_id,
         )
-        for s in table.metadata.snapshots
+        for s in md.snapshots
     ]
     return spark.createDataFrame(rows, schema).withColumn(
         "committed_at", F.timestamp_millis("committed_at_ms")

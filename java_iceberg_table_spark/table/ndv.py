@@ -63,33 +63,32 @@ def merge_sketches(sketches: list[list[int]], k: int) -> list[int]:
 
 
 def compute_file_sketches(
-    df_by_format: list[DataFrame],
+    df: DataFrame,
     columns: list[str],
     k: int = DEFAULT_K,
 ) -> dict[str, dict[str, list[int]]]:
-    """{column: {file: sorted k-min distinct hashes}} over data frames
-    that carry a ``__file`` column. One distinct + one windowed top-k
-    per column; the window partitions by file, so no global sort and
-    the shuffle holds (file, hash) pairs of DISTINCT values only."""
+    """{column: {file: sorted k-min distinct hashes}} over ``df``, a
+    table read that carries the root-relative ``__file`` key of each
+    row (every data-file format, one frame). One distinct + one
+    windowed top-k per column; the window partitions by file, so no
+    global sort and the shuffle holds (file, hash) pairs of DISTINCT
+    values only."""
     out: dict[str, dict[str, list[int]]] = {}
+    w = Window.partitionBy("__file").orderBy("h")
     for col in columns:
-        per_file: dict[str, list[int]] = {}
-        for df in df_by_format:
-            pairs = (
-                df.where(F.col(col).isNotNull())
-                .select("__file", F.xxhash64(col).alias("h"))
-                .distinct()
-            )
-            w = Window.partitionBy("__file").orderBy("h")
-            topk = (
-                pairs.withColumn("rn", F.row_number().over(w))
-                .where(F.col("rn") <= k)
-                .groupBy("__file")
-                .agg(F.sort_array(F.collect_list("h")).alias("hs"))
-            )
-            for r in topk.collect():  # one row per FILE: metadata-scale
-                per_file[r["__file"]] = [int(h) for h in r["hs"]]
-        out[col] = per_file
+        pairs = (
+            df.where(F.col(col).isNotNull())
+            .select("__file", F.xxhash64(col).alias("h"))
+            .distinct()
+        )
+        topk = (
+            pairs.withColumn("rn", F.row_number().over(w))
+            .where(F.col("rn") <= k)
+            .groupBy("__file")
+            .agg(F.sort_array(F.collect_list("h")).alias("hs"))
+        )
+        # one row per FILE: metadata-scale
+        out[col] = {r["__file"]: [int(h) for h in r["hs"]] for r in topk.collect()}
     return out
 
 

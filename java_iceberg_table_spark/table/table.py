@@ -110,6 +110,11 @@ DIST_PLAN_MIN_MANIFEST_BYTES = 4 << 20
 # metadata. Sized so a manifest entry stays a few tens of KB.
 DV_INLINE_MAX_POSITIONS = 4096
 
+# the physical row-lineage columns a lineage-preserving rewrite writes
+_LINEAGE_SCHEMA = StructType(
+    [StructField("__row_id", LongType()), StructField("__upd_seq", LongType())]
+)
+
 
 def _file_key_col():
     """Root-relative path of the file being scanned (``data/...``),
@@ -594,38 +599,57 @@ class Table:
             entries.extend(fmt.read_manifest(self.root, m))
         return entries
 
+    def delete_files_of(self, snap: Snapshot | None) -> list[dict]:
+        """The merge-on-read delete entries live in ``snap`` (none for
+        an empty table)."""
+        if snap is None:
+            return []
+        return [e for m in snap.delete_manifests for e in fmt.read_manifest(self.root, m)]
+
     def snapshot_by_id(self, snapshot_id: int) -> Snapshot:
-        for s in self.metadata.snapshots:
-            if s.snapshot_id == snapshot_id:
-                return s
-        raise KeyError(f"unknown snapshot {snapshot_id}")
+        return self.metadata.snapshot(snapshot_id)
 
     def history(self) -> list[dict]:
         """Commit log view: (snapshot_id, parent, ts, operation, summary)."""
         return [s.to_json() | {"manifests": len(s.manifests)} for s in self.metadata.snapshots]
 
     def snapshot_as_of(self, timestamp_ms: int) -> Snapshot:
-        """The snapshot current AS OF a wall-clock instant (Iceberg's
-        ``TIMESTAMP AS OF``): the LAST main-lineage snapshot committed
-        at or before the cutoff. Walks the parent chain from the
-        current head, not the log — a rolled-back-then-rewritten
-        history answers with what a reader AT that instant on today's
-        lineage would see, and branch-staged commits (which were never
-        main-visible) don't answer for main."""
-        cur = self.metadata.current_snapshot()
-        hit = None
-        by_id = {s.snapshot_id: s for s in self.metadata.snapshots}
-        while cur is not None:
-            if cur.timestamp_ms <= timestamp_ms:
-                hit = cur
-                break
-            cur = by_id.get(cur.parent_id) if cur.parent_id is not None else None
-        if hit is None:
-            raise KeyError(
-                f"no snapshot at or before {timestamp_ms} (table created later, "
-                "or that history was expired)"
-            )
-        return hit
+        """See TableMetadata.snapshot_at (TIMESTAMP AS OF)."""
+        return self.metadata.snapshot_at(timestamp_ms)
+
+    def read_state(
+        self,
+        snapshot_id: int | None = None,
+        ref: str | None = None,
+        as_of_ms: int | None = None,
+    ) -> tuple[TableMetadata, Snapshot | None, StructType]:
+        """Resolve what one read sees: ``(metadata, snapshot, schema)``
+        from ONE metadata load. Every table read — scan, count_rows,
+        scan_with_lineage, the inspection tables, the connector, the
+        catalog's pinned introspection — resolves here once and then
+        plans, applies deletes and filters against that same snapshot,
+        so a commit landing mid-read is either wholly visible or not
+        at all.
+
+        At most one selector: ``snapshot_id``, ``ref`` (branch head or
+        tag pin) or ``as_of_ms`` (TIMESTAMP AS OF); none reads the
+        head. A head read gets the CURRENT schema (columns added since
+        the last commit included; snapshot is None on an empty table).
+        A pinned read gets the schema its snapshot committed under."""
+        if sum(x is not None for x in (snapshot_id, ref, as_of_ms)) > 1:
+            raise ValueError("pass at most one of snapshot_id / ref / as_of_ms")
+        md = self.metadata
+        if ref is not None:
+            if ref not in md.refs:
+                raise KeyError(f"no such ref {ref!r}")
+            snapshot_id = md.refs[ref]["snapshot_id"]
+        if as_of_ms is not None:
+            snap = md.snapshot_at(as_of_ms)
+        elif snapshot_id is not None:
+            snap = md.snapshot(snapshot_id)
+        else:
+            return md, md.current_snapshot(), StructType.fromJson(md.schema_json)
+        return md, snap, StructType.fromJson(md.schema_for(snap.schema_id))
 
     def added_files(self, snap: Snapshot) -> list[dict]:
         """Manifest entries ADDED by this snapshot relative to its
@@ -1514,6 +1538,11 @@ class Table:
             cond = e if cond is None else (cond & e)
         return cond
 
+    def _filtered(self, df: DataFrame, filters: list) -> DataFrame:
+        """``df`` with ``filters`` re-applied as the residual: file
+        pruning is conservative, so every surviving row is re-tested."""
+        return df.filter(self._and_predicate(filters)) if filters else df
+
     def _dnf_predicate(self, branches) -> "F.Column":
         """OR over branches of AND over leaves — the FULL residual
         predicate; every row of every candidate file is re-tested
@@ -2117,7 +2146,7 @@ class Table:
         spark: SparkSession,
         entries: list[dict],
         snap: Snapshot | None,
-        schema: StructType | None = None,
+        schema: StructType,
         keep_pos: bool = False,
     ) -> DataFrame:
         """Read planned data entries with the snapshot's MOR delete
@@ -2125,58 +2154,22 @@ class Table:
 
         Application is pure DataFrame ops, deletes broadcast:
         - POSITION deletes: anti-join on (root-relative file path, row
-          position) using the parquet reader's ``_metadata.file_path``
-          / ``_metadata.row_index`` columns — no row ids stored in
-          data. The key is the path under the table root (never the
-          basename: partitioned writes repeat the same part-file name
-          in every partition directory), so it survives table moves
-          and clones.
+          position), the (__file, __pos) keys _read_entries_raw
+          attaches — no row ids stored in data. The key is the path
+          under the table root (never the basename: partitioned writes
+          repeat the same part-file name in every partition
+          directory), so it survives table moves and clones.
         - EQUALITY deletes: anti-join on the key columns, guarded by
           ``data_seq < delete_seq`` so keys re-inserted after the
           delete survive (Iceberg sequence-number semantics).
         Delete files are queries x small (the point of MOR: deletes are
         tiny relative to data); each anti-join broadcasts them, the
         data side never shuffles."""
-        schema = schema or self.schema()
-        del_entries = (
-            [
-                e
-                for m in snap.delete_manifests
-                for e in fmt.read_manifest(self.root, m)
-            ]
-            if snap is not None
-            else []
-        )
+        del_entries = self.delete_files_of(snap)
         if not del_entries or not entries:
             return self._read_entries_raw(spark, entries, schema, keep_pos=keep_pos)
-        paths = [os.path.join(self.root, e["path"]) for e in entries]
-        # Both file formats produce the same (__file, __pos) MOR join
-        # keys: parquet from _metadata, avro from the position-aware
-        # decode (R5 format toggle composes with row-level deletes).
+        df = self._read_entries_raw(spark, entries, schema, keep_pos=True)
         renames = _renames_of(schema)
-        phys = _physical_schema(schema, renames) if renames else schema
-        proj = _current_projection(schema, renames) if renames else [F.col("*")]
-        avro_paths = [p for p in paths if p.endswith(".avro")]
-        pq_paths = [p for p in paths if not p.endswith(".avro")]
-        branches: list[DataFrame] = []
-        if pq_paths:
-            branches.append(
-                spark.read.schema(phys).parquet(*pq_paths).select(
-                    *proj,
-                    _file_key_col().alias("__file"),
-                    F.col("_metadata.row_index").alias("__pos"),
-                )
-            )
-        if avro_paths:
-            from ..sources.avro_io import read_avro_df
-
-            adf = read_avro_df(spark, avro_paths, phys, with_pos=True)
-            if renames:  # decode already carries __file/__pos
-                adf = adf.select(*proj, "__file", "__pos")
-            branches.append(adf)
-        df = branches[0]
-        for b in branches[1:]:
-            df = df.unionByName(b)
         # per-file data sequence (entry-count-bounded, metadata-scale;
         # tables past DIST_PLAN_MIN_MANIFEST_BYTES would route this
         # through the distributed manifest scan like plan_files)
@@ -2332,8 +2325,7 @@ class Table:
         filters = list(filters)
         if not filters:
             raise ValueError("delete_where_mor requires at least one predicate")
-        md = self.metadata
-        snap = md.current_snapshot()
+        md, snap, schema = self.read_state()
         if snap is None:
             return None
         specs = self._spec_map(md)
@@ -2349,36 +2341,11 @@ class Table:
         if not cands:
             return None
         match = F.coalesce(self._and_predicate(filters), F.lit(False))
-        schema = self.schema()
-        renames = _renames_of(schema)
-        phys = _physical_schema(schema, renames) if renames else schema
-        proj = _current_projection(schema, renames) if renames else [F.col("*")]
-        cand_paths = [os.path.join(self.root, e["path"]) for e in cands]
-        avro_cands = [p for p in cand_paths if p.endswith(".avro")]
-        pq_cands = [p for p in cand_paths if not p.endswith(".avro")]
-        parts: list[DataFrame] = []
-        if pq_cands:
-            parts.append(
-                spark.read.schema(phys)
-                .parquet(*pq_cands)
-                .select(
-                    *proj,
-                    _file_key_col().alias("__file"),
-                    F.col("_metadata.row_index").alias("__pos"),
-                )
-                .where(match)
-                .select("__file", "__pos")
-            )
-        if avro_cands:
-            from ..sources.avro_io import read_avro_df
-
-            adf = read_avro_df(spark, avro_cands, phys, with_pos=True)
-            if renames:  # decode already carries __file/__pos
-                adf = adf.select(*proj, "__file", "__pos")
-            parts.append(adf.where(match).select("__file", "__pos"))
-        hits = parts[0]
-        for p in parts[1:]:
-            hits = hits.unionByName(p)
+        hits = (
+            self._read_entries_raw(spark, cands, schema, keep_pos=True)
+            .where(match)
+            .select("__file", "__pos")
+        )
         # Deletion-vector fast path (Iceberg v3 DV spirit): a SMALL
         # position delete is stored INLINE in the manifest entry as
         # {file_key: sorted positions} — the delete commit writes zero
@@ -2525,11 +2492,7 @@ class Table:
             snap = md.current_snapshot()
             if snap is None or not snap.delete_manifests:
                 return {"rewritten_files": 0, "dropped_delete_files": 0}
-            del_entries = [
-                e
-                for m in snap.delete_manifests
-                for e in fmt.read_manifest(self.root, m)
-            ]
+            del_entries = self.delete_files_of(snap)
             entries = self.files_of(snap)
             pos_targets = set()
             for e in del_entries:
@@ -3177,15 +3140,10 @@ class Table:
         to Spark expressions — only survivors return to the driver, so
         a heavily-pruned plan over millions of entries never
         materializes the full entry list in driver memory."""
-        md = self.metadata
-        specs = self._spec_map(md)
-        snap = (
-            self.snapshot_by_id(snapshot_id)
-            if snapshot_id is not None
-            else md.current_snapshot()
-        )
+        md, snap, _ = self.read_state(snapshot_id=snapshot_id)
         if snap is None:
             return []
+        specs = self._spec_map(md)
         threshold = (
             DIST_PLAN_MIN_MANIFEST_BYTES
             if distributed_threshold_bytes is None
@@ -3276,23 +3234,17 @@ class Table:
         Tables with merge-on-read delete files fall back to a full
         counting scan — manifest row counts predate the deletes."""
         filters = list(filters)
-        md = self.metadata
-        snap = (
-            self.snapshot_by_id(snapshot_id)
-            if snapshot_id is not None
-            else md.current_snapshot()
-        )
+        md, snap, schema = self.read_state(snapshot_id=snapshot_id)
         if snap is None:
             return {"rows": 0, "metadata_files": 0, "scanned_files": 0}
-        if snap.delete_manifests and any(
-            fmt.read_manifest(self.root, m) for m in snap.delete_manifests
-        ):
+        entries = self._plan_state(spark, filters, snap)
+        if self.delete_files_of(snap):
             if spark is None:
                 raise ValueError("MOR deletes present: counting needs spark")
-            n = self.scan(spark, filters, snapshot_id=snapshot_id).count()
-            entries = self.plan_files(filters, snapshot_id=snapshot_id, spark=spark)
+            n = self._filtered(
+                self._read_with_deletes(spark, entries, snap, schema), filters
+            ).count()
             return {"rows": n, "metadata_files": 0, "scanned_files": len(entries)}
-        entries = self.plan_files(filters, snapshot_id=snapshot_id, spark=spark)
         if not filters:
             return {
                 "rows": sum(e["rows"] for e in entries),
@@ -3315,11 +3267,9 @@ class Table:
                 raise ValueError(
                     f"{len(maybe)} boundary files need scanning: pass spark"
                 )
-            rows += (
-                self.read_entries(spark, maybe)
-                .where(self._and_predicate(filters))
-                .count()
-            )
+            rows += self._filtered(
+                self.read_entries(spark, maybe, schema), filters
+            ).count()
         return {
             "rows": rows,
             "metadata_files": len(certain),
@@ -3942,13 +3892,6 @@ class Table:
 
         fmt.commit(self.root, build)
 
-    def schema_of_snapshot(self, snapshot_id: int) -> StructType:
-        """The schema a snapshot was committed under (time-travel reads
-        use this, not the current schema)."""
-        md = self.metadata
-        snap = self.snapshot_by_id(snapshot_id)
-        return StructType.fromJson(md.schema_for(snap.schema_id))
-
     def read_entries(
         self,
         spark: SparkSession,
@@ -3998,31 +3941,31 @@ class Table:
         schema: StructType,
         keep_pos: bool = False,
     ) -> DataFrame:
-        """``keep_pos`` carries (__file, __pos) through to the result —
-        the row-lineage read derives _row_id from them."""
+        """THE data-file reader: every table read of planned entries
+        lands here. Parquet and avro files (the R5 format toggle) each
+        scan with their own distributed reader over the PHYSICAL schema
+        (current columns plus every name they ever had), the branches
+        union, and one projection maps every vintage onto the current
+        names. ``keep_pos`` carries the (__file, __pos) keys through —
+        root-relative path and row position, the MOR delete join keys
+        and the row-lineage derivation input; parquet takes them from
+        the ``_metadata`` columns, avro from its position-aware decode."""
         if not entries:
-            out_schema = schema
-            if keep_pos:
-                out_schema = StructType(
-                    list(schema.fields)
-                    + [
-                        StructField("__file", StringType(), True),
-                        StructField("__pos", LongType(), True),
-                    ]
-                )
-            return spark.createDataFrame([], out_schema)
+            pos = [StructField("__file", StringType()), StructField("__pos", LongType())]
+            return spark.createDataFrame(
+                [], StructType(schema.fields + (pos if keep_pos else []))
+            )
         renames = _renames_of(schema)
         phys = _physical_schema(schema, renames) if renames else schema
         paths = [os.path.join(self.root, e["path"]) for e in entries]
         avro = [p for p in paths if p.endswith(".avro")]
         parquet = [p for p in paths if not p.endswith(".avro")]
-        proj = _current_projection(schema, renames) if renames else [F.col("*")]
         parts: list[DataFrame] = []
         if parquet:
             df = spark.read.schema(phys).parquet(*parquet)
             if keep_pos:
                 df = df.select(
-                    *proj,
+                    "*",
                     _file_key_col().alias("__file"),
                     F.col("_metadata.row_index").alias("__pos"),
                 )
@@ -4030,16 +3973,13 @@ class Table:
         if avro:
             from ..sources.avro_io import read_avro_df
 
-            adf = read_avro_df(spark, avro, phys, with_pos=keep_pos)
-            if keep_pos and renames:
-                adf = adf.select(*proj, "__file", "__pos")
-            parts.append(adf)
+            parts.append(read_avro_df(spark, avro, phys, with_pos=keep_pos))
         df = parts[0]
         for p in parts[1:]:
             df = df.unionByName(p)
-        if renames and not keep_pos:
-            # one projection maps every vintage onto the current names
-            df = df.select(*_current_projection(schema, renames))
+        if renames:
+            pos_cols = ["__file", "__pos"] if keep_pos else []
+            df = df.select(*_current_projection(schema, renames), *pos_cols)
         return df
 
     # ---------- NDV statistics (ANALYZE TABLE / Puffin analogue) ----------
@@ -4056,37 +3996,15 @@ class Table:
         from . import ndv as _ndv
 
         k = k or _ndv.DEFAULT_K
-        schema = self.schema()
+        _, snap, schema = self.read_state()
         missing = [c for c in columns if c not in {f.name for f in schema.fields}]
         if missing:
             raise ValueError(f"analyze columns not in schema: {missing}")
-        snap = self.metadata.current_snapshot()
         if snap is None:
             raise ValueError("cannot analyze an empty table")
         entries = self.files_of(snap)
-        renames = _renames_of(schema)
-        phys = _physical_schema(schema, renames) if renames else schema
-        proj = _current_projection(schema, renames) if renames else [F.col("*")]
-        paths = [os.path.join(self.root, e["path"]) for e in entries]
-        avro = [p for p in paths if p.endswith(".avro")]
-        parquet = [p for p in paths if not p.endswith(".avro")]
-        frames: list[DataFrame] = []
-        if parquet:
-            frames.append(
-                spark.read.schema(phys)
-                .parquet(*parquet)
-                .select(*proj, _file_key_col().alias("__file"))
-            )
-        if avro:
-            from ..sources.avro_io import read_avro_df
-
-            adf = read_avro_df(spark, avro, phys, with_pos=True)
-            # explicit field list, never '*': the position-aware avro
-            # decode already carries __file/__pos, and '*' + '__file'
-            # would project the column twice (AMBIGUOUS_REFERENCE)
-            sel = proj if renames else [F.col(f.name) for f in schema.fields]
-            frames.append(adf.select(*sel, "__file"))
-        sketches = _ndv.compute_file_sketches(frames, columns, k)
+        df = self._read_entries_raw(spark, entries, schema, keep_pos=True)
+        sketches = _ndv.compute_file_sketches(df, columns, k)
         rel = _ndv.write_stats_file(self.root, snap.snapshot_id, k, sketches)
         self.set_properties(
             {"stats.file": rel, "stats.snapshot-id": str(snap.snapshot_id)}
@@ -4160,11 +4078,11 @@ class Table:
         rows = (
             keys_df.select(key_col).distinct().limit(max_keys + 1).collect()
         )
-        snap = self.metadata.current_snapshot()
+        _, snap, schema = self.read_state()
         total = len(self.files_of(snap)) if snap else 0
         keys = sorted(r[0] for r in rows if r[0] is not None)
         if not keys:
-            return spark.createDataFrame([], self.schema()), {
+            return spark.createDataFrame([], schema), {
                 "files_total": total,
                 "files_scanned": 0,
             }
@@ -4178,13 +4096,14 @@ class Table:
             lo, hi = keys_df.agg(
                 F.min(key_col), F.max(key_col)
             ).collect()[0]
-            df = self.scan(spark, [(key_col, ">=", lo), (key_col, "<=", hi)])
+            bounds = [(key_col, ">=", lo), (key_col, "<=", hi)]
+            df = self._scan_state(spark, bounds, snap, schema)
             return df, {"files_total": total, "files_scanned": None}
-        entries = self.plan_files(
-            [(key_col, ">=", keys[0]), (key_col, "<=", keys[-1])]
+        entries = self._plan_state(
+            spark, [(key_col, ">=", keys[0]), (key_col, "<=", keys[-1])], snap
         )
         kept = prune_entries_by_keys(entries, key_col, keys)
-        df = self._read_with_deletes(spark, kept, snap)
+        df = self._read_with_deletes(spark, kept, snap, schema)
         return df, {"files_total": total, "files_scanned": len(kept)}
 
     def incremental_scan(
@@ -4221,20 +4140,15 @@ class Table:
           need cheap tailing should cursor BETWEEN maintenance commits
           (the bookkeeper runs maintenance; readers tail the append
           gaps — same discipline Delta/Iceberg CDC asks for)."""
-        from_snap = self.snapshot_by_id(after_snapshot_id)
-        to_snap = (
-            self.snapshot_by_id(to_snapshot_id)
-            if to_snapshot_id is not None
-            else self.metadata.current_snapshot()
-        )
-        schema = self.schema_of_snapshot(to_snap.snapshot_id)
+        md, to_snap, schema = self.read_state(snapshot_id=to_snapshot_id)
+        from_snap = md.snapshot(after_snapshot_id)
         ins_t = F.lit("insert").alias("_change_type")
         del_t = F.lit("delete").alias("_change_type")
         if to_snap.snapshot_id == from_snap.snapshot_id:
             return spark.createDataFrame([], schema).select("*", ins_t).limit(0)
         chain: list[Snapshot] = []
         seen = False
-        for s in self.metadata.snapshots:
+        for s in md.snapshots:
             if s.snapshot_id == from_snap.snapshot_id:
                 seen = True
                 continue
@@ -4294,31 +4208,36 @@ class Table:
         list, re-apply the filters as residuals (pruning is
         conservative). ``ref`` reads a branch head or tag pin;
         ``as_of_ms`` reads the snapshot current at that wall-clock
-        instant (TIMESTAMP AS OF)."""
-        if sum(x is not None for x in (snapshot_id, ref, as_of_ms)) > 1:
-            raise ValueError("pass at most one of snapshot_id / ref / as_of_ms")
-        if as_of_ms is not None:
-            snapshot_id = self.snapshot_as_of(as_of_ms).snapshot_id
-        if ref is not None:
-            refs = self.metadata.refs
-            if ref not in refs:
-                raise KeyError(f"no such ref {ref!r}")
-            snapshot_id = refs[ref]["snapshot_id"]
-        entries = self.plan_files(filters, snapshot_id=snapshot_id, spark=spark)
-        schema = (
-            self.schema_of_snapshot(snapshot_id) if snapshot_id is not None else None
-        )
-        md = self.metadata
-        snap = (
-            self.snapshot_by_id(snapshot_id)
-            if snapshot_id is not None
-            else md.current_snapshot()
-        )
+        instant (TIMESTAMP AS OF).
+
+        One snapshot per read: the snapshot and schema resolve once
+        (read_state), and planning, MOR deletes, initial defaults and
+        the residual all come from that snapshot — a commit landing
+        mid-call is not half-visible. A head read returns the current
+        schema; a pinned read (id, ref or instant) the schema its
+        snapshot committed under."""
+        _, snap, schema = self.read_state(snapshot_id, ref, as_of_ms)
+        return self._scan_state(spark, list(filters), snap, schema)
+
+    def _plan_state(
+        self, spark: SparkSession, filters: list, snap: Snapshot | None
+    ) -> list[dict]:
+        """plan_files pinned to an already-resolved snapshot (nothing
+        for an empty table)."""
+        if snap is None:
+            return []
+        return self.plan_files(filters, snapshot_id=snap.snapshot_id, spark=spark)
+
+    def _scan_state(
+        self,
+        spark: SparkSession,
+        filters: list,
+        snap: Snapshot | None,
+        schema: StructType,
+    ) -> DataFrame:
+        entries = self._plan_state(spark, filters, snap)
         df = self._read_with_deletes(spark, entries, snap, schema=schema)
-        ops = {"<": "__lt__", "<=": "__le__", ">": "__gt__", ">=": "__ge__", "=": "__eq__", "==": "__eq__"}
-        for col, op, val in filters:
-            df = df.filter(getattr(F.col(col), ops[op])(F.lit(val)))
-        return df
+        return self._filtered(df, filters)
 
     def scan_token_search(
         self,
@@ -4338,16 +4257,14 @@ class Table:
         way. Returns (df, {files_total, files_scanned})."""
         from .bloom_index import bloom_may_contain
 
-        column = column or self.metadata.properties.get(
-            "write.token.bloom.column"
-        )
+        md, snap, schema = self.read_state()
+        column = column or md.properties.get("write.token.bloom.column")
         if not column:
             raise ValueError(
                 "no column given and write.token.bloom.column unset"
             )
         if not tokens:
             raise ValueError("scan_token_search requires at least one token")
-        snap = self.metadata.current_snapshot()
         entries = self.files_of(snap) if snap else []
         kept = []
         for e in entries:
@@ -4357,7 +4274,7 @@ class Table:
                 continue
             if all(bloom_may_contain(tb, t) for t in tokens):
                 kept.append(e)
-        df = self._read_with_deletes(spark, kept, snap)
+        df = self._read_with_deletes(spark, kept, snap, schema)
         cond = F.lit(True)
         for t in tokens:
             cond = cond & F.array_contains(
@@ -4384,7 +4301,7 @@ class Table:
 
         Derivation, not storage: ordinary appends pay ZERO bytes for
         lineage (ids are arithmetic over the manifest's first_row_id
-        and the parquet reader's _metadata.row_index); only
+        and the reader's row position, __pos); only
         lineage-preserving rewrites materialize the two columns, read
         back here by a column-pruned side read joined on (file, pos).
         Rows whose entries predate lineage (old tables) or came
@@ -4392,31 +4309,31 @@ class Table:
         never wrong. At 100 TB this is what lets incremental consumers
         (SCD2 sinks, dedup ledgers) identify rows across compactions
         without a key column."""
-        entries = self.plan_files(filters, snapshot_id=snapshot_id, spark=spark)
-        md = self.metadata
-        snap = (
-            self.snapshot_by_id(snapshot_id)
-            if snapshot_id is not None
-            else md.current_snapshot()
+        filters = list(filters)
+        _, snap, schema = self.read_state(snapshot_id=snapshot_id)
+        entries = self._plan_state(spark, filters, snap)
+        df = self._filtered(
+            self._read_with_lineage(spark, entries, snap, schema), filters
         )
-        df = self._read_with_lineage(spark, entries, snap)
-        ops = {"<": "__lt__", "<=": "__le__", ">": "__gt__", ">=": "__ge__", "=": "__eq__", "==": "__eq__"}
-        for col, op, val in filters:
-            df = df.filter(getattr(F.col(col), ops[op])(F.lit(val)))
         return df.select(
-            *[f.name for f in self.schema().fields],
+            *[f.name for f in schema.fields],
             F.col("__row_id").alias("_row_id"),
             F.col("__upd_seq").alias("_last_updated_seq"),
         )
 
     def _read_with_lineage(
-        self, spark: SparkSession, entries: list[dict], snap: Snapshot | None
+        self,
+        spark: SparkSession,
+        entries: list[dict],
+        snap: Snapshot | None,
+        schema: StructType | None = None,
     ) -> DataFrame:
         """Entry-subset read carrying physical-named lineage columns
         (__row_id, __upd_seq) — shared by scan_with_lineage and the
         lineage-preserving compaction rewrite (which writes these two
         columns into the rewritten files verbatim)."""
-        df = self._read_with_deletes(spark, entries, snap, keep_pos=True)
+        schema = schema or self.schema()
+        df = self._read_with_deletes(spark, entries, snap, schema, keep_pos=True)
         frid_rows = [
             (
                 e["path"],
@@ -4434,15 +4351,13 @@ class Table:
         if carried:
             # column-pruned side read: ONLY the two lineage columns +
             # file/pos come off disk for the rewritten files
-            lin = (
-                spark.read.schema("__row_id long, __upd_seq long")
-                .parquet(*[os.path.join(self.root, e["path"]) for e in carried])
-                .select(
-                    F.col("__row_id").alias("__crid"),
-                    F.col("__upd_seq").alias("__cseq"),
-                    _file_key_col().alias("__file"),
-                    F.col("_metadata.row_index").alias("__pos"),
-                )
+            lin = self._read_entries_raw(
+                spark, carried, _LINEAGE_SCHEMA, keep_pos=True
+            ).select(
+                F.col("__row_id").alias("__crid"),
+                F.col("__upd_seq").alias("__cseq"),
+                "__file",
+                "__pos",
             )
             df = df.join(F.broadcast(lin), ["__file", "__pos"], "left")
         else:
@@ -4456,7 +4371,7 @@ class Table:
             F.when(F.col("__frid").isNotNull(), F.col("__eseq"))
         )
         return df.select(
-            *[f.name for f in self.schema().fields],
+            *[f.name for f in schema.fields],
             row_id.alias("__row_id"),
             upd_seq.alias("__upd_seq"),
         )

@@ -558,10 +558,12 @@ def test_runtime_filtered_scan_set_pruning(spark, troot):
     tbl.append(shuffled)
     n_files = len(tbl.current_files())
     assert n_files > 1
-    # sparse keys: multiples of 1777 (6 keys over [0, 10k)); sorted
-    # files cover ~10k/n_files-wide disjoint ranges, so most contain
-    # no key
-    keys = [i * 1777 for i in range(6)]
+    # sparse keys inside ONE sorted file's ts range: the other files'
+    # ranges are disjoint from it, so they hold no key at any core
+    # count (the file count follows the writer's parallelism)
+    ts = tbl.current_files()[0]["columns"]["ts"]
+    lo, hi = int(ts["min"]), int(ts["max"])
+    keys = sorted({lo + (hi - lo) * i // 5 for i in range(6)})
     kdf = spark.createDataFrame([(k,) for k in keys], "ts long")
     df, info = tbl.scan_runtime_filtered(spark, kdf, "ts")
     assert info["files_scanned"] < info["files_total"] == n_files
