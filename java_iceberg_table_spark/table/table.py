@@ -83,6 +83,12 @@ def _dnf_branches(filters) -> list[list[tuple]]:
     return [list(filters)]
 
 
+def _dashed(result: dict) -> dict:
+    """A DML result dict spelled as snapshot-summary keys
+    (``rewritten_files`` -> ``rewritten-files``)."""
+    return {k.replace("_", "-"): v for k, v in result.items()}
+
+
 def _prefix_upper(pfx: str) -> str | None:
     """Smallest string greater than every string with prefix ``pfx``
     (bump the last bumpable code point); None when no such bound
@@ -490,6 +496,32 @@ def _parse_stat(s: str | None):
             return s
 
 
+# optional manifest-entry keys the driver-side parse never sees unless
+# a writer set them: the distributed planner's rows carry every
+# MANIFEST_SCHEMA field, so these are dropped when None / falsy
+_ENTRY_DROP_IF_NONE = ("partition_fields", "seq", "bloom", "token_bloom", "first_row_id")
+_ENTRY_DROP_IF_FALSY = ("spec_id", "row_ids_inline")
+
+
+def _entry_of_row(e: dict) -> dict:
+    """A distributed-plan manifest row (``Row.asDict(recursive=True)``)
+    as the entry dict the driver-side manifest parse yields: unset
+    optional keys absent, stats bounds back to native types. Row-lineage
+    keys must survive: scan_with_lineage plans through here past
+    DIST_PLAN_MIN_MANIFEST_BYTES."""
+    for k in _ENTRY_DROP_IF_NONE:
+        if e[k] is None:
+            del e[k]
+    for k in _ENTRY_DROP_IF_FALSY:
+        if not e[k]:
+            del e[k]
+    e["columns"] = {
+        k: {"min": _parse_stat(v["min"]), "max": _parse_stat(v["max"]), "nulls": v["nulls"]}
+        for k, v in (e["columns"] or {}).items()
+    }
+    return e
+
+
 class Table:
     def __init__(self, root: str):
         self.root = root
@@ -720,7 +752,7 @@ class Table:
         batch = uuid.uuid4().hex
         out_dir = os.path.join(self.root, "data", f"{prefix}-{batch}")
         md = self.metadata
-        t = self.transform
+        t = transform_from_json(md.partition_spec)
         spec_id = self.current_spec_id(md)
         # Iceberg-style write.target-file-size-bytes: cap output files
         # near the target by translating bytes -> rows with the table's
@@ -1449,7 +1481,8 @@ class Table:
                 return tr, None
             return None, None
 
-        t = self.transform
+        md = self.metadata  # one load: spec and spec log from one version
+        t = transform_from_json(md.partition_spec)
         if _retention_field(t)[0] is None:
             raise ValueError(
                 f"metadata-only delete requires a partition field on the "
@@ -1458,7 +1491,7 @@ class Table:
             )
         if op != "<":
             raise ValueError("v1 supports only '<' retention deletes")
-        specs = self._spec_map(self.metadata)
+        specs = self._spec_map(md)
         for sid, tr in specs.items():
             ft, _ = _retention_field(tr)
             if ft is None:
@@ -1553,6 +1586,107 @@ class Table:
             out = cond if out is None else (out | cond)
         return out
 
+    def _replan(self, op: str, attempt, operation: str = "overwrite"):
+        """The one DML re-plan loop (delete_rows, update_where, upsert,
+        merge_into, rewrite_deletes, overwrite_entries). Each attempt
+        resolves ``(md, snap, schema)`` with ONE read_state() and calls
+        ``attempt(md, snap, schema)``, which plans, validates and writes
+        against exactly that state and returns ``(result, make,
+        written)``: ``make`` is the _commit_snapshot builder (None for a
+        no-op — ``result`` is returned as is) and ``written`` the
+        entries of the files the attempt wrote.
+
+        The commit demands the planned head (None: the table must still
+        be empty), because the rewrite was computed against it. A
+        refused commit means the plan is stale: nothing references the
+        attempt's files, so their batch directories are removed before
+        the op re-plans on fresh state (Iceberg's snapshot producer
+        cleans a failed attempt the same way). Three losses raise."""
+        for _ in range(3):
+            md, snap, schema = self.read_state()
+            result, make, written = attempt(md, snap, schema)
+            if make is None:
+                return result
+            expected = snap.snapshot_id if snap is not None else None
+            if self._commit_snapshot(operation, make, expected) is not None:
+                return result
+            for e in written:
+                if e.get("path"):  # inline deletion vectors wrote nothing
+                    batch = os.path.join(*os.path.normpath(e["path"]).split(os.sep)[:2])
+                    shutil.rmtree(os.path.join(self.root, batch), ignore_errors=True)
+        raise fmt.CommitConflict(f"{op} lost the commit race 3 times")
+
+    @staticmethod
+    def _overwrite_make(
+        carried: list[dict],
+        rewritten: list[dict],
+        summary: dict,
+        drop_deletes: bool = False,
+    ):
+        """_commit_snapshot builder of an 'overwrite' snapshot.
+        ``carried`` entries keep their original sequence stamp (absent
+        = pre-MOR = 0); ``rewritten`` (freshly written files) get this
+        commit's sequence. Pending MOR delete manifests are carried —
+        they still apply to the files carried by reference — unless
+        ``drop_deletes`` (static overwrite, or the rewrite_deletes
+        materialization, which rewrote every file a delete could
+        touch)."""
+
+        def make(current, parent, seq, write_manifest):
+            stamped = list(carried) + [{**e, "seq": seq} for e in rewritten]
+            deletes = (
+                [] if drop_deletes or parent is None
+                else list(parent.delete_manifests)
+            )
+            return [write_manifest(stamped)], deletes, summary
+
+        return make
+
+    @staticmethod
+    def _row_delta_make(
+        del_entry: dict | None, data_entries: list[dict], summary: dict
+    ):
+        """_commit_snapshot builder of a 'merge' snapshot adding an
+        equality-delete entry AND new data files with the SAME sequence
+        number: the delete masks only rows in files at seq < N, so the
+        replacement rows it travels with are never masked — the
+        row-delta commit shape MERGE needs (Iceberg RowDelta)."""
+
+        def make(current, parent, seq, write_manifest):
+            manifests = list(parent.manifests) if parent else []
+            delete_manifests = list(parent.delete_manifests) if parent else []
+            if data_entries:
+                manifests.append(
+                    write_manifest([{**e, "seq": seq} for e in data_entries])
+                )
+            if del_entry is not None:
+                delete_manifests.append(write_manifest([{**del_entry, "seq": seq}]))
+            return manifests, delete_manifests, summary
+
+        return make
+
+    def _dnf_candidates(
+        self, spark: SparkSession, snap: Snapshot | None, branches
+    ) -> tuple[list[dict], list[dict]]:
+        """``(cands, keep)`` of a copy-on-write rewrite of ``snap``: a
+        file is a candidate iff ANY OR-branch's conjunction admits it —
+        the union of the scan planner's per-branch admissible sets, so
+        past DIST_PLAN_MIN_MANIFEST_BYTES each branch runs as a
+        distributed manifest scan and a selective rewrite over millions
+        of entries never evaluates pruning predicates in a Python loop.
+        Candidates are re-filtered row-wise with the FULL residual
+        predicate; everything else is carried by reference."""
+        if snap is None:
+            return [], []
+        paths: set = set()
+        for br in branches:
+            paths.update(e["path"] for e in self._plan_state(spark, br, snap))
+        entries = self.files_of(snap)
+        return (
+            [e for e in entries if e["path"] in paths],
+            [e for e in entries if e["path"] not in paths],
+        )
+
     def delete_rows(
         self, spark: SparkSession, filters
     ) -> dict[str, int]:
@@ -1563,66 +1697,36 @@ class Table:
         OR-of-conjunction trees (IN lists and prefix LIKE included).
 
         Scale design: file stats prune the rewrite set BEFORE any data
-        IO — a file is a candidate iff ANY branch's conjunction admits
-        it (union of per-branch stats-admissible sets), and candidates
-        are re-filtered row-wise with the FULL residual predicate, so
-        a selective OR never rewrites the whole table. Everything else
-        is carried by reference. Rows where the predicate is NULL are
-        KEPT (SQL DELETE semantics). One atomic 'overwrite' snapshot;
-        on a concurrent commit the rewrite re-plans against the new
-        state (written orphans are reclaimed by snapshot-expiry GC)."""
+        IO (_dnf_candidates), so a selective OR never rewrites the
+        whole table. Rows where the predicate is NULL are KEPT (SQL
+        DELETE semantics). One atomic 'overwrite' snapshot; on a
+        concurrent commit the rewrite re-plans against the new state
+        (_replan)."""
         branches = _dnf_branches(filters)
         if not any(branches):
             raise ValueError("delete_rows requires at least one predicate")
-        for attempt in range(3):
-            md = self.metadata
-            snap = md.current_snapshot()
-            if snap is None:
-                return {"rewritten_files": 0, "deleted_rows": 0}
-            entries = self.files_of(snap)
-            # candidate selection = UNION over OR-branches of the scan
-            # planner's admissible set: below the manifest-volume
-            # threshold this is the same driver loop as before; past
-            # DIST_PLAN_MIN_MANIFEST_BYTES each branch's conjunction
-            # compiles to Spark expressions and runs as a distributed
-            # manifest scan — a selective delete over millions of
-            # entries never evaluates pruning predicates in a Python
-            # loop (the SHOW PARTITIONS scale rule applied to DML)
-            cand_path_set: set = set()
-            for br in branches:
-                cand_path_set.update(
-                    e["path"]
-                    for e in self.plan_files(
-                        br, snapshot_id=snap.snapshot_id, spark=spark
-                    )
-                )
-            cands = [e for e in entries if e["path"] in cand_path_set]
+
+        def attempt(md, snap, schema):
+            cands, keep = self._dnf_candidates(spark, snap, branches)
             if not cands:
-                return {"rewritten_files": 0, "deleted_rows": 0}
-            cand_paths = {e["path"] for e in cands}
-            keep = [e for e in entries if e["path"] not in cand_paths]
+                return {"rewritten_files": 0, "deleted_rows": 0}, None, []
             match = F.coalesce(self._dnf_predicate(branches), F.lit(False))
             # ONE job rewrites every candidate file: survivors are
             # re-clustered by partition bucket and written via
             # partitionBy — a delete touching 200 buckets runs one
             # Spark job, not 200 driver-serialized ones
-            survivors = self._read_with_deletes(spark, cands, snap).filter(~match)
+            survivors = self._read_with_deletes(spark, cands, snap, schema).filter(~match)
             new_entries = self._write_data_files(
                 survivors, prefix="rw", n_tasks=max(1, len(cands) // 4)
             )
-            deleted = sum(e["rows"] for e in cands) - sum(e["rows"] for e in new_entries)
-            committed = self._commit_overwrite(
-                snap.snapshot_id,
-                keep,
-                new_entries,
-                {
-                    "rewritten-files": len(cands),
-                    "deleted-rows": deleted,
-                },
-            )
-            if committed:
-                return {"rewritten_files": len(cands), "deleted_rows": deleted}
-        raise fmt.CommitConflict("delete_rows lost the commit race 3 times")
+            result = {
+                "rewritten_files": len(cands),
+                "deleted_rows": sum(e["rows"] for e in cands)
+                - sum(e["rows"] for e in new_entries),
+            }
+            return result, self._overwrite_make(keep, new_entries, _dashed(result)), new_entries
+
+        return self._replan("delete_rows", attempt)
 
     def update_where(
         self,
@@ -1649,34 +1753,17 @@ class Table:
         branches = _dnf_branches(filters)
         if not any(branches):
             raise ValueError("update_where requires at least one predicate")
-        schema = self.schema()
-        by_name = {f.name: f for f in schema.fields}
-        for c in set_exprs:
-            if c not in by_name:
-                raise ValueError(f"unknown column {c!r}")
-        for attempt in range(3):
-            md = self.metadata
-            snap = md.current_snapshot()
-            if snap is None:
-                return {"rewritten_files": 0, "updated_rows": 0}
-            entries = self.files_of(snap)
-            # same union-of-branches planning as delete_rows — the
-            # distributed manifest scan kicks in past the threshold
-            cand_path_set: set = set()
-            for br in branches:
-                cand_path_set.update(
-                    e["path"]
-                    for e in self.plan_files(
-                        br, snapshot_id=snap.snapshot_id, spark=spark
-                    )
-                )
-            cands = [e for e in entries if e["path"] in cand_path_set]
+
+        def attempt(md, snap, schema):
+            by_name = {f.name: f for f in schema.fields}
+            for c in set_exprs:
+                if c not in by_name:
+                    raise ValueError(f"unknown column {c!r}")
+            cands, keep = self._dnf_candidates(spark, snap, branches)
             if not cands:
-                return {"rewritten_files": 0, "updated_rows": 0}
-            cand_paths = {e["path"] for e in cands}
-            keep = [e for e in entries if e["path"] not in cand_paths]
+                return {"rewritten_files": 0, "updated_rows": 0}, None, []
             match = F.coalesce(self._dnf_predicate(branches), F.lit(False))
-            df = self._read_with_deletes(spark, cands, snap)
+            df = self._read_with_deletes(spark, cands, snap, schema)
             updated_rows = df.filter(match).count()
             # ONE select so every SET expression evaluates against the
             # OLD row (SQL UPDATE semantics) — sequential withColumn
@@ -1700,21 +1787,10 @@ class Table:
             new_entries = self._write_data_files(
                 out, prefix="up", n_tasks=max(1, len(cands) // 4)
             )
-            committed = self._commit_overwrite(
-                snap.snapshot_id,
-                keep,
-                new_entries,
-                {
-                    "rewritten-files": len(cands),
-                    "updated-rows": updated_rows,
-                },
-            )
-            if committed:
-                return {
-                    "rewritten_files": len(cands),
-                    "updated_rows": updated_rows,
-                }
-        raise fmt.CommitConflict("update_where lost the commit race 3 times")
+            result = {"rewritten_files": len(cands), "updated_rows": updated_rows}
+            return result, self._overwrite_make(keep, new_entries, _dashed(result)), new_entries
+
+        return self._replan("update_where", attempt)
 
     def upsert(
         self, spark: SparkSession, updates: DataFrame, key_cols: list[str]
@@ -1729,10 +1805,8 @@ class Table:
         rewrites one bucket's files, not the table. The updates set is
         broadcast into a left-anti join against each rewritten file
         group — the big side (table files) never shuffles."""
-        for attempt in range(3):
-            md = self.metadata
-            snap = md.current_snapshot()
-            t = self.transform
+
+        def attempt(md, snap, schema):
             entries = self.files_of(snap) if snap is not None else []
             cands = _key_bound_candidates(
                 entries, _key_bounds(updates, key_cols), key_cols
@@ -1746,33 +1820,23 @@ class Table:
                 # anti-join drops replaced keys; the big side never
                 # shuffles except the bucket re-cluster): an upsert
                 # touching 200 buckets runs one Spark job, not 200
-                unreplaced = self._read_with_deletes(spark, cands, snap).join(
+                unreplaced = self._read_with_deletes(spark, cands, snap, schema).join(
                     F.broadcast(keys), key_cols, "left_anti"
                 )
                 new_entries = self._write_data_files(
                     unreplaced, prefix="mg", n_tasks=max(1, len(cands) // 4)
                 )
             inserted = self._write_data_files(updates, prefix="mg")
-            replaced = sum(e["rows"] for e in cands) - sum(
-                e["rows"] for e in new_entries
-            )
-            committed = self._commit_overwrite(
-                snap.snapshot_id if snap is not None else None,
-                keep,
-                new_entries + inserted,
-                {
-                    "rewritten-files": len(cands),
-                    "replaced-rows": replaced,
-                    "upserted-rows": sum(e["rows"] for e in inserted),
-                },
-            )
-            if committed:
-                return {
-                    "rewritten_files": len(cands),
-                    "replaced_rows": replaced,
-                    "upserted_rows": sum(e["rows"] for e in inserted),
-                }
-        raise fmt.CommitConflict("upsert lost the commit race 3 times")
+            result = {
+                "rewritten_files": len(cands),
+                "replaced_rows": sum(e["rows"] for e in cands)
+                - sum(e["rows"] for e in new_entries),
+                "upserted_rows": sum(e["rows"] for e in inserted),
+            }
+            written = new_entries + inserted
+            return result, self._overwrite_make(keep, written, _dashed(result)), written
+
+        return self._replan("upsert", attempt)
 
     def merge_into(
         self,
@@ -1842,82 +1906,83 @@ class Table:
                 "BY SOURCE DELETE and BY SOURCE UPDATE both act on the "
                 "same absent-key set; use one"
             )
-        cols = [f.name for f in self.schema().fields]
-        missing = [c for c in on if c not in cols]
-        if missing:
-            raise ValueError(f"merge keys not in table schema: {missing}")
-        if update_not_matched_by_source:
-            bad = [c for c in update_not_matched_by_source if c not in cols]
-            if bad:
+
+        def attempt(md, snap, schema):
+            cols = [f.name for f in schema.fields]
+            missing = [c for c in on if c not in cols]
+            if missing:
+                raise ValueError(f"merge keys not in table schema: {missing}")
+            if update_not_matched_by_source:
+                bad = [c for c in update_not_matched_by_source if c not in cols]
+                if bad:
+                    raise ValueError(
+                        f"BY SOURCE UPDATE targets not in schema: {bad}"
+                    )
+                keyed = [c for c in update_not_matched_by_source if c in on]
+                if keyed:
+                    raise ValueError(
+                        f"BY SOURCE UPDATE must not assign merge keys {keyed} "
+                        "(the masking eq-delete is keyed on the OLD value)"
+                    )
+            # a merge key carrying an initial default cannot be supported:
+            # matching sees the FILLED value but the equality delete masks
+            # only PHYSICAL values, so the superseded pre-add row (physical
+            # NULL) would survive next to its replacement
+            defaulted = [c for c in on if c in _defaults_of(schema)]
+            if defaulted:
                 raise ValueError(
-                    f"BY SOURCE UPDATE targets not in schema: {bad}"
+                    f"merge keys {defaulted} carry an initial default; merge on "
+                    "columns without one (or rewrite the table first)"
                 )
-            keyed = [c for c in update_not_matched_by_source if c in on]
-            if keyed:
-                raise ValueError(
-                    f"BY SOURCE UPDATE must not assign merge keys {keyed} "
-                    "(the masking eq-delete is keyed on the OLD value)"
+            if (
+                update is not None
+                or delete_condition is not None
+                or delete_not_matched_by_source
+                or update_not_matched_by_source
+            ):
+                # Delta/Iceberg MERGE contract: multiple source rows
+                # matching one target row is an error, not a silent
+                # row multiplication (each duplicate would append its own
+                # replacement while the single eq-delete key masks only
+                # the one superseded version). BY SOURCE full-sync merges
+                # get the same refusal even though their anti-join
+                # distinct() would mask it: a mirror source is by contract
+                # one authoritative row per key, so duplicates mean the
+                # caller's extract is broken and silent dup-inserts would
+                # corrupt the mirror. The ONE exempt shape is insert-only
+                # MERGE (update=None, no delete clauses): unmatched
+                # duplicate source rows each insert, matching Delta, which
+                # only enforces cardinality on rows that MATCH a target.
+                dup = (
+                    source.groupBy(*on)
+                    .count()
+                    .filter(F.col("count") > 1)
+                    .limit(1)
+                    .count()
                 )
-        # a merge key carrying an initial default cannot be supported:
-        # matching sees the FILLED value but the equality delete masks
-        # only PHYSICAL values, so the superseded pre-add row (physical
-        # NULL) would survive next to its replacement
-        defaulted = [c for c in on if c in _defaults_of(self.schema())]
-        if defaulted:
-            raise ValueError(
-                f"merge keys {defaulted} carry an initial default; merge on "
-                "columns without one (or rewrite the table first)"
-            )
-        if (
-            update is not None
-            or delete_condition is not None
-            or delete_not_matched_by_source
-            or update_not_matched_by_source
-        ):
-            # Delta/Iceberg MERGE contract: multiple source rows
-            # matching one target row is an error, not a silent
-            # row multiplication (each duplicate would append its own
-            # replacement while the single eq-delete key masks only
-            # the one superseded version). BY SOURCE full-sync merges
-            # get the same refusal even though their anti-join
-            # distinct() would mask it: a mirror source is by contract
-            # one authoritative row per key, so duplicates mean the
-            # caller's extract is broken and silent dup-inserts would
-            # corrupt the mirror. The ONE exempt shape is insert-only
-            # MERGE (update=None, no delete clauses): unmatched
-            # duplicate source rows each insert, matching Delta, which
-            # only enforces cardinality on rows that MATCH a target.
-            dup = (
-                source.groupBy(*on)
-                .count()
-                .filter(F.col("count") > 1)
-                .limit(1)
-                .count()
-            )
-            if dup:
-                raise ValueError(
-                    "merge source has multiple rows per key; aggregate it "
-                    "to one row per key first (MERGE matched-clause "
-                    "cardinality violation)"
-                )
-        for attempt in range(3):
-            md = self.metadata
-            snap = md.current_snapshot()
+                if dup:
+                    raise ValueError(
+                        "merge source has multiple rows per key; aggregate it "
+                        "to one row per key first (MERGE matched-clause "
+                        "cardinality violation)"
+                    )
             entries = self.files_of(snap) if snap is not None else []
             cands = _key_bound_candidates(entries, _key_bounds(source, on), on)
             src = source.alias("s")
-            schema = self.schema()
 
             def aligned(df: DataFrame) -> DataFrame:
                 return df.select(
                     [F.col(c).cast(schema[c].dataType).alias(c) for c in cols]
                 )
 
+            def target(es: list[dict]) -> DataFrame:
+                return self._read_with_deletes(spark, es, snap, schema)
+
             matched = None
             if cands:
                 # explicit t./s. join condition (not USING) so clause
                 # expressions can reference both sides of the key
-                tgt = self._read_with_deletes(spark, cands, snap).alias("t")
+                tgt = target(cands).alias("t")
                 cond = None
                 for c in on:
                     eq = F.col(f"t.{c}") == F.col(f"s.{c}")
@@ -1962,7 +2027,7 @@ class Table:
                 # the source masks via the same eq-delete entry (no
                 # replacement rows travel with these keys)
                 drop_keys = (
-                    self._read_with_deletes(spark, entries, snap)
+                    target(entries)
                     .select(*on)
                     .join(src.select(*on).distinct(), on, "left_anti")
                 )
@@ -1975,7 +2040,7 @@ class Table:
                 # by the eq-delete on their (unchanged) keys, updated
                 # versions travel as new files in the same row delta
                 absent = (
-                    self._read_with_deletes(spark, entries, snap)
+                    target(entries)
                     .alias("t")
                     .join(
                         F.broadcast(src.select(*on).distinct()),
@@ -2033,8 +2098,7 @@ class Table:
             if insert:
                 inserts = src
                 if cands:
-                    tgt_keys = self._read_with_deletes(spark, cands, snap).select(*on)
-                    inserts = src.join(tgt_keys, on, "left_anti")
+                    inserts = src.join(target(cands).select(*on), on, "left_anti")
                 inserts = aligned(inserts)
                 n_inserted = inserts.count()
                 if n_inserted == 0:
@@ -2045,7 +2109,7 @@ class Table:
                     continue
                 new_data = piece if new_data is None else new_data.unionByName(piece)
             del_entry, n_del_files = (
-                self._build_eq_delete_entry(changed_keys, list(on))
+                self._build_eq_delete_entry(changed_keys, list(on), schema)
                 if changed_keys is not None
                 else (None, 0)
             )
@@ -2054,69 +2118,32 @@ class Table:
                 if new_data is not None
                 else []
             )
+            result = {
+                "updated_rows": n_updated,
+                "deleted_rows": n_deleted,
+                "inserted_rows": n_inserted,
+                "source_deleted_rows": n_src_deleted,
+                "source_updated_rows": n_src_updated,
+            }
             if del_entry is None and not data_entries:
-                return {
-                    "updated_rows": 0,
-                    "deleted_rows": 0,
-                    "inserted_rows": 0,
-                    "source_deleted_rows": 0,
-                    "source_updated_rows": 0,
-                }
-            committed = self._commit_row_delta(
-                snap.snapshot_id if snap is not None else None,
-                del_entry,
-                data_entries,
-                {
-                    "merged-update-rows": n_updated,
-                    "merged-delete-rows": n_deleted,
-                    "merged-insert-rows": n_inserted,
-                    "merged-source-delete-rows": n_src_deleted,
-                    "merged-source-update-rows": n_src_updated,
-                    **(
-                        {"added-equality-deletes": del_entry["rows"],
-                         "added-delete-files": n_del_files}
-                        if del_entry is not None
-                        else {}
-                    ),
-                },
-            )
-            if committed:
-                return {
-                    "updated_rows": n_updated,
-                    "deleted_rows": n_deleted,
-                    "inserted_rows": n_inserted,
-                    "source_deleted_rows": n_src_deleted,
-                    "source_updated_rows": n_src_updated,
-                }
-        raise fmt.CommitConflict("merge_into lost the commit race 3 times")
+                return dict.fromkeys(result, 0), None, []
+            summary = {
+                "merged-update-rows": n_updated,
+                "merged-delete-rows": n_deleted,
+                "merged-insert-rows": n_inserted,
+                "merged-source-delete-rows": n_src_deleted,
+                "merged-source-update-rows": n_src_updated,
+                **(
+                    {"added-equality-deletes": del_entry["rows"],
+                     "added-delete-files": n_del_files}
+                    if del_entry is not None
+                    else {}
+                ),
+            }
+            written = data_entries + ([del_entry] if del_entry is not None else [])
+            return result, self._row_delta_make(del_entry, data_entries, summary), written
 
-    def _commit_row_delta(
-        self,
-        expected_parent: int | None,
-        del_entry: dict | None,
-        data_entries: list[dict],
-        summary: dict,
-    ) -> Snapshot | None:
-        """One atomic 'merge' snapshot adding an equality-delete entry
-        AND new data files with the SAME sequence number: the delete
-        masks only rows in files at seq < N, so the replacement rows it
-        travels with are never masked — the row-delta commit shape
-        MERGE needs (Iceberg RowDelta). Refuses (returns None, caller
-        retries) when the head moved past the snapshot the delta was
-        computed against — the matched set may be stale."""
-
-        def make(current, parent, seq, write_manifest):
-            manifests = list(parent.manifests) if parent else []
-            delete_manifests = list(parent.delete_manifests) if parent else []
-            if data_entries:
-                manifests.append(
-                    write_manifest([{**e, "seq": seq} for e in data_entries])
-                )
-            if del_entry is not None:
-                delete_manifests.append(write_manifest([{**del_entry, "seq": seq}]))
-            return manifests, delete_manifests, summary
-
-        return self._commit_snapshot("merge", make, expected_parent)
+        return self._replan("merge_into", attempt, "merge")
 
     # ---------- merge-on-read row-level deletes (Iceberg v2) ----------
 
@@ -2407,7 +2434,7 @@ class Table:
         value, so it is dropped here rather than written — a mistyped
         key committed raw would poison every subsequent read (the MOR
         key frame is typed through the schema at scan time)."""
-        entry, n_files = self._build_eq_delete_entry(keys, key_cols)
+        entry, n_files = self._build_eq_delete_entry(keys, key_cols, self.schema())
         if entry is None:
             return None
         return self._commit_deletes(
@@ -2420,16 +2447,17 @@ class Table:
             },
         )
 
-    def _type_keys_through_schema(
-        self, keys: DataFrame, key_cols: list[str]
-    ) -> DataFrame:
-        """Cast key columns to the TABLE schema's types with a
-        round-trip guard: a key the column type cannot represent
-        exactly (3.5 against a long column) can never equal any stored
-        value, so it is dropped rather than committed — a mistyped key
-        would poison every subsequent read (the MOR key frame is typed
-        through the schema at scan time)."""
-        tbl_types = {f.name: f.dataType for f in self.schema().fields}
+    def _build_eq_delete_entry(
+        self, keys: DataFrame, key_cols: list[str], schema: StructType
+    ) -> tuple[dict | None, int]:
+        """(manifest delete entry, delete-files-written) for an
+        equality-delete key set — inline-DV fast path for small
+        JSON-representable key sets (the delete writes no files),
+        parquet delete file otherwise. None when the key set is empty.
+        Keys are typed through the table ``schema`` first (the
+        round-trip guard delete_eq_mor describes). Shared by
+        delete_eq_mor and merge_into."""
+        tbl_types = {f.name: f.dataType for f in schema.fields}
         for c in key_cols:
             tgt = tbl_types.get(c)
             src = keys.schema[c].dataType
@@ -2438,18 +2466,6 @@ class Table:
                 keys = keys.filter(
                     cast.isNotNull() & (cast.cast(src) == F.col(c))
                 ).withColumn(c, cast)
-        return keys
-
-    def _build_eq_delete_entry(
-        self, keys: DataFrame, key_cols: list[str]
-    ) -> tuple[dict | None, int]:
-        """(manifest delete entry, delete-files-written) for an
-        equality-delete key set — inline-DV fast path for small
-        JSON-representable key sets (the delete writes no files),
-        parquet delete file otherwise. None when the key set is empty.
-        Keys are typed through the table schema first (round-trip
-        guard). Shared by delete_eq_mor and merge_into."""
-        keys = self._type_keys_through_schema(keys, key_cols)
         distinct = keys.select(*key_cols).dropDuplicates(key_cols)
         # inline-DV fast path, same rationale as position deletes: a
         # small key set rides in the manifest entry and the delete
@@ -2487,11 +2503,10 @@ class Table:
         delete files from metadata (Iceberg's rewrite_position_delete_
         files / major compaction): rewrite exactly the data files a
         delete could still touch, carry the rest by reference."""
-        for attempt in range(3):
-            md = self.metadata
-            snap = md.current_snapshot()
+
+        def attempt(md, snap, schema):
             if snap is None or not snap.delete_manifests:
-                return {"rewritten_files": 0, "dropped_delete_files": 0}
+                return {"rewritten_files": 0, "dropped_delete_files": 0}, None, []
             del_entries = self.delete_files_of(snap)
             entries = self.files_of(snap)
             pos_targets = set()
@@ -2521,31 +2536,23 @@ class Table:
             carried = [e for e in entries if e not in affected]
             new_entries: list[dict] = []
             if affected:
-                clean_df = self._read_with_deletes(spark, affected, snap)
+                clean_df = self._read_with_deletes(spark, affected, snap, schema)
                 new_entries = self._write_data_files(
                     clean_df, prefix="md", n_tasks=max(1, len(affected) // 4)
                 )
-            committed = self._commit_overwrite(
-                snap.snapshot_id,
-                carried,
-                new_entries,
-                {
-                    "rewritten-files": len(affected),
-                    "dropped-delete-files": len(del_entries),
-                    # visible-row content is unchanged (this rewrite only
-                    # FOLDS already-committed deletes into the data
-                    # files); CDC readers step their cursor through
-                    # marked rewrites instead of raising
-                    "content-preserving": True,
-                },
-                drop_deletes=True,
-            )
-            if committed:
-                return {
-                    "rewritten_files": len(affected),
-                    "dropped_delete_files": len(del_entries),
-                }
-        raise fmt.CommitConflict("rewrite_deletes lost the commit race 3 times")
+            result = {
+                "rewritten_files": len(affected),
+                "dropped_delete_files": len(del_entries),
+            }
+            # visible-row content is unchanged (this rewrite only FOLDS
+            # already-committed deletes into the data files); CDC
+            # readers step their cursor through marked rewrites instead
+            # of raising
+            summary = {**_dashed(result), "content-preserving": True}
+            make = self._overwrite_make(carried, new_entries, summary, drop_deletes=True)
+            return result, make, new_entries
+
+        return self._replan("rewrite_deletes", attempt)
 
     def overwrite_entries(
         self,
@@ -2565,15 +2572,16 @@ class Table:
         and pending deletes are carried with them. One 'overwrite'
         snapshot either way — readers see the old or the new content,
         never a mix. This is the connector's mode('overwrite') commit
-        (Spark INSERT OVERWRITE static/dynamic semantics)."""
-        cur_sid = self.current_spec_id()
-        for attempt in range(3):
-            md = self.metadata
-            snap = md.current_snapshot()
+        (Spark INSERT OVERWRITE static/dynamic semantics). The caller
+        wrote ``entries``, so a lost race re-commits them, never
+        removes them."""
+
+        def attempt(md, snap, schema):
             cur = self.files_of(snap) if snap is not None else []
             if partitions is None:
                 carried: list[dict] = []
             else:
+                cur_sid = self.current_spec_id(md)
                 pset = set(partitions)
                 carried = [
                     e
@@ -2581,50 +2589,18 @@ class Table:
                     if int(e.get("spec_id", 0) or 0) != cur_sid
                     or _entry_partition_key(e) not in pset
                 ]
-            if self._commit_overwrite(
-                snap.snapshot_id if snap is not None else None,
-                carried,
-                entries,
-                {
-                    "overwrite-mode": "static" if partitions is None else "dynamic",
-                    "replaced-files": len(cur) - len(carried),
-                    "added-files": len(entries),
-                    **(extra_summary or {}),
-                },
-                drop_deletes=partitions is None,
-            ):
-                return
-        raise fmt.CommitConflict("overwrite lost the commit race 3 times")
-
-    def _commit_overwrite(
-        self,
-        expected_parent: int | None,
-        carried: list[dict],
-        rewritten: list[dict],
-        summary: dict,
-        drop_deletes: bool = False,
-    ) -> bool:
-        """Commit an 'overwrite' snapshot iff the table still points at
-        ``expected_parent`` (the rewrite's base). Returns False on a
-        lost race so the caller can re-plan against fresh state.
-
-        ``carried`` entries keep their original sequence stamp (absent
-        = pre-MOR = 0); ``rewritten`` (freshly written files) get this
-        commit's sequence. Pending MOR delete manifests are carried —
-        they still apply to the files carried by reference — unless
-        ``drop_deletes`` (the rewrite_deletes materialization, which
-        has rewritten every file a delete could touch)."""
-
-        def make(current, parent, seq, write_manifest):
-            stamped = list(carried) + [{**e, "seq": seq} for e in rewritten]
-            deletes = (
-                [] if drop_deletes or parent is None
-                else list(parent.delete_manifests)
+            summary = {
+                "overwrite-mode": "static" if partitions is None else "dynamic",
+                "replaced-files": len(cur) - len(carried),
+                "added-files": len(entries),
+                **(extra_summary or {}),
+            }
+            make = self._overwrite_make(
+                carried, entries, summary, drop_deletes=partitions is None
             )
-            return [write_manifest(stamped)], deletes, summary
+            return None, make, []
 
-        return self._commit_snapshot("overwrite", make, expected_parent) is not None
-
+        self._replan("overwrite", attempt)
 
     def expire_snapshots(
         self,
@@ -3311,62 +3287,7 @@ class Table:
         df = self._manifest_entries_df(spark, snap.manifests)
         for flt in filters:
             df = df.filter(self._entry_may_match_expr(specs, flt))
-        out = []
-        for r in df.collect():
-            cols = {
-                k: {"min": _parse_stat(v["min"]), "max": _parse_stat(v["max"]), "nulls": v["nulls"]}
-                for k, v in (r["columns"] or {}).items()
-            }
-            out.append(
-                {
-                    "path": r["path"],
-                    "rows": r["rows"],
-                    "bytes": r["bytes"],
-                    "partition": r["partition"],
-                    **(
-                        {"partition_fields": list(r["partition_fields"])}
-                        if "partition_fields" in r.__fields__
-                        and r["partition_fields"] is not None
-                        else {}
-                    ),
-                    "columns": cols,
-                    **({"seq": r["seq"]} if r["seq"] is not None else {}),
-                    **(
-                        {"spec_id": r["spec_id"]}
-                        if "spec_id" in r.__fields__ and r["spec_id"]
-                        else {}
-                    ),
-                    **(
-                        {"bloom": r["bloom"].asDict(recursive=True)}
-                        if "bloom" in r.__fields__ and r["bloom"] is not None
-                        else {}
-                    ),
-                    **(
-                        {"token_bloom": r["token_bloom"].asDict(recursive=True)}
-                        if "token_bloom" in r.__fields__
-                        and r["token_bloom"] is not None
-                        else {}
-                    ),
-                    # row-lineage fields must survive the distributed
-                    # path: scan_with_lineage plans through here once
-                    # manifests cross DIST_PLAN_MIN_MANIFEST_BYTES, and
-                    # dropping them here made _row_id NULL exactly at
-                    # the scale the feature targets
-                    **(
-                        {"first_row_id": int(r["first_row_id"])}
-                        if "first_row_id" in r.__fields__
-                        and r["first_row_id"] is not None
-                        else {}
-                    ),
-                    **(
-                        {"row_ids_inline": True}
-                        if "row_ids_inline" in r.__fields__
-                        and r["row_ids_inline"]
-                        else {}
-                    ),
-                }
-            )
-        return out
+        return [_entry_of_row(r.asDict(recursive=True)) for r in df.collect()]
 
     @staticmethod
     def _entry_may_match_expr(

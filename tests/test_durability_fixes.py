@@ -317,8 +317,9 @@ def test_rewrite_refused_reports_nothing(spark, troot, monkeypatch, rewrite, pre
 
 def test_one_commit_path():
     """The commit protocol is written once: the fsync'd link-CAS
-    publish and the retry backoff live only in format.py, and table.py
-    constructs snapshots in one place (Table._commit_snapshot)."""
+    publish and the retry backoff live only in format.py, table.py
+    constructs snapshots in one place (Table._commit_snapshot), and the
+    DML ops share one re-plan loop (Table._replan)."""
     import re
 
     tdir = os.path.join(
@@ -333,4 +334,7 @@ def test_one_commit_path():
             assert "os.fsync(" not in src, f"{fname} fsyncs: publish through format.py"
             assert "time.sleep(" not in src, f"{fname} backs off: use format.retry_commit"
     with open(os.path.join(tdir, "table.py")) as f:
-        assert len(re.findall(r"\bSnapshot\(", f.read())) == 1
+        src = f.read()
+    assert len(re.findall(r"\bSnapshot\(", src)) == 1
+    assert src.count("lost the commit race") == 1
+    assert src.count("for attempt in range(3)") <= 1
