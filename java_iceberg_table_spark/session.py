@@ -18,6 +18,10 @@ scale-readiness:
 around an action: it sets the overrides on entry and restores the
 prior values (unsetting keys that had none) on exit, exceptions
 included, so a query never leaks a conf change into the session.
+
+``read_paths`` is the one reader for files whose exact paths a table's
+metadata already names (data, delete and manifest files): it builds the
+read without Spark's distributed file-listing job.
 """
 
 from __future__ import annotations
@@ -26,7 +30,10 @@ import contextlib
 import os
 from collections.abc import Iterator
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+_DISCOVERY_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
 
 
 def default_parallelism() -> int:
@@ -83,3 +90,32 @@ def conf_scope(
                 spark.conf.unset(key)
             else:
                 spark.conf.set(key, prior)
+
+
+def read_paths(
+    spark: SparkSession,
+    fmt: str,
+    paths: list[str],
+    schema: StructType | str | None = None,
+    **options: str,
+) -> DataFrame:
+    """``spark.read`` of format ``fmt`` over the exact file list
+    ``paths``, with ``schema`` (inferred from the files when None) and
+    reader ``options``.
+
+    Building a read over more paths than
+    ``spark.sql.sources.parallelPartitionDiscovery.threshold`` starts a
+    Spark job of one task per path that only stats the files. The
+    manifest already holds every path and size, so for a longer list the
+    threshold is raised to ``len(paths)`` for the build alone and the
+    driver stats the files itself. A higher session setting is never
+    lowered, and a list within the threshold changes no conf. The trade
+    is N driver ``stat`` calls in place of one job: cheap on local and
+    tmpfs stores, N HEAD round trips on an object store."""
+    reader = spark.read.format(fmt).options(**options)
+    if schema is not None:
+        reader = reader.schema(schema)
+    threshold = int(spark.conf.get(_DISCOVERY_THRESHOLD))
+    raised = len(paths) if len(paths) > threshold else None
+    with conf_scope(spark, {_DISCOVERY_THRESHOLD: raised}):
+        return reader.load(paths)

@@ -475,6 +475,8 @@ def read_avro_df(spark, paths: list[str], spark_schema=None, with_pos: bool = Fa
     import pandas as pd
     from pyspark.sql import types as T
 
+    from ..session import read_paths
+
     if spark_schema is None:
         schema_json, _ = read_ocf(paths[0])
         spark_schema = spark_schema_of(schema_json)
@@ -504,7 +506,7 @@ def read_avro_df(spark, paths: list[str], spark_schema=None, with_pos: bool = Fa
                     out["__pos"] = pd.Series(range(len(out)), dtype="int64")
                 yield out
 
-    bin_df = spark.read.format("binaryFile").load(paths)
+    bin_df = read_paths(spark, "binaryFile", paths)
     if with_pos:
         out_schema = T.StructType(
             list(spark_schema.fields)

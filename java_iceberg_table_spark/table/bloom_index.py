@@ -32,6 +32,9 @@ import zlib
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from ..session import read_paths
 
 BITS_PER_KEY = 10
 NUM_HASHES = 7
@@ -81,10 +84,13 @@ def build_file_blooms(
     spark: SparkSession,
     file_rows: dict[str, int],
     column: str,
+    schema: StructType | None = None,
 ) -> dict[str, dict]:
     """One Spark job: per-file Bloom filters over ``column`` for every
     (absolute path -> row count) in ``file_rows``. Returns
     {abs_path: {"column", "bits", "k", "words": [int64 × bits/64]}}.
+    ``schema`` is the files' read schema, at least ``column``; None
+    infers it from the files at the cost of one more job.
 
     The per-file bit width is keyed into the plan as a literal map
     (path basename -> bits), so files of different sizes get
@@ -95,7 +101,7 @@ def build_file_blooms(
         *[F.lit(x) for kv in base_bits.items() for x in kv]
     )
     df = (
-        spark.read.parquet(*paths)
+        read_paths(spark, "parquet", paths, schema)
         .select(
             F.col(column).cast("string").alias("__v"),
             _rel_key_col().alias("__f"),
@@ -165,6 +171,7 @@ def build_file_token_blooms(
     spark: SparkSession,
     paths: list[str],
     column: str,
+    schema: StructType | None = None,
 ) -> dict[str, dict]:
     """Per-file Bloom filters over the DISTINCT whitespace TOKENS of a
     text column — keyword-search file skipping for document corpora: a
@@ -173,9 +180,10 @@ def build_file_token_blooms(
     jobs per append: one distinct-token count per file (exact sizing —
     token cardinality is not derivable from row counts), one
     hash+bit_or build. Same CRC32 build/probe parity contract as the
-    value blooms above; probe via ``bloom_may_contain``."""
+    value blooms above; probe via ``bloom_may_contain``. ``schema`` as
+    for ``build_file_blooms``."""
     toks = (
-        spark.read.parquet(*paths)
+        read_paths(spark, "parquet", paths, schema)
         .select(
             F.explode(F.split(F.col(column), "\\s+")).alias("__t"),
             _rel_key_col().alias("__f"),

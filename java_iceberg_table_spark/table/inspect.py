@@ -10,7 +10,7 @@ debugging question is always "how many files / how big / how skewed",
 so these are first-class here.
 
 Scale design: the file-level table is produced by reading the
-snapshot's manifest JSONs with ``spark.read.json`` under an explicit
+snapshot's manifest JSONs as a Spark JSON scan under an explicit
 schema — manifest parsing is distributed across executors, never a
 driver loop, so a table with thousands of manifests plans like any
 other JSON scan (and the partitions table is a plain Spark aggregate
@@ -27,6 +27,8 @@ from typing import TYPE_CHECKING
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..session import read_paths
 
 if TYPE_CHECKING:  # pragma: no cover
     from .table import Table
@@ -115,6 +117,11 @@ FILES_SCHEMA = T.StructType(
 )
 
 
+def read_manifests(spark: SparkSession, paths: list[str]) -> DataFrame:
+    """The manifest JSON files at ``paths``, one MANIFEST_SCHEMA row each."""
+    return read_paths(spark, "json", paths, MANIFEST_SCHEMA, multiLine="true")
+
+
 def files_df(
     table: "Table",
     spark: SparkSession,
@@ -128,9 +135,7 @@ def files_df(
         return spark.createDataFrame([], FILES_SCHEMA)
     paths = [os.path.join(table.root, m) for m in snap.manifests]
     return (
-        spark.read.schema(MANIFEST_SCHEMA)
-        .option("multiLine", "true")
-        .json(paths)
+        read_manifests(spark, paths)
         .select(F.input_file_name().alias("manifest_path"), F.explode("entries").alias("e"))
         .select(
             F.col("e.path").alias("file_path"),

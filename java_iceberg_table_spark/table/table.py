@@ -20,6 +20,7 @@ from __future__ import annotations
 import glob
 import os
 import shutil
+import time
 import uuid
 from dataclasses import replace
 from typing import Iterable
@@ -28,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from ..session import conf_scope
+from ..session import conf_scope, read_paths
 from . import format as fmt
 from .format import Snapshot, TableMetadata
 from .stats import file_stats
@@ -115,6 +116,9 @@ DIST_PLAN_MIN_MANIFEST_BYTES = 4 << 20
 # data files at all and readers build the anti-join input from
 # metadata. Sized so a manifest entry stays a few tens of KB.
 DV_INLINE_MAX_POSITIONS = 4096
+
+# the columns of a parquet position delete file
+_POS_DELETE_SCHEMA = "__file string, __pos long"
 
 # the physical row-lineage columns a lineage-preserving rewrite writes
 _LINEAGE_SCHEMA = StructType(
@@ -1071,19 +1075,24 @@ class Table:
         path that creates data files (append, compaction, z-order
         rewrite) — a rewrite that dropped the blooms would silently
         regress point-lookup pruning on the rewritten files."""
-        props = self.metadata.properties
-        bloom_col = props.get("write.bloom.column")
-        token_col = props.get("write.token.bloom.column")
+        md = self.metadata
+        bloom_col = md.properties.get("write.bloom.column")
+        token_col = md.properties.get("write.token.bloom.column")
         parquet = [e for e in entries if not e["path"].endswith(".avro")]
         if not parquet or not (bloom_col or token_col):
             return
+        # fresh files carry the current column names: read the one
+        # column under the table's schema instead of inferring one
+        schema = StructType.fromJson(md.schema_json)
         if bloom_col:
             from .bloom_index import build_file_blooms
 
             file_rows = {
                 os.path.join(self.root, e["path"]): e["rows"] for e in parquet
             }
-            blooms = build_file_blooms(spark, file_rows, bloom_col)
+            blooms = build_file_blooms(
+                spark, file_rows, bloom_col, StructType([schema[bloom_col]])
+            )
             for e in parquet:
                 e["bloom"] = blooms[os.path.join(self.root, e["path"])]
         if token_col:
@@ -1093,6 +1102,7 @@ class Table:
                 spark,
                 [os.path.join(self.root, e["path"]) for e in parquet],
                 token_col,
+                StructType([schema[token_col]]),
             )
             for e in parquet:
                 tb = tblooms.get(os.path.join(self.root, e["path"]))
@@ -2229,15 +2239,18 @@ class Table:
             parts = []
             if file_backed:
                 parts.append(
-                    spark.read.schema("__file string, __pos long").parquet(
-                        *[os.path.join(self.root, e["path"]) for e in file_backed]
+                    read_paths(
+                        spark,
+                        "parquet",
+                        [os.path.join(self.root, e["path"]) for e in file_backed],
+                        _POS_DELETE_SCHEMA,
                     )
                 )
             if inline:
                 # inline DVs are metadata — the anti-join input comes
                 # straight from the manifest, no delete-file read
                 parts.append(
-                    spark.createDataFrame(inline, "__file string, __pos long")
+                    spark.createDataFrame(inline, _POS_DELETE_SCHEMA)
                 )
             pdf = parts[0]
             for extra in parts[1:]:
@@ -2291,8 +2304,8 @@ class Table:
                         [tuple(k) for k in e["keys"]], ktypes
                     ).select(*[F.col(c).alias(f"__k_{c}") for c in cols])
                 else:
-                    kdf = spark.read.parquet(
-                        os.path.join(self.root, e["path"])
+                    kdf = read_paths(
+                        spark, "parquet", [os.path.join(self.root, e["path"])]
                     ).select(
                         *[
                             F.col(o).alias(f"__k_{c}")
@@ -2509,20 +2522,20 @@ class Table:
                 return {"rewritten_files": 0, "dropped_delete_files": 0}, None, []
             del_entries = self.delete_files_of(snap)
             entries = self.files_of(snap)
-            pos_targets = set()
-            for e in del_entries:
-                if e["content"] == "pos":
-                    if e.get("dv"):
-                        pos_targets.update(e["dv"].keys())
-                        continue
-                    for r in (
-                        spark.read.schema("__file string, __pos long")
-                        .parquet(os.path.join(self.root, e["path"]))
-                        .select("__file")
-                        .distinct()
-                        .collect()
-                    ):
-                        pos_targets.add(r["__file"])
+            pos_dels = [e for e in del_entries if e["content"] == "pos"]
+            pos_targets = {f for e in pos_dels if e.get("dv") for f in e["dv"]}
+            pos_files = [
+                os.path.join(self.root, e["path"]) for e in pos_dels if not e.get("dv")
+            ]
+            if pos_files:
+                # every delete file in one read and one job
+                pos_targets.update(
+                    r["__file"]
+                    for r in read_paths(spark, "parquet", pos_files, _POS_DELETE_SCHEMA)
+                    .select("__file")
+                    .distinct()
+                    .collect()
+                )
             max_eq_seq = max(
                 (int(e.get("seq", 0)) for e in del_entries if e["content"] == "eq"),
                 default=0,
@@ -2817,8 +2830,12 @@ class Table:
         eligible. Reachability is computed from the metadata loaded
         AFTER listing, so any file published by a commit racing the
         listing is seen as live."""
-        now_ms = now_ms if now_ms is not None else fmt.now_ms()
-        cutoff_s = (now_ms - older_than_ms) / 1000.0
+        # the unrounded clock: a millisecond-truncated now keeps an
+        # orphan written in the same millisecond, even at older_than_ms=0
+        if now_ms is None:
+            cutoff_s = time.time() - older_than_ms / 1000.0
+        else:
+            cutoff_s = (now_ms - older_than_ms) / 1000.0
         stats = {"deleted_files": 0, "deleted_manifests": 0}
         candidates: list[str] = []  # rel paths, listed BEFORE metadata load
         for sub in ("data", "manifests"):
@@ -3266,13 +3283,11 @@ class Table:
     ) -> DataFrame:
         """Distributed manifest read: one row per entry (the same
         machinery as the ``files`` inspection table)."""
-        from .inspect import MANIFEST_SCHEMA
+        from .inspect import read_manifests
 
         paths = [os.path.join(self.root, m) for m in manifests]
         return (
-            spark.read.schema(MANIFEST_SCHEMA)
-            .option("multiLine", "true")
-            .json(paths)
+            read_manifests(spark, paths)
             .select(F.explode("entries").alias("e"))
             .select("e.*")
         )
@@ -3883,7 +3898,7 @@ class Table:
         parquet = [p for p in paths if not p.endswith(".avro")]
         parts: list[DataFrame] = []
         if parquet:
-            df = spark.read.schema(phys).parquet(*parquet)
+            df = read_paths(spark, "parquet", parquet, phys)
             if keep_pos:
                 df = df.select(
                     "*",

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+import uuid
 
 import pytest
 
@@ -21,6 +22,26 @@ def sf_dir() -> str:
 def spark():
     spark = get_spark(app_name="tests")
     yield spark
+
+
+@pytest.fixture
+def jobs_started(spark):
+    """``jobs_started(fn)`` runs ``fn()`` and returns (the number of
+    Spark jobs it started, its result), counted with ``statusTracker``
+    in a job group of the test's own, before and after the call."""
+    sc = spark.sparkContext
+    group = f"test-{uuid.uuid4().hex}"
+
+    def run(fn):
+        sc.setJobGroup(group, "jobs_started")
+        try:
+            before = len(sc.statusTracker().getJobIdsForGroup(group))
+            out = fn()
+            return len(sc.statusTracker().getJobIdsForGroup(group)) - before, out
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    return run
 
 
 @pytest.fixture(scope="session")

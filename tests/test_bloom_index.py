@@ -8,7 +8,7 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
-from java_iceberg_table_spark.table import create_table
+from java_iceberg_table_spark.table import bloom_index, create_table
 from java_iceberg_table_spark.table import load_table as open_table
 from java_iceberg_table_spark.table.bloom_index import (
     bloom_may_contain,
@@ -228,3 +228,39 @@ def test_blooms_survive_rewrites(spark, sf_dir):
         import shutil
 
         shutil.rmtree(base, ignore_errors=True)
+
+
+@pytest.mark.parametrize(
+    "prop,column,key",
+    [
+        ("write.bloom.column", "k", "bloom"),
+        ("write.token.bloom.column", "v", "token_bloom"),
+    ],
+)
+def test_attach_blooms_reads_under_table_schema(
+    spark, tmp_path, monkeypatch, jobs_started, prop, column, key
+):
+    """_attach_blooms reads the bloom column of fresh files under the
+    table's schema: on 40 files it starts exactly one job fewer than the
+    same build inferring the schema, and the blooms are bit-identical."""
+    df = spark.range(0, 400).select(
+        F.col("id").alias("k"), F.concat(F.lit("w"), F.col("id").cast("string")).alias("v")
+    )
+    tbl = create_table(str(tmp_path / "t"), df.schema, properties={prop: column})
+    entries = tbl._write_data_files(df.repartition(40))
+    assert len(entries) == 40
+
+    def attach():
+        es = [dict(e) for e in entries]
+        jobs, _ = jobs_started(lambda: tbl._attach_blooms(spark, es))
+        return jobs, [e[key] for e in es]
+
+    jobs, blooms = attach()
+    builder = "build_file_blooms" if key == "bloom" else "build_file_token_blooms"
+    build = getattr(bloom_index, builder)
+    monkeypatch.setattr(
+        bloom_index, builder, lambda spark, files, col, schema: build(spark, files, col)
+    )
+    inferring_jobs, inferred = attach()
+    assert jobs == inferring_jobs - 1, (jobs, inferring_jobs)
+    assert blooms == inferred

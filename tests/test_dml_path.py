@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from java_iceberg_table_spark.table import create_table, truncate
+from java_iceberg_table_spark.table import table as table_mod
 from java_iceberg_table_spark.table.format import CommitConflict
 from java_iceberg_table_spark.table.table import Table
 
@@ -190,3 +191,27 @@ def test_dml_three_lost_races_raise(spark, tmp_path, monkeypatch):
     rivals = [(k, "r", k) for k in range(200, 230)]
     assert _content(tbl, spark) == sorted(before + rivals)
     assert not _orphans(tbl)
+
+
+def test_rewrite_deletes_reads_delete_files_once(spark, tmp_path, monkeypatch, jobs_started):
+    """rewrite_deletes reads all its position delete files as one
+    DataFrame: folding 5 delete files starts as many Spark jobs as
+    folding 1, and each fold rewrites exactly the files the deletes
+    name and leaves exactly the surviving rows."""
+    monkeypatch.setattr(table_mod, "DV_INLINE_MAX_POSITIONS", 0)  # delete files, not DVs
+    jobs = {}
+    for n in (1, 5):
+        tbl = create_table(str(tmp_path / f"t{n}"), SCHEMA)
+        for b in range(5):
+            tbl.append(_df(spark, range(100 * b, 100 * b + 100), "x").coalesce(1))
+        for b in range(n):
+            tbl.delete_where_mor(spark, [("k", "=", 100 * b)])
+        dels = tbl.delete_files_of(tbl.metadata.current_snapshot())
+        assert len(dels) == n and all(e["path"] for e in dels)
+        jobs[n], result = jobs_started(lambda: tbl.rewrite_deletes(spark))
+        assert result == {"rewritten_files": n, "dropped_delete_files": n}
+        assert not tbl.metadata.current_snapshot().delete_manifests
+        assert _content(tbl, spark) == [
+            (k, "x", k) for k in range(500) if k % 100 or k >= 100 * n
+        ]
+    assert jobs[1] == jobs[5], jobs

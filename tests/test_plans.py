@@ -6,6 +6,7 @@ scale must be visible in the plan, not assumed.
 - dim joins broadcast (BroadcastHashJoin), never shuffle the fact side
 - hot-path queries stay inside WholeStageCodegen (no Python UDFs)
 - sort+limit compiles to TakeOrderedAndProject (no global sort)
+- headline rows stay within a Spark job budget
 """
 
 from __future__ import annotations
@@ -432,3 +433,17 @@ def test_e1_prefilter_equivalence(spark, sf_dir, monkeypatch):
             df._jdf.queryExecution(), "formatted"
         )
         assert "LessThanOrEqual(o_custkey" in plan
+
+
+# Spark jobs one warm build + collect may start. Under AQE every
+# shuffle stage runs as a job of its own, so a new Exchange (or a
+# listing or schema-inference job in the build) breaks the budget.
+JOB_BUDGETS = {"d1_tpch_q1": 2, "c3_multiway_join": 4}
+
+
+@pytest.mark.parametrize("name", sorted(JOB_BUDGETS))
+def test_job_budget(spark, sf_dir, jobs_started, name):
+    fn = REGISTRY[name].fn
+    fn(spark, sf_dir).collect()  # warm: the fixture loads are cached per session
+    jobs, _ = jobs_started(lambda: fn(spark, sf_dir).collect())
+    assert jobs <= JOB_BUDGETS[name], f"{name} started {jobs} jobs"

@@ -5,11 +5,13 @@ and plans, applies merge-on-read deletes and filters against that same
 snapshot. These tests commit a rival change in the middle of a read and
 check that the result is the content of a single snapshot; they also
 pin the residual filter to the same leaf vocabulary planning accepts,
-and guard that the read decisions stay written once.
+check that building a planned read starts no file-listing job, and
+guard that the read decisions stay written once.
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
 import re
 
@@ -17,7 +19,9 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from java_iceberg_table_spark.table import create_table, load_table
+from java_iceberg_table_spark import session
+from java_iceberg_table_spark.table import create_table, inspect, load_table
+from java_iceberg_table_spark.table import table as table_mod
 
 SCHEMA = StructType(
     [
@@ -173,3 +177,83 @@ def test_one_read_path():
         src = _src(*parts)
         for call in ("snapshot_by_id(", "snapshot_as_of("):
             assert call not in src, f"{parts[-1]} calls {call}: use Table.read_state"
+
+
+N_FILES = 40  # past Spark's default parallelPartitionDiscovery.threshold of 32
+_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+
+
+def _parquet_scan(spark, root, monkeypatch):
+    tbl = create_table(root, SCHEMA)
+    tbl.append(_rows(spark, 0, 10 * N_FILES).repartition(N_FILES))
+    assert len(tbl.plan_files()) >= N_FILES
+    return lambda: tbl.scan(spark)
+
+
+def _avro_scan(spark, root, monkeypatch):
+    tbl = create_table(root, SCHEMA, properties={"write.format.default": "avro"})
+    tbl.append(_rows(spark, 0, 10 * N_FILES).repartition(N_FILES))
+    files = tbl.plan_files()
+    assert len(files) >= N_FILES and all(e["path"].endswith(".avro") for e in files)
+    return lambda: tbl.scan(spark)
+
+
+def _mor_scan(spark, root, monkeypatch):
+    monkeypatch.setattr(table_mod, "DV_INLINE_MAX_POSITIONS", 0)  # delete files, not DVs
+    tbl = create_table(root, SCHEMA)
+    tbl.append(_rows(spark, 0, 10 * N_FILES).repartition(4))
+    for k in range(N_FILES):
+        tbl.delete_where_mor(spark, [("k", "=", k)])
+    dels = tbl.delete_files_of(tbl.metadata.current_snapshot())
+    assert len(dels) == N_FILES and all(e["path"] for e in dels)
+    return lambda: tbl.scan(spark)
+
+
+def _inspect_files(spark, root, monkeypatch):
+    tbl = create_table(root, SCHEMA, properties={"commit.manifest.min-count-to-merge": "1000"})
+    for e in tbl._write_data_files(_rows(spark, 0, 10 * N_FILES).repartition(N_FILES)):
+        tbl.append_entries([e])
+    assert len(tbl.metadata.current_snapshot().manifests) >= N_FILES
+    return lambda: inspect.files_df(tbl, spark)
+
+
+_PLANNED_READS = {
+    "parquet_scan": _parquet_scan,
+    "avro_scan": _avro_scan,
+    "mor_scan": _mor_scan,
+    "inspect_files": _inspect_files,
+}
+
+
+@pytest.mark.parametrize("read", sorted(_PLANNED_READS))
+def test_planned_read_lists_nothing(spark, tmp_path, monkeypatch, jobs_started, read):
+    """Building a read of 40 manifest-known files starts no Spark job:
+    Spark's distributed file listing is skipped because the manifest
+    already names every file. The result equals the same read built at
+    the default listing threshold, which does start the listing job, and
+    the threshold conf is unset again after the build."""
+    build = _PLANNED_READS[read](spark, str(tmp_path / "t"), monkeypatch)
+    assert spark.conf.get(_THRESHOLD, None) is None
+    jobs, df = jobs_started(build)
+    assert jobs == 0, f"building the {read} read started {jobs} job(s)"
+    assert spark.conf.get(_THRESHOLD, None) is None
+    with monkeypatch.context() as m:
+        # the reader's conf_scope made inert: the build at the default
+        # threshold, with Spark's listing job
+        m.setattr(session, "conf_scope", lambda spark, overrides: contextlib.nullcontext())
+        listing_jobs, listed = jobs_started(build)
+    assert listing_jobs >= 1, "the default-threshold build listed nothing: the probe is blind"
+    assert sorted(map(repr, df.collect())) == sorted(map(repr, listed.collect()))
+
+
+def test_one_planned_reader():
+    """Files a manifest names are read through session.read_paths only:
+    no module under table/, nor the avro reader, builds a spark.read."""
+    builds_read = re.compile(r"\bspark\.read\b|\.read\.(?:schema|format|option|parquet|json|load)\(")
+    tdir = os.path.dirname(os.path.abspath(table_mod.__file__))
+    sources = [("table", f) for f in sorted(os.listdir(tdir)) if f.endswith(".py")]
+    for parts in sources + [("sources", "avro_io.py")]:
+        assert not builds_read.search(_src(*parts)), (
+            f"{parts[-1]} builds spark.read: use session.read_paths"
+        )
+    assert _src("session.py").count("spark.read.") == 1
