@@ -102,12 +102,13 @@ def _prefix_upper(pfx: str) -> str | None:
     return None
 
 
-# Above this much manifest JSON, scan planning / GC reachability moves
-# from the driver-side Python loop to a distributed Spark scan of the
-# manifests (inspect.py's machinery). ~4 MB is ~10^4 entries — below
-# it, session+job overhead exceeds the loop; above it, the driver loop
-# becomes the engine's first scale bottleneck (a 100x file-count table
-# plans as a parallel JSON scan instead of a million-iteration loop).
+# Above this much manifest JSON, scan planning and GC reachability move
+# from the driver to one Spark job over the manifests: planning runs
+# the driver's own pruning predicate on executors, GC aggregates a
+# Spark JSON scan (inspect.py). Below it, the job's overhead exceeds
+# the driver loop. An entry is ~0.2 kB with narrow bounds but ~7.5 kB
+# with wide string or binary bounds (an ingest entry), so 4 MB is
+# ~19,000 entries of the first kind and ~550 of the second.
 DIST_PLAN_MIN_MANIFEST_BYTES = 4 << 20
 
 # Position deletes at or below this many rows are stored as INLINE
@@ -307,6 +308,22 @@ def _on_bucket_start(t, val, vb: int) -> bool:
         return False
 
 
+def _value_range(entry: dict, t: Transform | None, col: str) -> tuple:
+    """Inclusive (lo, hi) of ``col`` in one file: its partition bucket's
+    value range (none for hash and temporal buckets) intersected with
+    the footer min/max. A side is None when neither bounds it."""
+    lo = hi = None
+    if t is not None and col == t.source_column and entry.get("partition") is not None:
+        rng = t.bucket_range(entry["partition"])
+        if rng is not None:
+            lo, hi = rng[0], rng[1] - 1
+    cstats = entry.get("columns", {}).get(col)
+    if cstats and cstats.get("min") is not None:
+        lo = cstats["min"] if lo is None else max(lo, cstats["min"])
+        hi = cstats["max"] if hi is None else min(hi, cstats["max"])
+    return lo, hi
+
+
 def _dtype_of(df, column: str) -> str | None:
     """simpleString dtype of one DataFrame column, None if absent —
     transforms branch on it (a temporal transform reads a timestamp
@@ -426,8 +443,8 @@ def prune_entries_by_keys(entries: list[dict], col: str, keys: list) -> list[dic
     cost keys x files x k CRC32s on the driver at planning time — and
     a file whose range holds thousands of candidate keys is about to
     be read anyway). Stats whose stored type cannot be compared with
-    the key type keep the file — the same conservatism as the
-    distributed plan path's try_cast.
+    the key type keep the file — the same conservatism as
+    Table._entry_may_match.
 
     Temporal keys (datetime/date) prune through their footer-stat
     renderings (ISO strings — lexicographic order == temporal order,
@@ -484,46 +501,6 @@ def _all_historic_names(current: "TableMetadata") -> set[str]:
         used.add(f["name"])
         used.update((f.get("metadata") or {}).get("renamed_from") or [])
     return used
-
-
-def _parse_stat(s: str | None):
-    """Manifest JSON scans read bounds as strings; restore native
-    numeric types for parity with the driver-side manifest parse."""
-    if s is None:
-        return None
-    try:
-        return int(s)
-    except ValueError:
-        try:
-            return float(s)
-        except ValueError:
-            return s
-
-
-# optional manifest-entry keys the driver-side parse never sees unless
-# a writer set them: the distributed planner's rows carry every
-# MANIFEST_SCHEMA field, so these are dropped when None / falsy
-_ENTRY_DROP_IF_NONE = ("partition_fields", "seq", "bloom", "token_bloom", "first_row_id")
-_ENTRY_DROP_IF_FALSY = ("spec_id", "row_ids_inline")
-
-
-def _entry_of_row(e: dict) -> dict:
-    """A distributed-plan manifest row (``Row.asDict(recursive=True)``)
-    as the entry dict the driver-side manifest parse yields: unset
-    optional keys absent, stats bounds back to native types. Row-lineage
-    keys must survive: scan_with_lineage plans through here past
-    DIST_PLAN_MIN_MANIFEST_BYTES."""
-    for k in _ENTRY_DROP_IF_NONE:
-        if e[k] is None:
-            del e[k]
-    for k in _ENTRY_DROP_IF_FALSY:
-        if not e[k]:
-            del e[k]
-    e["columns"] = {
-        k: {"min": _parse_stat(v["min"]), "max": _parse_stat(v["max"]), "nulls": v["nulls"]}
-        for k, v in (e["columns"] or {}).items()
-    }
-    return e
 
 
 class Table:
@@ -1681,9 +1658,9 @@ class Table:
         """``(cands, keep)`` of a copy-on-write rewrite of ``snap``: a
         file is a candidate iff ANY OR-branch's conjunction admits it —
         the union of the scan planner's per-branch admissible sets, so
-        past DIST_PLAN_MIN_MANIFEST_BYTES each branch runs as a
-        distributed manifest scan and a selective rewrite over millions
-        of entries never evaluates pruning predicates in a Python loop.
+        past DIST_PLAN_MIN_MANIFEST_BYTES each branch is pruned on
+        executors and a selective rewrite over millions of entries
+        never evaluates pruning predicates in a driver loop.
         Candidates are re-filtered row-wise with the FULL residual
         predicate; everything else is carried by reference."""
         if snap is None:
@@ -2369,15 +2346,7 @@ class Table:
         if snap is None:
             return None
         specs = self._spec_map(md)
-        entries = self.files_of(snap)
-        cands = [
-            e
-            for e in entries
-            if all(
-                self._entry_may_match(e, self._entry_transform(e, specs), f)
-                for f in filters
-            )
-        ]
+        cands = [e for m in snap.manifests for e in self._admitted(self.root, m, specs, filters)]
         if not cands:
             return None
         match = F.coalesce(self._and_predicate(filters), F.lit(False))
@@ -3128,11 +3097,11 @@ class Table:
         travel).
 
         With a ``spark`` handle and enough manifest volume
-        (DIST_PLAN_MIN_MANIFEST_BYTES), planning runs as a distributed
-        JSON scan of the manifests with the pruning predicate compiled
-        to Spark expressions — only survivors return to the driver, so
-        a heavily-pruned plan over millions of entries never
-        materializes the full entry list in driver memory."""
+        (DIST_PLAN_MIN_MANIFEST_BYTES), the same loop runs on executors
+        in one Spark job (_plan_files_distributed) — only survivors
+        return to the driver, so a heavily-pruned plan over millions of
+        entries never materializes the full entry list in driver
+        memory."""
         md, snap, _ = self.read_state(snapshot_id=snapshot_id)
         if snap is None:
             return []
@@ -3142,14 +3111,21 @@ class Table:
             if distributed_threshold_bytes is None
             else distributed_threshold_bytes
         )
+        filters = list(filters)
         if spark is not None and self._manifest_bytes(snap.manifests) >= threshold:
             return self._plan_files_distributed(spark, snap, specs, filters)
-        out = []
-        for e in self.files_of(snap):
-            t_e = self._entry_transform(e, specs)
-            if all(self._entry_may_match(e, t_e, f) for f in filters):
-                out.append(e)
-        return out
+        return [e for m in snap.manifests for e in self._admitted(self.root, m, specs, filters)]
+
+    @staticmethod
+    def _admitted(root: str, manifest: str, specs: dict, filters: list) -> list[dict]:
+        """The entries of one manifest that _entry_may_match admits,
+        each under its own spec: plan_files' filter, on the driver and
+        on executors alike."""
+        return [
+            e
+            for e in fmt.read_manifest(root, manifest)
+            if all(Table._entry_may_match(e, Table._entry_transform(e, specs), f) for f in filters)
+        ]
 
     @staticmethod
     def _entry_certainly_matches(
@@ -3181,17 +3157,8 @@ class Table:
                 for v in cands
             )
         val = _normalize_stat_value(val)
-        lo = hi = None
-        if t is not None and col == t.source_column and entry.get("partition") is not None:
-            rng = t.bucket_range(entry["partition"])
-            if rng is not None:  # hash buckets carry no range info
-                lo, hi = rng
-                hi = hi - 1
-        cstats = entry.get("columns", {}).get(col)
-        if cstats and cstats.get("min") is not None:
-            lo = cstats["min"] if lo is None else max(lo, cstats["min"])
-            hi = cstats["max"] if hi is None else min(hi, cstats["max"])
-        nulls = (cstats or {}).get("nulls")
+        lo, hi = _value_range(entry, t, col)
+        nulls = (entry.get("columns", {}).get(col) or {}).get("nulls")
         if lo is None or hi is None or nulls is None or nulls > 0:
             return False
         try:
@@ -3297,180 +3264,17 @@ class Table:
         spark: SparkSession,
         snap: Snapshot,
         specs: dict[int, Transform | None],
-        filters: Iterable[tuple[str, str, object]],
+        filters: list[tuple[str, str, object]],
     ) -> list[dict]:
-        df = self._manifest_entries_df(spark, snap.manifests)
-        for flt in filters:
-            df = df.filter(self._entry_may_match_expr(specs, flt))
-        return [_entry_of_row(r.asDict(recursive=True)) for r in df.collect()]
-
-    @staticmethod
-    def _entry_may_match_expr(
-        specs: dict[int, Transform | None],
-        flt: tuple[str, str, object],
-    ) -> "F.Column":
-        """_entry_may_match compiled to a Spark expression over manifest
-        entry rows (path, partition, spec_id, columns: map<struct>).
-
-        Bounds arrive as JSON strings; ``try_cast`` keeps pruning
-        conservative — an uncastable bound reads as NULL, NULL bounds
-        keep the file. Numeric comparisons go through decimal(38,9) so
-        int64 bounds never round through double. Partition-range bounds
-        resolve per-entry under the spec the entry was written with
-        (spec_id, evolution-aware) — a CASE chain over the spec log,
-        which is metadata-scale (a handful of literals)."""
-        col, op, val = flt
-        # set/prefix leaves decompose exactly like _entry_may_match
-        # (round 14): every refinement the scalar expression carries
-        # (partition CASE chains, temporal projection, Bloom probes)
-        # applies to them for free on the distributed path too
-        if op == "in":
-            out = F.lit(False)
-            for v in val:
-                out = out | Table._entry_may_match_expr(specs, (col, "=", v))
-            return out
-        if op == "like_prefix":
-            out = Table._entry_may_match_expr(specs, (col, ">=", val))
-            nxt = _prefix_upper(val)
-            if nxt is not None:
-                out = out & Table._entry_may_match_expr(
-                    specs, (col, "<", nxt)
-                )
-            return out
-        # datetime predicates compare against ISO-string stat bounds —
-        # F.lit(datetime).cast("string") would render with a space
-        # separator and mis-order against the 'T'-separated stats. A
-        # plain DATE is rendering-ambiguous (see _stat_value_renderings);
-        # the distributed path skips pruning on it entirely rather than
-        # compiling the two-rendering disjunction
-        if len(_stat_value_renderings(val)) > 1:
-            return F.lit(True)
-        val = _normalize_stat_value(val)
-        numeric = isinstance(val, (int, float)) and not isinstance(val, bool)
-        typ = "decimal(38,9)" if numeric else "string"
-        stats = F.col("columns").getItem(col)
-        smin = stats.getField("min").try_cast(typ)
-        smax = stats.getField("max").try_cast(typ)
-        plo = F.lit(None).cast(typ)
-        phi = F.lit(None).cast(typ)
-        sid = F.coalesce(F.col("spec_id"), F.lit(0))
-        bucket_keep = F.lit(True)
-        for spec_id, t_spec in specs.items():
-            if t_spec is None:
-                continue
-            # composite specs resolve per-field: each field whose
-            # source column is the predicate column contributes its
-            # own bucket constraint, read from partition_fields[i]
-            if isinstance(t_spec, CompositeTransform):
-                matches = [
-                    (
-                        ft,
-                        F.element_at(F.col("partition_fields"), i + 1),
-                        F.col("partition_fields").isNotNull(),
-                    )
-                    for i, ft in enumerate(t_spec.fields)
-                    if ft.source_column == col
-                ]
-            elif col == t_spec.source_column:
-                matches = [
-                    (
-                        t_spec,
-                        F.col("partition"),
-                        F.col("partition").isNotNull(),
-                    )
-                ]
-            else:
-                matches = []
-            for t, part_expr, part_present in matches:
-                hit = (sid == F.lit(spec_id)) & part_present
-                if t.bucket_range(0) is None:
-                    # no value-domain range info. An equality predicate
-                    # still maps to exactly one bucket — computed
-                    # driver-side as a literal (hash parity via CRC32
-                    # for bucket[N]; UTC calendar math for temporal).
-                    # Same type guard as may_contain: only int/str
-                    # values render identically to the stored column.
-                    # MONOTONIC bucketless transforms (year/month/day/
-                    # hour) additionally project range predicates into
-                    # bucket space, mirroring _entry_may_match.
-                    vb = None
-                    if isinstance(val, (int, str)) and not isinstance(val, bool):
-                        try:
-                            vb = t.apply_py(val)
-                        except (TypeError, ValueError):
-                            vb = None
-                    if vb is not None:
-                        if op in ("=", "=="):
-                            bucket_keep = bucket_keep & ~(
-                                hit & (part_expr != F.lit(vb))
-                            )
-                        elif getattr(t, "monotonic", False):
-                            if op in ("<", "<="):
-                                # boundary sharpening mirrors
-                                # _entry_may_match: ts < V with V on
-                                # the bucket start drops that bucket
-                                lim = (
-                                    vb - 1
-                                    if op == "<" and _on_bucket_start(t, val, vb)
-                                    else vb
-                                )
-                                bucket_keep = bucket_keep & ~(
-                                    hit & (part_expr > F.lit(lim))
-                                )
-                            elif op in (">", ">="):
-                                bucket_keep = bucket_keep & ~(
-                                    hit & (part_expr < F.lit(vb))
-                                )
-                    continue
-                plo = F.when(hit, part_expr.cast(typ)).otherwise(plo)
-                phi = F.when(
-                    hit, (part_expr + F.lit(t.width - 1)).cast(typ)
-                ).otherwise(phi)
-        # greatest/least skip NULLs: bounds merge exactly like the
-        # Python loop (partition range ∩ footer stats, either optional)
-        lo = F.greatest(plo, smin)
-        hi = F.least(phi, smax)
-        v = F.lit(val).cast(typ)
-        if op == "<":
-            keep, used = lo < v, lo
-        elif op == "<=":
-            keep, used = lo <= v, lo
-        elif op == ">":
-            keep, used = hi > v, hi
-        elif op == ">=":
-            keep, used = hi >= v, hi
-        elif op in ("=", "=="):
-            keep, used = (lo <= v) & (v <= hi), F.when(lo.isNull() | hi.isNull(), F.lit(None).cast(typ)).otherwise(lo)
-        else:
-            return F.lit(True)  # unknown op -> no pruning
-        # a NULL bound on the side the comparison needs = no stats ->
-        # cannot prune (same conservatism as the Python loop)
-        out = F.when(used.isNull(), F.lit(True)).otherwise(keep) & bucket_keep
-        if op in ("=", "=="):
-            # Bloom probe, same semantics as the Python loop: the k
-            # CRC32 hashes are literals (computed on the driver with
-            # zlib — hash parity with the build side), only the
-            # per-file modulo/bit-test runs in the expression, so the
-            # probe costs k element_at's per entry row.
-            import zlib as _zlib
-
-            from .bloom_index import NUM_HASHES, _SEED_FMT
-
-            conds = []
-            for i in range(NUM_HASHES):
-                h = _zlib.crc32((_SEED_FMT.format(i=i) + str(val)).encode("utf-8"))
-                conds.append(
-                    F.expr(
-                        f"(element_at(bloom.words, CAST(pmod({h}, bloom.bits) / 64 AS INT) + 1)"
-                        f" & shiftleft(CAST(1 AS BIGINT), CAST(pmod({h}, bloom.bits) % 64 AS INT))) != 0"
-                    )
-                )
-            all_set = conds[0]
-            for c in conds[1:]:
-                all_set = all_set & c
-            no_bloom = F.col("bloom").isNull() | (F.col("bloom.column") != F.lit(col))
-            out = out & F.when(no_bloom, F.lit(True)).otherwise(all_set)
-        return out
+        """plan_files' filter run on executors in one Spark job: each
+        task parses its manifests, so only survivors reach the driver,
+        as the driver parse yields them, in manifest order."""
+        root = self.root
+        return (
+            spark.sparkContext.parallelize(snap.manifests)
+            .flatMap(lambda m: Table._admitted(root, m, specs, filters))
+            .collect()
+        )
 
     @staticmethod
     def _entry_may_match(
@@ -3515,18 +3319,13 @@ class Table:
                 Table._entry_may_match(entry, t, (col, op, v)) for v in cands
             )
         val = _normalize_stat_value(val)
-        lo = hi = None
         if t is not None and col == t.source_column and entry.get("partition") is not None:
             # equality pruning works for EVERY transform (a hash
             # bucket included: the predicate value maps to exactly one
             # bucket — the point-lookup path a bucket table exists for)
             if op in ("=", "==") and not t.may_contain(entry["partition"], val):
                 return False
-            rng = t.bucket_range(entry["partition"])  # [lo, hi)
-            if rng is not None:  # hash buckets carry no range info
-                lo, hi = rng
-                hi = hi - 1  # inclusive bound
-            elif getattr(t, "monotonic", False):
+            if t.bucket_range(entry["partition"]) is None and t.monotonic:
                 # temporal buckets: not value-range-expressible (months
                 # vary in width) but MONOTONIC, so project the predicate
                 # value into bucket space and prune ordinally — Iceberg's
@@ -3549,10 +3348,7 @@ class Table:
                     # it holds no value strictly below its own start
                     if op == "<" and b == vb and _on_bucket_start(t, val, vb):
                         return False
-        cstats = entry.get("columns", {}).get(col)
-        if cstats and cstats.get("min") is not None:
-            lo = cstats["min"] if lo is None else max(lo, cstats["min"])
-            hi = cstats["max"] if hi is None else min(hi, cstats["max"])
+        lo, hi = _value_range(entry, t, col)
         if lo != lo or hi != hi:  # legacy NaN bounds: every comparison
             return True  # below would read False and wrongly prune
         if lo is None:

@@ -462,3 +462,104 @@ def test_dnf_union_planning_goes_distributed(big_table, spark, monkeypatch):
     assert py == dist
     total = len(big_table.plan_files())
     assert 0 < len(py) < total  # the union is a strict subset
+
+
+@pytest.fixture
+def small_table():
+    """``small_table(schema, entries, partition=None)`` -> a table whose
+    one manifest holds ``entries`` (metadata only)."""
+    import shutil
+
+    roots = []
+
+    def make(schema, entries, partition=None):
+        root = tempfile.mkdtemp(prefix="dist_plan_small_") + "/t"
+        roots.append(os.path.dirname(root))
+        tbl = create_table(root, schema, partition=partition)
+        tbl.append_entries(entries)
+        return tbl
+
+    yield make
+    for r in roots:
+        shutil.rmtree(r, ignore_errors=True)
+
+
+def _assert_same_plan(tbl, filters, spark, jobs_started):
+    """The distributed plan is the driver loop's list, order included,
+    and it is one Spark job."""
+    py = tbl.plan_files(filters)
+    jobs, dist = jobs_started(
+        lambda: tbl.plan_files(filters, spark=spark, distributed_threshold_bytes=0)
+    )
+    assert dist == py
+    assert jobs == 1
+    return py
+
+
+@pytest.mark.parametrize(
+    "filters",
+    [(), [("s", "<", "5")], [("s", "=", "nan")], [("s", "like_prefix", "0")]],
+)
+def test_distributed_plan_keeps_string_bounds(
+    small_table, spark, jobs_started, filters
+):
+    """String bounds that read as numbers ("007", "1e5", "nan") come
+    back from the distributed plan as the same strings."""
+    from pyspark.sql.types import StringType
+
+    schema = StructType([StructField("s", StringType(), True)])
+    bounds = [("007", "1e5"), ("nan", "zzz"), ("a", "b")]
+    tbl = small_table(
+        schema,
+        [
+            {
+                "path": f"data/s{i}.parquet",
+                "rows": 10,
+                "bytes": 1000,
+                "partition": None,
+                "columns": {"s": {"min": lo, "max": hi, "nulls": 0}},
+            }
+            for i, (lo, hi) in enumerate(bounds)
+        ],
+    )
+    py = _assert_same_plan(tbl, filters, spark, jobs_started)
+    assert py  # every case keeps a file with a numeric-looking bound
+    for e in py:
+        assert isinstance(e["columns"]["s"]["min"], str)
+        assert isinstance(e["columns"]["s"]["max"], str)
+
+
+@pytest.mark.parametrize("spec", ["unpartitioned", "day"])
+def test_distributed_plan_prunes_date_equality(
+    small_table, spark, jobs_started, spec
+):
+    """A DATE literal prunes on the distributed path as it does on the
+    driver: 10 one-day files, ``d = 2024-01-03`` keeps one."""
+    import datetime as dt
+
+    from pyspark.sql.types import DateType
+
+    from java_iceberg_table_spark.table import day
+
+    days = [dt.date(2024, 1, 1) + dt.timedelta(days=i) for i in range(10)]
+    epoch = dt.date(1970, 1, 1)
+    tbl = small_table(
+        StructType([StructField("d", DateType(), True)]),
+        [
+            {
+                "path": f"data/d{i}.parquet",
+                "rows": 10,
+                "bytes": 1000,
+                "partition": (d - epoch).days if spec == "day" else None,
+                "columns": {
+                    "d": {"min": d.isoformat(), "max": d.isoformat(), "nulls": 0}
+                },
+            }
+            for i, d in enumerate(days)
+        ],
+        partition=day("d") if spec == "day" else None,
+    )
+    py = _assert_same_plan(
+        tbl, [("d", "=", dt.date(2024, 1, 3))], spark, jobs_started
+    )
+    assert [e["path"] for e in py] == ["data/d2.parquet"]

@@ -1,0 +1,202 @@
+"""Differential fuzz of metadata pruning: random files under random
+partition specs, with footer stats rendered the way the write path
+renders them, against random predicates. The row-level truth is a plain
+Python evaluation of each predicate over each file's rows.
+
+Properties:
+- ``Table._entry_may_match`` never rejects a file that holds a matching
+  row (pruning is conservative);
+- every file ``Table._entry_certainly_matches`` accepts holds only
+  non-null rows that match (the count pushdown is exact).
+
+Distributed planning runs the same ``_entry_may_match`` on executors,
+so the driver predicate is the only one to fuzz. Not drawn: Bloom
+filters, and datetime literals against DATE bounds.
+"""
+
+from __future__ import annotations
+
+import datetime as dt
+import json
+
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
+
+from java_iceberg_table_spark.table import (
+    bucket,
+    composite,
+    day,
+    hour,
+    identity,
+    month,
+    truncate,
+    year,
+)
+from java_iceberg_table_spark.table.stats import _plain
+from java_iceberg_table_spark.table.table import Table
+from java_iceberg_table_spark.table.transforms import CompositeTransform
+
+COLUMNS = ("n", "s", "ts", "d")
+T0 = dt.datetime(2023, 12, 30)
+
+ints = st.integers(-20, 20)
+strs = st.text(alphabet="07ae_n", max_size=4)
+# instants clustered around month/day/hour boundaries, some fractional
+timestamps = st.builds(
+    lambda days, hours, minutes, micros: T0
+    + dt.timedelta(days=days, hours=hours, minutes=minutes, microseconds=micros),
+    st.integers(0, 40),
+    st.sampled_from([0, 1, 23]),
+    st.sampled_from([0, 30, 59]),
+    st.sampled_from([0, 500_000]),
+)
+dates = st.builds(lambda days: T0.date() + dt.timedelta(days=days), st.integers(0, 40))
+VALUES = {"n": ints, "s": strs, "ts": timestamps, "d": dates}
+
+rows_st = st.lists(
+    st.fixed_dictionaries({c: st.none() | v for c, v in VALUES.items()}),
+    min_size=1,
+    max_size=24,
+)
+
+single_specs = st.one_of(
+    st.just(identity("n")),
+    st.builds(truncate, st.just("n"), st.sampled_from([1, 3, 10])),
+    st.builds(bucket, st.sampled_from(["n", "s"]), st.sampled_from([2, 4])),
+    st.builds(lambda f, c: f(c), st.sampled_from([day, month, year]), st.sampled_from(["ts", "d"])),
+    st.just(hour("ts")),
+)
+specs_st = st.one_of(
+    st.none(),
+    single_specs,
+    st.builds(composite, single_specs, single_specs),
+)
+
+
+def _part(t, row):
+    """The partition value a writer stamps for one row (None when the
+    source value is null)."""
+    v = row[t.source_column]
+    return None if v is None else t.apply_py(v)
+
+
+def _entry(path, t, part, rows, drop):
+    """A manifest entry as the driver parse yields it: footer stats
+    rendered by stats._plain, the columns in ``drop`` without stats,
+    JSON round-tripped."""
+    cols = {}
+    for c in COLUMNS:
+        if c in drop:
+            continue
+        vals = [_plain(r[c]) for r in rows if r[c] is not None]
+        cols[c] = {
+            "min": min(vals) if vals else None,
+            "max": max(vals) if vals else None,
+            "nulls": len(rows) - len(vals),
+        }
+    e = {"path": path, "rows": len(rows), "bytes": 1, "columns": cols}
+    if isinstance(t, CompositeTransform):
+        e["partition_fields"] = list(part)
+    else:
+        e["partition"] = part
+    return json.loads(json.dumps(e))
+
+
+def _literals(col, rows):
+    """Literals drawn from, or next to, the rows' values of ``col``,
+    including cross-type ones (float against int, DATE and ISO strings
+    against timestamps)."""
+    seen = [r[col] for r in rows if r[col] is not None]
+    near = []
+    for v in seen:
+        if col == "n":
+            near += [v, v - 1, v + 1, v + 0.5, v - 0.5, float(v)]
+        elif col == "s":
+            near += [v, v[:1], v[:-1] or "0", v + "a"]
+        elif col == "ts":
+            floor_h = v.replace(minute=0, second=0, microsecond=0)
+            near += [
+                v,
+                v.date(),
+                v.isoformat(),
+                floor_h,
+                floor_h + dt.timedelta(hours=1),
+                v + dt.timedelta(microseconds=1),
+                v - dt.timedelta(microseconds=1),
+            ]
+        else:
+            near += [v, v - dt.timedelta(days=1), v + dt.timedelta(days=1)]
+    return st.sampled_from(near) if near else VALUES[col]
+
+
+def _coerce(v, lit):
+    """``lit`` in ``v``'s domain, as Spark compares them: a DATE or an
+    ISO string against a timestamp means that instant."""
+    if isinstance(v, dt.datetime):
+        if isinstance(lit, str):
+            return dt.datetime.fromisoformat(lit)
+        if not isinstance(lit, dt.datetime):
+            return dt.datetime.combine(lit, dt.time())
+    return lit
+
+
+def _row_matches(v, op, lit) -> bool:
+    if v is None:
+        return False
+    if op == "in":
+        return any(_row_matches(v, "=", x) for x in lit)
+    if op == "like_prefix":
+        return v.startswith(lit)
+    lit = _coerce(v, lit)
+    return {
+        "=": v == lit,
+        "<": v < lit,
+        "<=": v <= lit,
+        ">": v > lit,
+        ">=": v >= lit,
+    }[op]
+
+
+@st.composite
+def predicates(draw, rows):
+    col = draw(st.sampled_from(COLUMNS))
+    ops = ["=", "<", "<=", ">", ">=", "in"] + (["like_prefix"] if col == "s" else [])
+    op = draw(st.sampled_from(ops))
+    lit = _literals(col, rows)
+    if op == "like_prefix":
+        lit = lit | strs
+    if op == "in":
+        return col, op, tuple(draw(st.lists(lit, min_size=1, max_size=3)))
+    return col, op, draw(lit)
+
+
+@given(data=st.data(), t=specs_st, rows=rows_st)
+@settings(
+    max_examples=1000,
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow],
+)
+def test_pruning_is_conservative_and_certainty_exact(data, t, rows):
+    fields = t.fields if isinstance(t, CompositeTransform) else ([t] if t else [])
+    groups: dict = {}
+    for r in rows:
+        key = tuple(_part(f, r) for f in fields)
+        groups.setdefault(key, []).append(r)
+    files = []
+    for i, (key, grp) in enumerate(groups.items()):
+        cut = data.draw(st.integers(1, len(grp)), label="split")
+        for j, chunk in enumerate((grp[:cut], grp[cut:])):
+            if not chunk:
+                continue
+            drop = data.draw(st.sets(st.sampled_from(COLUMNS), max_size=2), label="drop")
+            part = key if isinstance(t, CompositeTransform) else (key[0] if key else None)
+            files.append((_entry(f"f{i}_{j}", t, part, chunk, drop), chunk))
+
+    for flt in data.draw(st.lists(predicates(rows), min_size=1, max_size=6), label="filters"):
+        col, op, lit = flt
+        for e, chunk in files:
+            hits = [_row_matches(r[col], op, lit) for r in chunk]
+            if any(hits):
+                assert Table._entry_may_match(e, t, flt), (flt, e, chunk)
+            if Table._entry_certainly_matches(e, t, flt):
+                assert all(hits), (flt, e, chunk)
