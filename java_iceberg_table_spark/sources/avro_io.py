@@ -454,6 +454,29 @@ def write_avro_manifest_df(
 
 # ------------------------------------------------------- distributed read
 
+def ocf_frame(file_schema: dict, rows: list[dict], spark_schema) -> "pd.DataFrame":
+    """Decoded OCF rows -> a pandas frame with ``spark_schema``'s
+    columns in order. Each column reads the first of its name and its
+    rename history (``renamed_from`` field metadata) that this file's
+    vintage wrote; a column the file lacks (added later) is typed-null,
+    not float NaN — Arrow refuses NaN -> int casts; timestamps convert
+    from their stored integer µs."""
+    import pandas as pd
+
+    raw = pd.DataFrame(rows, columns=[f["name"] for f in file_schema["fields"]])
+    cols = {}
+    for f in spark_schema.fields:
+        names = [f.name] + list((f.metadata or {}).get("renamed_from") or [])
+        hit = next((n for n in names if n in raw.columns), None)
+        if hit is None:
+            cols[f.name] = pd.Series([None] * len(raw), dtype="object")
+        elif f.dataType.simpleString().startswith("timestamp"):
+            cols[f.name] = pd.to_datetime(raw[hit], unit="us")
+        else:
+            cols[f.name] = raw[hit]
+    return pd.DataFrame(cols, index=raw.index)
+
+
 def read_avro_df(spark, paths: list[str], spark_schema=None, with_pos: bool = False):
     """Distributed Avro scan: binaryFile source -> mapInPandas decode.
 
@@ -480,24 +503,12 @@ def read_avro_df(spark, paths: list[str], spark_schema=None, with_pos: bool = Fa
     if spark_schema is None:
         schema_json, _ = read_ocf(paths[0])
         spark_schema = spark_schema_of(schema_json)
-    ts_cols = {f.name for f in spark_schema.fields if f.dataType.simpleString().startswith("timestamp")}
-    names = [f.name for f in spark_schema.fields]
 
     def decode(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         for pdf in batches:
             for i in range(len(pdf)):
                 content = pdf["content"].iloc[i]
-                file_schema, rows = read_ocf(bytes(content))
-                out = pd.DataFrame(rows, columns=names)
-                # fields the read schema asks for that this file's
-                # vintage never wrote (schema evolution: renamed or
-                # later-added columns) must be typed-null, not float
-                # NaN — Arrow refuses NaN -> int casts
-                present = {f["name"] for f in file_schema["fields"]}
-                for c in set(names) - present:
-                    out[c] = pd.Series([None] * len(out), dtype="object")
-                for c in ts_cols:
-                    out[c] = pd.to_datetime(out[c], unit="us")
+                out = ocf_frame(*read_ocf(bytes(content)), spark_schema)
                 if with_pos:
                     # same anchoring as table._file_key_col: the LAST
                     # /data/ segment of the file URI

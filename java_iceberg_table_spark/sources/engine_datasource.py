@@ -12,10 +12,13 @@ joins against parquet, streaming into memory sinks, SQL over
 
 Scale design:
 - **Planning is metadata-only, execution is per-file.** The driver
-  plans one input partition per live data file (manifest pruning with
-  pushed-down filters first); executors read their file via pyarrow
-  and hand Spark Arrow record batches — no row-at-a-time Python, no
-  driver collect.
+  plans one ``FilePartition`` per data file (manifest pruning with
+  pushed-down filters first) — batch scans, the append tail and the
+  CDC tail alike; the file's merge-on-read delete slice, initial
+  defaults, lineage and CDC change type ride in it. Executors run one
+  reader, ``_read_file_batches``: load the file once as Arrow, mask
+  deleted rows, attach lineage, fill defaults, tag the change — Arrow
+  record batches to Spark, no row-at-a-time Python, no driver collect.
 - **Distributed writes, single atomic commit.** Each write task
   streams its Arrow batches straight into ``data/`` (a file on disk
   means nothing until committed — crash-safe with zero coordination,
@@ -49,7 +52,7 @@ from __future__ import annotations
 
 import os
 import uuid
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -71,28 +74,25 @@ from pyspark.sql.types import StructType
 
 @dataclass
 class FilePartition(InputPartition):
+    """One data file's read, for every connector reader. The file's
+    merge-on-read delete slice rides in the partition — small by MOR
+    design (large deletes belong to copy-on-write), so the message
+    stays task-sized while the data file itself is only ever read
+    executor-side, and the batch scan returns exactly what Table.scan
+    returns. ``emit_pos``/``emit_eq`` set (even empty) is CDC hit mode:
+    only rows hit by the window's new deletes are emitted."""
+
     path: str  # absolute
+    file_key: str = ""  # root-relative (data/...) — the position-delete key
+    seq: int = 0  # the data file's sequence number
     filters: list | None = None  # row-level pushdown (parquet only)
     fill: list | None = None  # initial-default (col, value) pairs
     lineage: tuple | None = None  # (first_row_id, entry_seq, row_ids_inline)
-
-
-@dataclass
-class MaskedFilePartition(InputPartition):
-    """A data file read under merge-on-read delete state: the file's
-    (small, by MOR design) delete payload rides in the partition —
-    inline/folded positions plus sequence-guarded equality keys — and
-    is applied executor-side, so the connector's batch scan returns
-    exactly what Table.scan returns."""
-
-    path: str  # absolute
-    file_key: str  # root-relative (data/...)
-    seq: int
-    mask_pos: list
-    mask_eq: list
-    filters: list | None = None  # row-level pushdown (parquet only)
-    fill: list | None = None  # initial-default (col, value) pairs
-    lineage: tuple | None = None  # (first_row_id, entry_seq, row_ids_inline)
+    mask_pos: list = field(default_factory=list)  # positions already deleted
+    mask_eq: list = field(default_factory=list)  # [(orig_cols, cur_cols, inline_keys|None, path|None, dseq)]
+    emit_pos: list | None = None  # CDC hit mode: positions the window deletes
+    emit_eq: list | None = None  # CDC hit mode: equality keys the window deletes
+    change: str | None = None  # CDC: "insert" | "delete", tagged as _change_type
 
 
 @dataclass
@@ -240,7 +240,7 @@ def _fill_of(schema: StructType, entry: dict) -> list | None:
     return [(c, defaults[c][0]) for c in sorted(sig)] or None
 
 
-def _aligned_parquet_arrow(path: str, schema: StructType, filters=None, fill=None):
+def _aligned_parquet_arrow(path: str, schema: StructType, filters=None):
     """One parquet file -> Arrow table aligned to ``schema``: missing
     columns null-filled, dropped columns pruned, renamed columns
     resolved through their name history, widened types upcast,
@@ -248,14 +248,10 @@ def _aligned_parquet_arrow(path: str, schema: StructType, filters=None, fill=Non
     triples) push into the parquet read itself — row-group statistics
     skip whole groups and surviving rows are filtered before they ever
     reach Arrow, so a selective connector scan reads a slice of each
-    file, not the file. ``fill`` ((col, value) pairs) fills PHYSICALLY
-    ABSENT columns with an initial-default constant instead of null —
-    the planner passes it only for files that provably predate the
-    column (see table._defaults_of)."""
+    file, not the file."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    fills = dict(fill or [])
     target = _arrow_schema_for(schema)
     names = _physical_names(schema)
     tbl = None
@@ -276,34 +272,64 @@ def _aligned_parquet_arrow(path: str, schema: StructType, filters=None, fill=Non
         hit = next((n for n in names[fld.name] if n in tbl.column_names), None)
         if hit is not None:
             cols.append(tbl.column(hit).cast(fld.type))
-        elif fld.name in fills:
-            cols.append(
-                pa.nulls(len(tbl), fld.type).fill_null(
-                    pa.scalar(fills[fld.name]).cast(fld.type)
-                )
-            )
         else:
             cols.append(pa.nulls(len(tbl), fld.type))
     return pa.Table.from_arrays(cols, schema=target)
 
 
-def _read_file_batches(path: str, schema: StructType, filters=None, fill=None):
-    """Executor-side: one data file (parquet or avro — the R5 format
-    toggle) -> Arrow batches aligned to the table schema. ``filters``
-    push into the parquet read (avro reads stay unfiltered — OCF has
-    no row-group statistics); ``fill`` carries initial-default
-    constants for provably-absent columns."""
+def _read_file_batches(part: FilePartition, data_schema: StructType, out_schema: StructType):
+    """Executor-side: THE connector file read, for the batch scan and
+    both stream tails. The file (parquet or avro — the R5 format
+    toggle) loads once as Arrow aligned to ``data_schema``, without the
+    fill: deletes match physical values. Deleted positions and
+    sequence-guarded equality keys are masked; in CDC hit mode only
+    rows the window's new deletes hit stay. Then lineage is attached
+    (from the kept rows' ORIGINAL positions), initial defaults fill
+    their columns, and the CDC change type is tagged — ``out_schema``
+    is ``data_schema`` plus those extra columns. Only equality-delete
+    key columns ever leave Arrow (for the pandas key join)."""
+    import numpy as np
     import pyarrow as pa
 
-    if path.endswith(".avro"):
-        df, _ = _cdc_load_pandas(path, schema, fill=fill)
-        if len(df):
-            yield from pa.Table.from_pandas(
-                df, schema=_arrow_schema_for(schema), preserve_index=False
-            ).to_batches()
+    if part.path.endswith(".avro"):
+        from .avro_io import ocf_frame, read_ocf
+
+        # OCF has no row-group statistics: avro reads are unfiltered
+        tbl = pa.Table.from_pandas(
+            ocf_frame(*read_ocf(part.path), data_schema),
+            schema=_arrow_schema_for(data_schema),
+            preserve_index=False,
+        )
+    else:
+        # filters only arrive when no position delete applies: a
+        # filtered read renumbers rows (the planner guards this)
+        tbl = _aligned_parquet_arrow(part.path, data_schema, part.filters)
+    pos = np.arange(len(tbl))
+    if part.mask_pos or part.mask_eq or part.emit_pos is not None:
+        keep = ~np.isin(pos, part.mask_pos) & ~_eq_delete_hits(
+            tbl, part.seq, part.mask_eq
+        )
+        if part.emit_pos is not None:
+            keep &= np.isin(pos, part.emit_pos) | _eq_delete_hits(
+                tbl, part.seq, part.emit_eq
+            )
+        tbl, pos = tbl.filter(pa.array(keep)), pos[keep]
+    if len(tbl) == 0:
         return
-    yield from _aligned_parquet_arrow(
-        path, schema, filters=filters, fill=fill
+    if part.lineage is not None:
+        tbl = _attach_lineage(tbl, pos, part.path, part.lineage)
+    for c, v in part.fill or []:
+        # the file provably predates the column (every physical value
+        # is null), so the constant replaces the whole column
+        i = tbl.schema.get_field_index(c)
+        const = pa.scalar(v).cast(tbl.schema.field(i).type)
+        tbl = tbl.set_column(i, tbl.schema.field(i), pa.repeat(const, len(tbl)))
+    if part.change is not None:
+        tbl = tbl.append_column(
+            "_change_type", pa.repeat(pa.scalar(part.change), len(tbl))
+        )
+    yield from pa.Table.from_arrays(
+        tbl.columns, schema=_arrow_schema_for(out_schema)
     ).to_batches()
 
 
@@ -314,32 +340,28 @@ def _strip_lineage(schema: StructType) -> StructType:
     return StructType([f for f in schema.fields if f.name not in _LINEAGE_COLS])
 
 
-def _attach_lineage(df, pos, path: str, lineage):
-    """Add _row_id/_last_updated_seq columns to a loaded data frame:
-    derived (first_row_id + position) for files in their original
-    commit, read from the physical carry columns for files rewritten
-    by a lineage-preserving compaction, NULL when the entry predates
-    lineage."""
-    import pandas as pd
+def _attach_lineage(tbl, pos, path: str, lineage):
+    """Append _row_id/_last_updated_seq for the rows at original file
+    positions ``pos``: derived (first_row_id + position) for files in
+    their original commit, read from the physical carry columns for
+    files rewritten by a lineage-preserving compaction (NULL ids for
+    rows whose entries predate lineage stay NULL), NULL when the entry
+    predates lineage."""
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
     frid, eseq, inline = lineage
     if inline:
-        t = pq.read_table(path, columns=["__row_id", "__upd_seq"])
-        # null-safe: a preserve-mode rewrite carries NULL ids for rows
-        # whose entries predate lineage; to_numpy() would degrade the
-        # column to float64/NaN (precision + NA loss)
-        rid = pd.array(t["__row_id"].to_pylist(), dtype="Int64")
-        useq = pd.array(t["__upd_seq"].to_pylist(), dtype="Int64")
-        df["_row_id"] = rid[pos]
-        df["_last_updated_seq"] = useq[pos]
+        carry = pq.read_table(path, columns=["__row_id", "__upd_seq"]).take(pos)
+        rid, useq = carry["__row_id"], carry["__upd_seq"]
     elif frid is not None:
-        df["_row_id"] = pd.array(int(frid) + pos, dtype="Int64")
-        df["_last_updated_seq"] = pd.array([int(eseq)] * len(df), dtype="Int64")
+        rid = pa.array(int(frid) + pos, pa.int64())
+        useq = pa.repeat(pa.scalar(int(eseq), pa.int64()), len(pos))
     else:
-        df["_row_id"] = pd.array([None] * len(df), dtype="Int64")
-        df["_last_updated_seq"] = pd.array([None] * len(df), dtype="Int64")
-    return df
+        rid = useq = pa.nulls(len(pos), pa.int64())
+    return tbl.append_column("_row_id", rid.cast(pa.int64())).append_column(
+        "_last_updated_seq", useq.cast(pa.int64())
+    )
 
 
 def _write_task_files(batch_iter, root: str, schema: StructType, spec: dict | None):
@@ -478,6 +500,7 @@ class EngineBatchReader(DataSourceReader):
         self.lineage_on = str(
             (options or {}).get("withlineage", "")
         ).lower() in ("true", "1")
+        self.data_schema = _strip_lineage(schema) if self.lineage_on else schema
 
     def pushFilters(self, filters):
         """Use every stats-expressible filter for manifest pruning but
@@ -542,7 +565,9 @@ class EngineBatchReader(DataSourceReader):
         # merge-on-read delete state of the SCANNED snapshot rides in
         # the partitions so the connector returns exactly what
         # Table.scan returns (deleted rows must not resurrect)
-        dels = tbl.delete_files_of(snap)
+        pos_inline, eq = _split_delete_payloads(
+            self.root, tbl.delete_files_of(snap), _renames_of(self.schema)
+        )
         # row-level pushdown into the parquet read itself: every
         # stats-expressible filter plus exact IN-lists. Spark
         # re-applies all filters after the scan (pushFilters reports
@@ -557,75 +582,35 @@ class EngineBatchReader(DataSourceReader):
             # (Spark re-applies every filter above the scan anyway)
             rg = None
 
-        def _lin(e):
-            if not self.lineage_on:
-                return None
-            return (
-                e.get("first_row_id"),
-                int(e.get("seq", 0)),
-                bool(e.get("row_ids_inline")),
-            )
-
-        if not dels:
-            return [
-                FilePartition(
-                    os.path.join(self.root, e["path"]),
-                    filters=rg,
-                    fill=_fill_of(self.schema, e),
-                    lineage=_lin(e),
-                )
-                for e in entries
-            ]
-        pos_inline, _, eq = _split_delete_payloads(
-            self.root, dels, _renames_of(self.schema)
-        )
-
-        def masked(e):
+        def part(e):
+            seq = int(e.get("seq", 0))
             mask_pos = pos_inline.get(e["path"], [])
-            return MaskedFilePartition(
+            return FilePartition(
                 path=os.path.join(self.root, e["path"]),
                 file_key=e["path"],
-                seq=int(e.get("seq", 0)),
-                mask_pos=mask_pos,
-                # per-file slice: each partition carries only payloads
-                # whose sequence and key range can touch THIS file
-                mask_eq=_slice_eq_payloads(e, int(e.get("seq", 0)), eq),
+                seq=seq,
                 # position deletes key on row position WITHIN the
                 # unfiltered file: a filtered read renumbers rows, so
                 # files with pending position deletes read whole
                 filters=None if mask_pos else rg,
-                fill=_fill_of(self.schema, e),
-                lineage=_lin(e),
+                fill=_fill_of(self.data_schema, e),
+                lineage=(
+                    e.get("first_row_id"), seq, bool(e.get("row_ids_inline"))
+                )
+                if self.lineage_on
+                else None,
+                mask_pos=mask_pos,
+                # per-file slice: each partition carries only payloads
+                # whose sequence and key range can touch THIS file
+                mask_eq=_slice_eq_payloads(e, seq, eq),
             )
 
-        return [masked(e) for e in entries]
+        return [part(e) for e in entries]
 
     def read(self, partition):
         if partition is None:
             return  # empty plan: Spark calls read(None) once
-        if isinstance(partition, MaskedFilePartition):
-            yield from _read_masked_batches(partition, self.schema)
-            return
-        if partition.lineage is not None:
-            import pyarrow as pa
-
-            df, pos = _cdc_load_pandas(
-                partition.path, _strip_lineage(self.schema)
-            )
-            if len(df) == 0:
-                return
-            df = _attach_lineage(df, pos, partition.path, partition.lineage)
-            out = _apply_fill(df, partition.fill)
-            yield from pa.Table.from_pandas(
-                out, schema=_arrow_schema_for(self.schema), preserve_index=False
-            ).to_batches()
-            return
-        yield from _read_file_batches(
-            partition.path,
-            self.schema,
-            filters=partition.filters,
-            fill=partition.fill,
-        )
+        yield from _read_file_batches(partition, self.data_schema, self.schema)
 
 
 _CURSOR_UNSET = object()  # restart: true cursor lives in the checkpoint
@@ -700,81 +685,13 @@ class EngineStreamReader(DataSourceStreamReader):
     def read(self, partition: FilePartition):
         if partition is None:
             return  # empty window: Spark calls read(None) once
-        yield from _read_file_batches(
-            partition.path, self.schema, fill=partition.fill
-        )
+        yield from _read_file_batches(partition, self.schema, self.schema)
 
     def commit(self, end: dict) -> None:
         pass  # retention is the table's expiry policy, not the stream's
 
     def stop(self) -> None:
         pass
-
-
-@dataclass
-class CDCPartition(InputPartition):
-    """One data file's contribution to a CDC micro-batch. All delete
-    state rides IN the partition object: inline DVs are already
-    metadata, file-backed MOR deletes are small by design (the large
-    ones belong to copy-on-write), so the payload stays task-message
-    sized while the data file itself is only ever read executor-side."""
-
-    path: str  # absolute data file path
-    file_key: str  # root-relative (data/...) — MOR position key
-    change: str  # "insert" | "delete"
-    mode: str  # "survivors" (emit rows passing masks) | "hits" (emit rows hit by emit_* payloads)
-    seq: int  # the data file's sequence number
-    mask_pos: list  # positions already deleted (inline)
-    mask_pos_paths: list  # file-backed position-delete parquet paths
-    mask_eq: list  # [(orig_cols, cur_cols, inline_keys|None, path|None, dseq)]
-    emit_pos: list
-    emit_pos_paths: list
-    emit_eq: list
-    fill: list | None = None  # initial-default (col, value) pairs
-
-
-def _cdc_load_pandas(path: str, schema: StructType, filters=None, fill=None):
-    """Executor-side: one data file (parquet or avro) -> pandas frame
-    aligned to ``schema`` (rename history resolved, widened types
-    upcast), plus the 0-based row-position array. ``filters`` (parquet
-    only) push into the read — POSITIONS ARE THEN RENUMBERED, so
-    callers may only pass filters when no position-delete state
-    applies to the file. ``fill`` carries initial-default constants
-    for provably-absent columns; MOR callers pass it separately to
-    _apply_fill AFTER delete masking (deletes match physical values)."""
-    import numpy as np
-
-    if path.endswith(".avro"):
-        import pandas as pd
-
-        from .avro_io import read_ocf
-
-        fills = dict(fill or [])
-        names = _physical_names(schema)
-        _, rows = read_ocf(path)
-        raw = pd.DataFrame(rows)
-        df = pd.DataFrame(index=range(len(raw)))
-        for f in schema.fields:
-            hit = next((n for n in names[f.name] if n in raw.columns), None)
-            if hit is None:
-                v = fills.get(f.name)
-                df[f.name] = pd.Series([v] * len(raw), dtype="object")
-            elif f.dataType.simpleString().startswith("timestamp"):
-                df[f.name] = pd.to_datetime(raw[hit], unit="us")
-            else:
-                df[f.name] = raw[hit]
-    else:
-        df = _aligned_parquet_arrow(path, schema, filters=filters, fill=fill).to_pandas()
-    return df, np.arange(len(df))
-
-
-def _apply_fill(df, fill):
-    """Fill initial-default columns on a pandas frame AFTER delete
-    masking: the file provably lacks these columns (every physical
-    value is null), so the constant replaces the whole column."""
-    for c, v in fill or []:
-        df = df.assign(**{c: v})
-    return df
 
 
 def _split_delete_payloads(root: str, del_entries, renames):
@@ -815,7 +732,7 @@ def _split_delete_payloads(root: str, del_entries, renames):
                     int(e.get("seq", 0)),
                 )
             )
-    return pos_inline, [], eq
+    return pos_inline, eq
 
 
 def _slice_eq_payloads(entry: dict, seq: int, eq_payloads) -> list:
@@ -844,22 +761,23 @@ def _slice_eq_payloads(entry: dict, seq: int, eq_payloads) -> list:
     return out
 
 
-def _eq_delete_hits(df, seq: int, payloads) -> "object":
-    """Boolean row mask: which rows of ``df`` match any equality-delete
-    payload with a LATER sequence than the data file's (Iceberg
-    sequence semantics). Vectorized pandas hash-merge per payload; a
-    NULL delete key matches nothing (the batch anti-join's == never
-    matches null; pandas merge would match NaN == NaN, so null-keyed
-    delete rows are dropped first)."""
+def _eq_delete_hits(tbl, seq: int, payloads) -> "object":
+    """Boolean row mask: which rows of the Arrow table ``tbl`` match
+    any equality-delete payload with a LATER sequence than the data
+    file's (Iceberg sequence semantics). Vectorized pandas hash-merge
+    per payload over the key columns only; a NULL delete key matches
+    nothing (the batch anti-join's == never matches null; pandas merge
+    would match NaN == NaN, so null-keyed delete rows are dropped
+    first)."""
     import numpy as np
     import pandas as pd
     import pyarrow.parquet as pq
 
-    n = len(df)
-    m = np.zeros(n, dtype=bool)
+    m = np.zeros(len(tbl), dtype=bool)
     for orig_cols, cur_cols, inline_keys, path, dseq in payloads or []:
         if int(dseq) <= int(seq):
             continue  # sequence semantics: delete precedes this file
+        df = tbl.select(list(cur_cols)).to_pandas()
         if inline_keys is not None:
             kdf = pd.DataFrame(
                 [tuple(k) for k in inline_keys], columns=list(cur_cols)
@@ -896,92 +814,11 @@ def _eq_delete_hits(df, seq: int, payloads) -> "object":
                 kdf[c] = conv
             except (ValueError, TypeError):
                 pass  # incomparable: merge matches nothing, rows kept
-        merged = df[list(cur_cols)].merge(
+        merged = df.merge(
             kdf.drop_duplicates(), on=list(cur_cols), how="left", indicator=True
         )
         m |= (merged["_merge"] == "both").to_numpy()
     return m
-
-
-def _read_masked_batches(partition: MaskedFilePartition, schema: StructType):
-    """Executor-side: one data file under MOR delete state -> Arrow
-    batches of the SURVIVING rows (positions masked, sequence-guarded
-    equality keys anti-joined) aligned to the table schema."""
-    import numpy as np
-    import pyarrow as pa
-
-    # filters only ever arrive when mask_pos is empty (positions of a
-    # filtered read would be renumbered — the planner guards this)
-    data_schema = (
-        _strip_lineage(schema) if partition.lineage is not None else schema
-    )
-    df, pos = _cdc_load_pandas(partition.path, data_schema, filters=partition.filters)
-    if len(df) == 0:
-        return
-    keep = np.ones(len(df), dtype=bool)
-    if partition.mask_pos:
-        keep &= ~np.isin(pos, np.fromiter(set(partition.mask_pos), dtype="int64"))
-    keep &= ~_eq_delete_hits(df, partition.seq, partition.mask_eq)
-    if partition.lineage is not None:
-        # attach BEFORE masking: ids key on the file's original row
-        # positions, and surviving rows must keep theirs
-        df = _attach_lineage(df, pos, partition.path, partition.lineage)
-    out = _apply_fill(df[keep], partition.fill)
-    if len(out) == 0:
-        return
-    yield from pa.Table.from_pandas(
-        out, schema=_arrow_schema_for(schema), preserve_index=False
-    ).to_batches()
-
-
-def _cdc_read(partition: CDCPartition, data_schema: StructType, out_schema: StructType):
-    """Executor-side CDC materialization for one data file: apply the
-    pre-existing delete masks, then either emit the survivors (added /
-    removed files) or the rows hit by the window's NEW deletes (common
-    files) — vectorized pandas/Arrow throughout, no row loops."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    df, pos = _cdc_load_pandas(partition.path, data_schema)
-    n = len(df)
-    if n == 0:
-        return
-
-    def pos_set(inline, paths) -> set:
-        s = set(inline or [])
-        for p in paths or []:
-            pdf = pq.read_table(p).to_pandas()
-            s.update(
-                int(x)
-                for x in pdf.loc[pdf["__file"] == partition.file_key, "__pos"]
-            )
-        return s
-
-    def eq_hits(payloads):
-        return _eq_delete_hits(df, partition.seq, payloads)
-
-    keep = np.ones(n, dtype=bool)
-    masked = pos_set(partition.mask_pos, partition.mask_pos_paths)
-    if masked:
-        keep &= ~np.isin(pos, np.fromiter(masked, dtype="int64"))
-    keep &= ~eq_hits(partition.mask_eq)
-    if partition.mode == "survivors":
-        out = df[keep]
-    else:
-        hits = np.zeros(n, dtype=bool)
-        emit = pos_set(partition.emit_pos, partition.emit_pos_paths)
-        if emit:
-            hits |= np.isin(pos, np.fromiter(emit, dtype="int64"))
-        hits |= eq_hits(partition.emit_eq)
-        out = df[keep & hits]
-    if len(out) == 0:
-        return
-    out = _apply_fill(out, partition.fill).assign(_change_type=partition.change)
-    target = _arrow_schema_for(out_schema)
-    yield from pa.Table.from_pandas(
-        out, schema=target, preserve_index=False
-    ).to_batches()
 
 
 class EngineCDCStreamReader(DataSourceStreamReader):
@@ -1024,9 +861,6 @@ class EngineCDCStreamReader(DataSourceStreamReader):
         tbl = self._table()
         head = _ref_head(tbl, self.ref)
         return {"snapshot_id": _paced_head(tbl, self._cursor, head, self.max_files)}
-
-    def _payloads(self, tbl, del_entries, renames):
-        return _split_delete_payloads(self.root, del_entries, renames)
 
     def partitions(self, start: dict, end: dict):
         from ..table.table import _renames_of
@@ -1076,7 +910,7 @@ class EngineCDCStreamReader(DataSourceStreamReader):
         # composes across segments. This is how a standing CDC
         # consumer (the i21 materialized view) survives the
         # bookkeeper's continuous compaction.
-        parts: list[CDCPartition] = []
+        parts: list[FilePartition] = []
         seg_from = md.snapshot(a)
         prev = seg_from
         for s in chain:
@@ -1113,80 +947,50 @@ class EngineCDCStreamReader(DataSourceStreamReader):
             for e in fmt.read_manifest(self.root, m)
         ]
         from_dels = tbl.delete_files_of(from_snap)
-        to_pi, to_pp, to_eq = self._payloads(tbl, to_dels, renames)
-        fr_pi, fr_pp, fr_eq = self._payloads(tbl, from_dels, renames)
-        nw_pi, nw_pp, nw_eq = self._payloads(tbl, new_dels, renames)
-        parts: list[CDCPartition] = []
-        for p, e in to_entries.items():
-            if p in from_entries:
-                continue  # common — handled below
+        to_d, fr_d, nw_d = (
+            _split_delete_payloads(self.root, d, renames)
+            for d in (to_dels, from_dels, new_dels)
+        )
+
+        def part(p, e, change, masks, emit=None):
             seq = int(e.get("seq", 0))
-            parts.append(
-                CDCPartition(
-                    path=os.path.join(self.root, p),
-                    file_key=p,
-                    change="insert",
-                    mode="survivors",
-                    seq=seq,
-                    mask_pos=to_pi.get(p, []),
-                    mask_pos_paths=to_pp,
-                    mask_eq=_slice_eq_payloads(e, seq, to_eq),
-                    emit_pos=[],
-                    emit_pos_paths=[],
-                    emit_eq=[],
-                    fill=_fill_of(self.data_schema, e),
-                )
+            return FilePartition(
+                path=os.path.join(self.root, p),
+                file_key=p,
+                seq=seq,
+                fill=_fill_of(self.data_schema, e),
+                mask_pos=masks[0].get(p, []),
+                mask_eq=_slice_eq_payloads(e, seq, masks[1]),
+                emit_pos=None if emit is None else emit[0].get(p, []),
+                emit_eq=None if emit is None else _slice_eq_payloads(e, seq, emit[1]),
+                change=change,
             )
-        for p, e in from_entries.items():
-            if p in to_entries:
-                continue
-            seq = int(e.get("seq", 0))
-            parts.append(
-                CDCPartition(
-                    path=os.path.join(self.root, p),
-                    file_key=p,
-                    change="delete",
-                    mode="survivors",
-                    seq=seq,
-                    mask_pos=fr_pi.get(p, []),
-                    mask_pos_paths=fr_pp,
-                    mask_eq=_slice_eq_payloads(e, seq, fr_eq),
-                    emit_pos=[],
-                    emit_pos_paths=[],
-                    emit_eq=[],
-                    fill=_fill_of(self.data_schema, e),
-                )
-            )
+
+        # inserts: added files under the to-side delete state; deletes:
+        # removed files' from-side survivors
+        parts = [
+            part(p, e, "insert", to_d)
+            for p, e in to_entries.items()
+            if p not in from_entries
+        ] + [
+            part(p, e, "delete", fr_d)
+            for p, e in from_entries.items()
+            if p not in to_entries
+        ]
         if new_dels:
-            for p, e in to_entries.items():
-                if p not in from_entries:
-                    continue  # added files already reflect deletes
-                seq = int(e.get("seq", 0))
-                emit_eq = _slice_eq_payloads(e, seq, nw_eq)
-                if not (p in nw_pi or bool(nw_pp) or emit_eq):
-                    continue
-                parts.append(
-                    CDCPartition(
-                        path=os.path.join(self.root, p),
-                        file_key=p,
-                        change="delete",
-                        mode="hits",
-                        seq=seq,
-                        mask_pos=fr_pi.get(p, []),
-                        mask_pos_paths=fr_pp,
-                        mask_eq=_slice_eq_payloads(e, seq, fr_eq),
-                        emit_pos=nw_pi.get(p, []),
-                        emit_pos_paths=nw_pp,
-                        emit_eq=emit_eq,
-                        fill=_fill_of(self.data_schema, e),
-                    )
-                )
+            # common files: the rows the window's new deletes hit
+            hits = (
+                part(p, e, "delete", fr_d, nw_d)
+                for p, e in to_entries.items()
+                if p in from_entries
+            )
+            parts += [h for h in hits if h.emit_pos or h.emit_eq]
         return parts
 
-    def read(self, partition: CDCPartition):
+    def read(self, partition: FilePartition):
         if partition is None:
             return  # empty window: Spark calls read(None) once
-        yield from _cdc_read(partition, self.data_schema, self.out_schema)
+        yield from _read_file_batches(partition, self.data_schema, self.out_schema)
 
     def commit(self, end: dict) -> None:
         pass

@@ -245,12 +245,16 @@ def _stat_value_renderings(val) -> list:
     column's stats it must render 'YYYY-MM-DD', against a TIMESTAMP
     column's 'YYYY-MM-DDT00:00:00' — and 'YYYY-MM-DD' sorts BEFORE
     its own T-suffixed midnight, so picking one rendering mis-prunes
-    the other column type at day boundaries. The pruner keeps a file
-    if ANY rendering admits it (and is 'certain' only if all are)."""
+    the other column type at day boundaries. A MIDNIGHT datetime is
+    ambiguous the same way: Spark compares a DATE as midnight of its
+    day, so against a DATE column's stats it must also render as the
+    date. The pruner keeps a file if ANY rendering admits it (and is
+    'certain' only if all are)."""
     import datetime as _dt2
 
     if isinstance(val, _dt2.datetime):
-        return [_normalize_stat_value(val)]
+        iso = _normalize_stat_value(val)
+        return [iso, iso[:10]] if iso.endswith("T00:00:00") else [iso]
     if isinstance(val, _dt2.date):
         return [val.isoformat(), val.isoformat() + "T00:00:00"]
     return [val]

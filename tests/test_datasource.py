@@ -372,6 +372,63 @@ def test_connector_applies_mor_deletes(ds, base_dir):
     )
 
 
+@pytest.mark.parametrize("fmt", ["parquet", "avro"])
+def test_connector_parity_through_mor_and_evolution(ds, base_dir, fmt):
+    """spark.read.format("engine_table") returns exactly what
+    Table.scan returns at every step of one table's life — plain,
+    equality delete (on a timestamp key), position delete, rename,
+    defaulted add, append — for both data-file formats; a filtered
+    read and withLineage (against scan_with_lineage) agree too."""
+    spark = ds
+    root = base_dir + "/parity"
+    df = spark.range(40).select(
+        F.col("id").alias("k"),
+        F.concat(F.lit("v"), F.col("id")).alias("v"),
+        F.timestamp_seconds(F.col("id") * 3600).alias("ts"),
+    )
+    tbl = create_table(root, df.schema, properties={"write.format.default": fmt})
+    tbl.append(df.repartition(2))
+
+    def rows(d):
+        return sorted(tuple(r) for r in d.collect())
+
+    def conn(lineage="false"):
+        return (
+            spark.read.format("engine_table")
+            .option("root", root)
+            .option("withLineage", lineage)
+            .load()
+        )
+
+    def check(step):
+        assert rows(conn()) == rows(tbl.scan(spark)), step
+
+    check("plain")
+    tbl.delete_eq_mor(spark, df.filter(F.col("k").isin(3, 17)).select("ts"), ["ts"])
+    check("eq-delete")
+    tbl.delete_where_mor(spark, [("k", ">=", 36)])
+    check("pos-delete")
+    tbl.rename_column("v", "w")
+    check("rename")
+    tbl.add_column("z", "long", default=5)
+    check("add-default")
+    ts = df.first()["ts"]
+    tbl.append(
+        spark.createDataFrame(
+            [(100, "n", ts, 7), (101, "m", ts, None)], tbl.schema()
+        )
+    )
+    check("append")
+    assert len(rows(tbl.scan(spark))) == 34 + 2
+    assert rows(conn().filter(F.col("k") < 10)) == rows(
+        tbl.scan(spark, [("k", "<", 10)])
+    )
+    lin = ("k", "_row_id", "_last_updated_seq")
+    assert rows(conn("true").select(*lin)) == rows(
+        tbl.scan_with_lineage(spark).select(*lin)
+    )
+
+
 def test_connector_reads_empty_table(ds, base_dir):
     """An empty plan (empty table / everything deleted): Spark calls
     read(None) when partitions() returns [] — must yield zero rows,
@@ -509,7 +566,7 @@ def test_batch_connector_slices_eq_payloads(ds, base_dir):
     spark = ds
     from java_iceberg_table_spark.sources.engine_datasource import (
         EngineBatchReader,
-        MaskedFilePartition,
+        FilePartition,
     )
 
     root = base_dir + "/slice"
@@ -522,7 +579,7 @@ def test_batch_connector_slices_eq_payloads(ds, base_dir):
     )
     reader = EngineBatchReader(root, tbl.schema(), {})
     parts = reader.partitions()
-    assert all(isinstance(p, MaskedFilePartition) for p in parts)
+    assert all(isinstance(p, FilePartition) for p in parts)
     by_payloads = sorted(len(p.mask_eq) for p in parts)
     assert by_payloads == [0, 1]  # only file A ships the payload
     # and the read is still exact

@@ -11,7 +11,7 @@ Properties:
 
 Distributed planning runs the same ``_entry_may_match`` on executors,
 so the driver predicate is the only one to fuzz. Not drawn: Bloom
-filters, and datetime literals against DATE bounds.
+filters.
 """
 
 from __future__ import annotations
@@ -105,7 +105,8 @@ def _entry(path, t, part, rows, drop):
 def _literals(col, rows):
     """Literals drawn from, or next to, the rows' values of ``col``,
     including cross-type ones (float against int, DATE and ISO strings
-    against timestamps)."""
+    against timestamps, midnight and off-midnight datetimes against
+    dates)."""
     seen = [r[col] for r in rows if r[col] is not None]
     near = []
     for v in seen:
@@ -125,19 +126,30 @@ def _literals(col, rows):
                 v - dt.timedelta(microseconds=1),
             ]
         else:
-            near += [v, v - dt.timedelta(days=1), v + dt.timedelta(days=1)]
+            midnight = dt.datetime.combine(v, dt.time())
+            near += [
+                v,
+                v - dt.timedelta(days=1),
+                v + dt.timedelta(days=1),
+                midnight,
+                midnight + dt.timedelta(hours=5, microseconds=1),
+                midnight - dt.timedelta(microseconds=1),
+            ]
     return st.sampled_from(near) if near else VALUES[col]
 
 
 def _coerce(v, lit):
-    """``lit`` in ``v``'s domain, as Spark compares them: a DATE or an
-    ISO string against a timestamp means that instant."""
+    """``v`` and ``lit`` in one domain, as Spark compares them: a DATE
+    row against a datetime literal is midnight of its day, and a DATE
+    or an ISO string against a timestamp means that instant."""
+    if isinstance(lit, dt.datetime) and not isinstance(v, dt.datetime):
+        v = dt.datetime.combine(v, dt.time())
     if isinstance(v, dt.datetime):
         if isinstance(lit, str):
-            return dt.datetime.fromisoformat(lit)
+            return v, dt.datetime.fromisoformat(lit)
         if not isinstance(lit, dt.datetime):
-            return dt.datetime.combine(lit, dt.time())
-    return lit
+            return v, dt.datetime.combine(lit, dt.time())
+    return v, lit
 
 
 def _row_matches(v, op, lit) -> bool:
@@ -147,7 +159,7 @@ def _row_matches(v, op, lit) -> bool:
         return any(_row_matches(v, "=", x) for x in lit)
     if op == "like_prefix":
         return v.startswith(lit)
-    lit = _coerce(v, lit)
+    v, lit = _coerce(v, lit)
     return {
         "=": v == lit,
         "<": v < lit,

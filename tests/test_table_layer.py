@@ -1443,6 +1443,35 @@ def test_analyze_on_avro_table(spark, troot):
     assert full["exact"] and full["ndv"] == 200.0  # 200 < k: exact path
 
 
+def test_midnight_datetime_predicate_on_date_stats(spark, troot):
+    """A midnight datetime literal against a DATE column: Spark
+    compares the date as midnight of its day, but the literal's ISO
+    rendering 'YYYY-MM-DDT00:00:00' sorts after the DATE bound
+    'YYYY-MM-DD'. Pruning and the metadata count must agree with
+    Spark's own filter on a table of one day per file."""
+    import datetime as dt
+
+    from java_iceberg_table_spark.table import create_table
+
+    root = troot + "/dmid"
+    tbl = None
+    for i in range(10):
+        df = spark.createDataFrame(
+            [(i, dt.date(2024, 1, 1) + dt.timedelta(days=i))], "k long, d date"
+        )
+        tbl = tbl or create_table(root, df.schema)
+        tbl.append(df)
+    assert len(tbl.plan_files()) == 10
+    lit = dt.datetime(2024, 1, 3)
+    full = tbl.scan(spark)
+    assert full.filter(F.col("d") == F.lit(lit)).count() == 1
+    assert tbl.scan(spark, [("d", "=", lit)]).count() == 1
+    assert full.filter(F.col("d") >= F.lit(lit)).count() == 8
+    assert tbl.scan(spark, [("d", ">=", lit)]).count() == 8
+    assert full.filter(F.col("d") < F.lit(lit)).count() == 2
+    assert tbl.count_rows(spark, [("d", "<", lit)])["rows"] == 2
+
+
 def test_date_predicate_on_timestamp_stats(spark, troot):
     """A plain DATE predicate against a TIMESTAMP column's ISO stats:
     'YYYY-MM-DD' sorts before its own T-suffixed midnight, so a
