@@ -23,10 +23,16 @@ Design:
   need no shared native library.
 - probes are conservative: a file with no bloom for the column, or a
   predicate other than equality, falls back to min/max semantics.
+- the build hashes Spark's ``CAST(col AS STRING)``, so each bloom
+  records the column's type (and, for a session-zoned TIMESTAMP, the
+  session time zone the cast rendered in); ``bloom_key`` maps a
+  predicate literal to that same string, or to None when it cannot
+  know it, and the probe then keeps the file.
 """
 
 from __future__ import annotations
 
+import datetime as _dt
 import re
 import zlib
 
@@ -100,9 +106,12 @@ def build_file_blooms(
     bits_map = F.create_map(
         *[F.lit(x) for kv in base_bits.items() for x in kv]
     )
+    files = read_paths(spark, "parquet", paths, schema)
+    rendering = {"type": files.schema[column].dataType.simpleString()}
+    if rendering["type"] == "timestamp":
+        rendering["tz"] = spark.conf.get("spark.sql.session.timeZone")
     df = (
-        read_paths(spark, "parquet", paths, schema)
-        .select(
+        files.select(
             F.col(column).cast("string").alias("__v"),
             _rel_key_col().alias("__f"),
         )
@@ -145,6 +154,7 @@ def build_file_blooms(
             dense[w] = v
         out[p] = {
             "column": column,
+            **rendering,
             "bits": bits,
             "k": NUM_HASHES,
             "words": dense,
@@ -152,8 +162,69 @@ def build_file_blooms(
     return out
 
 
+_INTEGRAL = ("tinyint", "smallint", "int", "bigint")
+
+
+def bloom_key(bloom: dict, value: object) -> str | None:
+    """The string the build hashed for a row equal to the predicate
+    literal ``value`` — Spark's ``CAST(col AS STRING)`` under the
+    bloom's recorded column type — or None when that string cannot be
+    known from the literal, in which case the caller keeps the file.
+
+    Naive datetimes (and ISO strings on temporal columns) are UTC, the
+    convention of the footer stats; a TIMESTAMP renders in the session
+    zone the build ran under. Doubles render only integral values of
+    magnitude in [1, 1e7), where Java's ``Double.toString`` and
+    ``f"{v:.1f}"`` agree. A bloom with no recorded type (built before
+    types were recorded) probes int and string literals as
+    ``str(value)``."""
+    if value is None or isinstance(value, bool):
+        return None
+    t = bloom.get("type")
+    if t is None:
+        return str(value) if isinstance(value, (int, str)) else None
+    if t == "string":
+        return value if isinstance(value, str) else None
+    if t in _INTEGRAL or t in ("float", "double"):
+        if not isinstance(value, (int, float)) or value != value:
+            return None
+        if isinstance(value, float) and not value.is_integer():
+            return None
+        if t in _INTEGRAL:
+            return str(int(value))
+        return f"{float(value):.1f}" if 1 <= abs(value) < 1e7 else None
+    if t not in ("date", "timestamp", "timestamp_ntz"):
+        return None
+    if isinstance(value, str):
+        try:
+            value = _dt.datetime.fromisoformat(value)
+        except ValueError:
+            return None
+    if not isinstance(value, _dt.datetime):
+        if not isinstance(value, _dt.date):
+            return None
+        value = _dt.datetime(value.year, value.month, value.day)
+    if value.tzinfo is not None:
+        value = value.astimezone(_dt.timezone.utc).replace(tzinfo=None)
+    if t == "date":
+        return value.date().isoformat() if value.time() == _dt.time() else None
+    if t == "timestamp":
+        from zoneinfo import ZoneInfo
+
+        try:
+            zone = ZoneInfo(bloom.get("tz") or "")
+            value = value.replace(tzinfo=_dt.timezone.utc).astimezone(zone)
+        except (ValueError, KeyError, OSError, OverflowError):
+            return None  # a zone id zoneinfo does not know, or no year left
+    if not 1000 <= value.year <= 9999:
+        return None
+    frac = f".{value.microsecond:06d}".rstrip("0") if value.microsecond else ""
+    return value.strftime("%Y-%m-%d %H:%M:%S") + frac
+
+
 def bloom_may_contain(bloom: dict, value: object) -> bool:
-    """Driver-side probe, hash-identical to the Spark build side."""
+    """Driver-side probe, hash-identical to the Spark build side: it
+    hashes ``str(value)``, so planners pass ``bloom_key``'s string."""
     bits = int(bloom["bits"])
     words = bloom["words"]
     s = str(value)

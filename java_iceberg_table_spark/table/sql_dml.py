@@ -33,22 +33,10 @@ an existing engine operation, and anything else raises
       ORDER BY c1[, c2...]) AS rn FROM t) WHERE rn <= N
   REFRESH MATERIALIZED VIEW v | REFRESH ALL MATERIALIZED VIEWS
   DROP MATERIALIZED VIEW v [PURGE]
-  INSERT INTO t VALUES (lit, ...)[, (...)]  -- full-schema literal rows
-  INSERT INTO t SELECT ... | WITH ...       -- append a query's rows
-  INSERT INTO t (c1[, c2...]) VALUES ... | SELECT ...
-    -- column-list insert: absent columns fill their initial default
-    -- (a4d machinery) or NULL when nullable; refused otherwise
-  INSERT OVERWRITE [TABLE] t VALUES ... | SELECT ...
-    -- STATIC overwrite: whole content replaced in one atomic
-    -- 'overwrite' snapshot
-  INSERT OVERWRITE [TABLE] t PARTITION (k = v | k) VALUES|SELECT ...
-    -- partition-scoped (round 12): (k = v) replaces exactly that
-    -- identity partition (source omits k; empty source clears it);
-    -- (k) is dynamic — replaces the partitions the rows touch
-  INSERT OVERWRITE [TABLE] t PARTITION (k1 = v1, k2 = v2) ...
-    -- composite STATIC form (round 14): the full tuple of an
-    -- all-identity composite spec — exactly that tuple replaced,
-    -- values fill the columns, empty source clears the tuple
+  INSERT INTO t [(c1, ...)] | t.branch_<ref> VALUES ... | SELECT ...
+  INSERT OVERWRITE [TABLE] t [PARTITION (k1 [= v1], ...)]
+    VALUES ... | SELECT ...    -- every accepted and refused INSERT
+                               -- shape is listed above _INSERT_HEAD
   CREATE TABLE name AS SELECT ...           -- CTAS
   CREATE TABLE name (col type [NOT NULL] [DEFAULT lit], ...)
     [PARTITIONED BY (field [, field ...])]  -- bucket(N,c) | truncate(W,c) | years(c) | ... | c
@@ -556,93 +544,58 @@ _DROP_MV = re.compile(
 # from expiry (protect_ids), and is refused inside sql_script: a GC
 # that outruns the script's end-of-script publish would delete the
 # pre-script snapshot readers are still pinned to.
-# INSERT INTO (the append verb): full-schema VALUES tuples (literal
-# rows — the grammar's literal parser, so strings/numbers/NULL only)
-# or INSERT INTO ... SELECT (the query evaluates with Spark against
-# the session's registered views; Catalog.sql registers pinned views
-# first so catalog tables resolve). Column-list inserts
-# (``INSERT INTO t (a, b) VALUES/SELECT``, round 11) fill the ABSENT
-# columns deliberately, not silently: a column carrying an initial
-# default (the a4d ALTER ... ADD COLUMN ... DEFAULT machinery) fills
-# its default VALUE — materialized in the written rows, since new
-# entries sit past the default's sequence and the read-side fill
-# provably never applies to them — a nullable column fills NULL, and
-# an absent NON-nullable column without a default refuses loudly.
-_INSERT_VALUES = re.compile(
-    r"^INSERT\s+INTO\s+([A-Za-z_]\w*)\s+VALUES\s+(.+)$", re.I | re.S
-)
-# INSERT INTO t.branch_<ref> (round 13 — Iceberg's branch-write
-# spelling): the staged half of write-audit-publish through SQL. The
-# append advances ONLY the named branch ref; the table head and the
-# catalog pin do not move (readers never see unaudited rows), so this
-# deliberately bypasses the end-of-statement pin publish. The branch
-# must already exist (ALTER TABLE t CREATE BRANCH) — a typo creating
-# a branch silently would hide the staged rows forever.
-_INSERT_BRANCH = re.compile(
-    r"^INSERT\s+INTO\s+([A-Za-z_]\w*)\.branch_([A-Za-z_]\w*)\s+"
-    r"(VALUES\s+.+|SELECT\b.+|WITH\b.+)$",
-    re.I | re.S,
-)
-_INSERT_SELECT = re.compile(
-    r"^INSERT\s+INTO\s+([A-Za-z_]\w*)\s+(SELECT\b.+|WITH\b.+)$", re.I | re.S
-)
-_INSERT_COLLIST = re.compile(
-    r"^INSERT\s+INTO\s+([A-Za-z_]\w*)\s*"
-    r"\(\s*([A-Za-z_]\w*(?:\s*,\s*[A-Za-z_]\w*)*)\s*\)\s+"
-    r"(VALUES\s+.+|SELECT\b.+|WITH\b.+)$",
-    re.I | re.S,
-)
-_INSERT_COLLIST_HEAD = re.compile(
-    r"^INSERT\s+INTO\s+([A-Za-z_]\w*)\s*\(", re.I
-)
-# INSERT OVERWRITE (round 11): the bare verb is STATIC whole-table
-# mode — content atomically replaced by the query's/tuples' rows in
-# one 'overwrite' snapshot (Spark's default partitionOverwriteMode;
-# TRUNCATE is this verb with zero rows). Partition-scoped overwrite
-# (round 12) requires an EXPLICIT clause: INSERT OVERWRITE t
-# PARTITION (k = v) replaces exactly that identity partition (empty
-# source clears it), PARTITION (k) replaces exactly the partitions
-# the written rows touch (Spark's dynamic mode, a4e's connector
-# machinery). The session-conf-dependent spelling — where the same
-# bare statement flips between replacing the table and replacing
-# partitions on spark.sql.sources.partitionOverwriteMode — is the
-# ambiguity this grammar still refuses; the PARTITION clause names
+# INSERT: every form is a head (verb, table, optional branch, PARTITION
+# clause or column list) and a source (VALUES tuples of grammar
+# literals, or a SELECT/WITH query evaluated against the session's
+# views, pinned ones when a catalog runs the statement). Accepted:
+#
+#   INSERT INTO t VALUES (lit, ...)[, (...)] | SELECT ... | WITH ...
+#     append; the source supplies every column, a query's by name
+#   INSERT INTO t (c1[, c2...]) VALUES ... | SELECT ...
+#     the listed columns map positionally onto the source; an absent
+#     column fills its initial default (ALTER ... ADD COLUMN ...
+#     DEFAULT), materialized in the written rows because new entries
+#     sit past the default's sequence, or NULL when nullable
+#   INSERT INTO t.branch_<ref> VALUES ... | SELECT ...
+#     the staged half of write-audit-publish (Iceberg's branch-write
+#     spelling): only the existing branch ref moves, the table head
+#     and the catalog pin stay, so readers never see unaudited rows
+#   INSERT OVERWRITE [TABLE] t VALUES ... | SELECT ...
+#     static: the whole content is replaced in one 'overwrite'
+#     snapshot (TRUNCATE is this verb with zero rows)
+#   INSERT OVERWRITE [TABLE] t PARTITION (k1 = v1[, k2 = v2 ...]) ...
+#     static partition: the clause names every field of the spec, in
+#     spec order, each with an integer literal; all fields must be
+#     identity layouts. Exactly that partition (or tuple) is replaced,
+#     the values fill the columns the source omits, and an empty source
+#     clears it
+#   INSERT OVERWRITE [TABLE] t PARTITION (k1[, k2 ...]) ...
+#     dynamic partition: the clause names every field's source column
+#     in spec order; exactly the partitions the written rows touch are
+#     replaced, untouched ones carry by reference, and an empty source
+#     replaces nothing
+#
+# A query's columns match by name, case-insensitively (Spark's default
+# resolution). Refused, with the reason: PARTITION on INSERT INTO or on
+# a branch; a column list on INSERT OVERWRITE or on a branch; OVERWRITE
+# of a branch; a missing branch (writes never create refs); a mix of
+# static and dynamic PARTITION items; PARTITION on an unpartitioned
+# table; a wrong column, the wrong order, one field of a composite spec
+# or several of a single-field one; a static value on a transformed
+# layout or one that is not an integer. The bare verb never consults
+# spark.sql.sources.partitionOverwriteMode: the PARTITION clause names
 # the intent in the statement itself.
-_INSERT_OVERWRITE = re.compile(
-    r"^INSERT\s+OVERWRITE\s+(?:TABLE\s+)?([A-Za-z_]\w*)\s+"
-    r"(VALUES\s+.+|SELECT\b.+|WITH\b.+)$",
+_INSERT_HEAD = re.compile(
+    r"^(INTO|OVERWRITE(?:\s+TABLE)?)\s+([A-Za-z_]\w*)"
+    r"(?:\.branch_([A-Za-z_]\w*))?"
+    r"(?:\s+PARTITION\s*\(([^()]*)\))?(?:\s*\(([^()]*)\))?$",
     re.I | re.S,
 )
-_INSERT_OVERWRITE_PART = re.compile(
-    r"^INSERT\s+OVERWRITE\s+(?:TABLE\s+)?([A-Za-z_]\w*)\s+"
-    r"PARTITION\s*\(\s*([A-Za-z_]\w*)\s*(?:=\s*([^(),]+?)\s*)?\)\s+"
-    r"(VALUES\s+.+|SELECT\b.+|WITH\b.+)$",
-    re.I | re.S,
-)
-# composite dynamic form (round 13): PARTITION (c1, c2[, ...]) names
-# EVERY field's source column of a composite spec — replace exactly
-# the (tuple) partitions the written rows touch. Static values are
-# single-field-only (a composite static target would need a full
-# tuple literal; the API covers that).
-_INSERT_OVERWRITE_PART_MULTI = re.compile(
-    r"^INSERT\s+OVERWRITE\s+(?:TABLE\s+)?([A-Za-z_]\w*)\s+"
-    r"PARTITION\s*\(\s*([A-Za-z_]\w*(?:\s*,\s*[A-Za-z_]\w*)+)\s*\)\s+"
-    r"(VALUES\s+.+|SELECT\b.+|WITH\b.+)$",
-    re.I | re.S,
-)
-# composite STATIC form (round 14): PARTITION (k1 = v1, k2 = v2[, ...])
-# names EVERY field of a composite spec with a value — Hive's static
-# overwrite lifted to tuples: exactly that partition TUPLE is
-# replaced, the values fill the (identity) partition columns so the
-# source omits them, and an empty source CLEARS the tuple. Mixed
-# static/dynamic lists stay outside the grammar (the conf-dependent
-# Hive spelling this router refuses by design).
-_INSERT_OVERWRITE_PART_STATIC_MULTI = re.compile(
-    r"^INSERT\s+OVERWRITE\s+(?:TABLE\s+)?([A-Za-z_]\w*)\s+"
-    r"PARTITION\s*\(\s*([A-Za-z_]\w*\s*=\s*[^(),]+?"
-    r"(?:\s*,\s*[A-Za-z_]\w*\s*=\s*[^(),]+?)+)\s*\)\s+"
-    r"(VALUES\s+.+|SELECT\b.+|WITH\b.+)$",
-    re.I | re.S,
+# the source starts at the first VALUES (or SELECT / WITH) keyword; a
+# head holds none, so a prefix that is no head means the other kind
+_INSERT_VALUES = re.compile(r"^INSERT\s+(.+?)\s+VALUES\s+(.+)$", re.I | re.S)
+_INSERT_SELECT = re.compile(
+    r"^INSERT\s+(.+?)\s+((?:SELECT|WITH)\b.+)$", re.I | re.S
 )
 # CTAS: CREATE TABLE name AS SELECT — the query's result schema
 # becomes the table, rows land as the first append, one catalog
@@ -975,27 +928,6 @@ def run_dml(
             catalog.register_views(spark)
         return spark.sql(query)
 
-    def _append_rows(name: str, rows_df: DataFrame) -> dict:
-        tbl = resolve(name)
-        target = tbl.schema()
-        if [f.name for f in rows_df.schema.fields] != [
-            f.name for f in target.fields
-        ]:
-            raise UnsupportedSQL(
-                f"INSERT source columns {rows_df.columns} must match the "
-                f"table schema {[f.name for f in target.fields]} exactly "
-                "(full-schema inserts only)"
-            )
-        aligned = rows_df.select(
-            *[F.col(f.name).cast(f.dataType) for f in target.fields]
-        ).persist()  # count + append: one evaluation of a SELECT source
-        try:
-            n = aligned.count()
-            tbl.append(aligned)
-        finally:
-            aligned.unpersist()
-        return {"statement": "insert", "table": name, "inserted_rows": n}
-
     def _parse_values_tuples(body: str) -> list[list]:
         tuples = []
         for grp in _split_depth0(body, ","):
@@ -1045,27 +977,47 @@ def run_dml(
                 f"INSERT VALUES literal does not fit the table schema: {e}"
             ) from e
 
-    m = _INSERT_COLLIST.match(sql)
-    if m:
-        # column-list INSERT (round 11): absent columns fill their
-        # initial default if they carry one (materialized in the
-        # written rows — new entries sit past the default's sequence,
-        # so the read-side fill never applies to them), NULL if
-        # nullable, and refuse loudly otherwise. Listed columns map
-        # POSITIONALLY onto the VALUES tuples / SELECT output.
+    def _write_rows(tbl, rows: DataFrame, mode="append", parts=None, **kw):
+        """The one write step of INSERT, CTAS and RTAS; the source is
+        never persisted or counted, so it is evaluated exactly once.
+        ``append`` commits one fast-append (``kw``: ``branch``) and
+        counts from its summary's ``added-rows``. ``static`` and
+        ``dynamic`` count the ``rows`` of the entries they wrote and
+        commit one 'overwrite' snapshot (``kw``: ``extra_summary``):
+        static replaces ``parts`` (None: the whole table) even when no
+        row was written, dynamic the partitions the rows touch, and
+        nothing when there are none. Returns (rows, replaced parts)."""
+        if mode == "append":
+            snap = tbl.append(rows, **kw)
+            return int(snap.summary.get("added-rows", 0)), parts
+        from .table import _entry_partition_key
+
+        entries = tbl._write_data_files(rows)
+        if mode == "dynamic":
+            parts = {_entry_partition_key(e) for e in entries}
+        if mode == "static" or parts:
+            # one atomic 'overwrite' snapshot: old content stays
+            # time-travelable, readers see old or new, never a mix
+            tbl.overwrite_entries(entries, partitions=parts, **kw)
+        return sum(e["rows"] for e in entries), parts
+
+    def _column_list(target, name: str, collist: str):
+        """INSERT INTO t (c1, ...): the listed fields, in list order,
+        and the constants filling every absent column — its initial
+        default, else NULL when nullable."""
         from .table import _defaults_of
 
-        name, collist, tail_sql = m.groups()
-        cols = [c.strip() for c in _split_depth0(collist, ",")]
+        cols = [c.strip() for c in collist.split(",")]
+        if not all(_IDENT.match(c) for c in cols):
+            raise UnsupportedSQL(
+                "column-list INSERT not recognized: expected "
+                "INSERT INTO t (col[, col...]) VALUES (...)[, ...] "
+                "or INSERT INTO t (col[, col...]) SELECT ..."
+            )
         if len({c.lower() for c in cols}) != len(cols):
             raise UnsupportedSQL(
                 f"duplicate columns in INSERT column list: {cols}"
             )
-        target = (resolve if catalog is None else catalog.table)(name).schema()
-        # case-INSENSITIVE name lookup (like the duplicate check above
-        # and the matview key compares): INSERT INTO t (ID) hits
-        # column "id"; the schema's canonical spelling is what the
-        # fill/select below uses
         by_name = {f.name.lower(): f for f in target.fields}
         unknown = [c for c in cols if c.lower() not in by_name]
         if unknown:
@@ -1073,488 +1025,227 @@ def run_dml(
                 f"INSERT column list names unknown columns {unknown}; "
                 f"table {name!r} has {[f.name for f in target.fields]}"
             )
-        cols = [by_name[c.lower()].name for c in cols]
+        fields = [by_name[c.lower()] for c in cols]
+        listed = {f.name for f in fields}
         defaults = _defaults_of(target)
-        fills: dict[str, object] = {}
-        listed = set(cols)
+        constants: dict[str, object] = {}
         for f in target.fields:
             if f.name in listed:
                 continue
             if f.name in defaults:
-                fills[f.name] = defaults[f.name][0]
+                constants[f.name] = defaults[f.name][0]
             elif f.nullable:
-                fills[f.name] = None
+                constants[f.name] = None
             else:
                 raise UnsupportedSQL(
                     f"column-list INSERT omits non-nullable column "
                     f"{f.name!r} with no default — list it explicitly "
                     "or ALTER the table to add a default"
                 )
-        tail_parts = tail_sql.split(None, 1)
-        if tail_parts[0].upper() == "VALUES":
-            # split(None) tolerates ANY whitespace after VALUES — the
-            # regex does too, so "VALUES\n(1)" must not read as empty
-            tuples = _parse_values_tuples(
-                tail_parts[1] if len(tail_parts) > 1 else ""
-            )
-            if any(len(t) != len(cols) for t in tuples):
+        return fields, constants
+
+    def _partition_clause(t, target, name: str, body: str):
+        """INSERT OVERWRITE ... PARTITION (<body>) -> (constants, parts):
+        the static values by column and the one partition key they
+        name, or ({}, None) for the dynamic form."""
+        from .transforms import CompositeTransform, IdentityTransform
+
+        items = []
+        for item in _split_depth0(body, ","):
+            im = re.match(r"^([A-Za-z_]\w*)(?:\s*=\s*(.+))?$", item, re.S)
+            if not im:
                 raise UnsupportedSQL(
-                    f"INSERT VALUES arity mismatch: column list has "
-                    f"{len(cols)} columns"
+                    f"PARTITION item {item!r} must be col (dynamic) or "
+                    "col = literal (static)"
                 )
-            rows_df = _literal_rows_df(
-                tuples, [by_name[c.lower()] for c in cols]
+            items.append(im.groups())
+        kinds = {lit is not None for _, lit in items}
+        if len(kinds) != 1:
+            raise UnsupportedSQL(
+                f"PARTITION ({body}) must name every field either as "
+                "col = literal (static) or as col (dynamic), not a mix"
             )
-        else:
-            rows_df = _registered_select(tail_sql)
-            if len(rows_df.columns) != len(cols):
-                raise UnsupportedSQL(
-                    f"INSERT SELECT arity mismatch: column list has "
-                    f"{len(cols)} columns, query returns "
-                    f"{len(rows_df.columns)}"
-                )
-            rows_df = rows_df.toDF(*cols)
-        full = rows_df.select(
-            *[
-                (
-                    F.col(f.name)
-                    if f.name in listed
-                    else F.lit(fills[f.name])
-                )
-                .cast(f.dataType)
-                .alias(f.name)
-                for f in target.fields
-            ]
+        fields = (
+            [] if t is None
+            else list(t.fields) if isinstance(t, CompositeTransform)
+            else [t]
         )
-        return _append_rows(name, full)
-
-    m = _INSERT_BRANCH.match(sql)
-    if m:
-        name, ref, tail_sql = m.groups()
-        # direct table lookup, NOT resolve(): a branch write must not
-        # ride the end-of-statement pin publish (the head is
-        # untouched; republishing it could leak a direct writer's
-        # unpublished head — the _schema_target rationale)
-        tbl = catalog.table(name) if catalog is not None else resolve(name)
-        have = tbl.metadata.refs.get(ref)
-        if have is None or have["type"] != "branch":
-            raise UnsupportedSQL(
-                f"no branch {ref!r} on table {name!r}: create it first "
-                f"(ALTER TABLE {name} CREATE BRANCH {ref}) — writes "
-                "never create refs implicitly"
-            )
-        target = tbl.schema()
-        tail_parts = tail_sql.split(None, 1)
-        if tail_parts[0].upper() == "VALUES":
-            tuples = _parse_values_tuples(
-                tail_parts[1] if len(tail_parts) > 1 else ""
-            )
-            if any(len(tp) != len(target.fields) for tp in tuples):
-                raise UnsupportedSQL(
-                    f"INSERT arity mismatch: table {name!r} has "
-                    f"{len(target.fields)} columns"
-                )
-            rows_df = _literal_rows_df(tuples, list(target.fields))
-        else:
-            rows_df = _registered_select(tail_sql)
-            if [c.lower() for c in rows_df.columns] != [
-                f.name.lower() for f in target.fields
-            ]:
-                raise UnsupportedSQL(
-                    f"INSERT ... SELECT columns {rows_df.columns} must "
-                    f"match {[f.name for f in target.fields]} exactly"
-                )
-        aligned = rows_df.select(
-            *[
-                F.col(f.name).cast(f.dataType).alias(f.name)
-                for f in target.fields
-            ]
-        )
-        # ONE evaluation of a SELECT source: no pre-count job — the
-        # append's manifest stats already carry the row total
-        # ('added-rows'), so a non-deterministic source can never make
-        # inserted_rows disagree with what landed on the branch
-        snap = tbl.append(aligned, branch=ref)
-        return {
-            "statement": "insert_branch",
-            "table": name,
-            "branch": ref,
-            "inserted_rows": int(snap.summary.get("added-rows", 0)),
-            "branch_head": tbl.metadata.refs[ref]["snapshot_id"],
-        }
-
-    m = _INSERT_VALUES.match(sql)
-    if m:
-        name, body = m.groups()
-        tuples = _parse_values_tuples(body)
-        target = (resolve if catalog is None else catalog.table)(name).schema()
-        if any(len(t) != len(target.fields) for t in tuples):
-            raise UnsupportedSQL(
-                f"INSERT VALUES arity mismatch: table {name!r} has "
-                f"{len(target.fields)} columns"
-            )
-        return _append_rows(name, _literal_rows_df(tuples, list(target.fields)))
-
-    m = _INSERT_OVERWRITE_PART_MULTI.match(sql)
-    if m:
-        # composite dynamic overwrite (round 13): PARTITION (c1, c2)
-        # names every field's source column of a composite spec —
-        # written rows choose their partition TUPLES, exactly those
-        # tuples are replaced, untouched tuples carry by reference in
-        # one atomic 'overwrite' snapshot (the a4e/a5b contract lifted
-        # to multi-field layouts).
-        name, collist, tail_sql = m.groups()
-        tbl = resolve(name)
-        target = tbl.schema()
-        t = tbl.transform
-        from .transforms import CompositeTransform as _Composite
-
-        cols = [c.strip() for c in collist.split(",")]
-        if not isinstance(t, _Composite):
-            raise UnsupportedSQL(
-                f"PARTITION names {len(cols)} columns but table "
-                f"{name!r} "
-                + (
-                    "is unpartitioned"
-                    if t is None
-                    else f"partitions on ONE field ({t.source_column!r})"
-                )
-            )
-        if [c.lower() for c in cols] != [
-            c.lower() for c in t.source_columns
-        ]:
-            raise UnsupportedSQL(
-                f"PARTITION must name the composite spec's source "
-                f"columns in spec order "
-                f"({', '.join(t.source_columns)}); got ({collist})"
-            )
-        fields = list(target.fields)
-        tail_parts = tail_sql.split(None, 1)
-        if tail_parts[0].upper() == "VALUES":
-            tuples = _parse_values_tuples(
-                tail_parts[1] if len(tail_parts) > 1 else ""
-            )
-            if any(len(tp) != len(fields) for tp in tuples):
-                raise UnsupportedSQL(
-                    f"INSERT OVERWRITE PARTITION arity mismatch: "
-                    f"source rows take {len(fields)} columns "
-                    f"({[f.name for f in fields]})"
-                )
-            rows_df = _literal_rows_df(tuples, fields)
-        else:
-            rows_df = _registered_select(tail_sql)
-            if [c.lower() for c in rows_df.columns] != [
-                f.name.lower() for f in fields
-            ]:
-                raise UnsupportedSQL(
-                    f"INSERT OVERWRITE PARTITION source columns "
-                    f"{rows_df.columns} must match "
-                    f"{[f.name for f in fields]} exactly"
-                )
-        aligned = rows_df.select(
-            *[
-                F.col(f.name).cast(f.dataType).alias(f.name)
-                for f in fields
-            ]
-        ).persist()
-        try:
-            n = aligned.count()
-            entries = tbl._write_data_files(aligned) if n else []
-            from .table import _entry_partition_key
-
-            parts = {_entry_partition_key(e) for e in entries}
-            if entries:
-                tbl.overwrite_entries(entries, partitions=parts)
-        finally:
-            aligned.unpersist()
-        return {
-            "statement": "insert_overwrite",
-            "table": name,
-            "mode": "dynamic_partition",
-            "inserted_rows": n,
-            "replaced_partitions": sorted(
-                [list(p) for p in parts] if entries else []
-            ),
-        }
-
-    m = _INSERT_OVERWRITE_PART_STATIC_MULTI.match(sql)
-    if m:
-        # composite STATIC overwrite (round 14): the full-tuple form
-        # of a5b's single-field static verb. Every field of the
-        # composite spec must be named with a value, in spec order;
-        # every field must be an IDENTITY layout (the value fills the
-        # column — a transformed field's bucket value cannot
-        # reconstruct its source column, so transformed composites
-        # take the dynamic form). Exactly ONE tuple is replaced —
-        # the daily reload of a (day, bucket) table costs one tuple's
-        # files, not the table — and an empty source clears it.
-        name, kvlist, tail_sql = m.groups()
-        tbl = resolve(name)
-        target = tbl.schema()
-        t = tbl.transform
-        from .transforms import CompositeTransform as _Composite
-        from .transforms import IdentityTransform
-
-        pairs = []
-        for item in _split_depth0(kvlist, ","):
-            km = re.match(r"^([A-Za-z_]\w*)\s*=\s*(.+)$", item.strip())
-            if not km:
-                raise UnsupportedSQL(
-                    f"PARTITION static item {item.strip()!r} must be "
-                    "col = literal"
-                )
-            pairs.append((km.group(1), _parse_literal(km.group(2).strip())))
-        if not isinstance(t, _Composite):
-            raise UnsupportedSQL(
-                f"PARTITION names {len(pairs)} columns but table "
-                f"{name!r} "
-                + (
-                    "is unpartitioned"
-                    if t is None
-                    else f"partitions on ONE field ({t.source_column!r})"
-                )
-            )
-        if [k.lower() for k, _ in pairs] != [
-            c.lower() for c in t.source_columns
-        ]:
-            raise UnsupportedSQL(
-                f"PARTITION must name the composite spec's source "
-                f"columns in spec order "
-                f"({', '.join(t.source_columns)}); got ({kvlist})"
-            )
-        for ft in t.fields:
-            if not isinstance(ft, IdentityTransform):
-                raise UnsupportedSQL(
-                    "static composite overwrite maps onto all-identity "
-                    f"layouts; field {ft.to_json()['transform']}"
-                    f"({ft.source_column}) is transformed — use the "
-                    "DYNAMIC form PARTITION "
-                    f"({', '.join(t.source_columns)})"
-                )
-        by_name = {f.name.lower(): f for f in target.fields}
-        for k, v in pairs:
-            _validate_partition_literal(by_name[k.lower()], v)
-        named = {k.lower() for k, _ in pairs}
-        fields = [
-            f for f in target.fields if f.name.lower() not in named
-        ]
-        tail_parts = tail_sql.split(None, 1)
-        if tail_parts[0].upper() == "VALUES":
-            tuples = _parse_values_tuples(
-                tail_parts[1] if len(tail_parts) > 1 else ""
-            )
-            if any(len(tp) != len(fields) for tp in tuples):
-                raise UnsupportedSQL(
-                    f"INSERT OVERWRITE PARTITION arity mismatch: "
-                    f"source rows take {len(fields)} columns "
-                    f"({[f.name for f in fields]}) — the static "
-                    "values fill the partition columns"
-                )
-            rows_df = _literal_rows_df(tuples, fields)
-        else:
-            rows_df = _registered_select(tail_sql)
-            if [c.lower() for c in rows_df.columns] != [
-                f.name.lower() for f in fields
-            ]:
-                raise UnsupportedSQL(
-                    f"INSERT OVERWRITE PARTITION source columns "
-                    f"{rows_df.columns} must match "
-                    f"{[f.name for f in fields]} exactly (the static "
-                    "values fill the partition columns — the source "
-                    "omits them)"
-                )
-        for k, v in pairs:
-            rows_df = rows_df.withColumn(by_name[k.lower()].name, F.lit(v))
-        aligned = rows_df.select(
-            *[
-                F.col(f.name).cast(f.dataType).alias(f.name)
-                for f in target.fields
-            ]
-        ).persist()
-        try:
-            n = aligned.count()
-            entries = tbl._write_data_files(aligned) if n else []
-            ptuple = tuple(
-                ft.apply_py(v) for ft, (_, v) in zip(t.fields, pairs)
-            )
-            # static ALWAYS commits — an empty source CLEARS the tuple
-            tbl.overwrite_entries(entries, partitions={ptuple})
-        finally:
-            aligned.unpersist()
-        return {
-            "statement": "insert_overwrite",
-            "table": name,
-            "mode": "static_partition",
-            "inserted_rows": n,
-            "replaced_partitions": [list(ptuple)],
-        }
-
-    m = _INSERT_OVERWRITE_PART.match(sql)
-    if m:
-        # partition-scoped overwrite (round 12): the clause names the
-        # intent IN the statement — PARTITION (k = v) is Hive/Spark
-        # static form (replace exactly that partition; empty source
-        # clears it; the value fills the column, so the source omits
-        # it), PARTITION (k) is dynamic form (replace exactly the
-        # partitions the written rows touch — a4e's connector
-        # machinery, one atomic 'overwrite' snapshot, untouched
-        # partitions carried by reference at zero data cost).
-        name, pcol, plit, tail_sql = m.groups()
-        tbl = resolve(name)
-        target = tbl.schema()
-        t = tbl.transform
-        if t is None:
+        sources = [ft.source_column for ft in fields]
+        if not fields:
             raise UnsupportedSQL(
                 f"table {name!r} is unpartitioned: PARTITION-scoped "
                 "overwrite needs a partitioned table (bare INSERT "
                 "OVERWRITE replaces the whole table)"
             )
-        from .transforms import CompositeTransform as _Composite
-
-        if isinstance(t, _Composite):
+        if len(fields) > 1 and len(items) == 1:
             raise UnsupportedSQL(
                 f"table {name!r} has a composite partition spec: name "
-                f"EVERY field's source column for a dynamic overwrite "
-                f"— PARTITION ({', '.join(t.source_columns)}) — or use "
-                "bare INSERT OVERWRITE (atomic whole-table replace)"
+                f"EVERY field's source column — PARTITION "
+                f"({', '.join(sources)}), with or without values — or "
+                "use bare INSERT OVERWRITE (atomic whole-table replace)"
             )
-        if pcol.lower() != t.source_column.lower():
+        if len(fields) == 1 and len(items) > 1:
             raise UnsupportedSQL(
-                f"PARTITION names {pcol!r} but table {name!r} "
-                f"partitions on {t.source_column!r}"
+                f"PARTITION names {len(items)} columns but table "
+                f"{name!r} partitions on ONE field ({sources[0]!r})"
             )
-        from .transforms import IdentityTransform
-
-        static = plit is not None
-        pfield = next(
-            f for f in target.fields
-            if f.name.lower() == t.source_column.lower()
+        if [c.lower() for c, _ in items] != [c.lower() for c in sources]:
+            raise UnsupportedSQL(
+                f"PARTITION ({body}) must name the source columns in "
+                f"spec order: table {name!r} partitions on "
+                f"({', '.join(sources)})"
+            )
+        if kinds == {False}:
+            return {}, None
+        for ft in fields:
+            if not isinstance(ft, IdentityTransform):
+                raise UnsupportedSQL(
+                    "PARTITION (col = value) is the STATIC form and maps "
+                    "onto an identity layout only (all-identity for a "
+                    f"composite spec); field {ft.to_json()['transform']}"
+                    f"({ft.source_column}) is transformed — use the "
+                    f"DYNAMIC form PARTITION ({', '.join(sources)}): "
+                    "written rows choose their partitions"
+                )
+        by_name = {f.name.lower(): f for f in target.fields}
+        constants: dict[str, object] = {}
+        for c, lit in items:
+            f = by_name[c.lower()]
+            constants[f.name] = _parse_literal(lit)
+            _validate_partition_literal(f, constants[f.name])
+        key = tuple(
+            ft.apply_py(v) for ft, v in zip(fields, constants.values())
         )
-        if static:
-            if not isinstance(t, IdentityTransform):
-                raise UnsupportedSQL(
-                    "PARTITION (col = value) is the STATIC form and "
-                    "maps onto an identity layout only; transformed "
-                    "layouts (bucket/truncate/temporal) take the "
-                    "DYNAMIC form PARTITION (col) — written rows "
-                    "choose their partitions"
-                )
-            pv = _parse_literal(plit.strip())
-            _validate_partition_literal(pfield, pv)
-            fields = [
-                f for f in target.fields
-                if f.name.lower() != pcol.lower()
-            ]
+        return constants, {key if len(key) > 1 else key[0]}
+
+    def _source_rows(target, fields, constants, values, src, positional):
+        """The one INSERT source reader: ``VALUES`` tuples or a
+        SELECT/WITH query supplying ``fields`` -> a frame aligned and
+        cast to the ``target`` schema, ``constants`` filling the
+        columns the statement fixes. VALUES tuples and a column list's
+        query map positionally (arity check); any other query matches
+        ``fields`` by name, case-insensitively."""
+        want = [f.name for f in fields]
+        if values:
+            tuples = _parse_values_tuples(src)
+            widths = {len(tp) for tp in tuples}
         else:
-            fields = list(target.fields)
-        tail_parts = tail_sql.split(None, 1)
-        if tail_parts[0].upper() == "VALUES":
-            tuples = _parse_values_tuples(
-                tail_parts[1] if len(tail_parts) > 1 else ""
+            rows = _registered_select(src)
+            widths = {len(rows.columns)}
+        if (values or positional) and widths != {len(fields)}:
+            raise UnsupportedSQL(
+                f"INSERT arity mismatch: the source rows must supply "
+                f"{len(fields)} columns {want}"
             )
-            if any(len(tp) != len(fields) for tp in tuples):
-                raise UnsupportedSQL(
-                    f"INSERT OVERWRITE PARTITION arity mismatch: "
-                    f"source rows take {len(fields)} columns "
-                    f"({[f.name for f in fields]})"
+        if not (values or positional) and [
+            c.lower() for c in rows.columns
+        ] != [c.lower() for c in want]:
+            n = len(constants)
+            raise UnsupportedSQL(
+                f"INSERT source columns {rows.columns} must match the "
+                f"table schema {want} by name"
+                + (
+                    f" (the static PARTITION value{'s' * (n > 1)} fill"
+                    f"{'s' * (n == 1)} {list(constants)} — the source "
+                    f"omits {'them' if n > 1 else 'it'})"
+                    if n
+                    else ""
                 )
-            rows_df = _literal_rows_df(tuples, fields)
-        else:
-            rows_df = _registered_select(tail_sql)
-            if [c.lower() for c in rows_df.columns] != [
-                f.name.lower() for f in fields
-            ]:
-                raise UnsupportedSQL(
-                    f"INSERT OVERWRITE PARTITION source columns "
-                    f"{rows_df.columns} must match "
-                    f"{[f.name for f in fields]} exactly"
-                    + (
-                        " (the static value fills the partition "
-                        "column — the source omits it)"
-                        if static
-                        else ""
-                    )
-                )
-        if static:
-            rows_df = rows_df.withColumn(pfield.name, F.lit(pv))
-        aligned = rows_df.select(
+            )
+        rows = _literal_rows_df(tuples, fields) if values else rows.toDF(*want)
+        return rows.select(
             *[
-                F.col(f.name).cast(f.dataType).alias(f.name)
+                (F.lit(constants[f.name]) if f.name in constants else F.col(f.name))
+                .cast(f.dataType)
+                .alias(f.name)
                 for f in target.fields
             ]
-        ).persist()
-        try:
-            n = aligned.count()
-            entries = tbl._write_data_files(aligned) if n else []
-            if static:
-                parts: set = {t.apply_py(pv)}
-            else:
-                parts = {e["partition"] for e in entries}
-            # dynamic with an empty source replaces nothing (matches
-            # the connector); static ALWAYS commits — an empty source
-            # CLEARS the named partition, Hive semantics
-            if entries or static:
-                tbl.overwrite_entries(entries, partitions=parts)
-        finally:
-            aligned.unpersist()
-        return {
-            "statement": "insert_overwrite",
-            "table": name,
-            "mode": "static_partition" if static else "dynamic_partition",
-            "inserted_rows": n,
-            "replaced_partitions": sorted(parts) if (entries or static) else [],
-        }
-
-    m = _INSERT_OVERWRITE.match(sql)
-    if m:
-        name, tail_sql = m.groups()
-        target = (resolve if catalog is None else catalog.table)(name).schema()
-        if tail_sql.split(None, 1)[0].upper() == "VALUES":
-            tuples = _parse_values_tuples(tail_sql.split(None, 1)[1])
-            if any(len(t) != len(target.fields) for t in tuples):
-                raise UnsupportedSQL(
-                    f"INSERT OVERWRITE VALUES arity mismatch: table "
-                    f"{name!r} has {len(target.fields)} columns"
-                )
-            rows_df = _literal_rows_df(tuples, list(target.fields))
-        else:
-            rows_df = _registered_select(tail_sql)
-        if [f.name for f in rows_df.schema.fields] != [
-            f.name for f in target.fields
-        ]:
-            raise UnsupportedSQL(
-                f"INSERT OVERWRITE source columns {rows_df.columns} must "
-                f"match the table schema "
-                f"{[f.name for f in target.fields]} exactly"
-            )
-        tbl = resolve(name)
-        aligned = rows_df.select(
-            *[F.col(f.name).cast(f.dataType) for f in target.fields]
-        ).persist()
-        try:
-            n = aligned.count()
-            # one atomic 'overwrite' snapshot: old content stays
-            # time-travelable, readers see old or new, never a mix
-            tbl.overwrite_entries(tbl._write_data_files(aligned))
-        finally:
-            aligned.unpersist()
-        return {
-            "statement": "insert_overwrite",
-            "table": name,
-            "inserted_rows": n,
-        }
-
-    m = _INSERT_SELECT.match(sql)
-    if m:
-        name, query = m.groups()
-        return _append_rows(name, _registered_select(query))
-
-    if _INSERT_COLLIST_HEAD.match(sql):
-        raise UnsupportedSQL(
-            "column-list INSERT not recognized: expected "
-            "INSERT INTO t (col[, col...]) VALUES (...)[, ...] "
-            "or INSERT INTO t (col[, col...]) SELECT ..."
         )
+
+    def _insert(verb, name, ref, pclause, collist, values, src) -> dict:
+        """Every INSERT form: the head fixes the target and the
+        constants, then one source read and one write step."""
+        overwrite = verb.upper() != "INTO"
+        if ref is not None and (
+            overwrite or pclause is not None or collist is not None
+        ):
+            raise UnsupportedSQL(
+                f"a branch write is INSERT INTO {name}.branch_{ref} "
+                "VALUES | SELECT with full-schema rows: no OVERWRITE, "
+                "PARTITION clause or column list"
+            )
+        if pclause is not None and not overwrite:
+            raise UnsupportedSQL(
+                "PARTITION (...) scopes INSERT OVERWRITE only: INSERT "
+                "INTO appends to whatever partitions its rows choose"
+            )
+        if collist is not None and overwrite:
+            raise UnsupportedSQL(
+                "INSERT OVERWRITE takes full-schema rows: a column list "
+                "is INSERT INTO only"
+            )
+        # a branch write looks the table up directly, NOT through
+        # resolve(): it must not ride the end-of-statement pin publish
+        # (the head is untouched; republishing it could leak a direct
+        # writer's unpublished head — the _schema_target rationale)
+        tbl = catalog.table(name) if ref and catalog is not None else resolve(name)
+        if ref is not None:
+            have = tbl.metadata.refs.get(ref)
+            if have is None or have["type"] != "branch":
+                raise UnsupportedSQL(
+                    f"no branch {ref!r} on table {name!r}: create it first "
+                    f"(ALTER TABLE {name} CREATE BRANCH {ref}) — writes "
+                    "never create refs implicitly"
+                )
+        target = tbl.schema()
+        constants: dict[str, object] = {}
+        parts = None
+        if collist is not None:
+            fields, constants = _column_list(target, name, collist)
+        else:
+            if pclause is not None:
+                constants, parts = _partition_clause(
+                    tbl.transform, target, name, pclause
+                )
+            fields = [f for f in target.fields if f.name not in constants]
+        rows = _source_rows(
+            target, fields, constants, values, src, collist is not None
+        )
+        if ref is not None:
+            n, _ = _write_rows(tbl, rows, branch=ref)
+            return {
+                "statement": "insert_branch",
+                "table": name,
+                "branch": ref,
+                "inserted_rows": n,
+                "branch_head": tbl.metadata.refs[ref]["snapshot_id"],
+            }
+        if not overwrite:
+            n, _ = _write_rows(tbl, rows)
+            return {"statement": "insert", "table": name, "inserted_rows": n}
+        if pclause is None:
+            n, _ = _write_rows(tbl, rows, "static")
+            return {
+                "statement": "insert_overwrite",
+                "table": name,
+                "inserted_rows": n,
+            }
+        n, parts = _write_rows(tbl, rows, "static" if parts else "dynamic", parts)
+        return {
+            "statement": "insert_overwrite",
+            "table": name,
+            "mode": "static_partition" if constants else "dynamic_partition",
+            "inserted_rows": n,
+            "replaced_partitions": sorted(
+                list(p) if isinstance(p, tuple) else p for p in parts
+            ),
+        }
+
+    for rx in (_INSERT_VALUES, _INSERT_SELECT):
+        m = rx.match(sql)
+        head = _INSERT_HEAD.match(m.group(1)) if m else None
+        if head:
+            return _insert(*head.groups(), rx is _INSERT_VALUES, m.group(2))
 
     m = _CREATE_TABLE_HEAD.match(sql)
     if m:
@@ -1775,33 +1466,28 @@ def run_dml(
                 "replacing it out from under the fold corrupts the "
                 "view contract — DROP MATERIALIZED VIEW and recreate"
             )
-        rows_df = _registered_select(query).persist()
-        try:
-            n = rows_df.count()
-            if exists:
-                # table-internal staging commits (schema swap, data
-                # write, content overwrite) are invisible through the
-                # catalog until the SINGLE pin publish below — readers
-                # see the old table or the new one, never a mix, and
-                # CATALOG_VERSION(pre) still serves the pre-image
-                tbl = catalog.table(name)
-                tbl.set_schema(rows_df.schema)
-                if tbl.metadata.partition_spec is not None:
-                    # RTAS states the whole new definition: no
-                    # PARTITIONED BY clause = unpartitioned (and the
-                    # old spec's source columns may not even exist in
-                    # the new schema); old files keep pruning under
-                    # their own spec via spec_id
-                    tbl.update_partition_spec(None)
-                entries = tbl._write_data_files(rows_df) if n else []
-                tbl.overwrite_entries(
-                    entries, extra_summary={"replace-table": "true"}
-                )
-            else:
-                tbl = catalog.create_table(name, rows_df.schema)
-                tbl.append(rows_df)
-        finally:
-            rows_df.unpersist()
+        rows_df = _registered_select(query)
+        if exists:
+            # table-internal staging commits (schema swap, data
+            # write, content overwrite) are invisible through the
+            # catalog until the SINGLE pin publish below — readers
+            # see the old table or the new one, never a mix, and
+            # CATALOG_VERSION(pre) still serves the pre-image
+            tbl = catalog.table(name)
+            tbl.set_schema(rows_df.schema)
+            if tbl.metadata.partition_spec is not None:
+                # RTAS states the whole new definition: no
+                # PARTITIONED BY clause = unpartitioned (and the
+                # old spec's source columns may not even exist in
+                # the new schema); old files keep pruning under
+                # their own spec via spec_id
+                tbl.update_partition_spec(None)
+            n, _ = _write_rows(
+                tbl, rows_df, "static", extra_summary={"replace-table": "true"}
+            )
+        else:
+            tbl = catalog.create_table(name, rows_df.schema)
+            n, _ = _write_rows(tbl, rows_df)
         catalog._commit_pins({name: tbl.metadata.current_snapshot_id})
         return {
             "statement": "replace_table_as",
@@ -1818,13 +1504,9 @@ def run_dml(
                 "catalog objects)"
             )
         name, query = m.groups()
-        rows_df = _registered_select(query).persist()
-        try:
-            tbl = catalog.create_table(name, rows_df.schema)
-            n = rows_df.count()
-            tbl.append(rows_df)
-        finally:
-            rows_df.unpersist()
+        rows_df = _registered_select(query)
+        tbl = catalog.create_table(name, rows_df.schema)
+        n, _ = _write_rows(tbl, rows_df)
         catalog._commit_pins({name: tbl.metadata.current_snapshot_id})
         return {
             "statement": "create_table_as",

@@ -453,17 +453,18 @@ def prune_entries_by_keys(entries: list[dict], col: str, keys: list) -> list[dic
     Temporal keys (datetime/date) prune through their footer-stat
     renderings (ISO strings — lexicographic order == temporal order,
     and a plain DATE gets both its date and midnight-timestamp forms,
-    so either stat column type prunes correctly). Their Bloom probe is
-    SKIPPED: the bloom build hashes Spark's CAST-to-string rendering
-    (space separator, trimmed fraction), not isoformat — a mismatched
-    probe would prune files that do hold the key."""
+    so either stat column type prunes correctly). The Bloom probe
+    hashes ``bloom_key``'s rendering of the original keys in the
+    range, and keeps the file when any of them has none."""
     import bisect
     import datetime as _dt
 
-    probe_bloom = True
+    from .bloom_index import bloom_key, bloom_may_contain
+
+    rendered = {}
     if keys and isinstance(keys[0], (_dt.datetime, _dt.date)):
-        keys = sorted({r for k in keys for r in _stat_value_renderings(k)})
-        probe_bloom = False
+        rendered = {r: k for k in keys for r in _stat_value_renderings(k)}
+        keys = sorted(rendered)
     kept = []
     for e in entries:
         st = (e.get("columns") or {}).get(col)
@@ -479,10 +480,9 @@ def prune_entries_by_keys(entries: list[dict], col: str, keys: list) -> list[dic
             kept.append(e)  # incomparable stat type: cannot prune
             continue
         bloom = e.get("bloom")
-        if probe_bloom and bloom and bloom.get("column") == col and j - i <= BLOOM_PROBE_CAP:
-            from .bloom_index import bloom_may_contain
-
-            if not any(bloom_may_contain(bloom, k) for k in keys[i:j]):
+        if bloom and bloom.get("column") == col and j - i <= BLOOM_PROBE_CAP:
+            probes = [bloom_key(bloom, rendered.get(k, k)) for k in keys[i:j]]
+            if None not in probes and not any(bloom_may_contain(bloom, p) for p in probes):
                 continue
         kept.append(e)
     return kept
@@ -722,21 +722,92 @@ class Table:
     # ---------- write plane ----------
 
     def _write_data_files(
-        self, df: DataFrame, prefix: str = "b", n_tasks: int | None = None
+        self,
+        df: DataFrame | None,
+        prefix: str = "b",
+        n_tasks: int | None = None,
+        groups: dict | None = None,
     ) -> list[dict]:
         """Write ``df`` as parquet under data/ (partitioned by the
         table's transform when one exists) and return manifest entries.
-        The files mean nothing until a commit references them.
+        The files mean nothing until a commit references them. Every
+        path that creates data files goes through here, so this is
+        where the ``write.bloom.column`` / ``write.token.bloom.column``
+        filters are attached (_attach_blooms): a writer that skipped
+        them would silently lose point-lookup pruning on its files.
 
         ``n_tasks`` bounds the writing parallelism: rows are clustered
         by partition bucket first (one shuffle), so each bucket lands
         in few output files instead of one-per-task — the rewrite
         paths (upsert/delete_rows) use this to write every touched
         bucket in ONE Spark job rather than a driver-serialized
-        job-per-bucket loop."""
+        job-per-bucket loop.
+
+        ``groups`` (compaction and z-order, ``df`` None) maps
+        ``(spec_id, partition)`` to a frame the caller already laid
+        out: each is written as is, under its own sub-directory, and
+        its entries carry that group's spec and partition (a bucket
+        value only means something under the spec that wrote it). A
+        frame carrying the lineage columns (``__row_id``,
+        ``__upd_seq``) marks its entries ``row_ids_inline``."""
         batch = uuid.uuid4().hex
         out_dir = os.path.join(self.root, "data", f"{prefix}-{batch}")
         md = self.metadata
+
+        def collect(spark, dirs, t) -> list[dict]:
+            """Manifest entries of the parquet files just written under
+            each ``(dir, spec_id, partition, lineage)`` of ``dirs``,
+            blooms attached. ``t`` set: the partition is read back from
+            the ``__pb=`` / ``__pb<i>=`` directory levels instead. Empty
+            files are dropped; a write with no rows leaves no directory."""
+            entries = []
+            for d, spec_id, part, lineage in dirs:
+                for path in glob.glob(os.path.join(d, "**", "*.parquet"), recursive=True):
+                    rel = os.path.relpath(path, self.root)
+                    st = file_stats(path)
+                    if st["rows"] == 0:
+                        os.remove(path)
+                        continue
+                    partition = part
+                    if t is not None:
+                        pfields: dict[int, int] = {}
+                        for level in rel.split(os.sep):
+                            if level.startswith("__pb="):
+                                partition = int(level.split("=", 1)[1])
+                            elif level.startswith("__pb") and "=" in level:
+                                k, v = level.split("=", 1)
+                                pfields[int(k[4:])] = int(v)
+                        if pfields:
+                            partition = tuple(pfields[i] for i in range(len(pfields)))
+                    st["columns"].pop("__row_id", None)  # lineage carry, not data
+                    st["columns"].pop("__upd_seq", None)
+                    entries.append(
+                        {
+                            "path": rel,
+                            **({"row_ids_inline": True} if lineage else {}),
+                            "rows": st["rows"],
+                            "bytes": st["bytes"],
+                            **_stamp_partition(partition),
+                            "columns": st["columns"],
+                            # spec 0 stays implicit so pre-evolution manifests
+                            # and these stay byte-compatible
+                            **({"spec_id": spec_id} if spec_id else {}),
+                        }
+                    )
+            if not entries:
+                shutil.rmtree(out_dir, ignore_errors=True)
+            self._attach_blooms(spark, entries, md)
+            return entries
+
+        if groups is not None:
+            spark = next(iter(groups.values())).sparkSession
+            dirs = []
+            for (spec_id, part), frame in groups.items():
+                sub = os.path.join(out_dir, _partition_subdir(spec_id, part, "rewritten"))
+                with conf_scope(spark, _MICROS_TS):
+                    frame.write.parquet(sub)
+                dirs.append((sub, spec_id, part, "__row_id" in frame.columns))
+            return collect(spark, dirs, None)
         t = transform_from_json(md.partition_spec)
         spec_id = self.current_spec_id(md)
         # Iceberg-style write.target-file-size-bytes: cap output files
@@ -870,43 +941,7 @@ class Table:
                 w = w.option("maxRecordsPerFile", max_records)
             with conf_scope(df.sparkSession, _MICROS_TS):
                 w.parquet(out_dir)
-        entries = []
-        for path in glob.glob(os.path.join(out_dir, "**", "*.parquet"), recursive=True):
-            rel = os.path.relpath(path, self.root)
-            st = file_stats(path)
-            partition = None
-            pfields: dict[int, int] = {}
-            if t is not None:
-                for part in rel.split(os.sep):
-                    if part.startswith("__pb="):
-                        partition = int(part.split("=", 1)[1])
-                    elif part.startswith("__pb") and "=" in part:
-                        k, v = part.split("=", 1)
-                        pfields[int(k[4:])] = int(v)
-            if st["rows"] == 0:
-                os.remove(path)
-                continue
-            entries.append(
-                {
-                    "path": rel,
-                    "rows": st["rows"],
-                    "bytes": st["bytes"],
-                    **(
-                        {
-                            "partition_fields": [
-                                pfields[i] for i in range(len(pfields))
-                            ]
-                        }
-                        if pfields
-                        else {"partition": partition}
-                    ),
-                    "columns": st["columns"],
-                    # spec 0 stays implicit so pre-evolution manifests
-                    # and these stay byte-compatible
-                    **({"spec_id": spec_id} if spec_id else {}),
-                }
-            )
-        return entries
+        return collect(df.sparkSession, [(out_dir, spec_id, None, False)], t)
 
     def append(
         self,
@@ -925,7 +960,6 @@ class Table:
         (table/bloom_index.py) and stores it in each manifest entry, so
         later point lookups skip files from manifest metadata alone."""
         entries = self._write_data_files(df)
-        self._attach_blooms(df.sparkSession, entries)
         return self.append_entries(entries, branch=branch, extra_summary=extra_summary)
 
     def add_files(self, paths: list[str], link: bool = True) -> Snapshot:
@@ -1050,13 +1084,16 @@ class Table:
             entries, extra_summary={"added-files-import": len(entries)}
         )
 
-    def _attach_blooms(self, spark: SparkSession, entries: list[dict]) -> None:
+    def _attach_blooms(
+        self, spark: SparkSession, entries: list[dict], md: TableMetadata | None = None
+    ) -> None:
         """Attach per-file Bloom filters to freshly written entries when
-        the ``write.bloom.column`` property is set. Called by EVERY
-        path that creates data files (append, compaction, z-order
-        rewrite) — a rewrite that dropped the blooms would silently
-        regress point-lookup pruning on the rewritten files."""
-        md = self.metadata
+        the ``write.bloom.column`` property is set (``md``: the metadata
+        the writer already loaded). _write_data_files calls it for
+        every file it writes. A bloom property naming a column the
+        schema no longer has (CREATE OR REPLACE TABLE keeps the
+        properties) builds nothing for it."""
+        md = md or self.metadata
         bloom_col = md.properties.get("write.bloom.column")
         token_col = md.properties.get("write.token.bloom.column")
         parquet = [e for e in entries if not e["path"].endswith(".avro")]
@@ -1065,6 +1102,9 @@ class Table:
         # fresh files carry the current column names: read the one
         # column under the table's schema instead of inferring one
         schema = StructType.fromJson(md.schema_json)
+        bloom_col, token_col = (
+            c if c in schema.fieldNames() else None for c in (bloom_col, token_col)
+        )
         if bloom_col:
             from .bloom_index import build_file_blooms
 
@@ -1601,11 +1641,16 @@ class Table:
             expected = snap.snapshot_id if snap is not None else None
             if self._commit_snapshot(operation, make, expected) is not None:
                 return result
-            for e in written:
-                if e.get("path"):  # inline deletion vectors wrote nothing
-                    batch = os.path.join(*os.path.normpath(e["path"]).split(os.sep)[:2])
-                    shutil.rmtree(os.path.join(self.root, batch), ignore_errors=True)
+            self._remove_written(written)
         raise fmt.CommitConflict(f"{op} lost the commit race 3 times")
+
+    def _remove_written(self, entries: list[dict]) -> None:
+        """Remove the batch directories (``data/<prefix>-<uuid>``) of
+        freshly written ``entries`` that no commit references."""
+        for e in entries:
+            if e.get("path"):  # inline deletion vectors wrote nothing
+                batch = os.path.join(*os.path.normpath(e["path"]).split(os.sep)[:2])
+                shutil.rmtree(os.path.join(self.root, batch), ignore_errors=True)
 
     @staticmethod
     def _overwrite_make(
@@ -2911,9 +2956,6 @@ class Table:
         entries = self.files_of(snap)
         if not entries:
             return {"rewritten": 0, "new_files": 0}
-        import uuid as uuid_mod
-
-        batch = uuid_mod.uuid4().hex
         # group by (spec_id, partition), not partition value alone:
         # after partition evolution the same numeric bucket under two
         # specs covers DIFFERENT value ranges, and the rewritten file
@@ -2923,38 +2965,20 @@ class Table:
         for e in entries:
             key = (int(e.get("spec_id", 0) or 0), _entry_partition_key(e))
             by_partition.setdefault(key, []).append(e)
-        new_entries: list[dict] = []
         # row.lineage=preserve: carry (__row_id, __upd_seq) through the
         # layout rewrite exactly as compact_data_files does
         preserve = md.properties.get("row.lineage") == "preserve"
-        for (spec_id, part), es in by_partition.items():
-            df = (
+        groups = {
+            key: zorder_frame(
                 self._read_with_lineage(spark, es, snap)
                 if preserve
-                else self._read_with_deletes(spark, es, snap)
+                else self._read_with_deletes(spark, es, snap),
+                cluster_by,
+                n_files,
             )
-            sub = _partition_subdir(spec_id, part, "clustered")
-            out_dir = os.path.join(self.root, "data", f"z-{batch}", sub)
-            with conf_scope(spark, _MICROS_TS):
-                zorder_frame(df, cluster_by, n_files).write.parquet(out_dir)
-            for path in glob.glob(os.path.join(out_dir, "*.parquet")):
-                rel = os.path.relpath(path, self.root)
-                st = file_stats(path)
-                st["columns"].pop("__row_id", None)
-                st["columns"].pop("__upd_seq", None)
-                new_entries.append(
-                    {
-                        "path": rel,
-                        **({"row_ids_inline": True} if preserve else {}),
-                        "rows": st["rows"],
-                        "bytes": st["bytes"],
-                        **_stamp_partition(part),
-                        "columns": st["columns"],
-                        **({"spec_id": spec_id} if spec_id else {}),
-                    }
-                )
-
-        self._attach_blooms(spark, new_entries)
+            for key, es in by_partition.items()
+        }
+        new_entries = self._write_data_files(None, prefix="z", groups=groups)
 
         def make(current, parent, seq, write_manifest):
             manifest = write_manifest([{**e, "seq": seq} for e in new_entries])
@@ -2967,7 +2991,7 @@ class Table:
 
         if self._commit_snapshot("replace", make, snap.snapshot_id) is None:
             # the head moved during the rewrite: nothing committed
-            shutil.rmtree(os.path.join(self.root, "data", f"z-{batch}"), ignore_errors=True)
+            self._remove_written(new_entries)
             return {"rewritten": 0, "new_files": 0}
         return {"rewritten": len(entries), "new_files": len(new_entries)}
 
@@ -3010,11 +3034,6 @@ class Table:
         if len(small) < 2:
             return {"rewritten": 0, "new_files": 0}
         keep = [e for e in entries if e not in small]
-        t = self.transform
-        new_entries: list[dict] = []
-        import uuid as uuid_mod
-
-        batch = uuid_mod.uuid4().hex
         # (spec_id, partition) grouping — see rewrite_clustered: a
         # bucket value is only meaningful under the spec that wrote it.
         by_partition: dict[tuple, list[dict]] = {}
@@ -3028,7 +3047,8 @@ class Table:
         # 2 int64 columns only in rewritten files; plain scans read
         # with an explicit schema and never see them.
         preserve = md.properties.get("row.lineage") == "preserve"
-        for (spec_id, part), es in by_partition.items():
+        groups = {}
+        for key, es in by_partition.items():
             # deletes-applied read: compacted rows carry THIS commit's
             # sequence, so pending equality deletes stop applying to
             # them — they must already be filtered out here
@@ -3037,42 +3057,17 @@ class Table:
                 if preserve
                 else self._read_with_deletes(spark, es, snap)
             )
-            total = sum(e["bytes"] for e in es)
-            n_out = max(1, total // target_file_bytes)
-            sub = _partition_subdir(spec_id, part, "compacted")
-            out_dir = os.path.join(self.root, "data", f"c-{batch}", sub)
-            if sort_by:
-                # range-partition + sort: every output file covers a
-                # DISJOINT key range, so its min/max stats are tight
-                # and plan_files skipping becomes surgical — the
-                # cluster-by/z-order analogue for 1-d keys.
-                with conf_scope(spark, _MICROS_TS):
-                    (
-                        df.repartitionByRange(int(n_out), *sort_by)
-                        .sortWithinPartitions(*sort_by)
-                        .write.parquet(out_dir)
-                    )
-            else:
-                with conf_scope(spark, _MICROS_TS):
-                    df.coalesce(int(n_out)).write.parquet(out_dir)
-            for path in glob.glob(os.path.join(out_dir, "*.parquet")):
-                rel = os.path.relpath(path, self.root)
-                st = file_stats(path)
-                st["columns"].pop("__row_id", None)  # lineage carry, not data
-                st["columns"].pop("__upd_seq", None)
-                new_entries.append(
-                    {
-                        "path": rel,
-                        "rows": st["rows"],
-                        "bytes": st["bytes"],
-                        **_stamp_partition(part),
-                        "columns": st["columns"],
-                        **({"row_ids_inline": True} if preserve else {}),
-                        **({"spec_id": spec_id} if spec_id else {}),
-                    }
-                )
-
-        self._attach_blooms(spark, new_entries)
+            n_out = int(max(1, sum(e["bytes"] for e in es) // target_file_bytes))
+            # sort_by: range-partition + sort, so every output file
+            # covers a DISJOINT key range, its min/max stats are tight
+            # and plan_files skipping becomes surgical — the
+            # cluster-by/z-order analogue for 1-d keys.
+            groups[key] = (
+                df.repartitionByRange(n_out, *sort_by).sortWithinPartitions(*sort_by)
+                if sort_by
+                else df.coalesce(n_out)
+            )
+        new_entries = self._write_data_files(None, prefix="c", groups=groups)
 
         def make(current, parent, seq, write_manifest):
             manifest = write_manifest(keep + [{**e, "seq": seq} for e in new_entries])
@@ -3081,7 +3076,7 @@ class Table:
 
         if self._commit_snapshot("replace", make, snap.snapshot_id) is None:
             # the head moved during the compaction: nothing committed
-            shutil.rmtree(os.path.join(self.root, "data", f"c-{batch}"), ignore_errors=True)
+            self._remove_written(new_entries)
             return {"rewritten": 0, "new_files": 0}
         return {"rewritten": len(small), "new_files": len(new_entries)}
 
@@ -3301,6 +3296,19 @@ class Table:
             return nxt is None or Table._entry_may_match(
                 entry, t, (col, "<", nxt)
             )
+        bloom = entry.get("bloom")
+        if op in ("=", "==") and bloom and bloom.get("column") == col:
+            # manifest-level Bloom probe: the per-file filter can prove
+            # the key absent where min/max can't (columns whose values
+            # are spread across every file's range). It hashes the
+            # build's rendering of the literal as written, or keeps the
+            # file; the per-field and per-rendering steps below skip it
+            from .bloom_index import bloom_key, bloom_may_contain
+
+            key = bloom_key(bloom, val)
+            if key is not None and not bloom_may_contain(bloom, key):
+                return False
+            entry = {**entry, "bloom": None}
         if isinstance(t, CompositeTransform):
             # per-field resolution: the file's true value region is
             # the INTERSECTION of its per-field buckets, so it may
@@ -3370,21 +3378,9 @@ class Table:
             return True  # incomparable predicate/stat types: keep
         if op in ("=", "=="):
             try:
-                inside = lo <= val <= hi
+                return lo <= val <= hi
             except TypeError:
                 return True
-            if not inside:
-                return False
-            # manifest-level Bloom probe: min/max admits the file, but
-            # the per-file filter can still prove the key absent —
-            # the point-lookup pruning min/max can't do on columns
-            # whose values are spread across every file's range
-            bloom = entry.get("bloom")
-            if bloom and bloom.get("column") == col:
-                from .bloom_index import bloom_may_contain
-
-                return bloom_may_contain(bloom, val)
-            return True
         return True  # unknown op -> no pruning
 
     # ---------- schema evolution (Iceberg UpdateSchema semantics) ----------

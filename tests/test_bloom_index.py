@@ -3,6 +3,7 @@ plan_files integration, manifest round trip."""
 
 from __future__ import annotations
 
+import datetime
 import tempfile
 
 import pytest
@@ -202,10 +203,13 @@ def test_distributed_plan_path_honors_bloom(spark, bloom_table):
 
 
 def test_blooms_survive_rewrites(spark, sf_dir):
-    # compaction and z-order rewrites must re-attach blooms to the new
-    # files — otherwise a maintenance pass silently regresses
+    # every path that writes data files — z-order, SQL INSERT
+    # OVERWRITE (static and dynamic), update_where, upsert — must
+    # attach blooms to the new files; otherwise it silently regresses
     # point-lookup pruning
     from java_iceberg_table_spark.fixtures import load_table
+    from java_iceberg_table_spark.table import bucket
+    from java_iceberg_table_spark.table.sql_dml import run_dml
 
     base = tempfile.mkdtemp(prefix="bloom_rw_")
     root = base + "/t"
@@ -214,20 +218,76 @@ def test_blooms_survive_rewrites(spark, sf_dir):
             "o_orderkey", "o_custkey", "o_totalprice"
         )
         tbl = create_table(
-            root, orders.schema, properties={"write.bloom.column": "o_orderkey"}
+            root,
+            orders.schema,
+            partition=bucket("o_custkey", 4),
+            properties={"write.bloom.column": "o_orderkey"},
         )
         tbl.append(orders.repartition(4))
-        tbl.rewrite_clustered(spark, ["o_orderkey", "o_custkey"], n_files=4)
-        entries = tbl.plan_files()
-        assert entries and all("bloom" in e for e in entries)
+        orders.createOrReplaceTempView("bloom_rw_src")
         k = int(orders.agg(F.min("o_orderkey")).collect()[0][0])
-        # after z-order, min/max already prunes on o_orderkey; the
-        # bloom must still answer present/absent correctly
-        assert tbl.scan(spark, [("o_orderkey", "=", k)]).count() >= 1
+        steps = {
+            "zorder": lambda: tbl.rewrite_clustered(
+                spark, ["o_orderkey", "o_custkey"], n_files=4
+            ),
+            "sql static overwrite": lambda: run_dml(
+                spark, "INSERT OVERWRITE t SELECT * FROM bloom_rw_src", lambda _: tbl
+            ),
+            "sql dynamic overwrite": lambda: run_dml(
+                spark,
+                "INSERT OVERWRITE t PARTITION (o_custkey) SELECT * FROM bloom_rw_src",
+                lambda _: tbl,
+            ),
+            "update_where": lambda: tbl.update_where(
+                spark, [("o_orderkey", "=", k)], {"o_totalprice": "o_totalprice + 1"}
+            ),
+            "upsert": lambda: tbl.upsert(
+                spark, orders.filter(F.col("o_orderkey") == k), ["o_orderkey"]
+            ),
+        }
+        for step, rewrite in steps.items():
+            snap = tbl.metadata.current_snapshot_id
+            rewrite()
+            assert tbl.metadata.current_snapshot_id != snap, step
+            entries = tbl.plan_files()
+            assert entries and all("bloom" in e for e in entries), step
+            # min/max may already prune on o_orderkey; the bloom must
+            # still answer present/absent correctly
+            assert tbl.scan(spark, [("o_orderkey", "=", k)]).count() == 1, step
     finally:
         import shutil
 
+        spark.catalog.dropTempView("bloom_rw_src")
         shutil.rmtree(base, ignore_errors=True)
+
+
+@pytest.mark.parametrize(
+    "column, literal",
+    [("n", 3.0), ("ts", datetime.datetime(2024, 1, 3, 5))],
+)
+def test_bloom_probe_hashes_the_build_rendering(spark, tmp_path, column, literal):
+    """The build hashes Spark's CAST(col AS STRING); a literal whose
+    str() differs — 3.0 on an int column ('3.0' against '3'), a
+    datetime (ISO 'T' against Spark's space) — must not prune the file
+    that holds its row, in either planner probe. A literal the bloom
+    can render still prunes: 4.0 lies inside [min, max] of n = 3i but
+    is absent."""
+    from java_iceberg_table_spark.table.table import prune_entries_by_keys
+
+    df = spark.createDataFrame(
+        [
+            (3 * i, datetime.datetime(2024, 1, 1) + datetime.timedelta(hours=i))
+            for i in range(60)
+        ],
+        "n int, ts timestamp",
+    )
+    tbl = create_table(str(tmp_path / "t"), df.schema, properties={"write.bloom.column": column})
+    tbl.append(df.coalesce(1))
+    assert len(tbl.plan_files([(column, "=", literal)])) == 1
+    assert len(prune_entries_by_keys(tbl.plan_files(), column, [literal])) == 1
+    assert tbl.scan(spark, [(column, "=", literal)]).count() == 1
+    if column == "n":
+        assert tbl.plan_files([("n", "=", 4.0)]) == []
 
 
 @pytest.mark.parametrize(

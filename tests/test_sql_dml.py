@@ -879,6 +879,13 @@ def test_insert_values_and_select(spark, cat):
     )
     assert res["inserted_rows"] == 2
     assert cat.read(spark, "t").count() == 14
+    # source names match case-insensitively (Spark's default resolution)
+    res = cat.sql(
+        spark,
+        "INSERT INTO t SELECT k + 1000 AS K, v, qty FROM t WHERE k >= 500",
+    )
+    assert res["inserted_rows"] == 2
+    assert {r["k"] for r in cat.read(spark, "t").collect()} >= {1520, 1521}
     for bad, why in [
         ("INSERT INTO t VALUES (1, 'x')", "arity"),
         ("INSERT INTO t SELECT k FROM t", "match the table schema"),
@@ -1766,6 +1773,10 @@ def test_insert_overwrite_sql(spark, cat):
     )
     assert res["inserted_rows"] == 1
     assert cat.read(spark, "t").count() == 1
+    # source names match case-insensitively (Spark's default resolution)
+    res = cat.sql(spark, "INSERT OVERWRITE t SELECT k AS K, v, qty FROM t")
+    assert res["inserted_rows"] == 1
+    assert [tuple(r) for r in cat.read(spark, "t").collect()] == [(7, "only", 1)]
     # schema mismatch refuses loudly
     with pytest.raises(UnsupportedSQL, match="match the table schema"):
         cat.sql(spark, "INSERT OVERWRITE t SELECT k FROM t")
@@ -1780,6 +1791,35 @@ def test_insert_overwrite_sql(spark, cat):
     )
     assert [o["statement"] for o in out] == ["insert_overwrite", "insert"]
     assert cat.read(spark, "t").count() == 2
+
+
+@pytest.mark.parametrize(
+    "bad",
+    [
+        "INSERT OVERWRITE ct PARTITION (a = 1, b) VALUES ('x')",
+        "INSERT INTO ct PARTITION (a, b) VALUES (1, 2, 'x')",
+        "INSERT OVERWRITE t (k, v) VALUES (1, 'x')",
+        "INSERT INTO ct.branch_x PARTITION (a, b) VALUES (1, 2, 'x')",
+        "INSERT OVERWRITE t PARTITION (k) SELECT * FROM t",
+        "INSERT OVERWRITE ct PARTITION (b, a) VALUES (1, 2, 'x')",
+    ],
+)
+def test_insert_refusal_matrix(spark, cat, bad):
+    """Shapes outside the INSERT grammar refuse and commit nothing: a
+    mixed static/dynamic PARTITION list, PARTITION on INSERT INTO, a
+    column list on INSERT OVERWRITE, PARTITION on a branch write,
+    PARTITION on an unpartitioned table, composite fields out of
+    spec order."""
+    cat.sql(spark, "CREATE TABLE ct (a BIGINT, b BIGINT, v STRING) PARTITIONED BY (a, b)")
+    cat.sql(spark, "INSERT INTO ct VALUES (1, 2, 'x')")
+    cat.sql(spark, "ALTER TABLE ct CREATE BRANCH x")
+    before = {n: cat.table(n).metadata for n in ("t", "ct")}
+    with pytest.raises(UnsupportedSQL):
+        cat.sql(spark, bad)
+    for n, md in before.items():
+        after = cat.table(n).metadata
+        assert after.current_snapshot_id == md.current_snapshot_id, n
+        assert after.refs == md.refs, n
 
 
 def test_create_table_ddl(spark, cat):
