@@ -265,12 +265,11 @@ def arrow_stats(records, file_bytes: int) -> dict:
     """{rows, bytes, columns:{name:{min,max,nulls}}} computed from the
     in-memory Arrow batch — the write-time-metrics path for formats
     without a parquet footer (Writer.java:107 semantics). Values use
-    the same JSON-safe representation as table/stats.file_stats."""
+    the same bounds as table/stats.file_stats (column_bounds)."""
+    import pyarrow as pa
     import pyarrow.compute as pc
 
-    from ..table.stats import _plain
-
-    import pyarrow as pa
+    from ..table.stats import column_bounds
 
     cols: dict[str, dict] = {}
     for name in records.column_names:
@@ -290,8 +289,8 @@ def arrow_stats(records, file_bytes: int) -> dict:
                 continue
             mm = pc.min_max(col)
             mn, mx = mm["min"].as_py(), mm["max"].as_py()
-            if not (mn != mn or mx != mx):
-                entry["min"], entry["max"] = _plain(mn), _plain(mx)
+            if mn is not None and not (mn != mn or mx != mx):
+                entry = {**column_bounds(mn, mx), "nulls": col.null_count}
         except Exception:
             pass  # stats are optional; pruning treats missing as "keep"
         cols[name] = entry

@@ -364,14 +364,21 @@ def _attach_lineage(tbl, pos, path: str, lineage):
     )
 
 
-def _write_task_files(batch_iter, root: str, schema: StructType, spec: dict | None):
+def _write_task_files(
+    batch_iter, root: str, schema: StructType, spec: dict | None, bloom: dict | None = None
+):
     """Executor-side: stream this task's Arrow batches into data/ —
     one file per partition bucket per task when the table is
-    partitioned — and return manifest entries with footer stats."""
+    partitioned — and return manifest entries with footer stats.
+    ``bloom`` (the column and type of ``write.bloom.column``) gives
+    each file its value bloom, built from the rows as they are
+    written; a file holding a value ``bloom_key`` cannot render gets
+    none (absent blooms never prune)."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
+    from ..table.bloom_index import bloom_key, bloom_of_keys
     from ..table.stats import file_stats
     from ..table.transforms import transform_from_json
 
@@ -382,6 +389,7 @@ def _write_task_files(batch_iter, root: str, schema: StructType, spec: dict | No
     os.makedirs(out_dir, exist_ok=True)
     writers: dict[object, pq.ParquetWriter] = {}
     paths: dict[object, str] = {}
+    bloom_keys: dict[object, set | None] = {}  # None: no bloom possible
     # pyarrow's parquet writer records NaN-STRIPPED min/max — clean-
     # looking bounds even when the column holds NaN — while Spark
     # orders NaN above every value, so both our manifest pruning AND
@@ -408,6 +416,17 @@ def _write_task_files(batch_iter, root: str, schema: StructType, spec: dict | No
             )
         return writers[bucket]
 
+    def write(bucket, part):
+        sink_for(bucket).write_table(part)
+        if bloom is None or (keys := bloom_keys.setdefault(bucket, set())) is None:
+            return
+        for v in pc.unique(part.column(bloom["column"])).drop_null().to_pylist():
+            k = bloom_key(bloom, v)
+            if k is None:
+                bloom_keys[bucket] = None
+                return
+            keys.add(k)
+
     from ..table.transforms import CompositeTransform
 
     tf_fields = (
@@ -417,7 +436,7 @@ def _write_task_files(batch_iter, root: str, schema: StructType, spec: dict | No
         for batch in batch_iter:
             at = pa.Table.from_batches([batch]).cast(target)
             if t is None:
-                sink_for(None).write_table(at)
+                write(None, at)
                 continue
             # per-transform Arrow bucketing (transforms.apply_arrow):
             # truncate = exact integer floor-mod, identity = the value,
@@ -446,7 +465,7 @@ def _write_task_files(batch_iter, root: str, schema: StructType, spec: dict | No
                     mask = m if mask is None else pc.and_(mask, m)
                 part = at.filter(mask).drop(bcols)
                 bucket = key if len(key) > 1 else key[0]
-                sink_for(bucket).write_table(part)
+                write(bucket, part)
     finally:
         for w in writers.values():
             w.close()
@@ -469,6 +488,11 @@ def _write_task_files(batch_iter, root: str, schema: StructType, spec: dict | No
                     }
                 ),
                 "columns": st["columns"],
+                **(
+                    {"bloom": bloom_of_keys(bloom, bloom_keys[bucket], st["rows"])}
+                    if bloom_keys.get(bucket) is not None
+                    else {}
+                ),
             }
         )
     return entries
@@ -1158,9 +1182,21 @@ class _WriterBase:
         # evolution that silently mis-prunes every connector-written
         # file (a hash-bucket value read as a truncate range start).
         self.spec_id = tbl.current_spec_id()
+        # the commit runs in a Python worker with no SparkSession, so
+        # the write.bloom.column filter cannot be built after the
+        # write as Table._attach_blooms does: each task builds it for
+        # its own files (a TIMESTAMP renders in UTC, recorded in it)
+        col = tbl.metadata.properties.get("write.bloom.column")
+        self.bloom = None
+        if col in schema.fieldNames():
+            self.bloom = {"column": col, "type": schema[col].dataType.simpleString()}
+            if self.bloom["type"] == "timestamp":
+                self.bloom["tz"] = "UTC"
 
     def write(self, iterator):
-        return FilesCommit(_write_task_files(iterator, self.root, self.schema, self.spec))
+        return FilesCommit(
+            _write_task_files(iterator, self.root, self.schema, self.spec, self.bloom)
+        )
 
     def _all_entries(self, messages):
         stamp = {"spec_id": self.spec_id} if self.spec_id else {}

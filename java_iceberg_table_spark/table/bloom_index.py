@@ -28,6 +28,9 @@ Design:
   session time zone the cast rendered in); ``bloom_key`` maps a
   predicate literal to that same string, or to None when it cannot
   know it, and the probe then keeps the file.
+- a writer task that holds the rows but no SparkSession (the
+  connector) builds the same filter in Python (``bloom_of_keys``),
+  rendering each value with ``bloom_key`` itself.
 """
 
 from __future__ import annotations
@@ -35,6 +38,7 @@ from __future__ import annotations
 import datetime as _dt
 import re
 import zlib
+from typing import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -222,20 +226,38 @@ def bloom_key(bloom: dict, value: object) -> str | None:
     return value.strftime("%Y-%m-%d %H:%M:%S") + frac
 
 
+def _bit_positions(bits: int, k: int, s: str):
+    for i in range(k):
+        yield zlib.crc32((_SEED_FMT.format(i=i) + s).encode("utf-8")) % bits
+
+
+def bloom_of_keys(rendering: dict, keys: Iterable[str], rows: int) -> dict:
+    """One file's value bloom built in Python, for writers that hold
+    the rows but no SparkSession (the connector's executor tasks).
+    ``rendering`` is the bloom minus its bits: column and type (and
+    the zone of a TIMESTAMP); ``keys`` are the file's values rendered
+    by ``bloom_key`` under it, the probe's own rendering, so build and
+    probe agree by construction. Sized and hashed like
+    ``build_file_blooms``; words are signed longs, as Spark's are."""
+    bits = sized_bits(rows)
+    words = [0] * (bits // 64)
+    for s in keys:
+        for p in _bit_positions(bits, NUM_HASHES, s):
+            words[p // 64] |= 1 << (p % 64)
+    words = [w - (1 << 64) if w >> 63 else w for w in words]
+    return {**rendering, "bits": bits, "k": NUM_HASHES, "words": words}
+
+
 def bloom_may_contain(bloom: dict, value: object) -> bool:
     """Driver-side probe, hash-identical to the Spark build side: it
     hashes ``str(value)``, so planners pass ``bloom_key``'s string."""
-    bits = int(bloom["bits"])
     words = bloom["words"]
-    s = str(value)
-    for i in range(int(bloom["k"])):
-        h = zlib.crc32((_SEED_FMT.format(i=i) + s).encode("utf-8"))
-        p = h % bits
-        # words carry Spark's SIGNED longs; Python's & applies two's-
-        # complement semantics to negative ints, so masking is exact
-        if not int(words[p // 64]) & (1 << (p % 64)):
-            return False
-    return True
+    # words carry Spark's SIGNED longs; Python's & applies two's-
+    # complement semantics to negative ints, so masking is exact
+    return all(
+        int(words[p // 64]) & (1 << (p % 64))
+        for p in _bit_positions(int(bloom["bits"]), int(bloom["k"]), str(value))
+    )
 
 
 def build_file_token_blooms(

@@ -31,9 +31,12 @@ into ``data/`` with zero coordination and crash safely at any point
 from __future__ import annotations
 
 import json
+import marshal
 import os
+import threading
 import time
 import uuid
+from collections import OrderedDict
 from dataclasses import dataclass, field
 from typing import Any
 
@@ -215,15 +218,23 @@ def _version_path(root: str, version: int) -> str:
     return os.path.join(_metadata_dir(root), f"v{version}.json")
 
 
-def write_json_atomic(path: str, payload: dict) -> None:
-    """Write-temp-then-rename — the same publish idiom as the
-    reference's moniker handoff (Writer.java:160-170)."""
-    tmp = f"{path}.{uuid.uuid4().hex}.tmp"
-    with open(tmp, "w") as f:
-        json.dump(payload, f)
+def _write_fsynced(path: str, text: str) -> None:
+    with open(path, "w") as f:
+        f.write(text)
         f.flush()
         os.fsync(f.fileno())
+
+
+def write_json_atomic(path: str, payload: dict) -> str:
+    """Write-temp-then-rename — the same publish idiom as the
+    reference's moniker handoff (Writer.java:160-170). Encodes with
+    ``json.dumps`` (the C encoder; ``json.dump`` streams through the
+    pure-Python one) and returns the text written."""
+    text = json.dumps(payload)
+    tmp = f"{path}.{uuid.uuid4().hex}.tmp"
+    _write_fsynced(tmp, text)
     os.rename(tmp, path)
+    return text
 
 
 def read_json(path: str) -> dict:
@@ -274,10 +285,7 @@ def publish_version(vdir: str, version: int, payload: dict) -> None:
     after the publish, best-effort."""
     path = os.path.join(vdir, f"v{version}.json")
     tmp = f"{path}.{uuid.uuid4().hex}.tmp"
-    with open(tmp, "w") as f:
-        json.dump(payload, f)
-        f.flush()
-        os.fsync(f.fileno())
+    _write_fsynced(tmp, json.dumps(payload))
     try:
         os.link(tmp, path)
     except FileExistsError as e:
@@ -334,20 +342,68 @@ def commit(root: str, build: "callable", max_retries: int = 1000) -> TableMetada
     )
 
 
+class ManifestCache:
+    """Parsed manifests, bounded by their total entry count, least
+    recently used first out. A manifest's name is a fresh uuid and the
+    file is never rewritten, so an entry can never go stale. Entries
+    are stored marshalled: every read unmarshals its own copy (several
+    times cheaper than parsing the JSON), so a caller editing the
+    entries it got cannot change the next read. Shared by threads."""
+
+    def __init__(self, max_entries: int):
+        self.max_entries = max_entries
+        self.entries = 0
+        self._blobs: OrderedDict[str, tuple[int, bytes]] = OrderedDict()
+        self._lock = threading.Lock()
+
+    def get(self, path: str) -> list[dict] | None:
+        with self._lock:
+            hit = self._blobs.get(path)
+            if hit is None:
+                return None
+            self._blobs.move_to_end(path)
+        return marshal.loads(hit[1])
+
+    def put(self, path: str, entries: list[dict]) -> None:
+        n = len(entries)
+        if n > self.max_entries:
+            return
+        blob = marshal.dumps(entries)
+        with self._lock:
+            if path in self._blobs:
+                return
+            self._blobs[path] = (n, blob)
+            self.entries += n
+            while self.entries > self.max_entries:
+                self.entries -= self._blobs.popitem(last=False)[1][0]
+
+
+_manifests = ManifestCache(20_000)
+
+
 def write_manifest(root: str, entries: list[dict]) -> str:
-    """Immutable manifest file; returns path relative to root.
+    """Immutable manifest file; returns path relative to root. The
+    manifest cache is filled with the entries as a read of the file
+    parses them.
 
     Entry shape: {path, rows, bytes, partition, columns:{col:{min,max,nulls}}}
     with ``path`` relative to the table root."""
     rel = os.path.join("manifests", f"m-{uuid.uuid4().hex}.json")
-    full = os.path.join(root, rel)
+    full = os.path.abspath(os.path.join(root, rel))
     os.makedirs(os.path.dirname(full), exist_ok=True)
-    write_json_atomic(full, {"entries": entries})
+    text = write_json_atomic(full, {"entries": entries})
+    _manifests.put(full, json.loads(text)["entries"])
     return rel
 
 
 def read_manifest(root: str, rel_path: str) -> list[dict]:
-    return read_json(os.path.join(root, rel_path))["entries"]
+    """The entries of one manifest, from the cache when it holds them."""
+    path = os.path.abspath(os.path.join(root, rel_path))
+    entries = _manifests.get(path)
+    if entries is None:
+        entries = read_json(path)["entries"]
+        _manifests.put(path, entries)
+    return entries
 
 
 def new_snapshot_id() -> int:

@@ -101,7 +101,7 @@ def write_stats_file(
     path = os.path.join(root, rel)
     tmp = path + ".tmp"
     with open(tmp, "w") as f:
-        json.dump({"snapshot_id": snapshot_id, "k": k, "columns": sketches}, f)
+        f.write(json.dumps({"snapshot_id": snapshot_id, "k": k, "columns": sketches}))
     os.replace(tmp, path)
     return rel
 

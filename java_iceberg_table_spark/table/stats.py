@@ -5,23 +5,45 @@ and recovers them from footers when it didn't write the file itself
 (StorageQueueBasedBookkeeper.java:63-66, ParquetUtil.fileMetrics). This
 module is the footer path: pyarrow reads only footer metadata — no data
 pages — so stats collection is O(row groups), not O(rows).
+
+Bounds follow Iceberg's default metrics mode, ``truncate(16)``
+(https://iceberg.apache.org/docs/latest/configuration/#write-properties):
+``column_bounds`` is the one place a manifest bound is rendered, for
+the footer path here and the in-memory path (avro_io.arrow_stats).
 """
 
 from __future__ import annotations
 
 import datetime as _dt
+import os
 from typing import Any
 
 import pyarrow.parquet as pq
 
+# string and binary bounds keep this many characters of their rendering
+TRUNCATE_LENGTH = 16
+
+
+def _prefix_upper(pfx: str) -> str | None:
+    """Smallest string greater than every string with prefix ``pfx``
+    (bump the last bumpable code point); None when no such bound
+    exists. Python str comparison is by code point, which matches
+    parquet's UTF-8 byte ordering on the stats bounds."""
+    for i in range(len(pfx) - 1, -1, -1):
+        c = ord(pfx[i])
+        if c < 0x10FFFF:
+            return pfx[:i] + chr(c + 1)
+    return None
+
 
 def _plain(v: Any) -> Any:
-    """JSON-safe representation of a footer min/max value. Temporal
-    bounds render as NAIVE-UTC isoformat: pyarrow hands back tz-aware
-    datetimes for UTC-adjusted int64 timestamps, and a '+00:00' suffix
-    would break boundary equality against predicate/key renderings
-    (naive '…T11:15:00' sorts BEFORE '…T11:15:00+00:00', so a key equal
-    to a file's min would prune the file that holds it)."""
+    """JSON-safe exact representation of a footer min/max value.
+    Temporal values render as NAIVE-UTC isoformat: pyarrow hands back
+    tz-aware datetimes for UTC-adjusted int64 timestamps, and a
+    '+00:00' suffix would break boundary equality against
+    predicate/key renderings (naive '…T11:15:00' sorts BEFORE
+    '…T11:15:00+00:00', so a key equal to a file's min would prune the
+    file that holds it)."""
     if isinstance(v, bytes):
         try:
             return v.decode("utf-8")
@@ -36,22 +58,43 @@ def _plain(v: Any) -> Any:
     return v
 
 
-def file_stats(path: str) -> dict:
-    """{rows, bytes, columns: {name: {min, max, nulls}}} for one file."""
-    pf = pq.ParquetFile(path)
-    md = pf.metadata
-    cols: dict[str, dict] = {}
+def column_bounds(mn: Any, mx: Any) -> dict:
+    """The manifest bounds ``{min, max}`` of one column from its raw
+    minimum and maximum value. Numbers and the ISO renderings of dates
+    and timestamps are exact. String bounds, and binary bounds (always
+    rendered as hex, so every file of a column compares in byte
+    order), keep TRUNCATE_LENGTH characters: the lower bound is the
+    prefix, the upper bound the prefix with its last character
+    incremented (absent when none can be), so both stay conservative.
+    A column with a truncated bound is marked ``truncated``."""
+    if isinstance(mn, bytes):
+        mn, mx = mn.hex(), mx.hex()
+    elif not isinstance(mn, str):
+        return {"min": _plain(mn), "max": _plain(mx)}
+    out = {"min": mn[:TRUNCATE_LENGTH], "max": mx}
+    if len(mx) > TRUNCATE_LENGTH:
+        out["max"] = _prefix_upper(mx[:TRUNCATE_LENGTH])
+    if len(mn) > TRUNCATE_LENGTH or len(mx) > TRUNCATE_LENGTH:
+        out["truncated"] = True
+    return out
+
+
+def file_stats(path: str, exact: bool = False) -> dict:
+    """{rows, bytes, columns: {name: {min, max, nulls}}} for one file.
+    ``exact`` renders every bound untruncated (``_plain``), for callers
+    that derive values from the bounds instead of pruning with them."""
+    md = pq.ParquetFile(path).metadata
+    raw: dict[str, list] = {}  # name -> [min, max, nulls, poisoned]
     for rg in range(md.num_row_groups):
         g = md.row_group(rg)
         for ci in range(g.num_columns):
             col = g.column(ci)
-            name = col.path_in_schema
             st = col.statistics
             if st is None:
                 continue
-            entry = cols.setdefault(name, {"min": None, "max": None, "nulls": 0})
+            acc = raw.setdefault(col.path_in_schema, [None, None, 0, False])
             if st.has_min_max:
-                mn, mx = _plain(st.min), _plain(st.max)
+                mn, mx = st.min, st.max
                 # NaN poisons every bound comparison (NaN < x and
                 # NaN > x are both False, so a NaN max silently prunes
                 # files that DO match — Spark/DuckDB order NaN above
@@ -59,18 +102,22 @@ def file_stats(path: str) -> dict:
                 # usable bound: drop the column's stats entirely for
                 # this file (absent stats = never pruned).
                 if mn != mn or mx != mx:
-                    entry["min"] = entry["max"] = None
-                    entry["poisoned"] = True
-                elif not entry.get("poisoned"):
-                    if entry["min"] is None or mn < entry["min"]:
-                        entry["min"] = mn
-                    if entry["max"] is None or mx > entry["max"]:
-                        entry["max"] = mx
-            entry["nulls"] += st.null_count or 0
-    import os
-
-    for entry in cols.values():
-        entry.pop("poisoned", None)  # build-time marker, not manifest data
+                    acc[0] = acc[1] = None
+                    acc[3] = True
+                elif not acc[3]:
+                    if acc[0] is None or mn < acc[0]:
+                        acc[0] = mn
+                    if acc[1] is None or mx > acc[1]:
+                        acc[1] = mx
+            acc[2] += st.null_count or 0
+    cols = {}
+    for name, (mn, mx, nulls, _) in raw.items():
+        if mn is None:
+            cols[name] = {"min": None, "max": None, "nulls": nulls}
+        elif exact:
+            cols[name] = {"min": _plain(mn), "max": _plain(mx), "nulls": nulls}
+        else:
+            cols[name] = {**column_bounds(mn, mx), "nulls": nulls}
     return {
         "rows": md.num_rows,
         "bytes": os.path.getsize(path),

@@ -32,7 +32,7 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 from ..session import conf_scope, read_paths
 from . import format as fmt
 from .format import Snapshot, TableMetadata
-from .stats import file_stats
+from .stats import _prefix_upper, file_stats
 from .transforms import CompositeTransform, Transform, transform_from_json
 
 DEFAULT_PROPERTIES = {
@@ -90,25 +90,16 @@ def _dashed(result: dict) -> dict:
     return {k.replace("_", "-"): v for k, v in result.items()}
 
 
-def _prefix_upper(pfx: str) -> str | None:
-    """Smallest string greater than every string with prefix ``pfx``
-    (bump the last bumpable code point); None when no such bound
-    exists. Python str comparison is by code point, which matches
-    parquet's UTF-8 byte ordering on the stats bounds."""
-    for i in range(len(pfx) - 1, -1, -1):
-        c = ord(pfx[i])
-        if c < 0x10FFFF:
-            return pfx[:i] + chr(c + 1)
-    return None
-
-
 # Above this much manifest JSON, scan planning and GC reachability move
 # from the driver to one Spark job over the manifests: planning runs
 # the driver's own pruning predicate on executors, GC aggregates a
 # Spark JSON scan (inspect.py). Below it, the job's overhead exceeds
-# the driver loop. An entry is ~0.2 kB with narrow bounds but ~7.5 kB
-# with wide string or binary bounds (an ingest entry), so 4 MB is
-# ~19,000 entries of the first kind and ~550 of the second.
+# the driver loop. String and binary bounds are truncated to 16
+# characters (stats.column_bounds), so an entry is ~0.2 kB with
+# numeric bounds and ~0.6 kB with string and binary ones (an ingest
+# entry): 4 MB is ~19,000 entries of the first kind and ~6,700 of the
+# second. Manifests written with full bounds are larger (an ingest
+# entry was ~7.6 kB, ~550 entries) and reach it sooner.
 DIST_PLAN_MIN_MANIFEST_BYTES = 4 << 20
 
 # Position deletes at or below this many rows are stored as INLINE
@@ -1015,13 +1006,16 @@ class Table:
             if t is not None:
                 # composite specs derive one bucket PER FIELD from the
                 # same footer stats — the file must lie in exactly one
-                # bucket on EVERY field
+                # bucket on EVERY field. The bucket is derived from the
+                # untruncated footer bounds: a truncated string bound
+                # is not the value, so min == max could not hold.
+                exact = file_stats(src, exact=True)
                 fields = (
                     t.fields if isinstance(t, CompositeTransform) else (t,)
                 )
                 vals = []
                 for ft in fields:
-                    cst = st["columns"].get(ft.source_column)
+                    cst = exact["columns"].get(ft.source_column)
                     if not cst or cst.get("min") is None or cst.get("nulls", 0) > 0:
                         raise ValueError(
                             f"{src}: cannot derive a partition value — no "

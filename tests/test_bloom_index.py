@@ -324,3 +324,35 @@ def test_attach_blooms_reads_under_table_schema(
     inferring_jobs, inferred = attach()
     assert jobs == inferring_jobs - 1, (jobs, inferring_jobs)
     assert blooms == inferred
+
+
+@pytest.mark.parametrize("column", ["k", "v", "ts"])
+def test_connector_write_attaches_blooms(spark, tmp_path, column):
+    """A ``write.format("engine_table")`` append gives every file its
+    bloom, built by the writing task, bit-identical to the one
+    ``_attach_blooms`` builds with Spark for the same file; the
+    connector's files then prune point lookups like any other."""
+    from java_iceberg_table_spark.sources import register_engine_datasource
+
+    register_engine_datasource(spark)
+    df = spark.range(0, 200).select(
+        F.col("id").alias("k"),
+        F.concat(F.lit("w"), F.col("id").cast("string")).alias("v"),
+        F.timestamp_seconds(F.col("id") * 3600).alias("ts"),
+    )
+    root = str(tmp_path / "t")
+    tbl = create_table(root, df.schema, properties={"write.bloom.column": column})
+    df.repartition(4).write.format("engine_table").option("root", root).mode("append").save()
+    entries = tbl.current_files()
+    assert len(entries) == 4
+    assert all(e.get("bloom", {}).get("column") == column for e in entries)
+    rebuilt = [{k: v for k, v in e.items() if k != "bloom"} for e in entries]
+    tbl._attach_blooms(spark, rebuilt)
+    for e, r in zip(entries, rebuilt):
+        assert e["bloom"]["words"] == r["bloom"]["words"], e["path"]
+    rows = df.collect()
+    for r in rows[::7]:
+        hit = tbl.plan_files([(column, "=", r[column])])
+        assert any(e["path"] in {x["path"] for x in hit} for e in entries)
+        assert len(hit) < len(entries)
+    assert tbl.scan(spark, [(column, "=", rows[5][column])]).count() == 1

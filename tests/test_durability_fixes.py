@@ -338,3 +338,21 @@ def test_one_commit_path():
     assert len(re.findall(r"\bSnapshot\(", src)) == 1
     assert src.count("lost the commit race") == 1
     assert src.count("for attempt in range(3)") <= 1
+
+
+def test_metadata_json_uses_the_c_encoder():
+    """Every JSON the package writes is encoded by ``json.dumps``:
+    ``json.dump`` streams through the pure-Python encoder, several
+    times slower on a manifest of the same bytes."""
+    pkg = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "java_iceberg_table_spark",
+    )
+    offenders = []
+    for dirpath, _, files in os.walk(pkg):
+        for fname in files:
+            if fname.endswith(".py"):
+                with open(os.path.join(dirpath, fname)) as f:
+                    if "json.dump(" in f.read():
+                        offenders.append(os.path.relpath(os.path.join(dirpath, fname), pkg))
+    assert offenders == [], f"json.dump( in {offenders}: write json.dumps(...)"

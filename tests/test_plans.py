@@ -438,12 +438,30 @@ def test_e1_prefilter_equivalence(spark, sf_dir, monkeypatch):
 # Spark jobs one warm build + collect may start. Under AQE every
 # shuffle stage runs as a job of its own, so a new Exchange (or a
 # listing or schema-inference job in the build) breaks the budget.
-JOB_BUDGETS = {"d1_tpch_q1": 2, "c3_multiway_join": 4}
+# Each is the row's measured warm count (4 vCPU, the sf0.001 fixtures).
+# A prepared row (d1e, d1p) caches its Dataset, and collecting that
+# again reuses its finished shuffle stages, so its plan is dropped
+# first and the count covers a fresh Dataset, as bench.py times it.
+JOB_BUDGETS = {
+    "d1_tpch_q1": 2,
+    "d1e_engine_q1_cents": 2,
+    "d1p_prepared_tpch_q1": 2,
+    "c3_multiway_join": 4,
+    "e1_row_number_topk": 2,
+    "h3_top_tokens": 2,
+}
 
 
 @pytest.mark.parametrize("name", sorted(JOB_BUDGETS))
 def test_job_budget(spark, sf_dir, jobs_started, name):
+    from java_iceberg_table_spark.queries.prepared import invalidate
+
     fn = REGISTRY[name].fn
     fn(spark, sf_dir).collect()  # warm: the fixture loads are cached per session
-    jobs, _ = jobs_started(lambda: fn(spark, sf_dir).collect())
+
+    def fresh():
+        invalidate(spark, sf_dir, name)
+        return fn(spark, sf_dir).collect()
+
+    jobs, _ = jobs_started(fresh)
     assert jobs <= JOB_BUDGETS[name], f"{name} started {jobs} jobs"

@@ -10,8 +10,12 @@ Properties:
   non-null rows that match (the count pushdown is exact).
 
 Distributed planning runs the same ``_entry_may_match`` on executors,
-so the driver predicate is the only one to fuzz. Not drawn: Bloom
-filters.
+so the driver predicate is the only one to fuzz. Bounds are rendered
+by ``stats.column_bounds``, the one bound function of both stats
+producers: strings longer than its 16 characters that share long
+prefixes, and binary values that do and do not decode as UTF-8, get
+truncated bounds. Some files instead carry the full per-value bounds
+of manifests written before truncation. Not drawn: Bloom filters.
 """
 
 from __future__ import annotations
@@ -32,15 +36,33 @@ from java_iceberg_table_spark.table import (
     truncate,
     year,
 )
-from java_iceberg_table_spark.table.stats import _plain
+from java_iceberg_table_spark.table.stats import _plain, column_bounds
 from java_iceberg_table_spark.table.table import Table
 from java_iceberg_table_spark.table.transforms import CompositeTransform
 
-COLUMNS = ("n", "s", "ts", "d")
+COLUMNS = ("n", "s", "ts", "d", "b")
 T0 = dt.datetime(2023, 12, 30)
+TOP = "\U0010ffff"  # the code point a truncated upper bound cannot bump
 
 ints = st.integers(-20, 20)
 strs = st.text(alphabet="07ae_n", max_size=4)
+# around the 16-character truncation: long shared prefixes, and one of
+# 16 top code points, which leaves no upper bound at all
+long_strs = st.builds(
+    lambda p, s: p + s,
+    st.sampled_from(["a" * 15, "a" * 16, "a" * 17, "0" * 14 + "7a", "a" * 15 + TOP, TOP * 16]),
+    st.text(alphabet="07ae_n" + TOP, max_size=4),
+)
+# binary bounds render as 16 hex characters, 8 bytes: draw values on
+# both sides of that, decodable as UTF-8 and not
+binaries = st.one_of(
+    st.binary(max_size=4),
+    st.builds(
+        lambda p, s: p + s,
+        st.sampled_from([b"abcdefg", b"abcdefgh", b"\xff" * 9, b"a\xc3"]),
+        st.binary(max_size=3),
+    ),
+)
 # instants clustered around month/day/hour boundaries, some fractional
 timestamps = st.builds(
     lambda days, hours, minutes, micros: T0
@@ -51,7 +73,7 @@ timestamps = st.builds(
     st.sampled_from([0, 500_000]),
 )
 dates = st.builds(lambda days: T0.date() + dt.timedelta(days=days), st.integers(0, 40))
-VALUES = {"n": ints, "s": strs, "ts": timestamps, "d": dates}
+VALUES = {"n": ints, "s": strs | long_strs, "ts": timestamps, "d": dates, "b": binaries}
 
 rows_st = st.lists(
     st.fixed_dictionaries({c: st.none() | v for c, v in VALUES.items()}),
@@ -80,20 +102,24 @@ def _part(t, row):
     return None if v is None else t.apply_py(v)
 
 
-def _entry(path, t, part, rows, drop):
-    """A manifest entry as the driver parse yields it: footer stats
-    rendered by stats._plain, the columns in ``drop`` without stats,
-    JSON round-tripped."""
+def _entry(path, t, part, rows, drop, legacy):
+    """A manifest entry as the driver parse yields it: bounds rendered
+    by stats.column_bounds (``legacy``: the min and max of each value's
+    full rendering, as manifests written before truncation hold them),
+    the columns in ``drop`` without stats, JSON round-tripped."""
     cols = {}
     for c in COLUMNS:
         if c in drop:
             continue
-        vals = [_plain(r[c]) for r in rows if r[c] is not None]
-        cols[c] = {
-            "min": min(vals) if vals else None,
-            "max": max(vals) if vals else None,
-            "nulls": len(rows) - len(vals),
-        }
+        vals = [r[c] for r in rows if r[c] is not None]
+        nulls = len(rows) - len(vals)
+        if not vals:
+            cols[c] = {"min": None, "max": None, "nulls": nulls}
+        elif legacy:
+            plain = [_plain(v) for v in vals]
+            cols[c] = {"min": min(plain), "max": max(plain), "nulls": nulls}
+        else:
+            cols[c] = {**column_bounds(min(vals), max(vals)), "nulls": nulls}
     e = {"path": path, "rows": len(rows), "bytes": 1, "columns": cols}
     if isinstance(t, CompositeTransform):
         e["partition_fields"] = list(part)
@@ -113,7 +139,9 @@ def _literals(col, rows):
         if col == "n":
             near += [v, v - 1, v + 1, v + 0.5, v - 0.5, float(v)]
         elif col == "s":
-            near += [v, v[:1], v[:-1] or "0", v + "a"]
+            near += [v, v[:1], v[:-1] or "0", v + "a", v[:16], v[:16] + TOP, v[:17]]
+        elif col == "b":
+            near += [v, v[:8], v[:-1], v + b"\x00"]
         elif col == "ts":
             floor_h = v.replace(minute=0, second=0, microsecond=0)
             near += [
@@ -201,8 +229,9 @@ def test_pruning_is_conservative_and_certainty_exact(data, t, rows):
             if not chunk:
                 continue
             drop = data.draw(st.sets(st.sampled_from(COLUMNS), max_size=2), label="drop")
+            legacy = data.draw(st.booleans(), label="legacy")
             part = key if isinstance(t, CompositeTransform) else (key[0] if key else None)
-            files.append((_entry(f"f{i}_{j}", t, part, chunk, drop), chunk))
+            files.append((_entry(f"f{i}_{j}", t, part, chunk, drop, legacy), chunk))
 
     for flt in data.draw(st.lists(predicates(rows), min_size=1, max_size=6), label="filters"):
         col, op, lit = flt

@@ -1492,3 +1492,220 @@ def test_date_predicate_on_timestamp_stats(spark, troot):
     assert len(tbl.plan_files([("ts", "<=", dt.date(2024, 3, 5))])) == 1
     assert tbl.scan(spark, [("ts", "<=", dt.date(2024, 3, 5))]).count() == 1
     assert len(tbl.plan_files([("ts", "=", dt.date(2024, 3, 5))])) == 1
+
+
+# ---------- truncated bounds and the manifest cache ----------
+
+EVENTS_STRUCT = StructType(
+    [
+        StructField("message_id", LongType(), False),
+        StructField("data", StringType(), True),
+        StructField("timestamp", __import__("pyspark.sql.types", fromlist=["TimestampType"]).TimestampType(), True),
+        StructField("timeperiod_loadedBy", LongType(), True),
+        StructField("message_body", __import__("pyspark.sql.types", fromlist=["BinaryType"]).BinaryType(), True),
+    ]
+)
+
+
+@pytest.mark.parametrize("file_format", ["parquet", "avro"])
+def test_ingest_entry_bounds_truncated_temporal_exact(troot, file_format):
+    """Both stats producers (the parquet footer and the in-memory avro
+    path) truncate string and binary bounds to 16 characters and mark
+    the column; a binary bound renders as hex; a timestamp bound stays
+    exact, because the temporal pruning compares whole ISO strings."""
+    from java_iceberg_table_spark.ingest.writer import make_records
+
+    tbl = create_table(troot, EVENTS_STRUCT, partition=truncate("timeperiod_loadedBy", WIDTH))
+    w = Writer(tbl, writer_id=0, seed=5, file_format=file_format)
+    (e,) = w.create_data_files(1, 20, timeperiod_us=1_709_510_400_000_000)
+    cols = e["columns"]
+    for c in ("data", "message_body"):
+        assert cols[c]["truncated"] is True
+        assert 0 < len(cols[c]["min"]) <= 16 and 0 < len(cols[c]["max"]) <= 16
+    recs = make_records(20, 1_709_510_400_000_000, seed=5 * 100003)
+    body = sorted(recs.column("message_body").to_pylist())
+    assert cols["message_body"]["min"] == body[0].hex()[:16]
+    assert cols["message_body"]["max"] > body[-1].hex()
+    assert cols["timestamp"] == {"min": "2024-03-04T00:00:00", "max": "2024-03-04T00:00:00", "nulls": 0}
+    assert "truncated" not in cols["message_id"] and "truncated" not in cols["timestamp"]
+    # the marked entry still prunes conservatively on its own bounds
+    tbl.append_entries([e])
+    data = sorted(recs.column("data").to_pylist())
+    assert len(tbl.plan_files([("data", "=", data[-1])])) == 1
+    assert tbl.plan_files([("data", ">", data[-1][:15] + "~")]) == []
+
+
+def test_add_files_bucket_over_long_strings(spark, troot, tmp_path):
+    """add_files derives a hash-bucket partition from footer min == max
+    (identity specs need an integer column, so a string column is
+    bucketed). A 40-character value's truncated bounds differ, so the
+    import decides on the untruncated footer: the file lands in the
+    bucket of its value, and its manifest bounds are still truncated."""
+    import zlib
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from java_iceberg_table_spark.table import bucket
+
+    code = "0" * 38 + "42"
+    schema = StructType([StructField("k", LongType(), False), StructField("code", StringType(), True)])
+    src = str(tmp_path / "codes.parquet")
+    pq.write_table(
+        pa.table({"k": pa.array(range(5), pa.int64()), "code": [code] * 5}),
+        src,
+    )
+    tbl = create_table(troot, schema, partition=bucket("code", 8))
+    tbl.add_files([src])
+    (e,) = tbl.current_files()
+    assert e["partition"] == zlib.crc32(code.encode()) % 8
+    assert e["columns"]["code"] == {"min": "0" * 16, "max": "0" * 15 + "1", "truncated": True, "nulls": 0}
+    assert len(tbl.plan_files([("code", "=", code)])) == 1
+    other = next(c for c in ("0" * 38 + str(i) for i in range(10, 99)) if zlib.crc32(c.encode()) % 8 != e["partition"])
+    assert tbl.plan_files([("code", "=", other)]) == []
+    assert tbl.scan(spark, [("code", "=", code)]).count() == 5
+
+
+# A manifest written before bounds were truncated: full string bounds
+# and binary bounds in both old renderings (UTF-8 text and hex).
+LEGACY_MANIFEST = """{"entries": [
+ {"path": "data/legacy/a.parquet", "rows": 3, "bytes": 1, "partition": null,
+  "columns": {"k": {"min": 0, "max": 2, "nulls": 0},
+              "s": {"min": "aaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaa1", "max": "aaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaa3", "nulls": 0},
+              "b": {"min": "hello", "max": "hello", "nulls": 0}}},
+ {"path": "data/legacy/b.parquet", "rows": 2, "bytes": 1, "partition": null,
+  "columns": {"k": {"min": 3, "max": 4, "nulls": 0},
+              "s": {"min": "aaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaa5", "max": "aaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaa5", "nulls": 0},
+              "b": {"min": "ff00", "max": "ff01", "nulls": 0}}}
+]}"""
+
+
+def test_legacy_full_bound_manifest_reads_plans_counts(spark, troot):
+    """Manifests already on disk keep their full bounds: they read back
+    unchanged and plan and count as they always did — a file whose
+    full bounds prove an equality is counted from metadata alone."""
+    import json
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from java_iceberg_table_spark.table.format import read_manifest
+
+    schema = StructType(
+        [
+            StructField("k", LongType(), False),
+            StructField("s", StringType(), True),
+            StructField("b", __import__("pyspark.sql.types", fromlist=["BinaryType"]).BinaryType(), True),
+        ]
+    )
+    tbl = create_table(troot, schema)
+    legacy = json.loads(LEGACY_MANIFEST)["entries"]
+    rows = {
+        "a": ([0, 1, 2], ["a" * 39 + "1", "a" * 39 + "2", "a" * 39 + "3"], [b"hello"] * 3),
+        "b": ([3, 4], ["a" * 39 + "5"] * 2, [b"\xff\x00", b"\xff\x01"]),
+    }
+    os.makedirs(os.path.join(troot, "data", "legacy"))
+    for name, (k, s, b) in rows.items():
+        pq.write_table(
+            pa.table({"k": pa.array(k, pa.int64()), "s": s, "b": pa.array(b, pa.binary())}),
+            os.path.join(troot, "data", "legacy", f"{name}.parquet"),
+        )
+    snap = tbl.append_entries(legacy)
+    got = read_manifest(troot, snap.manifests[0])
+    assert [e["columns"] for e in got] == [e["columns"] for e in legacy]
+
+    def planned(flt):
+        return sorted(e["path"].split("/")[-1] for e in tbl.plan_files([flt]))
+
+    assert planned(("s", "=", "a" * 39 + "5")) == ["b.parquet"]
+    assert planned(("s", "=", "a" * 39 + "4")) == []
+    assert planned(("s", "<", "a" * 39 + "2")) == ["a.parquet"]
+    assert planned(("s", "like_prefix", "a" * 39)) == ["a.parquet", "b.parquet"]
+    assert planned(("b", "=", b"hello")) == ["a.parquet", "b.parquet"]
+    assert tbl.count_rows(spark, [("s", "=", "a" * 39 + "5")]) == {
+        "rows": 2,
+        "metadata_files": 1,
+        "scanned_files": 0,
+    }
+    assert tbl.count_rows(spark, [("s", ">", "a" * 39 + "1")]) == {
+        "rows": 4,
+        "metadata_files": 1,
+        "scanned_files": 1,
+    }
+
+
+def test_count_rows_scans_truncated_equality(spark, troot):
+    """An equality on a truncated column can never be proven from its
+    bounds (the upper bound is bumped past every value), so count_rows
+    scans the file and the count stays exact."""
+    schema = StructType([StructField("k", LongType(), False), StructField("s", StringType(), True)])
+    tbl = create_table(troot, schema)
+    long_a, long_b = "p" * 30 + "a", "p" * 30 + "b"
+    tbl.append(
+        spark.createDataFrame([(i, long_a if i < 3 else long_b) for i in range(5)], schema).coalesce(1)
+    )
+    (e,) = tbl.current_files()
+    assert e["columns"]["s"]["truncated"] is True
+    for val, n in ((long_a, 3), (long_b, 2), ("p" * 31, 0)):
+        got = tbl.count_rows(spark, [("s", "=", val)])
+        assert got["rows"] == n and got["metadata_files"] == 0
+    assert tbl.count_rows(spark, [("s", ">=", "p")]) == {
+        "rows": 5,
+        "metadata_files": 1,
+        "scanned_files": 0,
+    }
+
+
+def test_manifest_cache_copies_bound_and_threads(troot, monkeypatch):
+    """read_manifest serves written and read manifests from the cache,
+    hands every caller its own copy, keeps at most the bound's entries
+    and keeps its entry count exact under concurrent writers and
+    readers."""
+    import sys
+
+    from java_iceberg_table_spark.table import format as fmt
+
+    os.makedirs(troot)
+    entries = [{"path": f"data/f{i}", "rows": i, "columns": {"k": {"min": i, "max": i}}} for i in range(3)]
+    rel = fmt.write_manifest(troot, entries)
+    real_read_json = fmt.read_json
+    monkeypatch.setattr(fmt, "read_json", lambda p: pytest.fail(f"parsed {p}"))
+    got = fmt.read_manifest(troot, rel)  # filled by the write
+    assert got == entries
+    got[0]["rows"] = -1
+    got[0]["columns"]["k"]["min"] = "x"
+    got.append({})
+    assert fmt.read_manifest(troot, rel) == entries
+    monkeypatch.setattr(fmt, "read_json", real_read_json)
+
+    cache = fmt.ManifestCache(10)
+    monkeypatch.setattr(fmt, "_manifests", cache)
+    rels = [fmt.write_manifest(troot, entries) for _ in range(6)]
+    assert cache.entries == 9
+    assert all(fmt.read_manifest(troot, r) == entries for r in rels)  # re-read from disk
+
+    errors = []
+
+    def worker(i):
+        try:
+            for j in range(30):
+                own = [{"path": f"w{i}-{j}", "rows": j}] * (1 + j % 3)
+                r = fmt.write_manifest(troot, own)
+                assert fmt.read_manifest(troot, r) == own
+                assert fmt.read_manifest(troot, rels[j % len(rels)]) == entries
+        except Exception as exc:  # noqa: BLE001 — surfaced below
+            errors.append(exc)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(i,)) for i in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert cache.entries == sum(n for n, _ in cache._blobs.values()) <= 10
