@@ -378,7 +378,7 @@ def _write_task_files(
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    from ..table.bloom_index import bloom_key, bloom_of_keys
+    from ..table.bloom_index import bloom_of_keys, rendered_keys
     from ..table.stats import file_stats
     from ..table.transforms import transform_from_json
 
@@ -389,7 +389,7 @@ def _write_task_files(
     os.makedirs(out_dir, exist_ok=True)
     writers: dict[object, pq.ParquetWriter] = {}
     paths: dict[object, str] = {}
-    bloom_keys: dict[object, set | None] = {}  # None: no bloom possible
+    bloom_keys: dict[object, list | None] = {}  # None: no bloom possible
     # pyarrow's parquet writer records NaN-STRIPPED min/max — clean-
     # looking bounds even when the column holds NaN — while Spark
     # orders NaN above every value, so both our manifest pruning AND
@@ -418,14 +418,13 @@ def _write_task_files(
 
     def write(bucket, part):
         sink_for(bucket).write_table(part)
-        if bloom is None or (keys := bloom_keys.setdefault(bucket, set())) is None:
+        if bloom is None or (keys := bloom_keys.setdefault(bucket, [])) is None:
             return
-        for v in pc.unique(part.column(bloom["column"])).drop_null().to_pylist():
-            k = bloom_key(bloom, v)
-            if k is None:
-                bloom_keys[bucket] = None
-                return
-            keys.add(k)
+        got = rendered_keys(bloom, part.column(bloom["column"]))
+        if got is None:
+            bloom_keys[bucket] = None
+        else:
+            keys.append(got)
 
     from ..table.transforms import CompositeTransform
 
@@ -489,7 +488,7 @@ def _write_task_files(
                 ),
                 "columns": st["columns"],
                 **(
-                    {"bloom": bloom_of_keys(bloom, bloom_keys[bucket], st["rows"])}
+                    {"bloom": bloom_of_keys(bloom, pa.concat_arrays(bloom_keys[bucket]), st["rows"])}
                     if bloom_keys.get(bucket) is not None
                     else {}
                 ),

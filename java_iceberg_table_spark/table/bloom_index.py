@@ -29,8 +29,9 @@ Design:
   predicate literal to that same string, or to None when it cannot
   know it, and the probe then keeps the file.
 - a writer task that holds the rows but no SparkSession (the
-  connector) builds the same filter in Python (``bloom_of_keys``),
-  rendering each value with ``bloom_key`` itself.
+  connector) builds the same filter with Arrow and numpy
+  (``rendered_keys``, ``bloom_of_keys``), rendering each value as
+  ``bloom_key`` does.
 """
 
 from __future__ import annotations
@@ -38,7 +39,6 @@ from __future__ import annotations
 import datetime as _dt
 import re
 import zlib
-from typing import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -231,21 +231,96 @@ def _bit_positions(bits: int, k: int, s: str):
         yield zlib.crc32((_SEED_FMT.format(i=i) + s).encode("utf-8")) % bits
 
 
-def bloom_of_keys(rendering: dict, keys: Iterable[str], rows: int) -> dict:
-    """One file's value bloom built in Python, for writers that hold
-    the rows but no SparkSession (the connector's executor tasks).
-    ``rendering`` is the bloom minus its bits: column and type (and
-    the zone of a TIMESTAMP); ``keys`` are the file's values rendered
-    by ``bloom_key`` under it, the probe's own rendering, so build and
-    probe agree by construction. Sized and hashed like
-    ``build_file_blooms``; words are signed longs, as Spark's are."""
+def rendered_keys(rendering: dict, values):
+    """``bloom_key`` of every distinct non-null value of an Arrow
+    column under ``rendering`` (a bloom's column and type), as an
+    Arrow string array, or None when some value cannot be rendered.
+    Strings, integers, dates and UTC timestamps render in Arrow, as
+    ``bloom_key`` renders them; other types value by value."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    distinct = pc.unique(values).drop_null()
+    t = rendering.get("type")
+    if t == "string" or t in _INTEGRAL:
+        return pc.cast(distinct, pa.string())
+    if t == "date" or t == "timestamp_ntz" or (t == "timestamp" and rendering.get("tz") == "UTC"):
+        if len(distinct) == 0:
+            return pa.array([], pa.string())
+        years = pc.min_max(pc.year(distinct))
+        if years["min"].as_py() < (1 if t == "date" else 1000) or years["max"].as_py() > 9999:
+            return None
+        if t == "date":
+            return pc.cast(distinct, pa.string())
+        # 'yyyy-MM-dd HH:mm:ss', then the microseconds without their
+        # trailing zeros, as Spark's CAST(ts AS STRING) in UTC
+        us = pc.cast(pc.cast(distinct, pa.timestamp("us", distinct.type.tz)), pa.int64())
+        wall = pc.cast(us, pa.timestamp("us"))
+        secs = pc.cast(pc.floor_temporal(wall, unit="second"), pa.timestamp("s"))
+        base = pc.strftime(secs, format="%Y-%m-%d %H:%M:%S")
+        frac_us = pc.add(pc.multiply(pc.millisecond(wall), 1000), pc.microsecond(wall))
+        frac = pc.utf8_rtrim(pc.utf8_lpad(pc.cast(frac_us, pa.string()), 6, "0"), "0")
+        return pc.if_else(
+            pc.equal(frac_us, 0), base, pc.binary_join_element_wise(base, frac, ".")
+        )
+    keys = []
+    for v in distinct.to_pylist():
+        k = bloom_key(rendering, v)
+        if k is None:
+            return None
+        keys.append(k)
+    return pa.array(keys, pa.string())
+
+
+def _crc_table():
+    import numpy as np
+
+    table = np.arange(256, dtype=np.uint32)
+    for _ in range(8):
+        table = np.where(table & 1, (table >> 1) ^ np.uint32(0xEDB88320), table >> 1)
+    return table.astype(np.uint32)
+
+
+def bloom_of_keys(rendering: dict, keys, rows: int) -> dict:
+    """One file's value bloom built without Spark, for writers that
+    hold the rows but no SparkSession (the connector's executor
+    tasks). ``rendering`` is the bloom minus its bits: column and type
+    (and the zone of a TIMESTAMP); ``keys`` (an Arrow string array,
+    duplicates allowed) are the file's values rendered by
+    ``rendered_keys`` under it, the probe's own rendering, so build
+    and probe agree by construction. Sized and hashed like
+    ``build_file_blooms``. The CRC32 of seed + key is the key's CRC32
+    continued from the seed's, computed for all keys and seeds at once
+    one byte position at a time, longest keys first. Words are signed
+    longs, as Spark's are."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    keys = pc.unique(keys)
+    lens = pc.binary_length(keys).to_numpy(zero_copy_only=False)
+    order = np.argsort(-lens, kind="stable")
+    keys, lens = pc.take(keys, pa.array(order)), lens[order]
+    off = np.frombuffer(keys.buffers()[1], dtype=np.int32)[keys.offset : keys.offset + len(keys) + 1]
+    data = np.frombuffer(keys.buffers()[2] or b"", dtype=np.uint8)
+    table = _crc_table()
+    ones = np.uint32(0xFFFFFFFF)
+    seeds = np.array(
+        [zlib.crc32(_SEED_FMT.format(i=i).encode("utf-8")) for i in range(NUM_HASHES)],
+        dtype=np.uint32,
+    )
+    state = np.repeat((seeds ^ ones)[:, None], len(keys), axis=1)
+    longest = int(lens[0]) if len(lens) else 0
+    # keys still running at byte j: a prefix, since lengths descend
+    running = np.searchsorted(-lens, -np.arange(1, longest + 1), side="right")
+    for j, n in enumerate(running):
+        s = state[:, :n]
+        state[:, :n] = table[(s ^ data[off[:n] + j]) & 0xFF] ^ (s >> 8)
     bits = sized_bits(rows)
-    words = [0] * (bits // 64)
-    for s in keys:
-        for p in _bit_positions(bits, NUM_HASHES, s):
-            words[p // 64] |= 1 << (p % 64)
-    words = [w - (1 << 64) if w >> 63 else w for w in words]
-    return {**rendering, "bits": bits, "k": NUM_HASHES, "words": words}
+    pos = ((state ^ ones) % np.uint32(bits)).ravel().astype(np.uint64)
+    words = np.zeros(bits // 64, dtype=np.uint64)
+    np.bitwise_or.at(words, pos // np.uint64(64), np.uint64(1) << (pos % np.uint64(64)))
+    return {**rendering, "bits": bits, "k": NUM_HASHES, "words": words.view(np.int64).tolist()}
 
 
 def bloom_may_contain(bloom: dict, value: object) -> bool:

@@ -343,42 +343,45 @@ def commit(root: str, build: "callable", max_retries: int = 1000) -> TableMetada
 
 
 class ManifestCache:
-    """Parsed manifests, bounded by their total entry count, least
-    recently used first out. A manifest's name is a fresh uuid and the
-    file is never rewritten, so an entry can never go stale. Entries
-    are stored marshalled: every read unmarshals its own copy (several
-    times cheaper than parsing the JSON), so a caller editing the
-    entries it got cannot change the next read. Shared by threads."""
+    """Parsed manifests, bounded by the total size of their marshalled
+    entries, least recently used first out. A manifest's name is a
+    fresh uuid and the file is never rewritten, so an entry can never
+    go stale. Entries are stored marshalled: every read unmarshals its
+    own copy (several times cheaper than parsing the JSON), so a caller
+    editing the entries it got cannot change the next read. The bound
+    is on bytes, not entries, because one entry can carry a Bloom
+    filter of megabytes. Shared by threads."""
 
-    def __init__(self, max_entries: int):
-        self.max_entries = max_entries
-        self.entries = 0
-        self._blobs: OrderedDict[str, tuple[int, bytes]] = OrderedDict()
+    def __init__(self, max_bytes: int):
+        self.max_bytes = max_bytes
+        self.bytes = 0
+        self._blobs: OrderedDict[str, bytes] = OrderedDict()
         self._lock = threading.Lock()
 
     def get(self, path: str) -> list[dict] | None:
         with self._lock:
-            hit = self._blobs.get(path)
-            if hit is None:
+            blob = self._blobs.get(path)
+            if blob is None:
                 return None
             self._blobs.move_to_end(path)
-        return marshal.loads(hit[1])
+        return marshal.loads(blob)
 
     def put(self, path: str, entries: list[dict]) -> None:
-        n = len(entries)
-        if n > self.max_entries:
-            return
         blob = marshal.dumps(entries)
+        if len(blob) > self.max_bytes:
+            return
         with self._lock:
             if path in self._blobs:
                 return
-            self._blobs[path] = (n, blob)
-            self.entries += n
-            while self.entries > self.max_entries:
-                self.entries -= self._blobs.popitem(last=False)[1][0]
+            self._blobs[path] = blob
+            self.bytes += len(blob)
+            while self.bytes > self.max_bytes:
+                self.bytes -= len(self._blobs.popitem(last=False)[1])
 
 
-_manifests = ManifestCache(20_000)
+# 16 MiB: about 45,000 entries with truncated bounds (~350 bytes each
+# marshalled), or about 2,200 with the full bounds of older manifests
+_manifests = ManifestCache(16 << 20)
 
 
 def write_manifest(root: str, entries: list[dict]) -> str:
@@ -396,13 +399,17 @@ def write_manifest(root: str, entries: list[dict]) -> str:
     return rel
 
 
-def read_manifest(root: str, rel_path: str) -> list[dict]:
-    """The entries of one manifest, from the cache when it holds them."""
+def read_manifest(root: str, rel_path: str, cached: bool = True) -> list[dict]:
+    """The entries of one manifest, from the cache when it holds them.
+    ``cached=False`` parses the file and leaves the cache alone (for
+    one-off readers such as executor tasks, which would each fill a
+    cache of their own)."""
     path = os.path.abspath(os.path.join(root, rel_path))
-    entries = _manifests.get(path)
+    entries = _manifests.get(path) if cached else None
     if entries is None:
         entries = read_json(path)["entries"]
-        _manifests.put(path, entries)
+        if cached:
+            _manifests.put(path, entries)
     return entries
 
 

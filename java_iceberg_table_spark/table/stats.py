@@ -61,15 +61,16 @@ def _plain(v: Any) -> Any:
 def column_bounds(mn: Any, mx: Any) -> dict:
     """The manifest bounds ``{min, max}`` of one column from its raw
     minimum and maximum value. Numbers and the ISO renderings of dates
-    and timestamps are exact. String bounds, and binary bounds (always
-    rendered as hex, so every file of a column compares in byte
-    order), keep TRUNCATE_LENGTH characters: the lower bound is the
-    prefix, the upper bound the prefix with its last character
-    incremented (absent when none can be), so both stay conservative.
-    A column with a truncated bound is marked ``truncated``."""
-    if isinstance(mn, bytes):
-        mn, mx = mn.hex(), mx.hex()
-    elif not isinstance(mn, str):
+    and timestamps are exact. String bounds keep TRUNCATE_LENGTH
+    characters: the lower bound is the prefix, the upper bound the
+    prefix with its last character incremented (absent when none can
+    be), so both stay conservative. A column with a truncated bound is
+    marked ``truncated``. Binary columns get no bounds: a str bound
+    cannot stand for bytes in every literal's order (a string literal
+    compares as its UTF-8 bytes, a bytes literal not at all)."""
+    if mn is None or isinstance(mn, bytes):
+        return {"min": None, "max": None}
+    if not isinstance(mn, str):
         return {"min": _plain(mn), "max": _plain(mx)}
     out = {"min": mn[:TRUNCATE_LENGTH], "max": mx}
     if len(mx) > TRUNCATE_LENGTH:
@@ -79,12 +80,14 @@ def column_bounds(mn: Any, mx: Any) -> dict:
     return out
 
 
-def file_stats(path: str, exact: bool = False) -> dict:
-    """{rows, bytes, columns: {name: {min, max, nulls}}} for one file.
-    ``exact`` renders every bound untruncated (``_plain``), for callers
-    that derive values from the bounds instead of pruning with them."""
+def footer_stats(path: str) -> dict:
+    """{rows, bytes, columns: {name: {min, max, nulls}}} for one file,
+    with the footer's raw minimum and maximum (None when absent), for
+    callers that derive values from them instead of pruning with them.
+    ``file_stats`` renders them as manifest bounds."""
     md = pq.ParquetFile(path).metadata
-    raw: dict[str, list] = {}  # name -> [min, max, nulls, poisoned]
+    cols: dict[str, dict] = {}
+    poisoned: set[str] = set()
     for rg in range(md.num_row_groups):
         g = md.row_group(rg)
         for ci in range(g.num_columns):
@@ -92,7 +95,8 @@ def file_stats(path: str, exact: bool = False) -> dict:
             st = col.statistics
             if st is None:
                 continue
-            acc = raw.setdefault(col.path_in_schema, [None, None, 0, False])
+            name = col.path_in_schema
+            acc = cols.setdefault(name, {"min": None, "max": None, "nulls": 0})
             if st.has_min_max:
                 mn, mx = st.min, st.max
                 # NaN poisons every bound comparison (NaN < x and
@@ -102,24 +106,33 @@ def file_stats(path: str, exact: bool = False) -> dict:
                 # usable bound: drop the column's stats entirely for
                 # this file (absent stats = never pruned).
                 if mn != mn or mx != mx:
-                    acc[0] = acc[1] = None
-                    acc[3] = True
-                elif not acc[3]:
-                    if acc[0] is None or mn < acc[0]:
-                        acc[0] = mn
-                    if acc[1] is None or mx > acc[1]:
-                        acc[1] = mx
-            acc[2] += st.null_count or 0
-    cols = {}
-    for name, (mn, mx, nulls, _) in raw.items():
-        if mn is None:
-            cols[name] = {"min": None, "max": None, "nulls": nulls}
-        elif exact:
-            cols[name] = {"min": _plain(mn), "max": _plain(mx), "nulls": nulls}
-        else:
-            cols[name] = {**column_bounds(mn, mx), "nulls": nulls}
+                    acc["min"] = acc["max"] = None
+                    poisoned.add(name)
+                elif name not in poisoned:
+                    if acc["min"] is None or mn < acc["min"]:
+                        acc["min"] = mn
+                    if acc["max"] is None or mx > acc["max"]:
+                        acc["max"] = mx
+            acc["nulls"] += st.null_count or 0
     return {
         "rows": md.num_rows,
         "bytes": os.path.getsize(path),
         "columns": cols,
     }
+
+
+def bounded(stats: dict) -> dict:
+    """``footer_stats`` output with every column's bounds rendered by
+    ``column_bounds``: the manifest entry's statistics."""
+    return {
+        **stats,
+        "columns": {
+            name: {**column_bounds(c["min"], c["max"]), "nulls": c["nulls"]}
+            for name, c in stats["columns"].items()
+        },
+    }
+
+
+def file_stats(path: str) -> dict:
+    """{rows, bytes, columns: {name: {min, max, nulls}}} for one file."""
+    return bounded(footer_stats(path))

@@ -27,12 +27,12 @@ from typing import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StringType, StructField, StructType
+from pyspark.sql.types import BinaryType, LongType, StringType, StructField, StructType
 
 from ..session import conf_scope, read_paths
 from . import format as fmt
 from .format import Snapshot, TableMetadata
-from .stats import _prefix_upper, file_stats
+from .stats import _plain, _prefix_upper, bounded, file_stats, footer_stats
 from .transforms import CompositeTransform, Transform, transform_from_json
 
 DEFAULT_PROPERTIES = {
@@ -94,10 +94,10 @@ def _dashed(result: dict) -> dict:
 # from the driver to one Spark job over the manifests: planning runs
 # the driver's own pruning predicate on executors, GC aggregates a
 # Spark JSON scan (inspect.py). Below it, the job's overhead exceeds
-# the driver loop. String and binary bounds are truncated to 16
-# characters (stats.column_bounds), so an entry is ~0.2 kB with
-# numeric bounds and ~0.6 kB with string and binary ones (an ingest
-# entry): 4 MB is ~19,000 entries of the first kind and ~6,700 of the
+# the driver loop. String bounds are truncated to 16 characters and
+# binary columns carry none (stats.column_bounds), so an entry is
+# ~0.2 kB with numeric bounds and ~0.6 kB with string ones (an ingest
+# entry): 4 MB is ~19,000 entries of the first kind and ~7,300 of the
 # second. Manifests written with full bounds are larger (an ingest
 # entry was ~7.6 kB, ~550 entries) and reach it sooner.
 DIST_PLAN_MIN_MANIFEST_BYTES = 4 << 20
@@ -228,6 +228,34 @@ def _normalize_stat_value(val):
     if isinstance(val, _dt2.date):
         return val.isoformat()
     return val
+
+
+def _pruning_filters(filters: list, schema: StructType) -> list:
+    """``filters`` as the pruner reads them: a literal on a BINARY
+    column becomes bytes, as Spark compares it (a string literal as its
+    UTF-8 bytes), and a prefix match there becomes ``>=`` the prefix.
+    Binary columns carry no bounds, and manifests written before that
+    hold str bounds (UTF-8 text, or hex when the bytes do not decode)
+    that are not the bytes' order; bytes never compare with a str, so
+    such a leaf keeps every file and proves none certain. The residual
+    filter still applies the leaf as written."""
+    binary = {f.name for f in schema.fields if isinstance(f.dataType, BinaryType)}
+    if not binary:
+        return filters
+
+    def as_bytes(v):
+        return v.encode("utf-8") if isinstance(v, str) else v
+
+    out = []
+    for col, op, val in filters:
+        if col in binary:
+            if op == "in":
+                val = tuple(as_bytes(v) for v in val)
+            else:
+                op = ">=" if op == "like_prefix" else op
+                val = as_bytes(val)
+        out.append((col, op, val))
+    return out
 
 
 def _stat_value_renderings(val) -> list:
@@ -1001,37 +1029,34 @@ class Table:
                     raise ValueError(
                         f"{src}: required column {f.name!r} missing"
                     )
-            st = file_stats(src)
+            footer = footer_stats(src)
+            st = bounded(footer)
             partition = None
             if t is not None:
                 # composite specs derive one bucket PER FIELD from the
                 # same footer stats — the file must lie in exactly one
                 # bucket on EVERY field. The bucket is derived from the
-                # untruncated footer bounds: a truncated string bound
+                # untruncated footer values: a truncated string bound
                 # is not the value, so min == max could not hold.
-                exact = file_stats(src, exact=True)
                 fields = (
                     t.fields if isinstance(t, CompositeTransform) else (t,)
                 )
                 vals = []
                 for ft in fields:
-                    cst = exact["columns"].get(ft.source_column)
+                    cst = footer["columns"].get(ft.source_column)
                     if not cst or cst.get("min") is None or cst.get("nulls", 0) > 0:
                         raise ValueError(
                             f"{src}: cannot derive a partition value — no "
                             f"usable footer stats on {ft.source_column!r}"
                         )
+                    mn, mx = _plain(cst["min"]), _plain(cst["max"])
                     try:
-                        lo, hi = ft.apply_py(cst["min"]), ft.apply_py(cst["max"])
+                        lo, hi = ft.apply_py(mn), ft.apply_py(mx)
                     except (TypeError, ValueError) as exc:
                         raise ValueError(
                             f"{src}: partition source stats not transformable: {exc}"
                         ) from exc
-                    ok = (
-                        lo == hi
-                        if getattr(ft, "monotonic", False)
-                        else cst["min"] == cst["max"]
-                    )
+                    ok = lo == hi if getattr(ft, "monotonic", False) else mn == mx
                     if not ok:
                         raise ValueError(
                             f"{src}: file spans partition buckets {lo}..{hi} "
@@ -3095,7 +3120,7 @@ class Table:
         return to the driver, so a heavily-pruned plan over millions of
         entries never materializes the full entry list in driver
         memory."""
-        md, snap, _ = self.read_state(snapshot_id=snapshot_id)
+        md, snap, schema = self.read_state(snapshot_id=snapshot_id)
         if snap is None:
             return []
         specs = self._spec_map(md)
@@ -3104,19 +3129,21 @@ class Table:
             if distributed_threshold_bytes is None
             else distributed_threshold_bytes
         )
-        filters = list(filters)
+        filters = _pruning_filters(list(filters), schema)
         if spark is not None and self._manifest_bytes(snap.manifests) >= threshold:
             return self._plan_files_distributed(spark, snap, specs, filters)
         return [e for m in snap.manifests for e in self._admitted(self.root, m, specs, filters)]
 
     @staticmethod
-    def _admitted(root: str, manifest: str, specs: dict, filters: list) -> list[dict]:
+    def _admitted(
+        root: str, manifest: str, specs: dict, filters: list, cached: bool = True
+    ) -> list[dict]:
         """The entries of one manifest that _entry_may_match admits,
         each under its own spec: plan_files' filter, on the driver and
-        on executors alike."""
+        (uncached) on executors alike."""
         return [
             e
-            for e in fmt.read_manifest(root, manifest)
+            for e in fmt.read_manifest(root, manifest, cached)
             if all(Table._entry_may_match(e, Table._entry_transform(e, specs), f) for f in filters)
         ]
 
@@ -3205,11 +3232,12 @@ class Table:
                 "scanned_files": 0,
             }
         specs = self._spec_map(md)
+        pruning = _pruning_filters(filters, schema)
         certain, maybe = [], []
         for e in entries:
             t_e = self._entry_transform(e, specs)
             if all(
-                self._entry_certainly_matches(e, t_e, f) for f in filters
+                self._entry_certainly_matches(e, t_e, f) for f in pruning
             ):
                 certain.append(e)
             else:
@@ -3265,7 +3293,7 @@ class Table:
         root = self.root
         return (
             spark.sparkContext.parallelize(snap.manifests)
-            .flatMap(lambda m: Table._admitted(root, m, specs, filters))
+            .flatMap(lambda m: Table._admitted(root, m, specs, filters, cached=False))
             .collect()
         )
 

@@ -356,3 +356,62 @@ def test_connector_write_attaches_blooms(spark, tmp_path, column):
         assert any(e["path"] in {x["path"] for x in hit} for e in entries)
         assert len(hit) < len(entries)
     assert tbl.scan(spark, [(column, "=", rows[5][column])]).count() == 1
+
+
+@pytest.mark.parametrize(
+    "rendering, arrow_type, values",
+    [
+        ({"type": "bigint"}, "int64", [-5, 0, 7, 2**62, None]),
+        ({"type": "int"}, "int32", [-(2**31), 3, None]),
+        ({"type": "string"}, "string", ["", "a b", "é", None]),
+        ({"type": "date"}, "date32", [datetime.date(1000, 1, 1), datetime.date(1969, 12, 31), datetime.date(9999, 12, 31)]),
+        ({"type": "date"}, "date32", [datetime.date(999, 12, 31), datetime.date(2024, 1, 1)]),
+        (
+            {"type": "timestamp", "tz": "UTC"},
+            "timestamp_utc",
+            [
+                datetime.datetime(2024, 1, 3, 5),
+                datetime.datetime(1969, 12, 31, 23, 59, 59, 500000),
+                datetime.datetime(1653, 2, 11, 22, 31, 23, 653474),
+                datetime.datetime(2024, 1, 1, 0, 0, 0, 120),
+                datetime.datetime(9999, 12, 31, 23, 59, 59, 999999),
+                None,
+            ],
+        ),
+        ({"type": "timestamp_ntz"}, "timestamp", [datetime.datetime(1000, 1, 1), datetime.datetime(2024, 5, 6, 7, 8, 9, 10)]),
+        ({"type": "timestamp_ntz"}, "timestamp", [datetime.datetime(2024, 1, 1), datetime.datetime(10, 1, 1)]),
+        ({"type": "double"}, "float64", [3.0, 2.5]),
+    ],
+)
+def test_rendered_keys_match_bloom_key(rendering, arrow_type, values):
+    """The connector's column-at-a-time rendering of a file's values is
+    ``bloom_key`` of each distinct value, and None (no bloom) exactly
+    when some value has no rendering; its vectorized build sets the
+    bits of the probe's per-key CRC32s, no more."""
+    import pyarrow as pa
+
+    from java_iceberg_table_spark.table.bloom_index import bloom_key, bloom_of_keys, rendered_keys
+
+    types = {
+        "int64": pa.int64(),
+        "int32": pa.int32(),
+        "string": pa.string(),
+        "date32": pa.date32(),
+        "timestamp_utc": pa.timestamp("us", "UTC"),
+        "timestamp": pa.timestamp("us"),
+        "float64": pa.float64(),
+    }
+    rendering = {"column": "c", **rendering}
+    arr = pa.array(values, types[arrow_type])
+    want = {bloom_key(rendering, v) for v in arr.to_pylist() if v is not None}
+    got = rendered_keys(rendering, arr)
+    assert (got if got is None else set(got.to_pylist())) == (None if None in want else want)
+    if got is not None:
+        # the vectorized CRC32 build sets the bits the probe tests
+        bloom = bloom_of_keys(rendering, pa.concat_arrays([got, got]), len(values))
+        assert all(bloom_may_contain(bloom, k) for k in want)
+        words = [0] * (bloom["bits"] // 64)
+        for k in want:
+            for p in bloom_index._bit_positions(bloom["bits"], bloom["k"], k):
+                words[p // 64] |= 1 << (p % 64)
+        assert [w & (2**64 - 1) for w in bloom["words"]] == words

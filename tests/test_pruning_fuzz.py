@@ -10,12 +10,15 @@ Properties:
   non-null rows that match (the count pushdown is exact).
 
 Distributed planning runs the same ``_entry_may_match`` on executors,
-so the driver predicate is the only one to fuzz. Bounds are rendered
-by ``stats.column_bounds``, the one bound function of both stats
+so the driver predicate is the only one to fuzz, on the filters
+``plan_files`` hands it (``_pruning_filters``). Bounds are rendered by
+``stats.column_bounds``, the one bound function of both stats
 producers: strings longer than its 16 characters that share long
-prefixes, and binary values that do and do not decode as UTF-8, get
-truncated bounds. Some files instead carry the full per-value bounds
-of manifests written before truncation. Not drawn: Bloom filters.
+prefixes get truncated bounds, and binary columns none. Some files
+instead carry the full per-value bounds of manifests written before
+truncation, binary ones as UTF-8 text or hex. Binary columns take both
+bytes and string literals (Spark compares a string as its UTF-8
+bytes). Not drawn: Bloom filters.
 """
 
 from __future__ import annotations
@@ -25,6 +28,15 @@ import json
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
+from pyspark.sql.types import (
+    BinaryType,
+    DateType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampType,
+)
 
 from java_iceberg_table_spark.table import (
     bucket,
@@ -37,10 +49,16 @@ from java_iceberg_table_spark.table import (
     year,
 )
 from java_iceberg_table_spark.table.stats import _plain, column_bounds
-from java_iceberg_table_spark.table.table import Table
+from java_iceberg_table_spark.table.table import Table, _pruning_filters
 from java_iceberg_table_spark.table.transforms import CompositeTransform
 
 COLUMNS = ("n", "s", "ts", "d", "b")
+SCHEMA = StructType(
+    [
+        StructField(c, ty)
+        for c, ty in zip(COLUMNS, (LongType(), StringType(), TimestampType(), DateType(), BinaryType()))
+    ]
+)
 T0 = dt.datetime(2023, 12, 30)
 TOP = "\U0010ffff"  # the code point a truncated upper bound cannot bump
 
@@ -53,15 +71,13 @@ long_strs = st.builds(
     st.sampled_from(["a" * 15, "a" * 16, "a" * 17, "0" * 14 + "7a", "a" * 15 + TOP, TOP * 16]),
     st.text(alphabet="07ae_n" + TOP, max_size=4),
 )
-# binary bounds render as 16 hex characters, 8 bytes: draw values on
-# both sides of that, decodable as UTF-8 and not
-binaries = st.one_of(
-    st.binary(max_size=4),
-    st.builds(
-        lambda p, s: p + s,
-        st.sampled_from([b"abcdefg", b"abcdefgh", b"\xff" * 9, b"a\xc3"]),
-        st.binary(max_size=3),
-    ),
+# binary values that do and do not decode as UTF-8 (the two renderings
+# of older manifests), some whose hex sorts against their text unlike
+# the bytes do
+binaries = st.builds(
+    lambda p, s: p + s,
+    st.sampled_from([b"", b"hello", b"g", b"\xff", b"a\xc3"]),
+    st.sampled_from([b"", b"\x00", b"a", b"\xa9", b"\xff"]),
 )
 # instants clustered around month/day/hour boundaries, some fractional
 timestamps = st.builds(
@@ -141,7 +157,7 @@ def _literals(col, rows):
         elif col == "s":
             near += [v, v[:1], v[:-1] or "0", v + "a", v[:16], v[:16] + TOP, v[:17]]
         elif col == "b":
-            near += [v, v[:8], v[:-1], v + b"\x00"]
+            near += [v, v[:-1], v + b"\x00", v.hex(), v.decode("utf-8", "replace"), "g"]
         elif col == "ts":
             floor_h = v.replace(minute=0, second=0, microsecond=0)
             near += [
@@ -187,6 +203,8 @@ def _row_matches(v, op, lit) -> bool:
         return any(_row_matches(v, "=", x) for x in lit)
     if op == "like_prefix":
         return v.startswith(lit)
+    if isinstance(v, bytes) and isinstance(lit, str):
+        lit = lit.encode("utf-8")
     v, lit = _coerce(v, lit)
     return {
         "=": v == lit,
@@ -235,9 +253,10 @@ def test_pruning_is_conservative_and_certainty_exact(data, t, rows):
 
     for flt in data.draw(st.lists(predicates(rows), min_size=1, max_size=6), label="filters"):
         col, op, lit = flt
+        (pruned,) = _pruning_filters([flt], SCHEMA)
         for e, chunk in files:
             hits = [_row_matches(r[col], op, lit) for r in chunk]
             if any(hits):
-                assert Table._entry_may_match(e, t, flt), (flt, e, chunk)
-            if Table._entry_certainly_matches(e, t, flt):
+                assert Table._entry_may_match(e, t, pruned), (flt, e, chunk)
+            if Table._entry_certainly_matches(e, t, pruned):
                 assert all(hits), (flt, e, chunk)

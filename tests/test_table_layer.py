@@ -9,7 +9,14 @@ import threading
 
 import pytest
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StringType, StructField, StructType
+from pyspark.sql.types import (
+    BinaryType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampType,
+)
 
 from java_iceberg_table_spark.ingest.bookkeeper import Bookkeeper
 from java_iceberg_table_spark.ingest.reaper import Reaper
@@ -167,9 +174,9 @@ def test_bookkeeper_decoupled_flow(spark, troot):
         [
             StructField("message_id", LongType(), False),
             StructField("data", StringType(), True),
-            StructField("timestamp", __import__("pyspark.sql.types", fromlist=["TimestampType"]).TimestampType(), True),
+            StructField("timestamp", TimestampType(), True),
             StructField("timeperiod_loadedBy", LongType(), True),
-            StructField("message_body", __import__("pyspark.sql.types", fromlist=["BinaryType"]).BinaryType(), True),
+            StructField("message_body", BinaryType(), True),
         ]
     )
     tbl = create_table(troot, schema, partition=truncate("timeperiod_loadedBy", WIDTH))
@@ -1500,9 +1507,9 @@ EVENTS_STRUCT = StructType(
     [
         StructField("message_id", LongType(), False),
         StructField("data", StringType(), True),
-        StructField("timestamp", __import__("pyspark.sql.types", fromlist=["TimestampType"]).TimestampType(), True),
+        StructField("timestamp", TimestampType(), True),
         StructField("timeperiod_loadedBy", LongType(), True),
-        StructField("message_body", __import__("pyspark.sql.types", fromlist=["BinaryType"]).BinaryType(), True),
+        StructField("message_body", BinaryType(), True),
     ]
 )
 
@@ -1510,22 +1517,19 @@ EVENTS_STRUCT = StructType(
 @pytest.mark.parametrize("file_format", ["parquet", "avro"])
 def test_ingest_entry_bounds_truncated_temporal_exact(troot, file_format):
     """Both stats producers (the parquet footer and the in-memory avro
-    path) truncate string and binary bounds to 16 characters and mark
-    the column; a binary bound renders as hex; a timestamp bound stays
-    exact, because the temporal pruning compares whole ISO strings."""
+    path) truncate string bounds to 16 characters and mark the column;
+    a binary column gets no bounds; a timestamp bound stays exact,
+    because the temporal pruning compares whole ISO strings."""
     from java_iceberg_table_spark.ingest.writer import make_records
 
     tbl = create_table(troot, EVENTS_STRUCT, partition=truncate("timeperiod_loadedBy", WIDTH))
     w = Writer(tbl, writer_id=0, seed=5, file_format=file_format)
     (e,) = w.create_data_files(1, 20, timeperiod_us=1_709_510_400_000_000)
     cols = e["columns"]
-    for c in ("data", "message_body"):
-        assert cols[c]["truncated"] is True
-        assert 0 < len(cols[c]["min"]) <= 16 and 0 < len(cols[c]["max"]) <= 16
+    assert cols["data"]["truncated"] is True
+    assert 0 < len(cols["data"]["min"]) <= 16 and 0 < len(cols["data"]["max"]) <= 16
+    assert cols["message_body"] == {"min": None, "max": None, "nulls": 0}
     recs = make_records(20, 1_709_510_400_000_000, seed=5 * 100003)
-    body = sorted(recs.column("message_body").to_pylist())
-    assert cols["message_body"]["min"] == body[0].hex()[:16]
-    assert cols["message_body"]["max"] > body[-1].hex()
     assert cols["timestamp"] == {"min": "2024-03-04T00:00:00", "max": "2024-03-04T00:00:00", "nulls": 0}
     assert "truncated" not in cols["message_id"] and "truncated" not in cols["timestamp"]
     # the marked entry still prunes conservatively on its own bounds
@@ -1583,7 +1587,10 @@ LEGACY_MANIFEST = """{"entries": [
 def test_legacy_full_bound_manifest_reads_plans_counts(spark, troot):
     """Manifests already on disk keep their full bounds: they read back
     unchanged and plan and count as they always did — a file whose
-    full bounds prove an equality is counted from metadata alone."""
+    full bounds prove an equality is counted from metadata alone. Their
+    binary bounds (text, or hex when the bytes do not decode) do not
+    sort like the bytes, so they neither prune nor prove a binary
+    literal: b'\xff\x00' > 'g', while its hex 'ff00' sorts below."""
     import json
 
     import pyarrow as pa
@@ -1595,7 +1602,7 @@ def test_legacy_full_bound_manifest_reads_plans_counts(spark, troot):
         [
             StructField("k", LongType(), False),
             StructField("s", StringType(), True),
-            StructField("b", __import__("pyspark.sql.types", fromlist=["BinaryType"]).BinaryType(), True),
+            StructField("b", BinaryType(), True),
         ]
     )
     tbl = create_table(troot, schema)
@@ -1622,6 +1629,12 @@ def test_legacy_full_bound_manifest_reads_plans_counts(spark, troot):
     assert planned(("s", "<", "a" * 39 + "2")) == ["a.parquet"]
     assert planned(("s", "like_prefix", "a" * 39)) == ["a.parquet", "b.parquet"]
     assert planned(("b", "=", b"hello")) == ["a.parquet", "b.parquet"]
+    assert planned(("b", ">", "g")) == ["a.parquet", "b.parquet"]
+    assert tbl.count_rows(spark, [("b", ">", "g")]) == {
+        "rows": 5,
+        "metadata_files": 0,
+        "scanned_files": 2,
+    }
     assert tbl.count_rows(spark, [("s", "=", "a" * 39 + "5")]) == {
         "rows": 2,
         "metadata_files": 1,
@@ -1632,6 +1645,28 @@ def test_legacy_full_bound_manifest_reads_plans_counts(spark, troot):
         "metadata_files": 1,
         "scanned_files": 1,
     }
+
+
+def test_binary_column_keeps_files_for_string_literals(spark, troot):
+    """A binary column has no bounds, so a string literal on it (which
+    Spark compares as its UTF-8 bytes) never prunes the file holding
+    the row, in a scan or in a row-level delete."""
+    schema = StructType([StructField("k", LongType(), False), StructField("b", BinaryType(), True)])
+    tbl = create_table(troot, schema)
+    tbl.append(
+        spark.createDataFrame(
+            [(0, bytearray(b"hello")), (1, bytearray(b"\x00\x01")), (2, bytearray(b"\xff" * 20))],
+            schema,
+        ).coalesce(1)
+    )
+    for flt in (("b", "=", "hello"), ("b", ">", "g"), ("b", "in", ("hello", "x")), ("b", "=", b"hello")):
+        assert len(tbl.plan_files([flt])) == 1, flt
+    assert tbl.scan(spark, [("b", "=", "hello")]).count() == 1
+    assert tbl.count_rows(spark, [("b", "=", "hello")])["rows"] == 1
+    (e,) = tbl.current_files()
+    assert e["columns"]["b"] == {"min": None, "max": None, "nulls": 0}
+    tbl.delete_rows(spark, [("b", "=", "hello")])
+    assert sorted(r.k for r in tbl.scan(spark).collect()) == [1, 2]
 
 
 def test_count_rows_scans_truncated_equality(spark, troot):
@@ -1658,9 +1693,11 @@ def test_count_rows_scans_truncated_equality(spark, troot):
 
 def test_manifest_cache_copies_bound_and_threads(troot, monkeypatch):
     """read_manifest serves written and read manifests from the cache,
-    hands every caller its own copy, keeps at most the bound's entries
-    and keeps its entry count exact under concurrent writers and
-    readers."""
+    hands every caller its own copy, keeps at most the bound's bytes
+    (skipping a manifest larger than the bound, and leaving the cache
+    alone on an uncached read) and keeps its byte count exact under
+    concurrent writers and readers."""
+    import marshal
     import sys
 
     from java_iceberg_table_spark.table import format as fmt
@@ -1678,10 +1715,16 @@ def test_manifest_cache_copies_bound_and_threads(troot, monkeypatch):
     assert fmt.read_manifest(troot, rel) == entries
     monkeypatch.setattr(fmt, "read_json", real_read_json)
 
-    cache = fmt.ManifestCache(10)
+    size = len(marshal.dumps(entries))
+    cache = fmt.ManifestCache(3 * size + size // 2)
     monkeypatch.setattr(fmt, "_manifests", cache)
     rels = [fmt.write_manifest(troot, entries) for _ in range(6)]
-    assert cache.entries == 9
+    assert cache.bytes == 3 * size and len(cache._blobs) == 3
+    big = fmt.write_manifest(troot, entries * 4)
+    assert len(cache._blobs) == 3
+    assert fmt.read_manifest(troot, big) == entries * 4
+    assert fmt.read_manifest(troot, rels[0], cached=False) == entries
+    assert cache.bytes == 3 * size
     assert all(fmt.read_manifest(troot, r) == entries for r in rels)  # re-read from disk
 
     errors = []
@@ -1708,4 +1751,4 @@ def test_manifest_cache_copies_bound_and_threads(troot, monkeypatch):
         sys.setswitchinterval(interval)
     assert not any(t.is_alive() for t in threads)
     assert errors == []
-    assert cache.entries == sum(n for n, _ in cache._blobs.values()) <= 10
+    assert cache.bytes == sum(len(b) for b in cache._blobs.values()) <= cache.max_bytes
