@@ -379,9 +379,11 @@ class ManifestCache:
                 self.bytes -= len(self._blobs.popitem(last=False)[1])
 
 
-# 16 MiB: about 45,000 entries with truncated bounds (~350 bytes each
-# marshalled), or about 2,200 with the full bounds of older manifests
-_manifests = ManifestCache(16 << 20)
+# 4 MiB: about 12,000 entries with truncated bounds (~350 bytes each
+# marshalled), or about 550 with the full bounds of older manifests.
+# Past about as many entries scan planning moves to executors
+# (table.DIST_PLAN_MIN_MANIFEST_BYTES), whose reads bypass the cache.
+_manifests = ManifestCache(4 << 20)
 
 
 def write_manifest(root: str, entries: list[dict]) -> str:
