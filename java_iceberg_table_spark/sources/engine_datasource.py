@@ -365,7 +365,12 @@ def _attach_lineage(tbl, pos, path: str, lineage):
 
 
 def _write_task_files(
-    batch_iter, root: str, schema: StructType, spec: dict | None, bloom: dict | None = None
+    batch_iter,
+    root: str,
+    schema: StructType,
+    spec: dict | None,
+    bloom: dict | None = None,
+    token_column: str | None = None,
 ):
     """Executor-side: stream this task's Arrow batches into data/ —
     one file per partition bucket per task when the table is
@@ -373,7 +378,12 @@ def _write_task_files(
     ``bloom`` (the column and type of ``write.bloom.column``) gives
     each file its value bloom, built from the rows as they are
     written; a file holding a value ``bloom_key`` cannot render gets
-    none (absent blooms never prune)."""
+    none (absent blooms never prune). ``token_column`` (a string
+    ``write.token.bloom.column``) gives each file its token bloom over
+    the distinct tokens of Spark's ``split(col, '\\s+')``: Java's ``\\s``
+    is the six ASCII whitespace characters, which RE2's and Python's
+    are not, so the class is spelled out. A file with no token gets
+    none, as build_file_token_blooms leaves it."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
@@ -390,6 +400,7 @@ def _write_task_files(
     writers: dict[object, pq.ParquetWriter] = {}
     paths: dict[object, str] = {}
     bloom_keys: dict[object, list | None] = {}  # None: no bloom possible
+    tokens: dict[object, list] = {}
     # pyarrow's parquet writer records NaN-STRIPPED min/max — clean-
     # looking bounds even when the column holds NaN — while Spark
     # orders NaN above every value, so both our manifest pruning AND
@@ -418,6 +429,13 @@ def _write_task_files(
 
     def write(bucket, part):
         sink_for(bucket).write_table(part)
+        if token_column is not None:
+            toks = pc.list_flatten(
+                pc.split_pattern_regex(part.column(token_column), r"[ \t\n\x0B\f\r]+")
+            )
+            tokens.setdefault(bucket, []).append(
+                pc.unique(pc.filter(toks, pc.not_equal(toks, "")))
+            )
         if bloom is None or (keys := bloom_keys.setdefault(bucket, [])) is None:
             return
         got = rendered_keys(bloom, part.column(bloom["column"]))
@@ -474,6 +492,7 @@ def _write_task_files(
         if st["rows"] == 0:
             os.remove(p)
             continue
+        toks = pc.unique(pa.chunked_array(tokens.get(bucket, []), pa.string()))
         entries.append(
             {
                 "path": os.path.relpath(p, root),
@@ -490,6 +509,11 @@ def _write_task_files(
                 **(
                     {"bloom": bloom_of_keys(bloom, pa.concat_arrays(bloom_keys[bucket]), st["rows"])}
                     if bloom_keys.get(bucket) is not None
+                    else {}
+                ),
+                **(
+                    {"token_bloom": bloom_of_keys({"column": token_column}, toks, len(toks))}
+                    if len(toks)
                     else {}
                 ),
             }
@@ -1033,6 +1057,7 @@ def _meta_schema(kind: str) -> StructType:
     DDL parsing — DataSource.schema() runs where no SparkSession is
     active."""
     from pyspark.sql.types import (
+        ArrayType,
         BooleanType,
         IntegerType,
         LongType,
@@ -1062,6 +1087,7 @@ def _meta_schema(kind: str) -> StructType:
         "files": st(
             ("file_path", StringType()),
             ("partition", LongType()),
+            ("partition_fields", ArrayType(LongType())),
             ("record_count", LongType()),
             ("file_size_bytes", LongType()),
             ("seq", LongType()),
@@ -1069,6 +1095,7 @@ def _meta_schema(kind: str) -> StructType:
         ),
         "partitions": st(
             ("partition", LongType()),
+            ("partition_fields", ArrayType(LongType())),
             ("file_count", LongType()),
             ("record_count", LongType()),
             ("total_bytes", LongType()),
@@ -1084,11 +1111,14 @@ def _meta_schema(kind: str) -> StructType:
 def _meta_rows(root: str, kind: str, options) -> list[tuple]:
     """Rows of one metadata table, computed from table metadata on the
     driver (manifest JSON at most — commit-log scale, not data scale;
-    the distributed variant for million-file tables is
-    Table.inspect('files'), which scans manifests as a Spark job)."""
+    for million-file tables Table.inspect('files') parses the
+    manifests in Spark tasks instead). A partition reads as the
+    inspection tables show it: ``partition`` for a single-field spec,
+    ``partition_fields`` for a composite one."""
     import json as _json
 
     from ..table import load_table
+    from ..table.table import _entry_partition_key
 
     tbl = load_table(root)
     sid = options.get("snapshot_id")
@@ -1120,6 +1150,7 @@ def _meta_rows(root: str, kind: str, options) -> list[tuple]:
             (
                 e["path"],
                 e.get("partition"),
+                e.get("partition_fields"),
                 int(e["rows"]),
                 int(e["bytes"]),
                 int(e.get("seq", 0)),
@@ -1130,13 +1161,13 @@ def _meta_rows(root: str, kind: str, options) -> list[tuple]:
     if kind == "partitions":
         agg: dict = {}
         for e in entries:
-            k = e.get("partition")
+            k = _entry_partition_key(e)
             c, r, b = agg.get(k, (0, 0, 0))
             agg[k] = (c + 1, r + int(e["rows"]), b + int(e["bytes"]))
         return [
-            (k, c, r, b)
+            (None, list(k), c, r, b) if isinstance(k, tuple) else (k, None, c, r, b)
             for k, (c, r, b) in sorted(
-                agg.items(), key=lambda kv: (kv[0] is None, kv[0])
+                agg.items(), key=lambda kv: (kv[0] is None, isinstance(kv[0], tuple), kv[0])
             )
         ]
     raise ValueError(f"unknown metadata table {kind!r}")
@@ -1191,10 +1222,18 @@ class _WriterBase:
             self.bloom = {"column": col, "type": schema[col].dataType.simpleString()}
             if self.bloom["type"] == "timestamp":
                 self.bloom["tz"] = "UTC"
+        # the token bloom of string columns (a token of another type
+        # would need Spark's cast rendering; absent blooms never prune)
+        tcol = tbl.metadata.properties.get("write.token.bloom.column")
+        self.token_column = None
+        if tcol in schema.fieldNames() and schema[tcol].dataType.simpleString() == "string":
+            self.token_column = tcol
 
     def write(self, iterator):
         return FilesCommit(
-            _write_task_files(iterator, self.root, self.schema, self.spec, self.bloom)
+            _write_task_files(
+                iterator, self.root, self.schema, self.spec, self.bloom, self.token_column
+            )
         )
 
     def _all_entries(self, messages):

@@ -173,92 +173,50 @@ def _render_partition_ddl(t) -> str:
     return one(t)
 
 
-def _introspect_totals(spark, tbl, snap) -> tuple[int, int, int]:
-    """(files, rows, bytes) of one snapshot for DESCRIBE EXTENDED.
-    Past the distributed-plan threshold the totals come from a
-    distributed JSON manifest scan (the same machinery plan_files and
-    the a3f files table use) — at 100 TB with millions of files a
-    driver loop over every entry is the wrong side of the
-    metadata-scale contract; below it the driver loop is cheaper than
-    a Spark job."""
-    from pyspark.sql import functions as F
+def _partition_totals(spark, tbl, snap) -> dict[str, tuple[int, int, int]]:
+    """(files, rows, bytes) of one snapshot per partition, keyed by its
+    rendering: a scalar via str(), a composite tuple field0/field1/...,
+    an unpartitioned entry 'None'. One per-entry function feeds a
+    driver loop or, past the scale threshold (Table._distributed), a
+    reduceByKey on executors: at millions of files a driver loop over
+    every entry is the wrong side of the metadata-scale contract, and
+    the result is partition-count-scale either way."""
+    from .table import _entry_partition_key
 
-    from .table import DIST_PLAN_MIN_MANIFEST_BYTES
+    def one(e: dict) -> tuple[str, tuple[int, int, int]]:
+        p = _entry_partition_key(e)
+        key = "/".join(str(v) for v in p) if isinstance(p, tuple) else str(p)
+        return key, (1, int(e.get("rows", 0) or 0), int(e.get("bytes", 0) or 0))
+
+    def add(a: tuple, b: tuple) -> tuple:
+        return a[0] + b[0], a[1] + b[1], a[2] + b[2]
 
     if snap is None:
-        return 0, 0, 0
-    if tbl._manifest_bytes(snap.manifests) >= DIST_PLAN_MIN_MANIFEST_BYTES:
-        r = (
-            tbl._manifest_entries_df(spark, snap.manifests)
-            .agg(
-                F.count(F.lit(1)).alias("f"),
-                F.sum("rows").alias("r"),
-                F.sum("bytes").alias("b"),
-            )
-            .collect()[0]
+        return {}
+    if tbl._distributed(spark, snap.manifests):
+        return (
+            tbl._manifest_rdd(spark, snap.manifests, lambda m, es: map(one, es))
+            .reduceByKey(add)
+            .collectAsMap()
         )
-        return int(r["f"]), int(r["r"] or 0), int(r["b"] or 0)
-    entries = tbl.files_of(snap)
-    return (
-        len(entries),
-        sum(int(e.get("rows", 0) or 0) for e in entries),
-        sum(int(e.get("bytes", 0) or 0) for e in entries),
-    )
+    agg: dict = {}
+    for e in tbl.files_of(snap):
+        k, v = one(e)
+        agg[k] = add(agg[k], v) if k in agg else v
+    return agg
+
+
+def _introspect_totals(spark, tbl, snap) -> tuple[int, int, int]:
+    """(files, rows, bytes) of one snapshot for DESCRIBE EXTENDED."""
+    totals = _partition_totals(spark, tbl, snap).values()
+    files, rows, nbytes = (sum(c) for c in zip((0, 0, 0), *totals))
+    return files, rows, nbytes
 
 
 def _show_partitions_rows(spark, tbl, snap) -> list[tuple]:
     """SHOW PARTITIONS rows (partition-string, files, rows, bytes),
-    sorted by the rendered key. Distributed groupBy over the manifest
-    scan past the plan threshold (the aggregated result is
-    partition-count-scale, safe to collect); driver loop below it.
-    Renderings match exactly: scalars via str(), composite tuples
-    field0/field1/..., spec-evolution NULLs as 'None'."""
-    from pyspark.sql import functions as F
-
-    from .table import (
-        DIST_PLAN_MIN_MANIFEST_BYTES,
-        _entry_partition_key,
-    )
-
-    if snap is None:
-        return []
-    if tbl._manifest_bytes(snap.manifests) >= DIST_PLAN_MIN_MANIFEST_BYTES:
-        key = F.coalesce(
-            F.col("partition").cast("string"),
-            F.array_join(F.col("partition_fields").cast("array<string>"), "/"),
-            F.lit("None"),
-        )
-        out = (
-            tbl._manifest_entries_df(spark, snap.manifests)
-            .groupBy(key.alias("p"))
-            .agg(
-                F.count(F.lit(1)).alias("f"),
-                F.sum("rows").alias("r"),
-                F.sum("bytes").alias("b"),
-            )
-            .collect()
-        )
-        return sorted(
-            (
-                (row["p"], int(row["f"]), int(row["r"] or 0), int(row["b"] or 0))
-                for row in out
-            ),
-            key=lambda x: x[0],
-        )
-    agg: dict = {}
-    for e in tbl.files_of(snap):
-        p = _entry_partition_key(e)
-        if isinstance(p, tuple):
-            p = "/".join(str(v) for v in p)
-        else:
-            p = str(p)
-        f, r, b = agg.get(p, (0, 0, 0))
-        agg[p] = (
-            f + 1,
-            r + int(e.get("rows", 0) or 0),
-            b + int(e.get("bytes", 0) or 0),
-        )
-    return [(p, f, r, b) for p, (f, r, b) in sorted(agg.items())]
+    sorted by the rendered key."""
+    return [(p, *t) for p, t in sorted(_partition_totals(spark, tbl, snap).items())]
 
 
 def _as_of_millis(lit: str) -> int:

@@ -381,8 +381,10 @@ class ManifestCache:
 
 # 4 MiB: about 12,000 entries with truncated bounds (~350 bytes each
 # marshalled), or about 550 with the full bounds of older manifests.
-# Past about as many entries scan planning moves to executors
-# (table.DIST_PLAN_MIN_MANIFEST_BYTES), whose reads bypass the cache.
+# Past about as many entries, manifest walks given a SparkSession move
+# to executors (Table._distributed): planning, GC, SHOW PARTITIONS,
+# DESCRIBE totals. The files table always parses in Spark tasks. Those
+# reads pass cached=False and bypass the cache.
 _manifests = ManifestCache(4 << 20)
 
 

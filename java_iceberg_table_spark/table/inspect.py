@@ -9,11 +9,11 @@ FileBasedBookkeeper.java:173-177); on a production table the first
 debugging question is always "how many files / how big / how skewed",
 so these are first-class here.
 
-Scale design: the file-level table is produced by reading the
-snapshot's manifest JSONs as a Spark JSON scan under an explicit
-schema — manifest parsing is distributed across executors, never a
-driver loop, so a table with thousands of manifests plans like any
-other JSON scan (and the partitions table is a plain Spark aggregate
+Scale design: the file-level table is built from the same manifest
+walk as scan planning — each manifest parsed by format.read_manifest
+in a Spark task, one row per entry — so a table with thousands of
+manifests plans like any other scan and building the DataFrame starts
+no job (the partitions and manifests tables are plain Spark aggregates
 over it, metadata-only, no data file opened). Snapshot/ref/history
 tables are O(metadata-log) and built driver-side — the log is small
 by construction (snapshot expiry caps it).
@@ -21,6 +21,7 @@ by construction (snapshot expiry caps it).
 
 from __future__ import annotations
 
+import json
 import os
 from typing import TYPE_CHECKING
 
@@ -28,79 +29,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..session import read_paths
-
 if TYPE_CHECKING:  # pragma: no cover
     from .table import Table
-
-# Explicit schema for manifest files ({"entries": [...]}): inference
-# would make `columns` a struct keyed by this table's column names —
-# a per-table schema. A map of stringified bounds keeps the inspection
-# surface identical for every table (Iceberg's readable_metrics makes
-# the same trade). Spark's JSON reader stringifies scalars under a
-# StringType field, so numeric bounds arrive as their literal text.
-_BOUNDS = T.StructType(
-    [
-        T.StructField("min", T.StringType()),
-        T.StructField("max", T.StringType()),
-        T.StructField("nulls", T.LongType()),
-    ]
-)
-MANIFEST_SCHEMA = T.StructType(
-    [
-        T.StructField(
-            "entries",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField("path", T.StringType()),
-                        T.StructField("rows", T.LongType()),
-                        T.StructField("bytes", T.LongType()),
-                        T.StructField("partition", T.LongType()),
-                        # composite specs: one integral bucket per
-                        # field, in field order (single-field entries
-                        # leave it null)
-                        T.StructField(
-                            "partition_fields", T.ArrayType(T.LongType())
-                        ),
-                        T.StructField("columns", T.MapType(T.StringType(), _BOUNDS)),
-                        T.StructField("seq", T.LongType()),
-                        T.StructField("spec_id", T.LongType()),
-                        T.StructField(
-                            "bloom",
-                            T.StructType(
-                                [
-                                    T.StructField("column", T.StringType()),
-                                    T.StructField("bits", T.LongType()),
-                                    T.StructField("k", T.LongType()),
-                                    T.StructField("words", T.ArrayType(T.LongType())),
-                                ]
-                            ),
-                        ),
-                        T.StructField(
-                            "token_bloom",
-                            T.StructType(
-                                [
-                                    T.StructField("column", T.StringType()),
-                                    T.StructField("bits", T.LongType()),
-                                    T.StructField("k", T.LongType()),
-                                    T.StructField("words", T.ArrayType(T.LongType())),
-                                ]
-                            ),
-                        ),
-                        # row-lineage bookkeeping (Iceberg v3): omitting
-                        # these from the distributed read made every
-                        # _row_id/_last_updated_seq silently NULL exactly
-                        # once manifests crossed the distributed-planning
-                        # threshold
-                        T.StructField("first_row_id", T.LongType()),
-                        T.StructField("row_ids_inline", T.BooleanType()),
-                    ]
-                )
-            ),
-        )
-    ]
-)
 
 FILES_SCHEMA = T.StructType(
     [
@@ -117,9 +47,32 @@ FILES_SCHEMA = T.StructType(
 )
 
 
-def read_manifests(spark: SparkSession, paths: list[str]) -> DataFrame:
-    """The manifest JSON files at ``paths``, one MANIFEST_SCHEMA row each."""
-    return read_paths(spark, "json", paths, MANIFEST_SCHEMA, multiLine="true")
+def _bound(v):
+    """A bound as the files table shows it: a string as itself, any
+    other value as its JSON text (true, 1e+20, 0.30000000000000004)."""
+    return v if v is None or isinstance(v, str) else json.dumps(v)
+
+
+def _file_row(manifest_uri: str, e: dict) -> tuple:
+    """One FILES_SCHEMA row of a manifest entry."""
+    cols = e.get("columns")
+
+    def each(key, render=lambda v: v):
+        return None if cols is None else {c: render(b.get(key)) for c, b in cols.items()}
+
+    return (
+        e.get("path"),
+        e.get("partition"),
+        # composite specs: the per-field bucket tuple (None for
+        # single-field/unpartitioned entries)
+        e.get("partition_fields"),
+        e.get("rows"),
+        e.get("bytes"),
+        each("min", _bound),
+        each("max", _bound),
+        each("nulls"),
+        manifest_uri,
+    )
 
 
 def files_df(
@@ -133,24 +86,13 @@ def files_df(
     _, snap, _ = table.read_state(snapshot_id=snapshot_id, ref=ref)
     if snap is None or not snap.manifests:
         return spark.createDataFrame([], FILES_SCHEMA)
-    paths = [os.path.join(table.root, m) for m in snap.manifests]
-    return (
-        read_manifests(spark, paths)
-        .select(F.input_file_name().alias("manifest_path"), F.explode("entries").alias("e"))
-        .select(
-            F.col("e.path").alias("file_path"),
-            F.col("e.partition").alias("partition"),
-            # composite specs: the per-field bucket tuple (null for
-            # single-field/unpartitioned entries)
-            F.col("e.partition_fields").alias("partition_fields"),
-            F.col("e.rows").alias("record_count"),
-            F.col("e.bytes").alias("file_size_bytes"),
-            F.transform_values("e.columns", lambda _, v: v["min"]).alias("lower_bounds"),
-            F.transform_values("e.columns", lambda _, v: v["max"]).alias("upper_bounds"),
-            F.transform_values("e.columns", lambda _, v: v["nulls"]).alias("null_counts"),
-            "manifest_path",
-        )
+    root = os.path.abspath(table.root)
+    rows = table._manifest_rdd(
+        spark,
+        snap.manifests,
+        lambda m, es: [_file_row("file://" + os.path.join(root, m), e) for e in es],
     )
+    return spark.createDataFrame(rows, FILES_SCHEMA)
 
 
 def partitions_df(

@@ -90,16 +90,17 @@ def _dashed(result: dict) -> dict:
     return {k.replace("_", "-"): v for k, v in result.items()}
 
 
-# Above this much manifest JSON, scan planning and GC reachability move
-# from the driver to one Spark job over the manifests: planning runs
-# the driver's own pruning predicate on executors, GC aggregates a
-# Spark JSON scan (inspect.py). Below it, the job's overhead exceeds
-# the driver loop. String bounds are truncated to 16 characters and
-# binary columns carry none (stats.column_bounds), so an entry is
-# ~0.2 kB with numeric bounds and ~0.6 kB with string ones (an ingest
-# entry): 4 MB is ~19,000 entries of the first kind and ~7,300 of the
-# second. Manifests written with full bounds are larger (an ingest
-# entry was ~7.6 kB, ~550 entries) and reach it sooner.
+# Above this much manifest JSON, a manifest walk given a SparkSession
+# (scan planning, GC reachability, SHOW PARTITIONS, DESCRIBE totals)
+# moves from the driver to one Spark job whose tasks parse the
+# manifests with the driver's own format.read_manifest
+# (Table._distributed decides, Table._manifest_rdd maps). Below it, the
+# job's overhead exceeds the driver loop. String bounds are truncated
+# to 16 characters and binary columns carry none (stats.column_bounds),
+# so an entry is ~0.2 kB with numeric bounds and ~0.6 kB with string
+# ones (an ingest entry): 4 MB is ~19,000 entries of the first kind and
+# ~7,300 of the second. Manifests written with full bounds are larger
+# (an ingest entry was ~7.6 kB, ~550 entries) and reach it sooner.
 DIST_PLAN_MIN_MANIFEST_BYTES = 4 << 20
 
 # Position deletes at or below this many rows are stored as INLINE
@@ -427,6 +428,15 @@ def _entry_partition_key(e: dict):
         return p
     pf = e.get("partition_fields")
     return tuple(pf) if pf is not None else None
+
+
+def _remove_with_crc(path: str) -> None:
+    """Delete a table file and its local-FS checksum sidecar, if any."""
+    os.remove(path)
+    d, b = os.path.split(path)
+    crc = os.path.join(d, f".{b}.crc")
+    if os.path.exists(crc):
+        os.remove(crc)
 
 
 def _partition_subdir(spec_id, part, fallback: str) -> str:
@@ -1726,7 +1736,7 @@ class Table:
         """``(cands, keep)`` of a copy-on-write rewrite of ``snap``: a
         file is a candidate iff ANY OR-branch's conjunction admits it —
         the union of the scan planner's per-branch admissible sets, so
-        past DIST_PLAN_MIN_MANIFEST_BYTES each branch is pruned on
+        past the scale threshold (_distributed) each branch is pruned on
         executors and a selective rewrite over millions of entries
         never evaluates pruning predicates in a driver loop.
         Candidates are re-filtered row-wise with the FULL residual
@@ -2253,8 +2263,8 @@ class Table:
         df = self._read_entries_raw(spark, entries, schema, keep_pos=True)
         renames = _renames_of(schema)
         # per-file data sequence (entry-count-bounded, metadata-scale;
-        # tables past DIST_PLAN_MIN_MANIFEST_BYTES would route this
-        # through the distributed manifest scan like plan_files)
+        # tables past the scale threshold (_distributed) would route
+        # this through the executors' manifest walk like plan_files)
         seq_rows = [(e["path"], int(e.get("seq", 0))) for e in entries]
         seq_df = spark.createDataFrame(seq_rows, "__file string, __seq long")
         # LEFT join + per-row guard, not an inner join: if the
@@ -2414,7 +2424,11 @@ class Table:
         if snap is None:
             return None
         specs = self._spec_map(md)
-        cands = [e for m in snap.manifests for e in self._admitted(self.root, m, specs, filters)]
+        cands = [
+            e
+            for m in snap.manifests
+            for e in self._admitted(fmt.read_manifest(self.root, m), specs, filters)
+        ]
         if not cands:
             return None
         match = F.coalesce(self._and_predicate(filters), F.lit(False))
@@ -2657,7 +2671,6 @@ class Table:
         older_than_ms: int,
         retain_last: int = 20,
         spark: SparkSession | None = None,
-        distributed_threshold_bytes: int | None = None,
         protect_ids: set[int] | None = None,
     ) -> dict[str, int]:
         """Expire snapshots older than the cutoff (keeping at least
@@ -2764,95 +2777,69 @@ class Table:
         # Sweep AFTER the durable commit, computing liveness from the
         # committed state (no snapshot added later can resurrect a
         # reference to these files — new commits build on `committed`,
-        # which no longer knows them). A kept snapshot's added-manifest
-        # (summary) is live even when manifest merging dropped it from
-        # the manifests list: added_files() still reads it.
-        live_manifests = {
-            m for s in committed.snapshots for m in s.manifests + s.delete_manifests
-        }
-        for s in committed.snapshots:
-            am = s.summary.get("added-manifest")
-            if am is not None:
-                live_manifests.add(am)
-        dead_manifests = set()
-        for s in expired:
-            dead_manifests.update(s.manifests)
-            dead_manifests.update(s.delete_manifests)
-            am = s.summary.get("added-manifest")
-            if am is not None:
-                dead_manifests.add(am)
+        # which no longer knows them).
+        live_manifests = self._reachable_manifests(committed.snapshots)
         dead_only = [
             m
-            for m in sorted(dead_manifests - live_manifests)
+            for m in sorted(self._reachable_manifests(expired) - live_manifests)
             if os.path.exists(os.path.join(self.root, m))
         ]
         if not dead_only:
             return stats
-        threshold = (
-            DIST_PLAN_MIN_MANIFEST_BYTES
-            if distributed_threshold_bytes is None
-            else distributed_threshold_bytes
+        candidates = list(
+            dict.fromkeys(
+                e["path"]
+                for m in dead_only
+                for e in fmt.read_manifest(self.root, m)
+                if e.get("path")  # None = inline DV, nothing on disk
+            )
         )
-        if (
-            spark is not None
-            and self._manifest_bytes(live_manifests) + self._manifest_bytes(dead_only)
-            >= threshold
-        ):
-            # Distributed reachability: dead-entry paths anti-joined
-            # against live-entry paths — only the files actually being
-            # deleted come back to the driver, never the full live set.
-            doomed = self._dead_paths_distributed(spark, dead_only, sorted(live_manifests))
-        else:
-            live_files = set()
-            for m in live_manifests:
-                for e in fmt.read_manifest(self.root, m):
-                    live_files.add(e.get("path"))
-            doomed, seen = [], set()
-            for m in dead_only:
-                for e in fmt.read_manifest(self.root, m):
-                    p = e.get("path")  # None = inline DV, nothing on disk
-                    if p and p not in live_files and p not in seen:
-                        seen.add(p)
-                        doomed.append(p)
-        for rel in doomed:
+        for rel in self._unreferenced(spark, candidates, live_manifests):
             fpath = os.path.join(self.root, rel)
             if os.path.exists(fpath):
-                os.remove(fpath)
+                _remove_with_crc(fpath)
                 stats["deleted_files"] += 1
-                # local-FS checksum sidecar, if any
-                d, b = os.path.split(fpath)
-                crc = os.path.join(d, f".{b}.crc")
-                if os.path.exists(crc):
-                    os.remove(crc)
         for m in dead_only:
             os.remove(os.path.join(self.root, m))
             stats["deleted_manifests"] += 1
         return stats
 
-    def _dead_paths_distributed(
-        self, spark: SparkSession, dead_manifests: list[str], live_manifests: list[str]
+    @staticmethod
+    def _reachable_manifests(snapshots: Iterable[Snapshot]) -> set[str]:
+        """Every manifest the ``snapshots`` read: data and delete
+        manifests, and each one's added-manifest (summary), which
+        added_files() still reads after manifest merging dropped it
+        from the manifests list."""
+        out: set[str] = set()
+        for s in snapshots:
+            out.update(s.manifests, s.delete_manifests)
+            am = s.summary.get("added-manifest")
+            if am is not None:
+                out.add(am)
+        return out
+
+    def _unreferenced(
+        self, spark: SparkSession | None, candidates: list[str], live_manifests: set[str]
     ) -> list[str]:
-        """Paths referenced by dead manifests and NO live manifest —
-        the GC victim set, computed as a distributed manifest scan +
-        left-anti join so the driver never holds the live-file set."""
-        dead = (
-            self._manifest_entries_df(spark, dead_manifests)
-            .select("path")
-            # inline-DV delete entries reference no file (path null)
-            .filter(F.col("path").isNotNull())
-            .distinct()
-        )
-        if live_manifests:
-            live = self._manifest_entries_df(spark, live_manifests).select("path")
-            dead = dead.join(live, "path", "left_anti")
-        return [r["path"] for r in dead.collect()]
+        """The ``candidates`` (paths relative to the root) that no entry
+        of ``live_manifests`` references: GC reachability, for
+        expire_snapshots and clean alike. Past the scale threshold it
+        is one Spark job subtracting the live entries' paths, so the
+        driver never holds the live-file set."""
+        if not candidates:
+            return []
+        live = sorted(live_manifests)
+        if self._distributed(spark, live):
+            live_paths = self._manifest_rdd(spark, live, lambda m, es: [e.get("path") for e in es])
+            return spark.sparkContext.parallelize(candidates).subtract(live_paths).collect()
+        live_paths = {e.get("path") for m in live for e in fmt.read_manifest(self.root, m)}
+        return [p for p in candidates if p not in live_paths]
 
     def clean(
         self,
         older_than_ms: int = 3 * 24 * 3600 * 1000,
         now_ms: int | None = None,
         spark: SparkSession | None = None,
-        distributed_threshold_bytes: int | None = None,
     ) -> dict[str, int]:
         """Orphan-file GC (R19): delete files under data/ and
         manifests/ that are unreachable from EVERY snapshot of the
@@ -2885,47 +2872,14 @@ class Table:
                     except OSError:
                         continue
         md = self.metadata  # fresh load: supersedes every listed candidate
-        live_manifests = {
-            m for s in md.snapshots for m in s.manifests + s.delete_manifests
-        }
-        for s in md.snapshots:
-            am = s.summary.get("added-manifest")
-            if am is not None:
-                live_manifests.add(am)
-        threshold = (
-            DIST_PLAN_MIN_MANIFEST_BYTES
-            if distributed_threshold_bytes is None
-            else distributed_threshold_bytes
-        )
-        live_sorted = sorted(live_manifests)
+        live_manifests = self._reachable_manifests(md.snapshots)
         data_candidates = [
             rel
             for rel in candidates
             if not rel.startswith("manifests")
             and not os.path.basename(rel).startswith((".", "_"))
         ]
-        if (
-            spark is not None
-            and live_sorted
-            and self._manifest_bytes(live_sorted) >= threshold
-        ):
-            # Distributed reachability: candidates anti-joined against
-            # the live-entry scan — driver memory holds the listing and
-            # the orphans, never the live-file set.
-            cand_df = spark.createDataFrame(
-                [(p,) for p in data_candidates], "path string"
-            )
-            live_df = self._manifest_entries_df(spark, live_sorted).select("path")
-            orphan_data = {
-                r["path"] for r in cand_df.join(live_df, "path", "left_anti").collect()
-            }
-        else:
-            live_files: set[str] = set()
-            for m in live_sorted:
-                for e in fmt.read_manifest(self.root, m):
-                    if e.get("path"):
-                        live_files.add(e["path"])
-            orphan_data = {p for p in data_candidates if p not in live_files}
+        orphan_data = set(self._unreferenced(spark, data_candidates, live_manifests))
         for rel in candidates:
             if rel.startswith("manifests"):
                 if rel in live_manifests:
@@ -2936,12 +2890,8 @@ class Table:
                     continue  # live data / .crc sidecars / _SUCCESS markers
                 key = "deleted_files"
             try:
-                os.remove(os.path.join(self.root, rel))
+                _remove_with_crc(os.path.join(self.root, rel))
                 stats[key] += 1
-                d, b = os.path.split(os.path.join(self.root, rel))
-                crc = os.path.join(d, f".{b}.crc")
-                if os.path.exists(crc):
-                    os.remove(crc)
             except OSError:
                 pass
         return stats
@@ -3106,7 +3056,6 @@ class Table:
         filters: Iterable[tuple[str, str, object]] = (),
         snapshot_id: int | None = None,
         spark: SparkSession | None = None,
-        distributed_threshold_bytes: int | None = None,
     ) -> list[dict]:
         """Metadata-only scan planning: partition pruning (on the
         transform source column) + per-file min/max skipping for any
@@ -3115,35 +3064,31 @@ class Table:
         travel).
 
         With a ``spark`` handle and enough manifest volume
-        (DIST_PLAN_MIN_MANIFEST_BYTES), the same loop runs on executors
-        in one Spark job (_plan_files_distributed) — only survivors
-        return to the driver, so a heavily-pruned plan over millions of
-        entries never materializes the full entry list in driver
-        memory."""
+        (Table._distributed), the same loop runs on executors in one
+        Spark job (_plan_files_distributed) — only survivors return to
+        the driver, so a heavily-pruned plan over millions of entries
+        never materializes the full entry list in driver memory."""
         md, snap, schema = self.read_state(snapshot_id=snapshot_id)
         if snap is None:
             return []
         specs = self._spec_map(md)
-        threshold = (
-            DIST_PLAN_MIN_MANIFEST_BYTES
-            if distributed_threshold_bytes is None
-            else distributed_threshold_bytes
-        )
         filters = _pruning_filters(list(filters), schema)
-        if spark is not None and self._manifest_bytes(snap.manifests) >= threshold:
+        if self._distributed(spark, snap.manifests):
             return self._plan_files_distributed(spark, snap, specs, filters)
-        return [e for m in snap.manifests for e in self._admitted(self.root, m, specs, filters)]
-
-    @staticmethod
-    def _admitted(
-        root: str, manifest: str, specs: dict, filters: list, cached: bool = True
-    ) -> list[dict]:
-        """The entries of one manifest that _entry_may_match admits,
-        each under its own spec: plan_files' filter, on the driver and
-        (uncached) on executors alike."""
         return [
             e
-            for e in fmt.read_manifest(root, manifest, cached)
+            for m in snap.manifests
+            for e in self._admitted(fmt.read_manifest(self.root, m), specs, filters)
+        ]
+
+    @staticmethod
+    def _admitted(entries: list[dict], specs: dict, filters: list) -> list[dict]:
+        """The ``entries`` that _entry_may_match admits, each under its
+        own spec: plan_files' filter, on the driver and on executors
+        alike."""
+        return [
+            e
+            for e in entries
             if all(Table._entry_may_match(e, Table._entry_transform(e, specs), f) for f in filters)
         ]
 
@@ -3266,18 +3211,20 @@ class Table:
                 pass
         return total
 
-    def _manifest_entries_df(
-        self, spark: SparkSession, manifests: list[str]
-    ) -> DataFrame:
-        """Distributed manifest read: one row per entry (the same
-        machinery as the ``files`` inspection table)."""
-        from .inspect import read_manifests
+    def _distributed(self, spark: SparkSession | None, manifests: Iterable[str]) -> bool:
+        """Whether a walk over ``manifests`` runs on executors: given a
+        SparkSession, once they hold DIST_PLAN_MIN_MANIFEST_BYTES of
+        JSON. The one place the threshold is read (at call time)."""
+        return spark is not None and self._manifest_bytes(manifests) >= DIST_PLAN_MIN_MANIFEST_BYTES
 
-        paths = [os.path.join(self.root, m) for m in manifests]
-        return (
-            read_manifests(spark, paths)
-            .select(F.explode("entries").alias("e"))
-            .select("e.*")
+    def _manifest_rdd(self, spark: SparkSession, manifests: Iterable[str], fn):
+        """The RDD of ``fn(manifest, entries)`` over ``manifests``,
+        flattened: each task parses its manifests with
+        format.read_manifest, uncached (an executor's cache would serve
+        no later read)."""
+        root = self.root
+        return spark.sparkContext.parallelize(list(manifests)).flatMap(
+            lambda m: fn(m, fmt.read_manifest(root, m, cached=False))
         )
 
     def _plan_files_distributed(
@@ -3287,15 +3234,12 @@ class Table:
         specs: dict[int, Transform | None],
         filters: list[tuple[str, str, object]],
     ) -> list[dict]:
-        """plan_files' filter run on executors in one Spark job: each
-        task parses its manifests, so only survivors reach the driver,
-        as the driver parse yields them, in manifest order."""
-        root = self.root
-        return (
-            spark.sparkContext.parallelize(snap.manifests)
-            .flatMap(lambda m: Table._admitted(root, m, specs, filters, cached=False))
-            .collect()
-        )
+        """plan_files' filter run on executors in one Spark job: only
+        survivors reach the driver, as the driver loop yields them, in
+        manifest order."""
+        return self._manifest_rdd(
+            spark, snap.manifests, lambda m, es: Table._admitted(es, specs, filters)
+        ).collect()
 
     @staticmethod
     def _entry_may_match(
@@ -4134,7 +4078,7 @@ class Table:
 
     def inspect(self, spark: SparkSession, kind: str, **kw) -> DataFrame:
         """System tables as DataFrames: ``files`` / ``partitions`` /
-        ``manifests`` (distributed manifest-JSON scan; accept
+        ``manifests`` (manifests parsed in Spark tasks; accept
         snapshot_id= / ref=), ``snapshots``, ``refs``. The operator's
         SQL window into table health — no data file is opened."""
         from . import inspect as insp

@@ -44,6 +44,24 @@ def jobs_started(spark):
     return run
 
 
+@pytest.fixture
+def dist_threshold(monkeypatch):
+    """``dist_threshold(n)`` sets ``table.DIST_PLAN_MIN_MANIFEST_BYTES``,
+    the manifest volume at which a manifest walk given a SparkSession
+    runs on executors, to ``n`` for the rest of the test (None: back to
+    the default). 0 sends every such walk to executors."""
+    from java_iceberg_table_spark.table import table as table_mod
+
+    default = table_mod.DIST_PLAN_MIN_MANIFEST_BYTES
+
+    def set_threshold(n: int | None) -> None:
+        monkeypatch.setattr(
+            table_mod, "DIST_PLAN_MIN_MANIFEST_BYTES", default if n is None else n
+        )
+
+    return set_threshold
+
+
 @pytest.fixture(scope="session")
 def duck(sf_dir):
     con = duck_connect(sf_dir)

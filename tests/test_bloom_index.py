@@ -179,20 +179,17 @@ def test_root_containing_data_segment(spark, sf_dir):
         shutil.rmtree(base, ignore_errors=True)
 
 
-def test_distributed_plan_path_honors_bloom(spark, bloom_table):
+def test_distributed_plan_path_honors_bloom(spark, bloom_table, dist_threshold):
     tbl, keys = bloom_table
     k = int(min(keys))
     # force the distributed manifest scan and compare with the driver
     # loop: identical survivor sets for present AND absent probes
     def both(filters):
         drv = {e["path"] for e in tbl.plan_files(filters)}
-        dist = {
-            e["path"]
-            for e in tbl.plan_files(
-                filters, spark=spark, distributed_threshold_bytes=0
-            )
-        }
+        dist = {e["path"] for e in tbl.plan_files(filters, spark=spark)}
         return drv, dist
+
+    dist_threshold(0)
 
     for filters in ([("o_orderkey", "=", k)], [("o_orderkey", ">", k)]):
         drv, dist = both(filters)
@@ -356,6 +353,42 @@ def test_connector_write_attaches_blooms(spark, tmp_path, column):
         assert any(e["path"] in {x["path"] for x in hit} for e in entries)
         assert len(hit) < len(entries)
     assert tbl.scan(spark, [(column, "=", rows[5][column])]).count() == 1
+
+
+def test_connector_write_attaches_token_blooms(spark, tmp_path):
+    """A ``write.format("engine_table")`` append into a
+    ``write.token.bloom.column`` table gives every file its token
+    bloom, bit-identical to ``build_file_token_blooms`` over the same
+    file: tokens split on Java's ASCII whitespace (\\x0B splits, a
+    no-break space does not), empty tokens dropped, the filter sized
+    by the distinct count. A file of null text gets none."""
+    from java_iceberg_table_spark.sources import register_engine_datasource
+    from java_iceberg_table_spark.table.bloom_index import build_file_token_blooms
+
+    register_engine_datasource(spark)
+    df = spark.range(0, 200).select(
+        F.col("id").alias("k"),
+        F.concat(
+            F.lit(" w"), F.col("id").cast("string"), F.lit("\x0bv"), (F.col("id") % 7).cast("string"),
+            F.lit("\u00a0nb\t\tend "),
+        ).alias("v"),
+    )
+    root = str(tmp_path / "t")
+    tbl = create_table(root, df.schema, properties={"write.token.bloom.column": "v"})
+    df.repartition(4).write.format("engine_table").option("root", root).mode("append").save()
+    entries = tbl.current_files()
+    assert len(entries) == 4
+    assert all(e.get("token_bloom", {}).get("column") == "v" for e in entries)
+    paths = [f"{root}/{e['path']}" for e in entries]
+    built = build_file_token_blooms(spark, paths, "v")
+    for e, p in zip(entries, paths):
+        assert e["token_bloom"] == built[p], e["path"]
+    for tok in ("w5", "v3\u00a0nb", "end"):
+        assert any(bloom_may_contain(e["token_bloom"], tok) for e in entries), tok
+    nulls = spark.createDataFrame([(1, None)], "k long, v string")
+    nulls.write.format("engine_table").option("root", root).mode("append").save()
+    new = [e for e in tbl.current_files() if e["path"] not in {x["path"] for x in entries}]
+    assert len(new) == 1 and "token_bloom" not in new[0]
 
 
 @pytest.mark.parametrize(

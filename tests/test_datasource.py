@@ -790,6 +790,33 @@ def test_connector_metadata_tables(ds, base_dir):
         df.write.format("engine_table").option("root", root).option(
             "table", "files"
         ).mode("append").save()
+    # a composite spec: one partitions row per partition tuple and the
+    # files' tuples, as the inspection tables show them (meta() reads
+    # the new root)
+    from java_iceberg_table_spark.table import bucket, composite
+
+    root = base_dir + "/meta_composite"
+    cdf = spark.createDataFrame(
+        [(i % 3, f"g{i % 4}") for i in range(40)], "k long, g string"
+    )
+    ct = create_table(
+        root, cdf.schema, partition=composite(truncate("k", 1), bucket("g", 2))
+    )
+    ct.append(cdf)
+
+    def rows(df, cols):
+        return sorted(
+            tuple(tuple(v) if isinstance(v, list) else v for v in r)
+            for r in df.select(*cols).collect()
+        )
+
+    part_cols = ["partition", "partition_fields", "file_count", "record_count", "total_bytes"]
+    parts = rows(meta("partitions"), part_cols)
+    assert parts == rows(ct.inspect(spark, "partitions"), part_cols)
+    assert len(parts) > 1 and all(p[0] is None and len(p[1]) == 2 for p in parts)
+    assert sum(p[3] for p in parts) == 40
+    file_cols = ["file_path", "partition", "partition_fields", "record_count"]
+    assert rows(meta("files"), file_cols) == rows(ct.inspect(spark, "files"), file_cols)
 
 
 def test_stream_max_files_per_trigger(ds, base_dir):
@@ -911,7 +938,7 @@ def test_streams_start_on_expired_history(ds, base_dir):
         r.partitions({"snapshot_id": snaps[0].snapshot_id}, r.latestOffset())
 
 
-def test_bucket_float_predicate_conservative(ds, base_dir):
+def test_bucket_float_predicate_conservative(ds, base_dir, dist_threshold):
     """A float equality predicate on a bucket[N]-partitioned long
     column must NOT prune by hash (str(42.0) != str(42) — the hash
     would prune the matching file); the residual filter still answers
@@ -926,8 +953,9 @@ def test_bucket_float_predicate_conservative(ds, base_dir):
     assert [r["k"] for r in tbl.scan(spark, [("k", "=", 42.0)]).collect()] == [42]
     # driver loop and distributed plan path agree
     hit = tbl.plan_files([("k", "=", 42.0)])
-    hit_dist = tbl.plan_files([("k", "=", 42.0)], spark=spark,
-                              distributed_threshold_bytes=0)
+    dist_threshold(0)
+    hit_dist = tbl.plan_files([("k", "=", 42.0)], spark=spark)
+    dist_threshold(None)
     assert sorted(e["path"] for e in hit) == sorted(e["path"] for e in hit_dist)
     # the int-predicate (hash-pruned) plan is a subset of the
     # conservative float-predicate plan — hash pruning never engaged

@@ -356,3 +356,35 @@ def test_metadata_json_uses_the_c_encoder():
                     if "json.dump(" in f.read():
                         offenders.append(os.path.relpath(os.path.join(dirpath, fname), pkg))
     assert offenders == [], f"json.dump( in {offenders}: write json.dumps(...)"
+
+
+def test_one_manifest_parser():
+    """Manifests are parsed by format.read_manifest alone, on the driver
+    and in Spark tasks: no hand-kept manifest schema and no Spark JSON
+    read of them. Whether a walk runs on executors is decided by one
+    Table method, the only reader of DIST_PLAN_MIN_MANIFEST_BYTES, and
+    no caller passes a threshold of its own."""
+    import re
+
+    pkg = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "java_iceberg_table_spark",
+    )
+    sources = {}
+    for dirpath, _, files in os.walk(pkg):
+        for fname in files:
+            if fname.endswith(".py"):
+                path = os.path.join(dirpath, fname)
+                with open(path) as f:
+                    sources[os.path.relpath(path, pkg)] = f.read()
+    for rel, src in sources.items():
+        assert "MANIFEST_SCHEMA" not in src, f"{rel}: parse manifests with format.read_manifest"
+        assert not re.search(r"read_paths\([^)]*[\"']json[\"']", src), f"{rel} reads JSON with Spark"
+        assert "distributed_threshold_bytes" not in src, f"{rel}: Table._distributed decides"
+    assert "DIST_PLAN_MIN_MANIFEST_BYTES" not in sources[os.path.join("table", "catalog.py")]
+    table_py = sources[os.path.join("table", "table.py")]
+    decision = re.search(r"\n    def _distributed\(.*?(?=\n    (?:def |@))", table_py, re.S).group(0)
+    assert "DIST_PLAN_MIN_MANIFEST_BYTES" in decision
+    rest = table_py.replace(decision, "")
+    assert rest.count("DIST_PLAN_MIN_MANIFEST_BYTES") == 1
+    assert re.search(r"^DIST_PLAN_MIN_MANIFEST_BYTES = ", rest, re.M)

@@ -113,23 +113,19 @@ def test_per_field_pruning_intersects(spark, ct):
     assert got == want > 0
 
 
-def test_distributed_plan_parity(spark, ct):
+def test_distributed_plan_parity(spark, ct, dist_threshold):
     filters = [
         ("ts", ">=", dt.datetime(2024, 1, 2)),
         ("ts", "<", dt.datetime(2024, 1, 4)),
         ("uid", "=", "u1"),
     ]
     local = {e["path"] for e in ct.plan_files(filters)}
-    dist = {
-        e["path"]
-        for e in ct.plan_files(
-            filters, spark=spark, distributed_threshold_bytes=0
-        )
-    }
+    dist_threshold(0)
+    dist = {e["path"] for e in ct.plan_files(filters, spark=spark)}
     assert local == dist
     # the distributed path round-trips partition_fields into entries
     # (read paths group/stamp on them after a distributed plan)
-    de = ct.plan_files([], spark=spark, distributed_threshold_bytes=0)
+    de = ct.plan_files([], spark=spark)
     assert all(len(e["partition_fields"]) == 2 for e in de)
 
 
@@ -240,7 +236,7 @@ def test_dynamic_overwrite_tuple_partitions(spark, base_dir):
     assert t.scan(spark).count() == 100 - affected + 1
 
 
-def test_spec_evolution_across_arities(spark, base_dir):
+def test_spec_evolution_across_arities(spark, base_dir, dist_threshold):
     df = spark.createDataFrame(
         [(i, i * 100, f"u{i % 5}") for i in range(50)],
         "id long, tp long, uid string",
@@ -264,13 +260,10 @@ def test_spec_evolution_across_arities(spark, base_dir):
     # + 10 new rows (width 2000) match tp < 1000
     assert t.scan(spark, [("tp", "<", 1000)]).count() == 20
     local = {e["path"] for e in t.plan_files([("tp", "<", 1000)])}
-    dist = {
-        e["path"]
-        for e in t.plan_files(
-            [("tp", "<", 1000)], spark=spark, distributed_threshold_bytes=0
-        )
-    }
+    dist_threshold(0)
+    dist = {e["path"] for e in t.plan_files([("tp", "<", 1000)], spark=spark)}
     assert local == dist
+    dist_threshold(None)
     # and back down: composite -> single-field evolution
     t.update_partition_spec(identity("id"))
     t = load_table(base_dir + "/ev")

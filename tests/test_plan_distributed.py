@@ -17,7 +17,6 @@ from pyspark.sql.types import LongType, StructField, StructType
 
 from java_iceberg_table_spark.table import create_table, truncate
 from java_iceberg_table_spark.table import format as fmt
-from java_iceberg_table_spark.table.inspect import MANIFEST_SCHEMA
 
 SCHEMA = StructType(
     [StructField("tp", LongType(), False), StructField("v", LongType(), True)]
@@ -74,26 +73,21 @@ FILTER_CASES = [
 
 
 @pytest.mark.parametrize("filters", FILTER_CASES)
-def test_distributed_plan_parity(big_table, spark, filters):
+def test_distributed_plan_parity(big_table, spark, filters, dist_threshold):
     py = big_table.plan_files(filters)
-    dist = big_table.plan_files(
-        filters, spark=spark, distributed_threshold_bytes=0
-    )
+    dist_threshold(0)
+    dist = big_table.plan_files(filters, spark=spark)
     assert sorted(e["path"] for e in py) == sorted(e["path"] for e in dist)
-    # every manifest key survives the JSON round trip: present in the
-    # distributed entry exactly when the driver's has it, same value,
-    # native types
-    keys = [f.name for f in MANIFEST_SCHEMA["entries"].dataType.elementType.fields]
+    # every manifest entry comes back as the driver parses it: the same
+    # keys, the same values, native types
     by_path = {p["path"]: p for p in py}
     for e in dist:
-        p = by_path[e["path"]]
-        assert [k for k in keys if k in e] == [k for k in keys if k in p]
-        assert {k: e.get(k) for k in keys} == {k: p.get(k) for k in keys}
+        assert e == by_path[e["path"]]
     if dist:
         assert isinstance(dist[0]["columns"]["v"]["min"], int)
 
 
-def test_distributed_plan_used_above_threshold(big_table, spark, monkeypatch):
+def test_distributed_plan_used_above_threshold(big_table, spark, monkeypatch, dist_threshold):
     """The auto path must actually go distributed for this manifest
     volume (and the pruned result stays correct)."""
     called = {}
@@ -104,14 +98,13 @@ def test_distributed_plan_used_above_threshold(big_table, spark, monkeypatch):
         return orig(self, *a, **kw)
 
     monkeypatch.setattr(type(big_table), "_plan_files_distributed", spy)
-    entries = big_table.plan_files(
-        [("tp", "<", WIDTH)], spark=spark, distributed_threshold_bytes=1024
-    )
+    dist_threshold(1024)
+    entries = big_table.plan_files([("tp", "<", WIDTH)], spark=spark)
     assert called.get("yes")
     assert entries and all(e["partition"] == 0 for e in entries)
 
 
-def test_distributed_expire_sweep_parity(spark):
+def test_distributed_expire_sweep_parity(spark, dist_threshold):
     """expire_snapshots with the distributed reachability sweep deletes
     exactly the files unreachable from kept snapshots."""
     import shutil
@@ -136,11 +129,11 @@ def test_distributed_expire_sweep_parity(spark):
         # a delete rewrites metadata so snap 1's files become dead once
         # snap 1 expires: drop partitions < 10*WIDTH from the live view
         tbl.delete_where("tp", "<", 10 * WIDTH)
+        dist_threshold(0 if dist else None)
         stats = tbl.expire_snapshots(
             older_than_ms=fmt.now_ms() + 10_000,
             retain_last=1,
             spark=spark if dist else None,
-            distributed_threshold_bytes=0 if dist else None,
         )
         survivors = sorted(
             os.path.relpath(os.path.join(dp, f), root)
@@ -159,7 +152,7 @@ def test_distributed_expire_sweep_parity(spark):
             shutil.rmtree(r, ignore_errors=True)
 
 
-def test_distributed_clean_parity(spark):
+def test_distributed_clean_parity(spark, dist_threshold):
     """clean() with distributed reachability removes the same orphans
     as the driver loop and never touches live files."""
     import shutil
@@ -181,11 +174,11 @@ def test_distributed_clean_parity(spark):
         for i in range(40):
             with open(os.path.join(root, "data", f"orphan{i}.parquet"), "w") as f:
                 f.write("y")
+        dist_threshold(0 if dist else None)
         stats = tbl.clean(
             older_than_ms=0,
             now_ms=fmt.now_ms() + 10_000,  # files written this test are "old"
             spark=spark if dist else None,
-            distributed_threshold_bytes=0 if dist else None,
         )
         survivors = sorted(
             f
@@ -205,7 +198,7 @@ def test_distributed_clean_parity(spark):
             shutil.rmtree(r, ignore_errors=True)
 
 
-def test_distributed_plan_carries_lineage_and_token_bloom(spark):
+def test_distributed_plan_carries_lineage_and_token_bloom(spark, dist_threshold):
     """Round-8 regression (ADVICE r7): the distributed planner's entry
     reconstruction must carry first_row_id / row_ids_inline /
     token_bloom — scan_with_lineage routes through it once manifests
@@ -230,10 +223,8 @@ def test_distributed_plan_carries_lineage_and_token_bloom(spark):
                 }
         tbl.append_entries(entries)
         py = {e["path"]: e for e in tbl.plan_files()}
-        dist = {
-            e["path"]: e
-            for e in tbl.plan_files(spark=spark, distributed_threshold_bytes=0)
-        }
+        dist_threshold(0)
+        dist = {e["path"]: e for e in tbl.plan_files(spark=spark)}
         assert sorted(py) == sorted(dist)
         for path, p in py.items():
             d = dist[path]
@@ -315,12 +306,11 @@ COMPOSITE_FILTER_CASES = [
 
 @pytest.mark.parametrize("filters", COMPOSITE_FILTER_CASES)
 def test_distributed_composite_plan_parity(
-    big_composite_table, spark, filters
+    big_composite_table, spark, filters, dist_threshold
 ):
     py = big_composite_table.plan_files(filters)
-    dist = big_composite_table.plan_files(
-        filters, spark=spark, distributed_threshold_bytes=0
-    )
+    dist_threshold(0)
+    dist = big_composite_table.plan_files(filters, spark=spark)
     assert sorted(e["path"] for e in py) == sorted(e["path"] for e in dist)
     if dist:
         e = sorted(dist, key=lambda x: x["path"])[0]
@@ -329,23 +319,18 @@ def test_distributed_composite_plan_parity(
         assert all(isinstance(v, int) for v in e["partition_fields"])
 
 
-def test_distributed_composite_pruned_fractions(big_composite_table, spark):
+def test_distributed_composite_pruned_fractions(big_composite_table, spark, dist_threshold):
     """The INTERSECTION property at scale: each field alone prunes its
     share, together they prune the product — distributed path."""
     total = 12_000
-    day = big_composite_table.plan_files(
-        [("tp", "<", 5 * WIDTH)], spark=spark, distributed_threshold_bytes=0
-    )
+    dist_threshold(0)
+    day = big_composite_table.plan_files([("tp", "<", 5 * WIDTH)], spark=spark)
     assert len(day) == total // 10  # 5 of 50 stripes
-    uid = big_composite_table.plan_files(
-        [("uid", "=", "u7")], spark=spark, distributed_threshold_bytes=0
-    )
+    uid = big_composite_table.plan_files([("uid", "=", "u7")], spark=spark)
     # one of 23 uids; stats equality (min==max==uid) prunes exactly
     assert 0 < len(uid) <= total // 8 + total // 23
     both = big_composite_table.plan_files(
-        [("tp", "<", 5 * WIDTH), ("uid", "=", "u7")],
-        spark=spark,
-        distributed_threshold_bytes=0,
+        [("tp", "<", 5 * WIDTH), ("uid", "=", "u7")], spark=spark
     )
     assert 0 < len(both) < min(len(day), len(uid))
     assert {e["path"] for e in both} == (
@@ -364,14 +349,13 @@ SET_LEAF_CASES = [
 
 
 @pytest.mark.parametrize("filters", SET_LEAF_CASES)
-def test_distributed_plan_parity_in_leaf(big_table, spark, filters):
+def test_distributed_plan_parity_in_leaf(big_table, spark, filters, dist_threshold):
     """The round-14 IN leaf decomposes to per-value equality on BOTH
     planning paths — the distributed expression must prune exactly
     like the driver loop."""
     py = big_table.plan_files(filters)
-    dist = big_table.plan_files(
-        filters, spark=spark, distributed_threshold_bytes=0
-    )
+    dist_threshold(0)
+    dist = big_table.plan_files(filters, spark=spark)
     assert sorted(e["path"] for e in py) == sorted(e["path"] for e in dist)
 
 
@@ -425,18 +409,17 @@ LIKE_CASES = [
 
 
 @pytest.mark.parametrize("filters", LIKE_CASES)
-def test_distributed_plan_parity_like_prefix(str_table, spark, filters):
+def test_distributed_plan_parity_like_prefix(str_table, spark, filters, dist_threshold):
     py = str_table.plan_files(filters)
-    dist = str_table.plan_files(
-        filters, spark=spark, distributed_threshold_bytes=0
-    )
+    dist_threshold(0)
+    dist = str_table.plan_files(filters, spark=spark)
     assert sorted(e["path"] for e in py) == sorted(e["path"] for e in dist)
     # the selective prefix really prunes (not everything survives)
     if filters == [("s", "like_prefix", "p07")]:
         assert 0 < len(py) <= 2000 // 30 + 1
 
 
-def test_dnf_union_planning_goes_distributed(big_table, spark, monkeypatch):
+def test_dnf_union_planning_goes_distributed(big_table, spark, dist_threshold):
     """delete_rows/update_where plan candidates per OR-branch through
     plan_files — past the threshold each branch's conjunction runs as
     the distributed manifest scan. Verified at the planning layer
@@ -447,14 +430,10 @@ def test_dnf_union_planning_goes_distributed(big_table, spark, monkeypatch):
         [("tp", ">=", 48 * WIDTH), ("v", "<", 115_000)],
     ]
     def union(threshold):
+        dist_threshold(threshold)
         out = set()
         for br in branches:
-            out.update(
-                e["path"]
-                for e in big_table.plan_files(
-                    br, spark=spark, distributed_threshold_bytes=threshold
-                )
-            )
+            out.update(e["path"] for e in big_table.plan_files(br, spark=spark))
         return out
 
     py = union(1 << 60)   # forces the driver loop
@@ -484,13 +463,12 @@ def small_table():
         shutil.rmtree(r, ignore_errors=True)
 
 
-def _assert_same_plan(tbl, filters, spark, jobs_started):
+def _assert_same_plan(tbl, filters, spark, jobs_started, dist_threshold):
     """The distributed plan is the driver loop's list, order included,
     and it is one Spark job."""
     py = tbl.plan_files(filters)
-    jobs, dist = jobs_started(
-        lambda: tbl.plan_files(filters, spark=spark, distributed_threshold_bytes=0)
-    )
+    dist_threshold(0)
+    jobs, dist = jobs_started(lambda: tbl.plan_files(filters, spark=spark))
     assert dist == py
     assert jobs == 1
     return py
@@ -501,7 +479,7 @@ def _assert_same_plan(tbl, filters, spark, jobs_started):
     [(), [("s", "<", "5")], [("s", "=", "nan")], [("s", "like_prefix", "0")]],
 )
 def test_distributed_plan_keeps_string_bounds(
-    small_table, spark, jobs_started, filters
+    small_table, spark, jobs_started, filters, dist_threshold
 ):
     """String bounds that read as numbers ("007", "1e5", "nan") come
     back from the distributed plan as the same strings."""
@@ -522,7 +500,7 @@ def test_distributed_plan_keeps_string_bounds(
             for i, (lo, hi) in enumerate(bounds)
         ],
     )
-    py = _assert_same_plan(tbl, filters, spark, jobs_started)
+    py = _assert_same_plan(tbl, filters, spark, jobs_started, dist_threshold)
     assert py  # every case keeps a file with a numeric-looking bound
     for e in py:
         assert isinstance(e["columns"]["s"]["min"], str)
@@ -531,7 +509,7 @@ def test_distributed_plan_keeps_string_bounds(
 
 @pytest.mark.parametrize("spec", ["unpartitioned", "day"])
 def test_distributed_plan_prunes_date_equality(
-    small_table, spark, jobs_started, spec
+    small_table, spark, jobs_started, spec, dist_threshold
 ):
     """A DATE literal prunes on the distributed path as it does on the
     driver: 10 one-day files, ``d = 2024-01-03`` keeps one."""
@@ -560,6 +538,6 @@ def test_distributed_plan_prunes_date_equality(
         partition=day("d") if spec == "day" else None,
     )
     py = _assert_same_plan(
-        tbl, [("d", "=", dt.date(2024, 1, 3))], spark, jobs_started
+        tbl, [("d", "=", dt.date(2024, 1, 3))], spark, jobs_started, dist_threshold
     )
     assert [e["path"] for e in py] == ["data/d2.parquet"]

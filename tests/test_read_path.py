@@ -209,19 +209,10 @@ def _mor_scan(spark, root, monkeypatch):
     return lambda: tbl.scan(spark)
 
 
-def _inspect_files(spark, root, monkeypatch):
-    tbl = create_table(root, SCHEMA, properties={"commit.manifest.min-count-to-merge": "1000"})
-    for e in tbl._write_data_files(_rows(spark, 0, 10 * N_FILES).repartition(N_FILES)):
-        tbl.append_entries([e])
-    assert len(tbl.metadata.current_snapshot().manifests) >= N_FILES
-    return lambda: inspect.files_df(tbl, spark)
-
-
 _PLANNED_READS = {
     "parquet_scan": _parquet_scan,
     "avro_scan": _avro_scan,
     "mor_scan": _mor_scan,
-    "inspect_files": _inspect_files,
 }
 
 
@@ -244,6 +235,24 @@ def test_planned_read_lists_nothing(spark, tmp_path, monkeypatch, jobs_started, 
         listing_jobs, listed = jobs_started(build)
     assert listing_jobs >= 1, "the default-threshold build listed nothing: the probe is blind"
     assert sorted(map(repr, df.collect())) == sorted(map(repr, listed.collect()))
+
+
+def test_inspect_files_starts_no_job(spark, tmp_path, jobs_started):
+    """Building the files table of 40 manifests starts no Spark job: its
+    rows come from tasks that parse the manifests, so nothing is listed
+    or read until the table is queried, and then it holds one row per
+    manifest entry."""
+    tbl = create_table(
+        str(tmp_path / "t"), SCHEMA, properties={"commit.manifest.min-count-to-merge": "1000"}
+    )
+    for e in tbl._write_data_files(_rows(spark, 0, 10 * N_FILES).repartition(N_FILES)):
+        tbl.append_entries([e])
+    assert len(tbl.metadata.current_snapshot().manifests) >= N_FILES
+    jobs, df = jobs_started(lambda: inspect.files_df(tbl, spark))
+    assert jobs == 0, f"building the files table started {jobs} job(s)"
+    assert sorted(r["file_path"] for r in df.collect()) == sorted(
+        e["path"] for e in tbl.plan_files()
+    )
 
 
 def test_one_planned_reader():

@@ -2196,7 +2196,7 @@ def test_replace_table_refuses_maintained_view_backing(spark, cat, tmp_path):
 
 
 def test_show_partitions_describe_distributed_parity(
-    spark, cat, monkeypatch
+    spark, cat, dist_threshold
 ):
     """SHOW PARTITIONS / DESCRIBE EXTENDED totals route through the
     distributed manifest scan past DIST_PLAN_MIN_MANIFEST_BYTES
@@ -2204,8 +2204,6 @@ def test_show_partitions_describe_distributed_parity(
     breaks the metadata-scale contract). Forcing the threshold to 0
     must produce byte-identical rows to the driver loop, on both a
     single-field and a composite-partitioned table."""
-    from java_iceberg_table_spark.table import table as table_mod
-
     cat.sql(
         spark,
         "CREATE TABLE pd (k BIGINT, g STRING) "
@@ -2225,9 +2223,7 @@ def test_show_partitions_describe_distributed_parity(
         driver_de = [tuple(r) for r in cat.sql(
             spark, f"DESCRIBE EXTENDED {name}"
         ).collect()]
-        monkeypatch.setattr(
-            table_mod, "DIST_PLAN_MIN_MANIFEST_BYTES", 0
-        )
+        dist_threshold(0)
         if driver_sp is not None:
             dist_sp = [tuple(r) for r in cat.sql(
                 spark, f"SHOW PARTITIONS {name}"
@@ -2237,9 +2233,7 @@ def test_show_partitions_describe_distributed_parity(
             spark, f"DESCRIBE EXTENDED {name}"
         ).collect()]
         assert dist_de == driver_de
-        monkeypatch.setattr(
-            table_mod, "DIST_PLAN_MIN_MANIFEST_BYTES", 4 << 20
-        )
+        dist_threshold(None)
 
 
 def test_branch_insert_select_single_evaluation(spark, cat):

@@ -342,7 +342,7 @@ def _ev_df(spark, lo, hi):
     )
 
 
-def test_partition_evolution_prunes_per_spec(spark, troot):
+def test_partition_evolution_prunes_per_spec(spark, troot, dist_threshold):
     tbl = create_table(troot, SIMPLE_SCHEMA, partition=truncate("ts", 100))
     tbl.append(_ev_df(spark, 0, 300))          # spec 0: buckets 0,100,200
     pre_evo_snap = tbl.metadata.current_snapshot().snapshot_id
@@ -367,10 +367,10 @@ def test_partition_evolution_prunes_per_spec(spark, troot):
     assert got.count() == 150
 
     # distributed planning path resolves spec_id the same way
-    dist = tbl.plan_files(
-        [("ts", ">=", 250)], spark=spark, distributed_threshold_bytes=0
-    )
+    dist_threshold(0)
+    dist = tbl.plan_files([("ts", ">=", 250)], spark=spark)
     assert sorted(e["path"] for e in dist) == sorted(e["path"] for e in planned)
+    dist_threshold(None)
 
     # time travel to the pre-evolution snapshot plans under spec 0 only
     tt = tbl.plan_files([("ts", ">=", 250)], snapshot_id=pre_evo_snap)
@@ -977,7 +977,7 @@ def test_identity_partition_pruning(spark, troot):
     assert sorted(set(r["g"] for r in tbl.scan(spark).collect())) == [1, 2, 3, 4]
 
 
-def test_bucket_partition_point_lookup_pruning(spark, troot):
+def test_bucket_partition_point_lookup_pruning(spark, troot, dist_threshold):
     """bucket(col, N): equality predicates prune to the ONE bucket the
     value hashes to — through the driver loop AND the distributed
     plan path — while range predicates fall back to stats-only."""
@@ -994,9 +994,10 @@ def test_bucket_partition_point_lookup_pruning(spark, troot):
     hit = tbl.plan_files([("k", "=", 42)])
     assert {e["partition"] for e in hit} == {want_bucket}
     # the distributed plan path agrees with the driver loop
-    hit_dist = tbl.plan_files([("k", "=", 42)], spark=spark,
-                              distributed_threshold_bytes=0)
+    dist_threshold(0)
+    hit_dist = tbl.plan_files([("k", "=", 42)], spark=spark)
     assert sorted(e["path"] for e in hit_dist) == sorted(e["path"] for e in hit)
+    dist_threshold(None)
     assert [r["k"] for r in tbl.scan(spark, [("k", "=", 42)]).collect()] == [42]
     # hash buckets carry no range info: a range scan is still exact
     assert tbl.scan(spark, [("k", "<", 10)]).count() == 10
@@ -1212,7 +1213,7 @@ def test_temporal_transform_parity(spark):
     assert t.apply_py("2024-03-05T10:30:45") == t.apply_py(rows[0])
 
 
-def test_day_partition_pruning(spark, troot):
+def test_day_partition_pruning(spark, troot, dist_threshold):
     """day(ts): a time-range predicate prunes to the matching day
     partitions through the driver loop AND the distributed plan path
     (monotonic bucket-space projection — months/days carry no
@@ -1238,12 +1239,13 @@ def test_day_partition_pruning(spark, troot):
                           ("ts", "<", "2024-03-05T00:00:00")])
     assert {e["partition"] for e in hit} == {day0 + 3}
     # distributed path agrees
+    dist_threshold(0)
     hit_dist = tbl.plan_files(
         [("ts", ">=", "2024-03-04T00:00:00"), ("ts", "<", "2024-03-05T00:00:00")],
         spark=spark,
-        distributed_threshold_bytes=0,
     )
     assert sorted(e["path"] for e in hit_dist) == sorted(e["path"] for e in hit)
+    dist_threshold(None)
     got = sorted(
         r["k"]
         for r in tbl.scan(
@@ -1752,3 +1754,166 @@ def test_manifest_cache_copies_bound_and_threads(troot, monkeypatch):
     assert not any(t.is_alive() for t in threads)
     assert errors == []
     assert cache.bytes == sum(len(b) for b in cache._blobs.values()) <= cache.max_bytes
+
+
+def test_files_table_rows_pinned(spark, troot, dist_threshold):
+    """inspect(spark, "files") keeps the rows of the Spark-JSON manifest
+    scan it replaced: the literals below are that scan's output for the
+    same manifests. A bound reads as JSON text (true, 1e+20,
+    0.30000000000000004), a string bound as itself; manifest_path is the
+    manifest's file:// URI. The threshold does not change the rows."""
+    from pyspark.sql.types import BooleanType, DateType, DoubleType
+
+    from java_iceberg_table_spark.table import bucket, composite
+
+    schema = StructType(
+        [StructField("k", LongType()), StructField("f", DoubleType()),
+         StructField("s", StringType()), StructField("b", BooleanType()),
+         StructField("d", DateType()), StructField("t", TimestampType())]
+    )
+    tbl = create_table(troot, schema, partition=composite(truncate("k", 10), bucket("s", 4)))
+
+    def entry(i, part, columns):
+        return {"path": f"data/f{i}.parquet", "rows": 10 + i, "bytes": 1000 + i,
+                **part, "columns": columns}
+
+    # two manifests: int, float, string, bool, DATE and TIMESTAMP
+    # bounds, null counts, an all-null column, composite tuples, a
+    # single-field partition and an unpartitioned entry
+    tbl.append_entries([
+        entry(0, {"partition_fields": [0, 1]}, {
+            "k": {"min": -7, "max": 2**62, "nulls": 0},
+            "f": {"min": 0.1 + 0.2, "max": 1e20, "nulls": 3},
+            "s": {"min": "007", "max": "zz top", "nulls": 1},
+            "b": {"min": False, "max": True, "nulls": 0},
+            "d": {"min": "2024-03-01", "max": "2024-03-04", "nulls": 0},
+            "t": {"min": "2024-03-04T00:00:00", "max": "2024-03-04T12:30:00.000001", "nulls": 2},
+        }),
+        entry(1, {"partition_fields": [10, 3]}, {
+            "k": {"min": 1, "max": 1, "nulls": 0},
+            "f": {"min": 1e-07, "max": 100000.0, "nulls": 0},
+            "s": {"min": None, "max": None, "nulls": 11},
+            "b": {"min": True, "max": True, "nulls": 0},
+            "d": {"min": "1970-01-01", "max": "9999-12-31", "nulls": 0},
+            "t": {"min": "1969-12-31T23:59:59", "max": "2024-01-01T00:00:00", "nulls": 0},
+        }),
+    ])
+    tbl.append_entries(
+        [entry(2, {"partition": 5}, {"k": {"min": 1.5, "max": 3, "nulls": 0}}), entry(3, {}, {})]
+    )
+    manifests = {
+        "file://" + os.path.abspath(os.path.join(troot, m))
+        for m in tbl.metadata.current_snapshot().manifests
+    }
+
+    def rows():
+        out = [r.asDict() for r in tbl.inspect(spark, "files").collect()]
+        assert {r.pop("manifest_path") for r in out} == manifests
+        return sorted(out, key=lambda r: r["file_path"])
+
+    assert rows() == FILES_TABLE_ROWS
+    dist_threshold(0)
+    assert rows() == FILES_TABLE_ROWS
+
+
+def _gc_twin_tables(spark, base: str) -> list[str]:
+    """Two byte-identical copies of one table for comparing GC runs.
+    Its history: an append, an append whose manifest is merged away,
+    an inline-DV delete, a metadata-only delete of partition 0 and a
+    merged append; plus an orphan data file with its .crc sidecar and
+    an orphan manifest."""
+    import shutil
+
+    from java_iceberg_table_spark.table import format as fmt
+
+    root = os.path.join(base, "src")
+    tbl = create_table(root, SIMPLE_SCHEMA, partition=truncate("ts", 100),
+                       properties={"commit.manifest.min-count-to-merge": "1"})
+    for lo in (0, 100):
+        tbl.append(spark.range(lo, lo + 100, numPartitions=2).select(
+            F.col("id").alias("k"), F.lit("x").alias("v"), F.col("id").alias("ts")))
+    tbl.delete_where_mor(spark, [("k", "=", 150)])
+    tbl.delete_where("ts", "<", 100)
+    tbl.append(spark.range(200, 300, numPartitions=2).select(
+        F.col("id").alias("k"), F.lit("x").alias("v"), F.col("id").alias("ts")))
+    for rel in ("data/orphan.parquet", "data/.orphan.parquet.crc"):
+        with open(os.path.join(root, rel), "w") as f:
+            f.write("x")
+    fmt.write_manifest(root, [{"path": "data/orphan.parquet", "rows": 1, "bytes": 1}])
+    twins = [os.path.join(base, n) for n in ("driver", "executors")]
+    for t in twins:
+        shutil.copytree(root, t)
+    return twins
+
+
+def _table_files(root: str) -> list[str]:
+    return sorted(
+        os.path.relpath(os.path.join(d, f), root)
+        for sub in ("data", "manifests")
+        for d, _, fs in os.walk(os.path.join(root, sub))
+        for f in fs
+    )
+
+
+def test_gc_driver_and_executor_parity(spark, tmp_path, dist_threshold):
+    """expire_snapshots then clean, once on the driver and once on
+    executors (threshold 0), on twin tables: the same stats and the same
+    files left. The dead manifests hold an inline DV (no path) and files
+    a live merged manifest still references; the kept head's
+    added-manifest was merged away; deleted data files lose their .crc
+    sidecars."""
+    from java_iceberg_table_spark.table import format as fmt
+
+    twins = _gc_twin_tables(spark, str(tmp_path))
+    src = load_table(twins[0])
+    head = src.metadata.current_snapshot()
+    assert head.summary["added-manifest"] not in head.manifests
+    assert any(e.get("dv") and e["path"] is None for e in src.delete_files_of(head))
+    p0 = {e["path"] for e in fmt.read_manifest(src.root, src.metadata.snapshots[0].manifests[0])}
+    later = {e["path"] for e in src.files_of(head)}
+    runs = []
+    for root, dist in zip(twins, (False, True)):
+        dist_threshold(0 if dist else None)
+        tbl = load_table(root)
+        stats = (
+            tbl.expire_snapshots(fmt.now_ms() + 10_000, retain_last=1,
+                                 spark=spark if dist else None),
+            tbl.clean(older_than_ms=0, now_ms=fmt.now_ms() + 10_000,
+                      spark=spark if dist else None),
+        )
+        runs.append((stats, _table_files(root)))
+    assert runs[0] == runs[1]
+    (expired, cleaned), left = runs[0]
+    assert expired["expired_snapshots"] == 4 and expired["deleted_files"] == len(p0) > 0
+    assert cleaned == {"deleted_files": 1, "deleted_manifests": 1}
+    assert later <= set(left)  # live via the merged manifest, dead ones too
+    gone = p0 | {"data/orphan.parquet"}
+    assert not gone & set(left)
+    assert not {
+        os.path.join(os.path.dirname(p), f".{os.path.basename(p)}.crc") for p in gone
+    } & set(left)
+    assert any(f.endswith(".crc") for f in left)  # live sidecars stay
+
+
+FILES_TABLE_ROWS = [
+    {"file_path": "data/f0.parquet", "partition": None, "partition_fields": [0, 1],
+     "record_count": 10, "file_size_bytes": 1000,
+     "lower_bounds": {"k": "-7", "f": "0.30000000000000004", "s": "007", "b": "false",
+                      "d": "2024-03-01", "t": "2024-03-04T00:00:00"},
+     "upper_bounds": {"k": "4611686018427387904", "f": "1e+20", "s": "zz top", "b": "true",
+                      "d": "2024-03-04", "t": "2024-03-04T12:30:00.000001"},
+     "null_counts": {"k": 0, "f": 3, "s": 1, "b": 0, "d": 0, "t": 2}},
+    {"file_path": "data/f1.parquet", "partition": None, "partition_fields": [10, 3],
+     "record_count": 11, "file_size_bytes": 1001,
+     "lower_bounds": {"k": "1", "f": "1e-07", "s": None, "b": "true",
+                      "d": "1970-01-01", "t": "1969-12-31T23:59:59"},
+     "upper_bounds": {"k": "1", "f": "100000.0", "s": None, "b": "true",
+                      "d": "9999-12-31", "t": "2024-01-01T00:00:00"},
+     "null_counts": {"k": 0, "f": 0, "s": 11, "b": 0, "d": 0, "t": 0}},
+    {"file_path": "data/f2.parquet", "partition": 5, "partition_fields": None,
+     "record_count": 12, "file_size_bytes": 1002,
+     "lower_bounds": {"k": "1.5"}, "upper_bounds": {"k": "3"}, "null_counts": {"k": 0}},
+    {"file_path": "data/f3.parquet", "partition": None, "partition_fields": None,
+     "record_count": 13, "file_size_bytes": 1003,
+     "lower_bounds": {}, "upper_bounds": {}, "null_counts": {}},
+]
