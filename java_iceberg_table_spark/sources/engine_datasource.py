@@ -535,7 +535,6 @@ class EngineBatchReader(DataSourceReader):
             else None
         )
         self.engine_filters: list[tuple[str, str, object]] = []
-        self.in_filters: list[tuple[str, list]] = []
         # a catalog read whose pin is None (table registered, nothing
         # published yet) scans EMPTY — the table head must stay
         # invisible, so this cannot fall through to a head scan
@@ -556,10 +555,11 @@ class EngineBatchReader(DataSourceReader):
         the JVM (the engine's own scan() makes the same split).
 
         IN-lists (including the literal lists Spark's own rewrites
-        produce) prune with the key-set check: a file survives only if
-        its stats range contains at least one listed value — far
-        stronger than the [min,max]-of-the-list bound for scattered
-        sets.
+        produce) push as one ``(col, "in", values)`` leaf, pruned as
+        plan_files prunes it: a file survives only if its stats range
+        holds at least one listed value that may match under the
+        partition transform and the Bloom filter — far stronger than
+        the [min,max]-of-the-list bound for scattered sets.
 
         State RESETS on every call: Spark reuses ONE reader instance
         across all queries planned from the same loaded DataFrame, and
@@ -568,24 +568,19 @@ class EngineBatchReader(DataSourceReader):
         then df.count() silently dropped the rows p excluded; caught
         by the a4d scenario's connector-parity check)."""
         self.engine_filters = []
-        self.in_filters = []
         for f in filters:
-            if isinstance(f, In) and len(f.attribute) == 1:
-                vals = sorted(v for v in f.value if v is not None)
-                if vals:
-                    self.in_filters.append((f.attribute[0], vals))
-                    self.engine_filters.append((f.attribute[0], ">=", vals[0]))
-                    self.engine_filters.append((f.attribute[0], "<=", vals[-1]))
-                yield f
-                continue
-            op = _FILTER_OPS.get(type(f))
-            if op is not None and len(f.attribute) == 1:
-                self.engine_filters.append((f.attribute[0], op, f.value))
+            if len(f.attribute) == 1:
+                if isinstance(f, In):
+                    vals = [v for v in f.value if v is not None]
+                    if vals:
+                        self.engine_filters.append((f.attribute[0], "in", vals))
+                elif type(f) in _FILTER_OPS:
+                    self.engine_filters.append((f.attribute[0], _FILTER_OPS[type(f)], f.value))
             yield f
 
     def partitions(self):
         from ..table import load_table
-        from ..table.table import _renames_of, prune_entries_by_keys
+        from ..table.table import _renames_of
 
         if self.empty_scan:
             return []
@@ -601,14 +596,11 @@ class EngineBatchReader(DataSourceReader):
         # clear only loses pruning, never rows, because Spark
         # re-applies every filter above the scan.
         engine_filters, self.engine_filters = self.engine_filters, []
-        in_filters, self.in_filters = self.in_filters, []
         entries = (
             tbl.plan_files(engine_filters, snapshot_id=snap.snapshot_id)
             if snap is not None
             else []
         )
-        for col, vals in in_filters:
-            entries = prune_entries_by_keys(entries, col, vals)
         # merge-on-read delete state of the SCANNED snapshot rides in
         # the partitions so the connector returns exactly what
         # Table.scan returns (deleted rows must not resurrect)
@@ -616,13 +608,10 @@ class EngineBatchReader(DataSourceReader):
             self.root, tbl.delete_files_of(snap), _renames_of(self.schema)
         )
         # row-level pushdown into the parquet read itself: every
-        # stats-expressible filter plus exact IN-lists. Spark
+        # stats-expressible filter, exact IN-lists included. Spark
         # re-applies all filters after the scan (pushFilters reports
         # them unsupported), so this only cuts I/O/decode.
-        rg = list(engine_filters) + [
-            (col, "in", vals) for col, vals in in_filters
-        ]
-        rg = rg or None
+        rg = engine_filters or None
         if self.lineage_on:
             # lineage derives _row_id from row POSITION — a filtered
             # read renumbers rows, so row-group pushdown is disabled
@@ -786,13 +775,13 @@ def _slice_eq_payloads(entry: dict, seq: int, eq_payloads) -> list:
     """The subset of equality-delete payloads that can possibly touch
     one data file: later-sequence only (earlier deletes never apply),
     and for single-column inline payloads, only when the file's stats
-    range can hold at least one delete key (the same key-set check the
-    scan's IN-list pruning uses). File-backed / multi-column payloads
-    stay conservatively. Shipping sliced payloads keeps the partition
+    range can hold at least one delete key (the ``in`` leaf the scan's
+    IN-list pruning uses). File-backed / multi-column payloads stay
+    conservatively. Shipping sliced payloads keeps the partition
     message O(file's own deletes), not O(table's deletes) — at 10^4
     files x 10^2 payloads the unsliced broadcast is the planning
     bottleneck."""
-    from ..table.table import prune_entries_by_keys
+    from ..table.table import Table
 
     out = []
     for pl in eq_payloads or []:
@@ -802,8 +791,8 @@ def _slice_eq_payloads(entry: dict, seq: int, eq_payloads) -> list:
         if inline_keys is None or len(cur) != 1:
             out.append(pl)
             continue
-        keys = sorted({k[0] for k in inline_keys if k and k[0] is not None})
-        if keys and prune_entries_by_keys([entry], cur[0], keys):
+        keys = {k[0] for k in inline_keys if k and k[0] is not None}
+        if keys and Table._entry_may_match(entry, None, (cur[0], "in", keys)):
             out.append(pl)
     return out
 

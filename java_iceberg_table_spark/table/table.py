@@ -17,13 +17,14 @@ Scale design:
 
 from __future__ import annotations
 
+import bisect
 import glob
 import os
 import shutil
 import time
 import uuid
 from dataclasses import replace
-from typing import Iterable
+from typing import Iterable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -232,17 +233,17 @@ def _normalize_stat_value(val):
 
 
 def _pruning_filters(filters: list, schema: StructType) -> list:
-    """``filters`` as the pruner reads them: a literal on a BINARY
-    column becomes bytes, as Spark compares it (a string literal as its
-    UTF-8 bytes), and a prefix match there becomes ``>=`` the prefix.
-    Binary columns carry no bounds, and manifests written before that
-    hold str bounds (UTF-8 text, or hex when the bytes do not decode)
-    that are not the bytes' order; bytes never compare with a str, so
-    such a leaf keeps every file and proves none certain. The residual
-    filter still applies the leaf as written."""
+    """``filters`` as the pruner reads them: an IN-list becomes a
+    _KeySet, its keys rendered and sorted once per plan. A literal on
+    a BINARY column becomes bytes, as Spark compares it (a string
+    literal as its UTF-8 bytes), and a prefix match there becomes
+    ``>=`` the prefix. Binary columns carry no bounds, and manifests
+    written before that hold str bounds (UTF-8 text, or hex when the
+    bytes do not decode) that are not the bytes' order; bytes never
+    compare with a str, so such a leaf keeps every file and proves
+    none certain. The residual filter still applies the leaf as
+    written."""
     binary = {f.name for f in schema.fields if isinstance(f.dataType, BinaryType)}
-    if not binary:
-        return filters
 
     def as_bytes(v):
         return v.encode("utf-8") if isinstance(v, str) else v
@@ -255,7 +256,7 @@ def _pruning_filters(filters: list, schema: StructType) -> list:
             else:
                 op = ">=" if op == "like_prefix" else op
                 val = as_bytes(val)
-        out.append((col, op, val))
+        out.append((col, op, _key_set(val) if op == "in" else val))
     return out
 
 
@@ -280,41 +281,48 @@ def _stat_value_renderings(val) -> list:
     return [val]
 
 
-def _key_bounds(source: DataFrame, key_cols: list[str]):
-    """One tiny aggregate: per-key-column min/max of the source side —
-    the pruning probe for upsert/merge candidate selection."""
-    return source.agg(
+class _KeySet(NamedTuple):
+    """An IN-list as the pruner reads it: every footer-stat rendering
+    of its keys, sorted, each beside the key it renders (the Bloom
+    probe hashes the key as written). ``rendered`` is None when the
+    keys do not sort (mixed types, a None or a NaN)."""
+
+    rendered: tuple | None
+    keys: tuple
+
+
+def _key_set(vals) -> _KeySet:
+    pairs = [(r, k) for k in vals for r in _stat_value_renderings(k)]
+    try:
+        if all(r == r for r, _ in pairs):  # a NaN has no place in the order
+            pairs.sort(key=lambda p: p[0])
+            return _KeySet(tuple(r for r, _ in pairs), tuple(k for _, k in pairs))
+    except TypeError:
+        pass
+    return _KeySet(None, ())
+
+
+def _key_bound_branches(source: DataFrame, key_cols: list[str]) -> list[list]:
+    """The files an upsert or merge must match against, as
+    _dnf_candidates branches: one branch ``c >= min(c), c <= max(c)``
+    per key column of ``source`` (one tiny aggregate), or none when a
+    key column holds no value (an empty source matches no file). A NaN
+    bound is left out: it sorts above every value in Spark, and below
+    none in Python."""
+    row = source.agg(
         *[F.min(c).alias(f"lo_{c}") for c in key_cols],
         *[F.max(c).alias(f"hi_{c}") for c in key_cols],
     ).collect()[0]
-
-
-def _key_bound_candidates(
-    entries: list[dict], bounds_row, key_cols: list[str]
-) -> list[dict]:
-    """Manifest entries whose stats range can overlap the source key
-    bounds — the shared rewrite/match pruning for upsert and
-    merge_into. Bounds normalize to the footer-stat rendering
-    (datetimes -> ISO strings) and incomparable stat/bound types keep
-    the file: pruning is conservative, never row-losing."""
-
-    def may_hold(e: dict) -> bool:
-        for c in key_cols:
-            lo = _normalize_stat_value(bounds_row[f"lo_{c}"])
-            hi = _normalize_stat_value(bounds_row[f"hi_{c}"])
-            if lo is None:
-                return False  # empty source: no file matches
-            cstats = e.get("columns", {}).get(c)
-            if not cstats or cstats.get("min") is None:
-                continue  # no stats: must assume overlap
-            try:
-                if cstats["max"] < lo or cstats["min"] > hi:
-                    return False
-            except TypeError:
-                continue  # incomparable: must assume overlap
-        return True
-
-    return [e for e in entries if may_hold(e)]
+    if any(row[f"lo_{c}"] is None for c in key_cols):
+        return []
+    return [
+        [
+            (c, op, row[f"{side}_{c}"])
+            for c in key_cols
+            for op, side in ((">=", "lo"), ("<=", "hi"))
+            if row[f"{side}_{c}"] == row[f"{side}_{c}"]
+        ]
+    ]
 
 
 def _on_bucket_start(t, val, vb: int) -> bool:
@@ -460,61 +468,6 @@ def _stamp_partition(part) -> dict:
     if isinstance(part, tuple):
         return {"partition_fields": [int(v) for v in part]}
     return {"partition": part}
-
-
-def prune_entries_by_keys(entries: list[dict], col: str, keys: list) -> list[dict]:
-    """Keep only the manifest entries whose stats range can contain at
-    least one of ``keys`` (sorted): binary search per file — stronger
-    than a global [min,max] filter for scattered key sets — tightened
-    by the per-file Bloom when one covers ``col``. Missing stats keep
-    the file (pruning is always conservative). Shared by
-    Table.scan_runtime_filtered and the connector's IN-list pushdown.
-
-    Driver-cost bounds: the range check is O(log keys) per file; the
-    Bloom probe runs only when at most BLOOM_PROBE_CAP keys fall in
-    the file's range (a wide range over a huge key set would otherwise
-    cost keys x files x k CRC32s on the driver at planning time — and
-    a file whose range holds thousands of candidate keys is about to
-    be read anyway). Stats whose stored type cannot be compared with
-    the key type keep the file — the same conservatism as
-    Table._entry_may_match.
-
-    Temporal keys (datetime/date) prune through their footer-stat
-    renderings (ISO strings — lexicographic order == temporal order,
-    and a plain DATE gets both its date and midnight-timestamp forms,
-    so either stat column type prunes correctly). The Bloom probe
-    hashes ``bloom_key``'s rendering of the original keys in the
-    range, and keeps the file when any of them has none."""
-    import bisect
-    import datetime as _dt
-
-    from .bloom_index import bloom_key, bloom_may_contain
-
-    rendered = {}
-    if keys and isinstance(keys[0], (_dt.datetime, _dt.date)):
-        rendered = {r: k for k in keys for r in _stat_value_renderings(k)}
-        keys = sorted(rendered)
-    kept = []
-    for e in entries:
-        st = (e.get("columns") or {}).get(col)
-        if not st or st.get("min") is None or st.get("max") is None:
-            kept.append(e)
-            continue
-        try:
-            i = bisect.bisect_left(keys, st["min"])
-            if i >= len(keys) or keys[i] > st["max"]:
-                continue  # no key inside this file's range
-            j = bisect.bisect_right(keys, st["max"], lo=i)
-        except TypeError:
-            kept.append(e)  # incomparable stat type: cannot prune
-            continue
-        bloom = e.get("bloom")
-        if bloom and bloom.get("column") == col and j - i <= BLOOM_PROBE_CAP:
-            probes = [bloom_key(bloom, rendered.get(k, k)) for k in keys[i:j]]
-            if None not in probes and not any(bloom_may_contain(bloom, p) for p in probes):
-                continue
-        kept.append(e)
-    return kept
 
 
 def _all_historic_names(current: "TableMetadata") -> set[str]:
@@ -1576,7 +1529,7 @@ class Table:
 
         def make(current, parent, seq, write_manifest):
             kept_manifests: list[str] = []
-            dropped = 0
+            dropped_paths: set[str] = set()
             dropped_rows = 0
             for m in parent.manifests:
                 entries = fmt.read_manifest(self.root, m)
@@ -1592,22 +1545,47 @@ class Table:
                         ft.bucket_range(pv)[1] <= value
                     )
 
-                kept = [e for e in entries if _keeps(e)]
-                if len(kept) == len(entries):
+                kept, gone = [], []
+                for e in entries:
+                    (kept if _keeps(e) else gone).append(e)
+                if not gone:
                     kept_manifests.append(m)  # untouched manifest reused as-is
                 else:
-                    dropped += len(entries) - len(kept)
-                    dropped_rows += sum(e["rows"] for e in entries) - sum(
-                        e["rows"] for e in kept
-                    )
+                    dropped_paths.update(e["path"] for e in gone)
+                    dropped_rows += sum(e["rows"] for e in gone)
                     if kept:
                         kept_manifests.append(write_manifest(kept))
-            if dropped == 0:
+            if not dropped_paths:
                 return None
-            summary = {"deleted-files": dropped, "deleted-rows": dropped_rows}
-            return kept_manifests, list(parent.delete_manifests), summary
+            summary = {"deleted-files": len(dropped_paths), "deleted-rows": dropped_rows}
+            return kept_manifests, self._without_dvs_of(parent, dropped_paths, write_manifest), summary
 
         return self._commit_snapshot("delete", make)
+
+    def _without_dvs_of(self, parent: Snapshot, paths: set[str], write_manifest) -> list[str]:
+        """``parent``'s delete manifests once the data files ``paths``
+        are gone: their positions leave every inline DV, a DV left
+        empty leaves its manifest, and only the manifests that changed
+        are rewritten. File-backed position deletes record no target
+        list in the manifest, so they stay (rewrite_deletes drops
+        them)."""
+        out = []
+        for m in parent.delete_manifests:
+            entries = fmt.read_manifest(self.root, m)
+            if not any(paths.intersection(e.get("dv") or ()) for e in entries):
+                out.append(m)
+                continue
+            kept = []
+            for e in entries:
+                if e.get("dv"):
+                    dv = {f: ps for f, ps in e["dv"].items() if f not in paths}
+                    if not dv:
+                        continue
+                    e = {**e, "dv": dv, "rows": sum(len(ps) for ps in dv.values())}
+                kept.append(e)
+            if kept:
+                out.append(write_manifest(kept))
+        return out
 
     _OPS = {
         "<": "__lt__", "<=": "__le__", ">": "__gt__", ">=": "__ge__",
@@ -1864,21 +1842,26 @@ class Table:
         ``updates`` are replaced; new keys are inserted — one atomic
         'overwrite' snapshot.
 
-        Scale design: the rewrite set is pruned by key-column min/max
-        stats against the UPDATES' key bounds (one tiny aggregate on
-        the updates side), so an upsert touching one time-bucket
-        rewrites one bucket's files, not the table. The updates set is
-        broadcast into a left-anti join against each rewritten file
-        group — the big side (table files) never shuffles."""
+        Scale design: the rewrite set is the files plan_files keeps for
+        ``key >= min, key <= max`` per key column of the UPDATES (one
+        tiny aggregate on the updates side; partition ranges and
+        footer bounds prune as in any scan), so an upsert touching one
+        time-bucket rewrites one bucket's files, not the table. The
+        updates set is broadcast into a left-anti join against each
+        rewritten file group — the big side (table files) never
+        shuffles."""
 
         def attempt(md, snap, schema):
-            entries = self.files_of(snap) if snap is not None else []
-            cands = _key_bound_candidates(
-                entries, _key_bounds(updates, key_cols), key_cols
+            # the updates as the table stores them: keys match, and
+            # rows land, under the table's column types
+            ups = updates.select(
+                *[
+                    F.col(c).cast(schema[c].dataType).alias(c) if c in schema.names else F.col(c)
+                    for c in updates.columns
+                ]
             )
-            cand_paths = {e["path"] for e in cands}
-            keep = [e for e in entries if e["path"] not in cand_paths]
-            keys = updates.select(*key_cols).dropDuplicates(key_cols)
+            cands, keep = self._dnf_candidates(spark, snap, _key_bound_branches(ups, key_cols))
+            keys = ups.select(*key_cols).dropDuplicates(key_cols)
             new_entries: list[dict] = []
             if cands:
                 # ONE job rewrites every candidate file (broadcast
@@ -1891,7 +1874,7 @@ class Table:
                 new_entries = self._write_data_files(
                     unreplaced, prefix="mg", n_tasks=max(1, len(cands) // 4)
                 )
-            inserted = self._write_data_files(updates, prefix="mg")
+            inserted = self._write_data_files(ups, prefix="mg")
             result = {
                 "rewritten_files": len(cands),
                 "replaced_rows": sum(e["rows"] for e in cands)
@@ -1949,9 +1932,10 @@ class Table:
         ``{"qty": "t.qty + s.qty"}``. Conditions are SQL over the same
         aliases.
 
-        Cost is O(changes), not O(table): matched rows come from
-        key-bound-pruned candidate files only; the change lands as ONE
-        atomic snapshot carrying an equality-delete entry (seq N —
+        Cost is O(changes), not O(table): matched rows come from the
+        candidate files only, those plan_files keeps for the source's
+        ``key >= min, key <= max`` per key column; the change lands as
+        ONE atomic snapshot carrying an equality-delete entry (seq N —
         masks the superseded row versions in files at seq < N) plus
         the replacement/insert data files (stamped seq N, so the
         delete they travel with can never mask them). No existing data
@@ -2031,8 +2015,8 @@ class Table:
                         "to one row per key first (MERGE matched-clause "
                         "cardinality violation)"
                     )
-            entries = self.files_of(snap) if snap is not None else []
-            cands = _key_bound_candidates(entries, _key_bounds(source, on), on)
+            cands, rest = self._dnf_candidates(spark, snap, _key_bound_branches(source, on))
+            entries = cands + rest
             src = source.alias("s")
 
             def aligned(df: DataFrame) -> DataFrame:
@@ -2420,15 +2404,8 @@ class Table:
         filters = list(filters)
         if not filters:
             raise ValueError("delete_where_mor requires at least one predicate")
-        md, snap, schema = self.read_state()
-        if snap is None:
-            return None
-        specs = self._spec_map(md)
-        cands = [
-            e
-            for m in snap.manifests
-            for e in self._admitted(fmt.read_manifest(self.root, m), specs, filters)
-        ]
+        _, snap, schema = self.read_state()
+        cands = self._plan_state(spark, filters, snap)
         if not cands:
             return None
         match = F.coalesce(self._and_predicate(filters), F.lit(False))
@@ -3249,12 +3226,27 @@ class Table:
         # set/prefix leaves decompose onto the scalar machinery so
         # every pruning refinement (partition ranges, temporal
         # projection, Bloom probes) applies to them for free:
-        #   col IN (v1..vn)  -> may match iff ANY col = vi may match
+        #   col IN (v1..vn)  -> may match iff ANY col = vi may match,
+        #                       asked only of the vi in the file's range
         #   col LIKE 'pfx%'  -> pfx <= col < next(pfx)
         if op == "in":
-            return any(
-                Table._entry_may_match(entry, t, (col, "=", v)) for v in val
-            )
+            # the window: the keys whose rendering falls in the file's
+            # [min, max], bisected from the sorted renderings. Past
+            # BLOOM_PROBE_CAP keys the Bloom probe is skipped (the file
+            # is about to be read anyway). Keys that do not sort and
+            # bounds they do not compare with keep the file
+            ks = val if isinstance(val, _KeySet) else _key_set(val)
+            if ks.rendered is None:
+                return True
+            lo, hi = _value_range(entry, None if isinstance(t, CompositeTransform) else t, col)
+            try:
+                i = 0 if lo is None or lo != lo else bisect.bisect_left(ks.rendered, lo)
+                j = len(ks.rendered) if hi is None or hi != hi else bisect.bisect_right(ks.rendered, hi, i)
+            except TypeError:
+                return True
+            if j - i > BLOOM_PROBE_CAP:
+                entry = {**entry, "bloom": None}
+            return any(Table._entry_may_match(entry, t, (col, "=", k)) for k in ks.keys[i:j])
         if op == "like_prefix":
             if not Table._entry_may_match(entry, t, (col, ">=", val)):
                 return False
@@ -3759,15 +3751,16 @@ class Table:
         of only by static predicates.
 
         The key set is collected driver-side — the same smallness
-        precondition as broadcasting that side of the join, and the
-        reason this beats a plain scan: file stats can rule a file out
-        when NO dim key falls inside its [min, max] (binary search per
-        file over the sorted key list), which global min/max bounds
-        cannot do for scattered key sets. Per-file Bloom filters
-        (write.bloom.column) tighten "=" membership further when
-        present. Returns (df, info) where info reports files_total /
-        files_scanned; rows outside the key bounds cannot join, so the
-        result is safe to use directly as the probe side.
+        precondition as broadcasting that side of the join — and
+        planned as one ``(key_col, "in", keys)`` leaf, the reason this
+        beats a plain scan: a file whose [min, max] holds NO dim key is
+        ruled out (binary search per file over the sorted key list),
+        which global min/max bounds cannot do for scattered key sets,
+        and the keys inside it still prune by partition and by the
+        per-file Bloom filter (write.bloom.column). Returns (df, info)
+        where info reports files_total / files_scanned; rows outside
+        the key set cannot join, so the result is safe to use directly
+        as the probe side.
 
         At 100 TB: a selective dim filter turns a full fact scan into
         reading only the files that can contain matching keys — the
@@ -3778,7 +3771,7 @@ class Table:
         )
         _, snap, schema = self.read_state()
         total = len(self.files_of(snap)) if snap else 0
-        keys = sorted(r[0] for r in rows if r[0] is not None)
+        keys = [r[0] for r in rows if r[0] is not None]
         if not keys:
             return spark.createDataFrame([], schema), {
                 "files_total": total,
@@ -3797,10 +3790,7 @@ class Table:
             bounds = [(key_col, ">=", lo), (key_col, "<=", hi)]
             df = self._scan_state(spark, bounds, snap, schema)
             return df, {"files_total": total, "files_scanned": None}
-        entries = self._plan_state(
-            spark, [(key_col, ">=", keys[0]), (key_col, "<=", keys[-1])], snap
-        )
-        kept = prune_entries_by_keys(entries, key_col, keys)
+        kept = self._plan_state(spark, [(key_col, "in", keys)], snap)
         df = self._read_with_deletes(spark, kept, snap, schema)
         return df, {"files_total": total, "files_scanned": len(kept)}
 

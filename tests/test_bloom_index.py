@@ -269,7 +269,7 @@ def test_bloom_probe_hashes_the_build_rendering(spark, tmp_path, column, literal
     that holds its row, in either planner probe. A literal the bloom
     can render still prunes: 4.0 lies inside [min, max] of n = 3i but
     is absent."""
-    from java_iceberg_table_spark.table.table import prune_entries_by_keys
+    from java_iceberg_table_spark.table.table import Table, _pruning_filters
 
     df = spark.createDataFrame(
         [
@@ -281,7 +281,8 @@ def test_bloom_probe_hashes_the_build_rendering(spark, tmp_path, column, literal
     tbl = create_table(str(tmp_path / "t"), df.schema, properties={"write.bloom.column": column})
     tbl.append(df.coalesce(1))
     assert len(tbl.plan_files([(column, "=", literal)])) == 1
-    assert len(prune_entries_by_keys(tbl.plan_files(), column, [literal])) == 1
+    in_leaf = _pruning_filters([(column, "in", [literal])], df.schema)
+    assert len(Table._admitted(tbl.plan_files(), {}, in_leaf)) == 1
     assert tbl.scan(spark, [(column, "=", literal)]).count() == 1
     if column == "n":
         assert tbl.plan_files([("n", "=", 4.0)]) == []

@@ -319,6 +319,31 @@ def test_in_list_pushdown_prunes_partitions(ds, base_dir):
     assert sorted(r["ts"] for r in df.collect()) == sorted(vals)
 
 
+def test_in_list_pushdown_plans_like_plan_files(ds, base_dir):
+    """The connector plans an IN-list exactly as plan_files plans the
+    same ``in`` leaf, bucket pruning included: on a bucket("k", 16)
+    table a file whose bucket holds no listed key is not read, though
+    its [min, max] spans every key."""
+    from pyspark.sql.datasource import In
+
+    from java_iceberg_table_spark.sources.engine_datasource import EngineBatchReader
+    from java_iceberg_table_spark.table import bucket
+
+    spark = ds
+    root = base_dir + "/inbucket"
+    src = spark.range(200).select(F.col("id").alias("k"), (F.col("id") * 2).alias("v"))
+    tbl = create_table(root, src.schema, partition=bucket("k", 16))
+    tbl.append(src)
+    vals = [3, 7]
+    reader = EngineBatchReader(root, tbl.schema(), {"root": root})
+    list(reader.pushFilters([In(("k",), tuple(vals))]))
+    planned = sorted(p.file_key for p in reader.partitions())
+    assert planned == sorted(e["path"] for e in tbl.plan_files([("k", "in", vals)]))
+    assert len(planned) < len(tbl.current_files())
+    df = spark.read.format("engine_table").option("root", root).load().filter(F.col("k").isin(vals))
+    assert sorted(r["k"] for r in df.collect()) == vals
+
+
 def test_branch_write_through_connector(ds, base_dir):
     """option("branch"): write-audit-publish through the connector —
     the connector write moves the branch ref, main stays untouched

@@ -340,32 +340,9 @@ def test_one_commit_path():
     assert src.count("for attempt in range(3)") <= 1
 
 
-def test_metadata_json_uses_the_c_encoder():
-    """Every JSON the package writes is encoded by ``json.dumps``:
-    ``json.dump`` streams through the pure-Python encoder, several
-    times slower on a manifest of the same bytes."""
-    pkg = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "java_iceberg_table_spark",
-    )
-    offenders = []
-    for dirpath, _, files in os.walk(pkg):
-        for fname in files:
-            if fname.endswith(".py"):
-                with open(os.path.join(dirpath, fname)) as f:
-                    if "json.dump(" in f.read():
-                        offenders.append(os.path.relpath(os.path.join(dirpath, fname), pkg))
-    assert offenders == [], f"json.dump( in {offenders}: write json.dumps(...)"
-
-
-def test_one_manifest_parser():
-    """Manifests are parsed by format.read_manifest alone, on the driver
-    and in Spark tasks: no hand-kept manifest schema and no Spark JSON
-    read of them. Whether a walk runs on executors is decided by one
-    Table method, the only reader of DIST_PLAN_MIN_MANIFEST_BYTES, and
-    no caller passes a threshold of its own."""
-    import re
-
+def _package_sources() -> dict[str, str]:
+    """Every module of the package: its path under the package -> its
+    source."""
     pkg = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "java_iceberg_table_spark",
@@ -377,6 +354,26 @@ def test_one_manifest_parser():
                 path = os.path.join(dirpath, fname)
                 with open(path) as f:
                     sources[os.path.relpath(path, pkg)] = f.read()
+    return sources
+
+
+def test_metadata_json_uses_the_c_encoder():
+    """Every JSON the package writes is encoded by ``json.dumps``:
+    ``json.dump`` streams through the pure-Python encoder, several
+    times slower on a manifest of the same bytes."""
+    offenders = [rel for rel, src in _package_sources().items() if "json.dump(" in src]
+    assert offenders == [], f"json.dump( in {offenders}: write json.dumps(...)"
+
+
+def test_one_manifest_parser():
+    """Manifests are parsed by format.read_manifest alone, on the driver
+    and in Spark tasks: no hand-kept manifest schema and no Spark JSON
+    read of them. Whether a walk runs on executors is decided by one
+    Table method, the only reader of DIST_PLAN_MIN_MANIFEST_BYTES, and
+    no caller passes a threshold of its own."""
+    import re
+
+    sources = _package_sources()
     for rel, src in sources.items():
         assert "MANIFEST_SCHEMA" not in src, f"{rel}: parse manifests with format.read_manifest"
         assert not re.search(r"read_paths\([^)]*[\"']json[\"']", src), f"{rel} reads JSON with Spark"
@@ -388,3 +385,24 @@ def test_one_manifest_parser():
     rest = table_py.replace(decision, "")
     assert rest.count("DIST_PLAN_MIN_MANIFEST_BYTES") == 1
     assert re.search(r"^DIST_PLAN_MIN_MANIFEST_BYTES = ", rest, re.M)
+
+
+def test_one_key_set_pruner():
+    """Every key-set prune (IN-lists, runtime-filter keys, MERGE and
+    upsert key bounds, the connector's IN pushdown) runs plan_files'
+    predicate: no pruner of its own, Table._admitted reached only
+    through plan_files (on the driver or on executors), and the
+    connector pushes an IN-list as one ``in`` leaf."""
+    import re
+
+    sources = _package_sources()
+    for rel, src in sources.items():
+        for name in ("prune_entries_by_keys", "_key_bound_candidates"):
+            assert name not in src, f"{rel} keeps {name}: plan an 'in' or bound leaf"
+    callers = set()
+    for rel, src in sources.items():
+        for m in re.finditer(r"\b_admitted\(", src):
+            if not re.match(r"def _admitted\(", src[m.start() - 4 :]):
+                callers.add(re.findall(r"\bdef (\w+)\(", src[: m.start()])[-1])
+    assert callers == {"plan_files", "_plan_files_distributed"}
+    assert "in_filters" not in sources[os.path.join("sources", "engine_datasource.py")]

@@ -210,6 +210,32 @@ def test_inline_deletion_vector_writes_no_files(spark, troot):
     assert _ks(spark, tbl) == list(range(10, 100))
 
 
+def test_retention_drops_the_inline_dvs_of_dropped_files(spark, troot):
+    """A retention delete drops each dropped file from every inline DV:
+    a DV left with no file goes with it, so counting is metadata-only
+    again, and a DV that also targets a kept file keeps that file's
+    positions alone."""
+    from java_iceberg_table_spark.table import truncate
+
+    df = spark.range(200).select(F.col("id").alias("k"), F.col("id").alias("ts")).coalesce(1)
+    tbl = create_table(troot, df.schema, partition=truncate("ts", 100))
+    tbl.append(df)
+    tbl.delete_where_mor(spark, [("k", "=", 5)])
+    tbl.delete_where("ts", "<", 100)
+    head = tbl.metadata.current_snapshot()
+    assert tbl.delete_files_of(head) == []
+    assert tbl.count_rows() == {"rows": 100, "metadata_files": 1, "scanned_files": 0}
+
+    tbl2 = create_table(troot + "2", df.schema, partition=truncate("ts", 100))
+    tbl2.append(df)
+    tbl2.delete_where_mor(spark, [("k", "in", (5, 150))])
+    tbl2.delete_where("ts", "<", 100)
+    (dv,) = tbl2.delete_files_of(tbl2.metadata.current_snapshot())
+    assert list(dv["dv"]) == [e["path"] for e in tbl2.current_files()]
+    assert dv["rows"] == 1
+    assert _ks(spark, tbl2) == [k for k in range(100, 200) if k != 150]
+
+
 def test_large_position_delete_falls_back_to_file(spark, troot):
     """Past DV_INLINE_MAX_POSITIONS the delete keeps the parquet
     delete-file form (same semantics, bounded manifest size)."""

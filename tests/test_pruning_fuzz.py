@@ -18,7 +18,10 @@ prefixes get truncated bounds, and binary columns none. Some files
 instead carry the full per-value bounds of manifests written before
 truncation, binary ones as UTF-8 text or hex. Binary columns take both
 bytes and string literals (Spark compares a string as its UTF-8
-bytes). Not drawn: Bloom filters.
+bytes). Some files carry a Bloom filter over one column, built from
+their values as a connector write builds it
+(``bloom_index.rendered_keys`` / ``bloom_of_keys``), so the ``=`` and
+IN-list probes are fuzzed too.
 """
 
 from __future__ import annotations
@@ -26,6 +29,7 @@ from __future__ import annotations
 import datetime as dt
 import json
 
+import pyarrow as pa
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql.types import (
@@ -48,6 +52,7 @@ from java_iceberg_table_spark.table import (
     truncate,
     year,
 )
+from java_iceberg_table_spark.table.bloom_index import bloom_of_keys, rendered_keys
 from java_iceberg_table_spark.table.stats import _plain, column_bounds
 from java_iceberg_table_spark.table.table import Table, _pruning_filters
 from java_iceberg_table_spark.table.transforms import CompositeTransform
@@ -90,6 +95,13 @@ timestamps = st.builds(
 )
 dates = st.builds(lambda days: T0.date() + dt.timedelta(days=days), st.integers(0, 40))
 VALUES = {"n": ints, "s": strs | long_strs, "ts": timestamps, "d": dates, "b": binaries}
+# per bloomable column: the rendering a bloom records, the Arrow type
+BLOOMS = {
+    "n": ({"type": "bigint"}, pa.int64()),
+    "s": ({"type": "string"}, pa.string()),
+    "ts": ({"type": "timestamp", "tz": "UTC"}, pa.timestamp("us", "UTC")),
+    "d": ({"type": "date"}, pa.date32()),
+}
 
 rows_st = st.lists(
     st.fixed_dictionaries({c: st.none() | v for c, v in VALUES.items()}),
@@ -118,11 +130,12 @@ def _part(t, row):
     return None if v is None else t.apply_py(v)
 
 
-def _entry(path, t, part, rows, drop, legacy):
+def _entry(path, t, part, rows, drop, legacy, bloom_col):
     """A manifest entry as the driver parse yields it: bounds rendered
     by stats.column_bounds (``legacy``: the min and max of each value's
     full rendering, as manifests written before truncation hold them),
-    the columns in ``drop`` without stats, JSON round-tripped."""
+    the columns in ``drop`` without stats, a Bloom filter over
+    ``bloom_col`` (if any), JSON round-tripped."""
     cols = {}
     for c in COLUMNS:
         if c in drop:
@@ -137,6 +150,11 @@ def _entry(path, t, part, rows, drop, legacy):
         else:
             cols[c] = {**column_bounds(min(vals), max(vals)), "nulls": nulls}
     e = {"path": path, "rows": len(rows), "bytes": 1, "columns": cols}
+    if bloom_col is not None:
+        rendering, ty = BLOOMS[bloom_col]
+        rendering = {"column": bloom_col, **rendering}
+        keys = rendered_keys(rendering, pa.array([r[bloom_col] for r in rows], ty))
+        e["bloom"] = bloom_of_keys(rendering, keys, len(rows))
     if isinstance(t, CompositeTransform):
         e["partition_fields"] = list(part)
     else:
@@ -248,8 +266,9 @@ def test_pruning_is_conservative_and_certainty_exact(data, t, rows):
                 continue
             drop = data.draw(st.sets(st.sampled_from(COLUMNS), max_size=2), label="drop")
             legacy = data.draw(st.booleans(), label="legacy")
+            bloom_col = data.draw(st.sampled_from((None, *BLOOMS)), label="bloom")
             part = key if isinstance(t, CompositeTransform) else (key[0] if key else None)
-            files.append((_entry(f"f{i}_{j}", t, part, chunk, drop, legacy), chunk))
+            files.append((_entry(f"f{i}_{j}", t, part, chunk, drop, legacy, bloom_col), chunk))
 
     for flt in data.draw(st.lists(predicates(rows), min_size=1, max_size=6), label="filters"):
         col, op, lit = flt

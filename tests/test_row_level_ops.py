@@ -327,6 +327,45 @@ def test_merge_into_timestamp_key(spark, tmp_path):
     assert got[base + dt.timedelta(hours=3)] == 999.0
 
 
+@pytest.mark.parametrize("op", ["merge_into", "upsert"])
+def test_midnight_timestamp_key_matches_date_key(spark, tmp_path, op):
+    """A source key TIMESTAMP '2024-01-03 00:00:00' equals the DATE key
+    2024-01-03 in Spark's join. The file whose upper bound is that date
+    must stay a candidate: the midnight renders as its date too, so the
+    row updates in place instead of being inserted a second time."""
+    import datetime as dt
+
+    root = str(tmp_path / "md")
+    df = spark.createDataFrame(
+        [(dt.date(2024, 1, d), float(d)) for d in (1, 2, 3)], "d date, x double"
+    )
+    tbl = create_table(root, df.schema)
+    tbl.append(df.coalesce(1))
+    src = spark.createDataFrame([(dt.datetime(2024, 1, 3), 99.0)], "d timestamp, x double")
+    if op == "merge_into":
+        res = tbl.merge_into(spark, src, ["d"], update="all")
+        assert (res["updated_rows"], res["inserted_rows"]) == (1, 0)
+    else:
+        res = tbl.upsert(spark, src, ["d"])
+        assert (res["rewritten_files"], res["replaced_rows"]) == (1, 1)
+    got = sorted((r["d"], r["x"]) for r in tbl.scan(spark).collect())
+    assert got == [(dt.date(2024, 1, 1), 1.0), (dt.date(2024, 1, 2), 2.0), (dt.date(2024, 1, 3), 99.0)]
+
+
+def test_upsert_nan_key_bound_keeps_candidates(spark, tmp_path):
+    """A NaN source key makes max(k) NaN, which Spark orders above
+    every value. The candidate plan leaves that bound out rather than
+    prune every file on ``k <= NaN``, so k = 1.0 is still replaced."""
+    root = str(tmp_path / "nan")
+    df = spark.createDataFrame([(1.0, 1), (2.0, 2)], "k double, x long")
+    tbl = create_table(root, df.schema)
+    tbl.append(df.coalesce(1))
+    src = spark.createDataFrame([(1.0, 10), (float("nan"), 20)], "k double, x long")
+    assert tbl.upsert(spark, src, ["k"])["rewritten_files"] == 1
+    got = sorted((r["k"], r["x"]) for r in tbl.scan(spark).collect() if r["k"] == r["k"])
+    assert got == [(1.0, 10), (2.0, 2)]
+
+
 def test_merge_into_guards(spark, tmp_path):
     """Cardinality violation (multiple source rows per key) and
     initial-defaulted merge keys are refused loudly — both would

@@ -879,6 +879,16 @@ def test_runtime_filtered_scan_temporal_keys(spark, troot):
     assert hit == keys
 
 
+def _kept_for_in(entries, col, keys, dtype):
+    """The entries plan_files keeps for ``col IN keys`` on a ``dtype``
+    column: the IN leaf as _pruning_filters prepares it, through
+    Table._admitted."""
+    from java_iceberg_table_spark.table.table import Table, _pruning_filters
+
+    schema = StructType([StructField(col, dtype)])
+    return Table._admitted(entries, {}, _pruning_filters([(col, "in", keys)], schema))
+
+
 def test_prune_by_keys_date_renders_both_stat_forms():
     """A plain DATE key must admit files under BOTH stat renderings:
     date-column stats ('YYYY-MM-DD') and timestamp-column stats
@@ -886,8 +896,9 @@ def test_prune_by_keys_date_renders_both_stat_forms():
     hashes Spark's cast rendering, not isoformat)."""
     import datetime as dt
 
+    from pyspark.sql.types import DateType
+
     from java_iceberg_table_spark.table.bloom_index import NUM_HASHES, sized_bits
-    from java_iceberg_table_spark.table.table import prune_entries_by_keys
 
     key = [dt.date(2020, 6, 15)]
     date_stats = {"path": "d", "columns": {"c": {"min": "2020-06-01", "max": "2020-06-30"}}}
@@ -897,7 +908,7 @@ def test_prune_by_keys_date_renders_both_stat_forms():
     # day provably cannot contain it and is correctly pruned
     day_interior = {"path": "i", "columns": {"c": {"min": "2020-06-15T08:00:00", "max": "2020-06-15T20:00:00"}}}
     off = {"path": "o", "columns": {"c": {"min": "2020-07-01", "max": "2020-07-31"}}}
-    kept = prune_entries_by_keys([date_stats, ts_stats, day_interior, off], "c", key)
+    kept = _kept_for_in([date_stats, ts_stats, day_interior, off], "c", key, DateType())
     assert [e["path"] for e in kept] == ["d", "t"]
     # an empty bloom would "prove" any key absent — temporal keys must
     # not probe it (rendering mismatch would lose live files)
@@ -908,22 +919,20 @@ def test_prune_by_keys_date_renders_both_stat_forms():
         "bloom": {"column": "c", "bits": bits, "k": NUM_HASHES,
                   "words": [0] * (bits // 64)},
     }
-    assert [e["path"] for e in prune_entries_by_keys([bloomed], "c", key)] == ["b"]
+    assert [e["path"] for e in _kept_for_in([bloomed], "c", key, DateType())] == ["b"]
 
 
 def test_prune_by_keys_incomparable_stats_kept():
     """Timestamp/date stats are stored as ISO strings in manifest
     JSON; an IN-list of ints against them must keep the file (cannot
     prune), not raise TypeError at planning time."""
-    from java_iceberg_table_spark.table.table import prune_entries_by_keys
-
     entries = [
         {"path": "a", "columns": {"ts": {"min": "2020-01-01T00:00:00", "max": "2020-12-31T00:00:00"}}},
         {"path": "b", "columns": {"ts": {"min": 100, "max": 200}}},
     ]
-    kept = prune_entries_by_keys(entries, "ts", [150, 999])
+    kept = _kept_for_in(entries, "ts", [150, 999], TimestampType())
     assert [e["path"] for e in kept] == ["a", "b"]
-    kept2 = prune_entries_by_keys(entries, "ts", [999])
+    kept2 = _kept_for_in(entries, "ts", [999], TimestampType())
     assert [e["path"] for e in kept2] == ["a"]  # b pruned, a kept
 
 
@@ -932,10 +941,7 @@ def test_prune_by_keys_bloom_probe_capped():
     file's range than BLOOM_PROBE_CAP — planning stays O(log keys) per
     file instead of O(keys x k) CRC32s on the driver."""
     from java_iceberg_table_spark.table.bloom_index import NUM_HASHES, sized_bits
-    from java_iceberg_table_spark.table.table import (
-        BLOOM_PROBE_CAP,
-        prune_entries_by_keys,
-    )
+    from java_iceberg_table_spark.table.table import BLOOM_PROBE_CAP
 
     # an EMPTY bloom proves every key absent
     bits = sized_bits(10)
@@ -946,9 +952,9 @@ def test_prune_by_keys_bloom_probe_capped():
     few = list(range(BLOOM_PROBE_CAP))
     many = list(range(BLOOM_PROBE_CAP + 1))
     # under the cap: the probe runs and prunes the file
-    assert prune_entries_by_keys([entry], "k", few) == []
+    assert _kept_for_in([entry], "k", few, LongType()) == []
     # over the cap: probe skipped, file conservatively kept
-    assert [e["path"] for e in prune_entries_by_keys([entry], "k", many)] == ["a"]
+    assert [e["path"] for e in _kept_for_in([entry], "k", many, LongType())] == ["a"]
 
 
 def test_identity_partition_pruning(spark, troot):
