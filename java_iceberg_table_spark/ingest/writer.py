@@ -2,14 +2,20 @@
 off pending-commit metadata ("monikers") to the bookkeeper.
 
 Reference behavior re-expressed (Writer.java):
-- R2  synthetic records: monotonic message_id, uuid data, now()
-      timestamp, one shared timeperiod_loadedBy per batch, ~1750-byte
-      binary payload (50 uuid-ish chunks, Writer.java:52-72) — but
-      SEEDED so tests can assert exact row sets.
+- R2  synthetic records: monotonic message_id, uuid-like data (32 hex
+      characters), now() timestamp, one shared timeperiod_loadedBy per
+      batch, ~1750-byte binary payload (50 uuid-ish chunks,
+      Writer.java:52-72) — but SEEDED so tests can assert exact row
+      sets. Each column is drawn in bulk, in one call to a seeded numpy
+      generator; the two variable-width columns are fixed width, so
+      each is one character buffer with arithmetic offsets, built
+      without a Python object per row.
 - R4  one parquet file per createDataFile call, partition-aware path
       (Writer.java:74-108); files written with pyarrow (driver-side
       metadata plane — these are many small files by design; the big
-      data path is Table.append via Spark).
+      data path is Table.append via Spark). A parquet file's manifest
+      stats come from the footer its writer returned, so the file is
+      not re-opened to read them back.
 - R8  pending-commit handoff: JSON, write-temp-then-atomic-rename to
       tc_<uuid>.json (Writer.java:160-170).
 - The direct-commit variant (writeandcommitfiles, Main.java:26-34)
@@ -19,16 +25,15 @@ Reference behavior re-expressed (Writer.java):
 
 from __future__ import annotations
 
-import json
 import os
-import random
 import uuid as uuid_mod
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
 from ..table.format import write_json_atomic
-from ..table.stats import file_stats
+from ..table.stats import bounded, metadata_stats
 from ..table.table import Table
 
 EVENTS_SCHEMA = pa.schema(
@@ -44,23 +49,35 @@ EVENTS_SCHEMA = pa.schema(
 PAYLOAD_BYTES = 1750  # Writer.java:57-63 (emulates Kafka avg 1432 B)
 
 
+DATA_CHARS = 32  # one uuid's hex digits
+_HEX = np.frombuffer(b"0123456789abcdef", dtype=np.uint8)
+
+
+def _fixed_width(typ: pa.DataType, chars: np.ndarray, n_rows: int, width: int) -> pa.Array:
+    """``n_rows`` values of ``width`` bytes each, laid out back to back
+    in ``chars``, as one arrow array over that buffer."""
+    offsets = np.arange(0, (n_rows + 1) * width, width, dtype=np.int32)
+    return pa.Array.from_buffers(typ, n_rows, [None, pa.py_buffer(offsets), pa.py_buffer(chars)])
+
+
 def make_records(
     n_rows: int, timeperiod_us: int, seed: int, start_id: int = 0
 ) -> pa.Table:
     """Deterministic analogue of createRecords (Writer.java:52-72)."""
-    rng = random.Random(seed)
-    ids = list(range(start_id, start_id + n_rows))
-    datas = [uuid_mod.UUID(int=rng.getrandbits(128)).hex for _ in ids]
-    ts = [timeperiod_us] * n_rows
-    bodies = [rng.getrandbits(8 * PAYLOAD_BYTES).to_bytes(PAYLOAD_BYTES, "big") for _ in ids]
-    return pa.Table.from_pydict(
-        {
-            "message_id": ids,
-            "data": datas,
-            "timestamp": ts,
-            "timeperiod_loadedBy": [timeperiod_us] * n_rows,
-            "message_body": bodies,
-        },
+    rng = np.random.default_rng(seed)
+    digits = np.frombuffer(rng.bytes(n_rows * DATA_CHARS // 2), dtype=np.uint8)
+    hexed = np.empty(n_rows * DATA_CHARS, dtype=np.uint8)
+    hexed[0::2], hexed[1::2] = _HEX[digits >> 4], _HEX[digits & 15]
+    body = np.frombuffer(rng.bytes(n_rows * PAYLOAD_BYTES), dtype=np.uint8)
+    stamps = np.full(n_rows, timeperiod_us, dtype=np.int64)
+    return pa.Table.from_arrays(
+        [
+            pa.array(np.arange(start_id, start_id + n_rows, dtype=np.int64)),
+            _fixed_width(pa.string(), hexed, n_rows, DATA_CHARS),
+            pa.array(stamps, type=EVENTS_SCHEMA.field("timestamp").type),
+            pa.array(stamps),
+            _fixed_width(pa.binary(), body, n_rows, PAYLOAD_BYTES),
+        ],
         schema=EVENTS_SCHEMA,
     )
 
@@ -88,12 +105,14 @@ class Writer:
 
     def _write_file(self, records: "pa.Table", full: str) -> dict:
         """Write one data file in the toggled format; return its stats.
-        Parquet stats come from the footer (R17); avro files carry
-        write-time metrics computed from the in-memory batch — the same
-        split as the reference (Writer.java:107 vs ParquetUtil)."""
+        Parquet stats come from the footer (R17) the writer returned;
+        avro files carry write-time metrics computed from the in-memory
+        batch — the same split as the reference (Writer.java:107 vs
+        ParquetUtil)."""
         if self.file_format == "parquet":
-            pq.write_table(records, full)
-            return file_stats(full)
+            footers: list = []
+            pq.write_table(records, full, metadata_collector=footers)
+            return bounded(metadata_stats(footers[0], os.path.getsize(full)))
         from ..sources.avro_io import avro_schema_of, arrow_stats, write_ocf
         from pyspark.sql.types import StructType
 

@@ -80,12 +80,13 @@ def column_bounds(mn: Any, mx: Any) -> dict:
     return out
 
 
-def footer_stats(path: str) -> dict:
-    """{rows, bytes, columns: {name: {min, max, nulls}}} for one file,
-    with the footer's raw minimum and maximum (None when absent), for
-    callers that derive values from them instead of pruning with them.
-    ``file_stats`` renders them as manifest bounds."""
-    md = pq.ParquetFile(path).metadata
+def metadata_stats(md: "pq.FileMetaData", nbytes: int) -> dict:
+    """{rows, bytes, columns: {name: {min, max, nulls}}} of one parquet
+    file from its footer ``md`` (opened from the file, or the one its
+    writer returned) and its size, with the footer's raw minimum and
+    maximum (None when absent), for callers that derive values from
+    them instead of pruning with them. ``bounded`` renders them as
+    manifest bounds."""
     cols: dict[str, dict] = {}
     poisoned: set[str] = set()
     for rg in range(md.num_row_groups):
@@ -116,13 +117,13 @@ def footer_stats(path: str) -> dict:
             acc["nulls"] += st.null_count or 0
     return {
         "rows": md.num_rows,
-        "bytes": os.path.getsize(path),
+        "bytes": nbytes,
         "columns": cols,
     }
 
 
 def bounded(stats: dict) -> dict:
-    """``footer_stats`` output with every column's bounds rendered by
+    """``metadata_stats`` output with every column's bounds rendered by
     ``column_bounds``: the manifest entry's statistics."""
     return {
         **stats,
@@ -134,5 +135,6 @@ def bounded(stats: dict) -> dict:
 
 
 def file_stats(path: str) -> dict:
-    """{rows, bytes, columns: {name: {min, max, nulls}}} for one file."""
-    return bounded(footer_stats(path))
+    """{rows, bytes, columns: {name: {min, max, nulls}}} for one file,
+    its footer read from the file."""
+    return bounded(metadata_stats(pq.read_metadata(path), os.path.getsize(path)))

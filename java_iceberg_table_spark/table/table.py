@@ -28,12 +28,21 @@ from typing import Iterable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import BinaryType, LongType, StringType, StructField, StructType
+from pyspark.sql.types import (
+    BinaryType,
+    DateType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampNTZType,
+    TimestampType,
+)
 
 from ..session import conf_scope, read_paths
 from . import format as fmt
 from .format import Snapshot, TableMetadata
-from .stats import _plain, _prefix_upper, bounded, file_stats, footer_stats
+from .stats import _plain, _prefix_upper, bounded, file_stats, metadata_stats
 from .transforms import CompositeTransform, Transform, transform_from_json
 
 DEFAULT_PROPERTIES = {
@@ -975,7 +984,8 @@ class Table:
         spec_id = self.current_spec_id(md)
         staged: list[tuple[str, dict]] = []  # (src, entry-sans-path)
         for src in paths:
-            fsch = _pq.read_schema(src)
+            footer_md = _pq.read_metadata(src)
+            fsch = footer_md.schema.to_arrow_schema()
             for name in fsch.names:
                 f = by_name.get(name)
                 if f is None:
@@ -992,7 +1002,7 @@ class Table:
                     raise ValueError(
                         f"{src}: required column {f.name!r} missing"
                     )
-            footer = footer_stats(src)
+            footer = metadata_stats(footer_md, os.path.getsize(src))
             st = bounded(footer)
             partition = None
             if t is not None:
@@ -1609,10 +1619,53 @@ class Table:
             cond = e if cond is None else (cond & e)
         return cond
 
-    def _filtered(self, df: DataFrame, filters: list) -> DataFrame:
-        """``df`` with ``filters`` re-applied as the residual: file
-        pruning is conservative, so every surviving row is re-tested."""
-        return df.filter(self._and_predicate(filters)) if filters else df
+    def _proofs(
+        self, filters: list, entries: list[dict], md: TableMetadata, schema: StructType
+    ) -> list[list[bool]]:
+        """For each planned entry, whether it certainly satisfies each
+        leaf of ``filters``: _entry_certainly_matches on the
+        _pruning_filters rendering, under the entry's own spec. A leaf
+        on a column ``schema`` lacks proves nothing (the read reports
+        it), nor does a string literal against a DATE or TIMESTAMP
+        column: Spark compares the value the string parses to, the
+        bounds compare it as text ('2024-03-04' sorts below its own
+        midnight)."""
+        specs = self._spec_map(md)
+        types = {f.name: f.dataType for f in schema.fields}
+        temporal = (DateType, TimestampType, TimestampNTZType)
+        provable = [
+            col in types and not (isinstance(val, str) and isinstance(types[col], temporal))
+            for col, _, val in filters
+        ]
+        pruning = _pruning_filters(filters, schema)
+        return [
+            [
+                ok and self._entry_certainly_matches(e, self._entry_transform(e, specs), f)
+                for ok, f in zip(provable, pruning)
+            ]
+            for e in entries
+        ]
+
+    def _filtered(
+        self,
+        df: DataFrame,
+        filters: list,
+        entries: list[dict],
+        md: TableMetadata,
+        schema: StructType,
+    ) -> DataFrame:
+        """``df``, a read of the planned ``entries``, with the residual
+        applied: the leaves of ``filters`` that some entry does not
+        certainly satisfy (_proofs). File pruning is conservative, so
+        those rows are re-tested; a leaf that metadata proves for every
+        planned file is not, and with no planned entries (no rows) no
+        leaf applies. A partition-aligned read so plans no Filter, and
+        its generated code holds none of this read's literals (Iceberg
+        scan planning leaves no residual a file's partition and metrics
+        prove)."""
+        proofs = self._proofs(filters, entries, md, schema)
+        residual = [leaf for i, leaf in enumerate(filters) if not all(p[i] for p in proofs)]
+        return df.filter(self._and_predicate(residual)) if residual else df
 
     def _dnf_predicate(self, branches) -> "F.Column":
         """OR over branches of AND over leaves — the FULL residual
@@ -3144,7 +3197,8 @@ class Table:
             if spark is None:
                 raise ValueError("MOR deletes present: counting needs spark")
             n = self._filtered(
-                self._read_with_deletes(spark, entries, snap, schema), filters
+                self._read_with_deletes(spark, entries, snap, schema),
+                filters, entries, md, schema,
             ).count()
             return {"rows": n, "metadata_files": 0, "scanned_files": len(entries)}
         if not filters:
@@ -3153,17 +3207,9 @@ class Table:
                 "metadata_files": len(entries),
                 "scanned_files": 0,
             }
-        specs = self._spec_map(md)
-        pruning = _pruning_filters(filters, schema)
-        certain, maybe = [], []
-        for e in entries:
-            t_e = self._entry_transform(e, specs)
-            if all(
-                self._entry_certainly_matches(e, t_e, f) for f in pruning
-            ):
-                certain.append(e)
-            else:
-                maybe.append(e)
+        proofs = self._proofs(filters, entries, md, schema)
+        certain = [e for e, p in zip(entries, proofs) if all(p)]
+        maybe = [e for e, p in zip(entries, proofs) if not all(p)]
         rows = sum(e["rows"] for e in certain)
         if maybe:
             if spark is None:
@@ -3171,7 +3217,7 @@ class Table:
                     f"{len(maybe)} boundary files need scanning: pass spark"
                 )
             rows += self._filtered(
-                self.read_entries(spark, maybe, schema), filters
+                self.read_entries(spark, maybe, schema), filters, maybe, md, schema
             ).count()
         return {
             "rows": rows,
@@ -3289,6 +3335,11 @@ class Table:
                 Table._entry_may_match(entry, t, (col, op, v)) for v in cands
             )
         val = _normalize_stat_value(val)
+        if op in ("<", "<=") and val != val:
+            # Spark orders NaN above every value: every non-NaN row is
+            # below a NaN literal. (>, >= and = may prune on bounds: a
+            # file holding NaN carries none, stats.metadata_stats)
+            return True
         if t is not None and col == t.source_column and entry.get("partition") is not None:
             # equality pruning works for EVERY transform (a hash
             # bucket included: the predicate value maps to exactly one
@@ -3769,7 +3820,7 @@ class Table:
         rows = (
             keys_df.select(key_col).distinct().limit(max_keys + 1).collect()
         )
-        _, snap, schema = self.read_state()
+        md, snap, schema = self.read_state()
         total = len(self.files_of(snap)) if snap else 0
         keys = [r[0] for r in rows if r[0] is not None]
         if not keys:
@@ -3788,7 +3839,7 @@ class Table:
                 F.min(key_col), F.max(key_col)
             ).collect()[0]
             bounds = [(key_col, ">=", lo), (key_col, "<=", hi)]
-            df = self._scan_state(spark, bounds, snap, schema)
+            df = self._scan_state(spark, bounds, md, snap, schema)
             return df, {"files_total": total, "files_scanned": None}
         kept = self._plan_state(spark, [(key_col, "in", keys)], snap)
         df = self._read_with_deletes(spark, kept, snap, schema)
@@ -3904,8 +3955,8 @@ class Table:
         mid-call is not half-visible. A head read returns the current
         schema; a pinned read (id, ref or instant) the schema its
         snapshot committed under."""
-        _, snap, schema = self.read_state(snapshot_id, ref, as_of_ms)
-        return self._scan_state(spark, list(filters), snap, schema)
+        md, snap, schema = self.read_state(snapshot_id, ref, as_of_ms)
+        return self._scan_state(spark, list(filters), md, snap, schema)
 
     def _plan_state(
         self, spark: SparkSession, filters: list, snap: Snapshot | None
@@ -3920,12 +3971,13 @@ class Table:
         self,
         spark: SparkSession,
         filters: list,
+        md: TableMetadata,
         snap: Snapshot | None,
         schema: StructType,
     ) -> DataFrame:
         entries = self._plan_state(spark, filters, snap)
         df = self._read_with_deletes(spark, entries, snap, schema=schema)
-        return self._filtered(df, filters)
+        return self._filtered(df, filters, entries, md, schema)
 
     def scan_token_search(
         self,
@@ -3998,10 +4050,11 @@ class Table:
         (SCD2 sinks, dedup ledgers) identify rows across compactions
         without a key column."""
         filters = list(filters)
-        _, snap, schema = self.read_state(snapshot_id=snapshot_id)
+        md, snap, schema = self.read_state(snapshot_id=snapshot_id)
         entries = self._plan_state(spark, filters, snap)
         df = self._filtered(
-            self._read_with_lineage(spark, entries, snap, schema), filters
+            self._read_with_lineage(spark, entries, snap, schema),
+            filters, entries, md, schema,
         )
         return df.select(
             *[f.name for f in schema.fields],

@@ -21,7 +21,8 @@ bytes and string literals (Spark compares a string as its UTF-8
 bytes). Some files carry a Bloom filter over one column, built from
 their values as a connector write builds it
 (``bloom_index.rendered_keys`` / ``bloom_of_keys``), so the ``=`` and
-IN-list probes are fuzzed too.
+IN-list probes are fuzzed too. Integer columns also take a NaN
+literal, which Spark orders above every value.
 """
 
 from __future__ import annotations
@@ -164,14 +165,14 @@ def _entry(path, t, part, rows, drop, legacy, bloom_col):
 
 def _literals(col, rows):
     """Literals drawn from, or next to, the rows' values of ``col``,
-    including cross-type ones (float against int, DATE and ISO strings
-    against timestamps, midnight and off-midnight datetimes against
-    dates)."""
+    including cross-type ones (float and NaN against int, DATE and ISO
+    strings against timestamps, midnight and off-midnight datetimes
+    against dates)."""
     seen = [r[col] for r in rows if r[col] is not None]
     near = []
     for v in seen:
         if col == "n":
-            near += [v, v - 1, v + 1, v + 0.5, v - 0.5, float(v)]
+            near += [v, v - 1, v + 1, v + 0.5, v - 0.5, float(v), float("nan")]
         elif col == "s":
             near += [v, v[:1], v[:-1] or "0", v + "a", v[:16], v[:16] + TOP, v[:17]]
         elif col == "b":
@@ -224,6 +225,8 @@ def _row_matches(v, op, lit) -> bool:
     if isinstance(v, bytes) and isinstance(lit, str):
         lit = lit.encode("utf-8")
     v, lit = _coerce(v, lit)
+    if lit != lit:  # NaN: Spark orders it above every value
+        return op in ("<", "<=")
     return {
         "=": v == lit,
         "<": v < lit,

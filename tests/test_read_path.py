@@ -17,10 +17,17 @@ import re
 
 import pytest
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StringType, StructField, StructType
+from pyspark.sql.types import (
+    DoubleType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampType,
+)
 
 from java_iceberg_table_spark import session
-from java_iceberg_table_spark.table import create_table, inspect, load_table
+from java_iceberg_table_spark.table import create_table, inspect, load_table, truncate
 from java_iceberg_table_spark.table import table as table_mod
 
 SCHEMA = StructType(
@@ -177,6 +184,134 @@ def test_one_read_path():
         src = _src(*parts)
         for call in ("snapshot_by_id(", "snapshot_as_of("):
             assert call not in src, f"{parts[-1]} calls {call}: use Table.read_state"
+
+
+def _truncated(spark, root):
+    """Keys 0..39 under truncate(k, 10): four files, one per partition
+    (one writing task, whatever the core count)."""
+    tbl = create_table(root, SCHEMA, partition=truncate("k", 10))
+    tbl.append(_rows(spark, 0, 40).coalesce(1))
+    assert len(tbl.plan_files()) == 4
+    return tbl
+
+
+def _filters(df) -> bool:
+    """Whether the physical plan of ``df`` holds a Filter node."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return re.search(r"^[\s|+\-*()\d]*Filter ", plan, re.M) is not None
+
+
+def test_aligned_range_plans_no_filter(spark, tmp_path):
+    """Every planned file's partition and bounds prove both leaves of a
+    partition-aligned range, so the read plans ColumnarToRow over the
+    FileScan with no Filter, and returns the rows Spark's own filter
+    does."""
+    tbl = _truncated(spark, str(tmp_path / "t"))
+    flt = [("k", ">=", 10), ("k", "<", 20)]
+    df = tbl.scan(spark, flt)
+    assert not _filters(df)
+    expect = tbl.scan(spark).filter((F.col("k") >= 10) & (F.col("k") < 20))
+    assert sorted(df.collect()) == sorted(expect.collect())
+    assert _keys(df) == list(range(10, 20))
+    assert _keys(tbl.scan_with_lineage(spark, flt)) == list(range(10, 20))
+
+
+def test_aligned_reads_share_generated_code(spark, tmp_path):
+    """No read literal reaches whole-stage codegen: after one aligned
+    read, an aligned read of another partition compiles no new code."""
+    tbl = _truncated(spark, str(tmp_path / "t"))
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def compiled(lo):
+        before = metrics.METRIC_COMPILATION_TIME().getCount()
+        assert tbl.scan(spark, [("k", ">=", lo), ("k", "<", lo + 10)]).count() == 10
+        return metrics.METRIC_COMPILATION_TIME().getCount() - before
+
+    compiled(10)
+    assert compiled(20) == 0
+
+
+def test_range_cutting_a_partition_keeps_filter(spark, tmp_path):
+    """A range that cuts a partition keeps the leaves no planned file
+    proves; count_rows scans those files with the same residual."""
+    tbl = _truncated(spark, str(tmp_path / "t"))
+    flt = [("k", ">=", 15), ("k", "<", 25)]
+    df = tbl.scan(spark, flt)
+    assert _filters(df)
+    assert _keys(df) == list(range(15, 25))
+    assert tbl.count_rows(spark, flt) == {"rows": 10, "metadata_files": 0, "scanned_files": 2}
+
+
+def test_empty_plan_applies_no_residual(spark, tmp_path):
+    """A read that plans no file has no rows to re-test: no leaf is
+    applied."""
+    tbl = _truncated(spark, str(tmp_path / "t"))
+    df = tbl.scan(spark, [("k", ">=", 100)])
+    assert "Filter" not in df._jdf.queryExecution().analyzed().toString()
+    assert df.count() == 0
+
+
+def test_nan_literal_keeps_every_file(spark, tmp_path):
+    """Spark orders NaN above every value, so ``x < NaN`` and ``x <=
+    NaN`` hold for every row with a number: pruning keeps the files."""
+    tbl = create_table(str(tmp_path / "t"), StructType([StructField("x", DoubleType(), True)]))
+    df = spark.createDataFrame([(1.0,), (2.0,)], "x double")
+    tbl.append(df)
+    nan = float("nan")
+    for op, col in (("<", F.col("x") < nan), ("<=", F.col("x") <= nan), (">", F.col("x") > nan)):
+        assert tbl.scan(spark, [("x", op, nan)]).count() == df.filter(col).count(), op
+
+
+def test_string_literal_on_timestamp_is_not_proven(spark, tmp_path):
+    """Spark compares a string literal against a TIMESTAMP as the
+    instant it parses to, while the bounds compare it as text
+    ('2024-03-04' sorts below its own midnight): such a leaf proves no
+    file, so count_rows scans and the residual stays."""
+    import datetime as dt
+
+    schema = StructType([StructField("ts", TimestampType(), False)])
+    tbl = create_table(str(tmp_path / "t"), schema)
+    df = spark.createDataFrame([(dt.datetime(2024, 3, 4),)] * 2, schema)
+    tbl.append(df)
+    for lit in ("2024-03-04", "2024-03-04 00:00:00"):
+        expect = df.filter(F.col("ts") > lit).count()
+        assert tbl.count_rows(spark, [("ts", ">", lit)])["rows"] == expect == 0
+        assert tbl.scan(spark, [("ts", ">", lit)]).count() == expect
+
+
+def _call_args(src: str, call: str) -> list[list[str]]:
+    """The top-level arguments of every ``call`` in ``src``."""
+    out = []
+    for m in re.finditer(re.escape(call), src):
+        depth, args, cur = 1, [], ""
+        for ch in src[m.end():]:
+            depth += ch in "([{"
+            depth -= ch in ")]}"
+            if depth == 0:
+                break
+            if ch == "," and depth == 1:
+                args.append(cur.strip())
+                cur = ""
+            else:
+                cur += ch
+        out.append([a for a in args + [cur.strip()] if a])
+    return out
+
+
+def test_one_residual():
+    """The residual is decided once: one ``_filtered`` applies the
+    leaves ``_proofs`` leaves unproven, count_rows splits certain from
+    boundary files with the same ``_proofs``, and every ``_filtered(``
+    call passes the entries it planned."""
+    table_py = _src("table", "table.py")
+    assert table_py.count("def _filtered(") == 1
+    assert table_py.count("df.filter(self._and_predicate(") == 1
+    assert table_py.count("self._entry_certainly_matches(e,") == 1
+    calls = _call_args(table_py, "self._filtered(")
+    assert len(calls) == 4
+    for args in calls:
+        assert len(args) == 5 and args[3:] == ["md", "schema"], args
+    assert sorted(a[2] for a in calls) == ["entries", "entries", "entries", "maybe"]
 
 
 N_FILES = 40  # past Spark's default parallelPartitionDiscovery.threshold of 32

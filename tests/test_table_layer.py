@@ -1547,6 +1547,37 @@ def test_ingest_entry_bounds_truncated_temporal_exact(troot, file_format):
     assert tbl.plan_files([("data", ">", data[-1][:15] + "~")]) == []
 
 
+def test_writer_stats_equal_file_stats(troot):
+    """A parquet writer entry carries the stats of the footer it wrote:
+    the same rows, bytes and bounds ``stats.file_stats`` reads back
+    from the file."""
+    from java_iceberg_table_spark.table.stats import file_stats
+
+    tbl = create_table(troot, EVENTS_STRUCT, partition=truncate("timeperiod_loadedBy", WIDTH))
+    entries = Writer(tbl, writer_id=1, seed=9).create_data_files(4, 30, timeperiod_us=WIDTH + 7)
+    for e in entries:
+        st = file_stats(os.path.join(troot, e["path"]))
+        assert (e["rows"], e["bytes"], e["columns"]) == (st["rows"], st["bytes"], st["columns"])
+
+
+def test_make_records_deterministic_per_seed():
+    """Synthetic records are a function of their seed: 32 hex
+    characters of ``data`` and a 1,750-byte body per row, ids from
+    ``start_id``, one timeperiod stamp."""
+    from java_iceberg_table_spark.ingest.writer import EVENTS_SCHEMA, PAYLOAD_BYTES, make_records
+
+    recs = make_records(50, 1_709_510_400_000_000, seed=11, start_id=100)
+    assert recs.schema == EVENTS_SCHEMA
+    assert recs.equals(make_records(50, 1_709_510_400_000_000, seed=11, start_id=100))
+    assert not recs.equals(make_records(50, 1_709_510_400_000_000, seed=12, start_id=100))
+    rows = recs.to_pylist()
+    assert [r["message_id"] for r in rows] == list(range(100, 150))
+    assert all(len(r["data"]) == 32 and set(r["data"]) <= set("0123456789abcdef") for r in rows)
+    assert len({r["data"] for r in rows}) == 50
+    assert all(len(r["message_body"]) == PAYLOAD_BYTES for r in rows)
+    assert {r["timeperiod_loadedBy"] for r in rows} == {1_709_510_400_000_000}
+
+
 def test_add_files_bucket_over_long_strings(spark, troot, tmp_path):
     """add_files derives a hash-bucket partition from footer min == max
     (identity specs need an integer column, so a string column is
