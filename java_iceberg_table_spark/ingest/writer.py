@@ -47,6 +47,7 @@ EVENTS_SCHEMA = pa.schema(
 )
 
 PAYLOAD_BYTES = 1750  # Writer.java:57-63 (emulates Kafka avg 1432 B)
+MAX_ROWS = (2**31 - 1) // PAYLOAD_BYTES  # int32 offsets of one file's payloads
 
 
 DATA_CHARS = 32  # one uuid's hex digits
@@ -63,7 +64,17 @@ def _fixed_width(typ: pa.DataType, chars: np.ndarray, n_rows: int, width: int) -
 def make_records(
     n_rows: int, timeperiod_us: int, seed: int, start_id: int = 0
 ) -> pa.Table:
-    """Deterministic analogue of createRecords (Writer.java:52-72)."""
+    """Deterministic analogue of createRecords (Writer.java:52-72).
+    ``seed`` must be non-negative (numpy's generator takes no negative
+    seed), and one file's payloads must fit the int32 offsets of an
+    arrow binary array: at most MAX_ROWS rows."""
+    if seed < 0:
+        raise ValueError(f"seed must be non-negative, got {seed}")
+    if n_rows > MAX_ROWS:
+        raise ValueError(
+            f"{n_rows} rows of {PAYLOAD_BYTES}-byte payloads overflow one "
+            f"binary array; at most {MAX_ROWS}"
+        )
     rng = np.random.default_rng(seed)
     digits = np.frombuffer(rng.bytes(n_rows * DATA_CHARS // 2), dtype=np.uint8)
     hexed = np.empty(n_rows * DATA_CHARS, dtype=np.uint8)

@@ -20,6 +20,7 @@ from __future__ import annotations
 import bisect
 import glob
 import os
+import re
 import shutil
 import time
 import uuid
@@ -241,6 +242,36 @@ def _normalize_stat_value(val):
     return val
 
 
+# the ISO forms of a date or timestamp string whose parse is the same
+# in Python's fromisoformat and in Spark's cast
+_ISO_TEMPORAL = re.compile(
+    r"(\d{4}-\d{2}-\d{2})(?:[ T]\d{2}:\d{2}(?::\d{2}(?:\.\d{1,6})?)?(?:Z|[+-]\d{2}:\d{2})?)?"
+)
+
+
+def _temporal_literal(val: str, dtype):
+    """The value Spark compares a string literal with on a DATE,
+    TIMESTAMP or TIMESTAMP_NTZ column: a DATE takes the date part, a
+    TIMESTAMP the instant (zone-less strings in the engine's UTC
+    session zone, as the stats render it), a TIMESTAMP_NTZ the local
+    time with any zone dropped. None when ``val`` is not an ISO form
+    parsed here: None compares with no bound."""
+    import datetime as _dt2
+
+    m = _ISO_TEMPORAL.fullmatch(val)
+    if m is None:
+        return None
+    try:
+        if isinstance(dtype, DateType):
+            return _dt2.date.fromisoformat(m.group(1))
+        v = _dt2.datetime.fromisoformat(val)
+    except ValueError:  # no such day or time
+        return None
+    if v.tzinfo is not None and isinstance(dtype, TimestampType):
+        v = v.astimezone(_dt2.timezone.utc)
+    return v.replace(tzinfo=None)
+
+
 def _pruning_filters(filters: list, schema: StructType) -> list:
     """``filters`` as the pruner reads them: an IN-list becomes a
     _KeySet, its keys rendered and sorted once per plan. A literal on
@@ -250,12 +281,23 @@ def _pruning_filters(filters: list, schema: StructType) -> list:
     written before that hold str bounds (UTF-8 text, or hex when the
     bytes do not decode) that are not the bytes' order; bytes never
     compare with a str, so such a leaf keeps every file and proves
-    none certain. The residual filter still applies the leaf as
-    written."""
+    none certain. A string literal on a DATE or TIMESTAMP column
+    becomes the date or datetime Spark parses it to (_temporal_literal),
+    not text: '2024-03-04 00:00:01' sorts below the bound
+    '2024-03-04T00:00:00'. A prefix match there keeps every file. The
+    residual filter still applies the leaf as written."""
     binary = {f.name for f in schema.fields if isinstance(f.dataType, BinaryType)}
+    temporal = {
+        f.name: f.dataType
+        for f in schema.fields
+        if isinstance(f.dataType, (DateType, TimestampType, TimestampNTZType))
+    }
 
     def as_bytes(v):
         return v.encode("utf-8") if isinstance(v, str) else v
+
+    def as_temporal(v, dtype):
+        return _temporal_literal(v, dtype) if isinstance(v, str) else v
 
     out = []
     for col, op, val in filters:
@@ -265,6 +307,13 @@ def _pruning_filters(filters: list, schema: StructType) -> list:
             else:
                 op = ">=" if op == "like_prefix" else op
                 val = as_bytes(val)
+        elif col in temporal:
+            if op == "in":
+                val = tuple(as_temporal(v, temporal[col]) for v in val)
+            elif op == "like_prefix":
+                op, val = ">=", None
+            else:
+                val = as_temporal(val, temporal[col])
         out.append((col, op, _key_set(val) if op == "in" else val))
     return out
 
@@ -958,7 +1007,8 @@ class Table:
         ``add_files`` procedure): each file is hardlinked (or copied
         when linking fails — cross-device) under data/ and committed as
         one fast-append snapshot, with manifest stats read from the
-        footer alone — O(row groups) per file, zero data rewrite. The
+        footer alone — O(row groups) per file, zero data rewrite (float
+        columns keep no bounds: a footer may strip NaN from them). The
         migration path at 100 TB: adopting a directory of parquet into
         an engine table costs metadata, not a copy of the data.
 
@@ -1004,6 +1054,21 @@ class Table:
                     )
             footer = metadata_stats(footer_md, os.path.getsize(src))
             st = bounded(footer)
+            # A foreign footer's float bounds may have NaN stripped
+            # (pyarrow records {1.0, NaN} as [1.0, 1.0]) while Spark
+            # orders NaN above every value, so such bounds would prune
+            # and prove files whose NaN rows match. Adopted float
+            # columns keep their null count and no bounds, like the
+            # connector's writes (engine_datasource._write_task_files).
+            pschema = footer_md.schema
+            for i in range(len(pschema)):
+                c = pschema.column(i)
+                if c.physical_type in ("FLOAT", "DOUBLE") and c.path in st["columns"]:
+                    st["columns"][c.path] = {
+                        "min": None,
+                        "max": None,
+                        "nulls": st["columns"][c.path]["nulls"],
+                    }
             partition = None
             if t is not None:
                 # composite specs derive one bucket PER FIELD from the
@@ -1626,22 +1691,14 @@ class Table:
         leaf of ``filters``: _entry_certainly_matches on the
         _pruning_filters rendering, under the entry's own spec. A leaf
         on a column ``schema`` lacks proves nothing (the read reports
-        it), nor does a string literal against a DATE or TIMESTAMP
-        column: Spark compares the value the string parses to, the
-        bounds compare it as text ('2024-03-04' sorts below its own
-        midnight)."""
+        it)."""
         specs = self._spec_map(md)
-        types = {f.name: f.dataType for f in schema.fields}
-        temporal = (DateType, TimestampType, TimestampNTZType)
-        provable = [
-            col in types and not (isinstance(val, str) and isinstance(types[col], temporal))
-            for col, _, val in filters
-        ]
+        known = set(schema.fieldNames())
         pruning = _pruning_filters(filters, schema)
         return [
             [
-                ok and self._entry_certainly_matches(e, self._entry_transform(e, specs), f)
-                for ok, f in zip(provable, pruning)
+                f[0] in known and self._entry_certainly_matches(e, self._entry_transform(e, specs), f)
+                for f in pruning
             ]
             for e in entries
         ]
@@ -3338,7 +3395,8 @@ class Table:
         if op in ("<", "<=") and val != val:
             # Spark orders NaN above every value: every non-NaN row is
             # below a NaN literal. (>, >= and = may prune on bounds: a
-            # file holding NaN carries none, stats.metadata_stats)
+            # file holding NaN carries none — stats.metadata_stats
+            # drops NaN bounds, and add_files every float bound)
             return True
         if t is not None and col == t.source_column and entry.get("partition") is not None:
             # equality pruning works for EVERY transform (a hash

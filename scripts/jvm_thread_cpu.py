@@ -10,10 +10,10 @@ set-up), and reads ``/proc/<jvm>/task/*/{comm,stat}`` before and after.
 Threads are grouped by name with trailing digits stripped (``GC
 Thread#3`` and ``GC Thread#0`` are one group; Linux keeps 15 characters
 of a thread name). It prints a markdown table of CPU ms per operation
-(a query, or a committed file) per group, then the JVM's own total from
-``/proc/<jvm>/stat``: that total keeps the CPU of threads that exited
-inside the window, which no thread sample sees, so the difference is
-printed as ``(exited threads)``.
+(a query, or a committed file), one row per group, then the JVM's own
+total from ``/proc/<jvm>/stat``: that total keeps the CPU of threads
+that exited inside the window, which no thread sample sees, so the
+difference is printed as ``(exited threads)``.
 
 HotSpot starts and stops JIT compiler threads as the compile queue
 grows and drains (``UseDynamicNumberOfCompilerThreads``), so much of
@@ -73,20 +73,16 @@ def breakdown(before, after) -> tuple[float, dict[str, float]]:
     return total1 - total0, dict(groups)
 
 
-def report(total_s: float, groups: dict[str, float], ops: int, unit: str, top: int) -> None:
+def report(total_s: float, groups: dict[str, float], ops: int, unit: str) -> None:
     attributed = sum(groups.values())
-    rows = sorted(groups.items(), key=lambda kv: -kv[1])
-    shown, rest = rows[:top], rows[top:]
     print(f"| thread group | ms per {unit} | share of JVM |")
     print("|---|---|---|")
 
     def line(name, s):
         print(f"| {name} | {s * 1000.0 / ops:.2f} | {100.0 * s / total_s if total_s else 0.0:.1f} % |")
 
-    for name, s in shown:
+    for name, s in sorted(groups.items(), key=lambda kv: -kv[1]):
         line(name, s)
-    if rest:
-        line(f"({len(rest)} other groups)", sum(s for _, s in rest))
     line("(exited threads)", total_s - attributed)
     line("**JVM total**", total_s)
     jit = sum(s for name, s in groups.items() if "CompilerThre" in name)
@@ -127,7 +123,6 @@ def main() -> int:
     ap.add_argument("--seed", type=int, default=1)
     ap.add_argument("--static-jit", action="store_true",
                     help="keep the JIT compiler threads alive for the whole run")
-    ap.add_argument("--top", type=int, default=12, help="thread groups listed")
     args = ap.parse_args()
 
     sys.path[:0] = [ROOT, os.path.join(ROOT, "perfbench")]
@@ -158,7 +153,7 @@ def main() -> int:
         shutil.rmtree(run_dir, ignore_errors=True)
     print(f"{args.workload} ({args.mode if args.workload == 'ingest' else f'{args.passes} passes'}), "
           f"static JIT threads: {args.static_jit}, os.cpu_count() = {os.cpu_count()}\n")
-    report(*breakdown(before, after), ops, unit, args.top)
+    report(*breakdown(before, after), ops, unit)
     return 0
 
 

@@ -66,6 +66,7 @@ SCHEMA = StructType(
     ]
 )
 T0 = dt.datetime(2023, 12, 30)
+PLUS_ONE = dt.timezone(dt.timedelta(hours=1))
 TOP = "\U0010ffff"  # the code point a truncated upper bound cannot bump
 
 ints = st.integers(-20, 20)
@@ -166,8 +167,8 @@ def _entry(path, t, part, rows, drop, legacy, bloom_col):
 def _literals(col, rows):
     """Literals drawn from, or next to, the rows' values of ``col``,
     including cross-type ones (float and NaN against int, DATE and ISO
-    strings against timestamps, midnight and off-midnight datetimes
-    against dates)."""
+    strings, with either separator or a zone, against timestamps,
+    midnight and off-midnight datetimes and strings against dates)."""
     seen = [r[col] for r in rows if r[col] is not None]
     near = []
     for v in seen:
@@ -183,6 +184,9 @@ def _literals(col, rows):
                 v,
                 v.date(),
                 v.isoformat(),
+                v.isoformat(sep=" "),
+                v.date().isoformat(),
+                v.replace(tzinfo=dt.timezone.utc).astimezone(PLUS_ONE).isoformat(),
                 floor_h,
                 floor_h + dt.timedelta(hours=1),
                 v + dt.timedelta(microseconds=1),
@@ -197,21 +201,28 @@ def _literals(col, rows):
                 midnight,
                 midnight + dt.timedelta(hours=5, microseconds=1),
                 midnight - dt.timedelta(microseconds=1),
+                v.isoformat(),
+                (midnight + dt.timedelta(hours=5)).isoformat(sep=" "),
             ]
     return st.sampled_from(near) if near else VALUES[col]
 
 
 def _coerce(v, lit):
     """``v`` and ``lit`` in one domain, as Spark compares them: a DATE
-    row against a datetime literal is midnight of its day, and a DATE
-    or an ISO string against a timestamp means that instant."""
+    row against a datetime literal is midnight of its day, a DATE or an
+    ISO string against a timestamp means that instant, and a string
+    against a DATE its date part."""
+    if isinstance(lit, str) and isinstance(v, dt.date):
+        if not isinstance(v, dt.datetime):
+            return v, dt.date.fromisoformat(lit[:10])
+        p = dt.datetime.fromisoformat(lit)
+        if p.tzinfo is not None:
+            p = p.astimezone(dt.timezone.utc).replace(tzinfo=None)
+        return v, p
     if isinstance(lit, dt.datetime) and not isinstance(v, dt.datetime):
         v = dt.datetime.combine(v, dt.time())
-    if isinstance(v, dt.datetime):
-        if isinstance(lit, str):
-            return v, dt.datetime.fromisoformat(lit)
-        if not isinstance(lit, dt.datetime):
-            return v, dt.datetime.combine(lit, dt.time())
+    if isinstance(v, dt.datetime) and not isinstance(lit, dt.datetime):
+        return v, dt.datetime.combine(lit, dt.time())
     return v, lit
 
 

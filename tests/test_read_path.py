@@ -18,6 +18,7 @@ import re
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
+    DateType,
     DoubleType,
     LongType,
     StringType,
@@ -262,21 +263,58 @@ def test_nan_literal_keeps_every_file(spark, tmp_path):
         assert tbl.scan(spark, [("x", op, nan)]).count() == df.filter(col).count(), op
 
 
-def test_string_literal_on_timestamp_is_not_proven(spark, tmp_path):
-    """Spark compares a string literal against a TIMESTAMP as the
-    instant it parses to, while the bounds compare it as text
-    ('2024-03-04' sorts below its own midnight): such a leaf proves no
-    file, so count_rows scans and the residual stays."""
+def test_adopted_float_bounds_prove_nothing(spark, tmp_path):
+    """pyarrow writes float bounds with NaN stripped: a file of {1.0,
+    NaN} reads [1.0, 1.0]. add_files so keeps no float bounds, and a
+    leaf those bounds would prove still filters out the NaN row."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    src = str(tmp_path / "ext.parquet")
+    pq.write_table(pa.table({"x": [1.0, float("nan")]}), src)
+    tbl = create_table(str(tmp_path / "t"), StructType([StructField("x", DoubleType(), True)]))
+    tbl.add_files([src])
+    truth = spark.createDataFrame([(1.0,), (float("nan"),)], "x double")
+    for op, col in (("<", F.col("x") < 2.0), ("<=", F.col("x") <= 1.0), ("=", F.col("x") == 1.0)):
+        leaf = [("x", op, 2.0 if op == "<" else 1.0)]
+        expect = truth.filter(col).count()
+        assert tbl.scan(spark, leaf).count() == expect == 1, op
+        assert tbl.count_rows(spark, leaf)["rows"] == expect, op
+
+
+def test_string_literal_on_temporal_column_prunes_as_parsed(spark, tmp_path):
+    """Spark compares a string literal against a DATE or TIMESTAMP as
+    the value it parses to. Pruning and proofs read the same value:
+    '2024-03-04 00:00:01' keeps the file whose bound is
+    '2024-03-04T00:00:00' (as text, ' ' sorts below 'T'), a DATE takes
+    the literal's date part, and a form not parsed here keeps every
+    file and proves none."""
     import datetime as dt
 
-    schema = StructType([StructField("ts", TimestampType(), False)])
+    schema = StructType(
+        [StructField("ts", TimestampType(), False), StructField("d", DateType(), False)]
+    )
     tbl = create_table(str(tmp_path / "t"), schema)
-    df = spark.createDataFrame([(dt.datetime(2024, 3, 4),)] * 2, schema)
-    tbl.append(df)
-    for lit in ("2024-03-04", "2024-03-04 00:00:00"):
-        expect = df.filter(F.col("ts") > lit).count()
-        assert tbl.count_rows(spark, [("ts", ">", lit)])["rows"] == expect == 0
-        assert tbl.scan(spark, [("ts", ">", lit)]).count() == expect
+    df = spark.createDataFrame([(dt.datetime(2024, 3, 4), dt.date(2024, 3, 4))] * 2, schema)
+    tbl.append(df.coalesce(1))
+    cases = [
+        ("ts", ">", "2024-03-04"),
+        ("ts", ">", "2024-03-04 00:00:00"),
+        ("ts", "<", "2024-03-04 00:00:01"),
+        ("ts", "=", "2024-03-04T01:00:00+01:00"),
+        ("ts", ">=", "2024-03-04"),
+        ("ts", "=", "2024-3-4"),
+        ("d", "<", "2024-03-04 12:00:00"),
+        ("d", "=", "2024-03-04 12:00"),
+        ("d", "<", "2024-03-05"),
+    ]
+    for leaf in cases:
+        col, op, lit = leaf
+        expect = df.filter(f"{col} {op} '{lit}'").count()
+        assert tbl.scan(spark, [leaf]).count() == expect, leaf
+        assert tbl.count_rows(spark, [leaf])["rows"] == expect, leaf
+    assert tbl.count_rows(spark, [("ts", ">=", "2024-03-04")])["metadata_files"] == 1
+    assert tbl.count_rows(spark, [("ts", "=", "2024-3-4")])["scanned_files"] == 1
 
 
 def _call_args(src: str, call: str) -> list[list[str]]:

@@ -1578,6 +1578,18 @@ def test_make_records_deterministic_per_seed():
     assert {r["timeperiod_loadedBy"] for r in rows} == {1_709_510_400_000_000}
 
 
+def test_make_records_rejects_what_it_cannot_draw():
+    """A negative seed and a file whose payloads overflow the int32
+    offsets of one binary array raise instead of drawing (or wrapping
+    the offsets of) a corrupt array."""
+    from java_iceberg_table_spark.ingest.writer import MAX_ROWS, make_records
+
+    with pytest.raises(ValueError, match="seed"):
+        make_records(10, 0, seed=-1)
+    with pytest.raises(ValueError, match="at most"):
+        make_records(MAX_ROWS + 1, 0, seed=1)
+
+
 def test_add_files_bucket_over_long_strings(spark, troot, tmp_path):
     """add_files derives a hash-bucket partition from footer min == max
     (identity specs need an integer column, so a string column is
